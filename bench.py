@@ -10,7 +10,7 @@ Noise control: the VM shows +-50% single-run variance, so the measured
 numbers are PER-QUERY MEDIANS over $SPARK_GRAFT_BENCH_RUNS hot passes
 (default 3) after one unmeasured warm-up; `value` is the sum of medians.
 `per_run_totals` carries each pass's wall time for spread inspection.
-Same-session A/B against a pinned snapshot lives in bench_probe.py —
+For a per-query build/action/job split run `python3 perfbench/run.py`;
 compare medians from one session, never single passes across days.
 """
 

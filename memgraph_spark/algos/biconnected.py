@@ -11,6 +11,8 @@ point sets; the combinatorial cores run on the driver exactly like the
 reference's (its BCC is a single-threaded DFS, its VRP a CP solver over an
 in-memory matrix). The BCC collect is size-guarded: beyond `max_edges` the
 caller should first split by weakly-connected component.
+Past the fence, biconnected_components_distributed roots its spanning
+forest with one multi-root `operators.expand.bfs`.
 """
 
 from __future__ import annotations
@@ -88,7 +90,8 @@ def biconnected_components_distributed(graph, etype: str | None = None,
     """Distributed BCC (Tarjan-Vishkin flavour, VERDICT r3 item 7):
 
     1. BFS spanning forest (one tree per weakly-connected component,
-       root = min vertex id; deterministic min-parent tie-break).
+       root = min vertex id; deterministic min-parent tie-break): one
+       multi-root `operators.expand.bfs`.
     2. Every non-tree edge (u, v) closes a fundamental cycle through the
        tree path u..LCA..v. The cycle is materialized by LIFTING the
        deeper endpoint one tree level per round (rounds <= tree depth <=
@@ -103,6 +106,7 @@ def biconnected_components_distributed(graph, etype: str | None = None,
     counters. Output matches the driver core's contract: one row per
     undirected edge, (bcc_id, node_from, node_to), ids arbitrary."""
     from memgraph_spark.algos.components import weakly_connected_components
+    from memgraph_spark.operators.expand import bfs
     from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
     spark = graph.spark
     und = (graph.adjacency(etype, "both")
@@ -118,58 +122,25 @@ def biconnected_components_distributed(graph, etype: str | None = None,
            .unionAll(und.select(F.col("b").alias("src"),
                                 F.col("a").alias("dst"))).persist())
 
-    # -- 1. BFS forest: component label = min vertex id = the root
+    # -- 1. BFS forest: component label = min vertex id = the root. One
+    # round past max_rounds shows whether the forest is deeper than that;
+    # the count rides the tree's checkpoint job
     comp = weakly_connected_components(und, "a", "b",
                                        max_iter=max_rounds)
     roots = comp.filter(F.col("id") == F.col("component")).select("id")
-    frontier, m = checkpoint_with_metrics(
-        roots.select("id", F.lit(None).cast("long").alias("parent"),
-                     F.lit(0).alias("depth")),
-        n=F.count(F.lit(1)))
-    visited = frontier
-    tree_pieces = []
-    depth = 0
-    for depth in range(1, max_rounds + 1):
-        nxt = (frontier.join(adj, frontier["id"] == adj["src"])
-               .select(F.col("dst").alias("nid"),
-                       F.col("id").alias("nparent"))
-               .join(visited.select(F.col("id").alias("nid")),
-                     "nid", "left_anti")
-               .groupBy("nid").agg(F.min("nparent").alias("parent"))
-               .select(F.col("nid").alias("id"), "parent",
-                       F.lit(depth).alias("depth")))
-        nxt, m = checkpoint_with_metrics(nxt, n=F.count(F.lit(1)))
-        if m["n"] == 0:
-            break
-        tree_pieces.append(nxt)
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    if m["n"] > 0:
-        # the loop exhausted max_rounds with a live frontier. That is
-        # fine when the BFS depth is EXACTLY max_rounds (the last
-        # frontier is the deepest, fully-visited level); only nodes
-        # beyond it would silently vanish from the spanning forest — so
-        # probe the would-be next frontier and fail loudly only if it
-        # is non-empty.
-        unexplored = (frontier.join(adj, frontier["id"] == adj["src"])
-                      .select(F.col("dst").alias("nid"))
-                      .join(visited.select(F.col("id").alias("nid")),
-                            "nid", "left_anti"))
-        if not unexplored.isEmpty():
-            raise ValueError(
-                f"biconnected_components: spanning-tree BFS did not "
-                f"converge within max_rounds={max_rounds} (graph depth "
-                "exceeds it); raise max_rounds")
-    if not tree_pieces:
-        und.unpersist(); adj.unpersist()
-        return empty
-    tree = tree_pieces[0]
-    for p in tree_pieces[1:]:
-        tree = tree.unionByName(p)
-    # (child, parent, depth) persisted — the lifting loop joins it per round
-    tree = tree.localCheckpoint(eager=True)
-    for p in tree_pieces:
-        free_checkpoint(p)
+    reach = bfs(graph, roots, max_hops=max_rounds + 1, edges_df=adj)
+    # (child, parent, depth) checkpointed — the lifting loop joins it per round
+    tree, m = checkpoint_with_metrics(
+        reach.filter(F.col("dist") > 0)
+        .select("id", F.col("par").alias("parent"), F.col("dist").alias("depth")),
+        deep=F.count(F.when(F.col("depth") > max_rounds, 1)))
+    free_checkpoint(reach)
+    if m["deep"] > 0:
+        und.unpersist(); adj.unpersist(); free_checkpoint(tree)
+        raise ValueError(
+            f"biconnected_components: spanning-tree BFS did not "
+            f"converge within max_rounds={max_rounds} (graph depth "
+            "exceeds it); raise max_rounds")
 
     # -- 2. non-tree edges + lifting
     tpairs = tree.select(F.least("id", "parent").alias("a"),

@@ -11,8 +11,9 @@ Spark re-expressions:
 - Bridges: the reference runs sequential DFS chain decomposition. Here we
   use the randomized XOR-tagging algorithm over a Boruvka spanning forest:
   every non-tree edge gets a random 64-bit tag XORed onto both endpoints;
-  subtree-XOR sweeps bottom-up over BFS layers; a tree edge is a bridge iff
-  its child-subtree XOR is 0 (non-tree edges are never bridges). Fully
+  subtree-XOR sweeps bottom-up over the forest's BFS layers (one
+  multi-root `operators.expand.bfs`); a tree edge is a bridge iff its
+  child-subtree XOR is 0 (non-tree edges are never bridges). Fully
   distributed (joins + bit_xor aggs per tree layer); failure probability
   ~= #edges / 2^64 per edge.
 - Cycles: fundamental cycle basis — one cycle per non-tree edge, closed
@@ -25,37 +26,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from memgraph_spark.algos.components import weakly_connected_components
+from memgraph_spark.operators.expand import bfs
+
 
 def _forest_parents(graph, forest):
-    """Root every tree of the spanning forest (at its component's min node)
-    and BFS over it: returns (id, par, depth); par is null at roots."""
-    spark = graph.spark
+    """Root every tree of the spanning forest at its component's min node
+    and BFS over it: returns (id, par, depth); par is null at roots. The
+    trees are disjoint, so one multi-source `bfs` keyed by (start, id)
+    visits each node exactly once."""
     both = forest.unionByName(forest.select(F.col("dst").alias("src"),
                                             F.col("src").alias("dst")))
-    from memgraph_spark.algos.components import weakly_connected_components
     wcc = weakly_connected_components(forest)
     roots = wcc.groupBy("component").agg(F.min("id").alias("id")).select("id")
-    from memgraph_spark.session import checkpoint_with_metrics
-    visited = roots.select("id", F.lit(None).cast("long").alias("par"),
-                           F.lit(0).alias("depth")).localCheckpoint(eager=True)
-    frontier = visited.select("id")
-    d = 0
-    while True:
-        d += 1
-        # layer count rides the checkpoint job; visited stays a lazy union
-        # of per-layer checkpoints (no O(V) re-materialization per round)
-        nxt, m = checkpoint_with_metrics(
-            frontier.join(both, frontier["id"] == both["src"])
-            .select(F.col("dst").alias("id"), F.col("src").alias("par"))
-            .join(visited.select("id"), "id", "left_anti")
-            .groupBy("id").agg(F.min("par").alias("par"))
-            .withColumn("depth", F.lit(d)),
-            n=F.count(F.lit(1)))
-        if m["n"] == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("id")
-    return visited
+    return (bfs(graph, roots, max_hops=None, edges_df=both)
+            .select("id", "par", F.col("dist").alias("depth")))
 
 
 def _canonical_edges(graph, etype):
@@ -140,15 +125,12 @@ def bipartite_matching(graph, etype: str | None = None) -> int:
     """bipartite_matching.max parity: the maximum matching size, or 0 when
     the graph is not bipartite (reference checks bipartiteness first)."""
     from memgraph_spark.algos.maxflow import max_flow
-    from memgraph_spark.operators.expand import bfs
-    spark = graph.spark
     und = _canonical_edges(graph, etype).persist()
     if und.isEmpty():
         return 0
-    from memgraph_spark.algos.components import weakly_connected_components
     wcc = weakly_connected_components(und)
     roots = wcc.groupBy("component").agg(F.min("id").alias("id")).select("id")
-    dist = bfs(graph, roots, etype, direction="both", max_hops=10_000)
+    dist = bfs(graph, roots, etype, direction="both", max_hops=None)
     color = dist.select("id", (F.col("dist") % 2).alias("c")).dropDuplicates(["id"])
     bad = (und.join(color.withColumnRenamed("c", "c_src")
                     .withColumnRenamed("id", "src"), "src")
@@ -192,7 +174,6 @@ def union_find_connected(graph, nodes1, nodes2, mode: str = "pairwise",
                          etype: str | None = None):
     """union_find.connected parity: (node1, node2, connected) rows."""
     spark = graph.spark
-    from memgraph_spark.algos.components import weakly_connected_components
     e = (graph.edge(etype) if etype else graph.all_edges()).select("src", "dst")
     wcc = weakly_connected_components(e)
     n1 = [int(x) for x in (nodes1 if isinstance(nodes1, (list, tuple)) else [nodes1])]

@@ -29,7 +29,6 @@ def weakly_connected_components(
     undirected paths. Per round each vertex adopts the min label among itself
     and its neighbors; converges in O(diameter) rounds (use doubling/star
     contraction if diameters grow past ~20 at scale)."""
-    import os
     # hash(a) layout for the per-round propagation join: repartition("a")
     # BEFORE the dedup costs nothing extra (HashPartitioning(a) satisfies
     # the dedup aggregate's ClusteredDistribution(a, b), so the dedup rides
@@ -39,9 +38,7 @@ def weakly_connected_components(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionAll(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
     )
-    if os.environ.get("SPARK_GRAFT_WCC_EDGE_LAYOUT", "a") == "a":
-        und = und.repartition("a")
-    und = und.dropDuplicates().persist()
+    und = und.repartition("a").dropDuplicates().persist()
     labels = (
         und.select(F.col("a").alias("id"))
         .dropDuplicates()
@@ -65,17 +62,15 @@ def weakly_connected_components(
                                            F.col("prev"))).alias("component"),
                         "prev"))
 
-    import os
     # Two-propagations-per-checkpoint batching: the intermediate label
     # frame stays lazy; AQE's stage cache computes its exchanges once even
     # though the second step's plan embeds them twice, so per-round shuffle
     # volume is unchanged while the driver round count halves. Min-label
     # propagation is idempotent at the fixpoint, so stopping on the second
     # sub-step's changed-count yields byte-identical labels.
-    batch2 = os.environ.get("SPARK_GRAFT_WCC_BATCH", "2") != "1"
     it = 0
     while it < max_iter:
-        if batch2 and max_iter - it >= 2:
+        if max_iter - it >= 2:
             new_labels, m = checkpoint_with_metrics(
                 _prop(_prop(labels)),
                 changed=F.count(F.when(F.col("component") != F.col("prev"),
@@ -104,16 +99,13 @@ def label_propagation(
     """Synchronous LPA: each vertex adopts the most frequent label among its
     neighbors (ties -> smallest label, fully deterministic). Returns
     (id, label)."""
-    import os
     und = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionAll(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
     )
     # same hash(a) layout rationale as weakly_connected_components: the
     # per-round vote join is on a, and the dedup rides the one exchange
-    if os.environ.get("SPARK_GRAFT_WCC_EDGE_LAYOUT", "a") == "a":
-        und = und.repartition("a")
-    und = und.dropDuplicates().persist()
+    und = und.repartition("a").dropDuplicates().persist()
     labels = (
         und.select(F.col("a").alias("id")).dropDuplicates()
         .withColumn("label", F.col("id"))

@@ -5,13 +5,15 @@ Ford-Fulkerson with capacity scaling, `get_flow` / `get_paths`) and
 igraphalg.mincut (src/mage/python/igraphalg.py:67).
 
 Spark re-expression: the residual graph is a (src, dst, cap) DataFrame;
-each augmenting path is found with a distributed parent-tracking BFS over
-the residual edges (cap >= delta), so the per-iteration work — the part that
-grows with graph size — is all joins/aggregations. The augmentation loop
-itself is inherently sequential (same as the reference); capacity scaling
-bounds it at O(E log maxCap) iterations. Residual updates touch only the
-path's edges and are applied with a broadcast anti-join + union of a
-driver-side handful of rows, then localCheckpoint to keep plans flat.
+each augmenting path is found with `operators.expand.bfs` over the residual
+edges (cap >= delta), stopping at the sink (`target`) and walking its
+min-predecessor tree back (`bfs_path`), so the per-iteration work — the
+part that grows with graph size — is all joins/aggregations. The
+augmentation loop itself is inherently sequential (same as the reference);
+capacity scaling bounds it at O(E log maxCap) iterations. Residual updates
+touch only the path's edges and are applied with a broadcast anti-join +
+union of a driver-side handful of rows, then localCheckpoint to keep plans
+flat. min_cut's source side is one more `bfs` over the final residual.
 """
 
 from __future__ import annotations
@@ -20,46 +22,11 @@ from math import floor, log2
 
 from pyspark.sql import functions as F
 
+from memgraph_spark.operators.expand import bfs, bfs_path
+from memgraph_spark.session import free_checkpoint
+
 _RESIDUAL_SCHEMA = "src long, dst long, cap double"
 _EPS = 1e-9
-
-
-def _bfs_parents(spark, adj, source: int, sink: int, max_hops: int):
-    """BFS from source over adj; returns (id, par) visited DF the moment the
-    sink is reached, or None if the sink is unreachable."""
-    from memgraph_spark.session import checkpoint_with_metrics
-    visited = spark.createDataFrame([(source, None)], "id long, par long") \
-        .localCheckpoint(eager=True)
-    frontier = visited.select("id")
-    for _ in range(max_hops):
-        # layer count + sink arrival both ride the checkpoint job (observe);
-        # visited stays a lazy union of per-layer checkpoints
-        nxt, m = checkpoint_with_metrics(
-            frontier.join(adj, frontier["id"] == adj["src"])
-            .select(F.col("dst").alias("id"), F.col("src").alias("par"))
-            .join(visited.select("id"), "id", "left_anti")
-            .groupBy("id").agg(F.min("par").alias("par")),
-            n=F.count(F.lit(1)),
-            at_sink=F.count(F.when(F.col("id") == sink, 1)))
-        if m["n"] == 0:
-            return None
-        visited = visited.unionByName(nxt)
-        if m["at_sink"] > 0:
-            return visited
-        frontier = nxt.select("id")
-    return None
-
-
-def _walk_back(visited, source: int, sink: int) -> list[int]:
-    """Reconstruct the source->sink node path from the parent map.
-    Path length <= BFS depth, so this is O(depth) tiny lookups."""
-    parents = {r.id: r.par for r in visited.collect()}
-    path, cur = [sink], sink
-    while cur != source:
-        cur = parents[cur]
-        path.append(cur)
-    path.reverse()
-    return path
 
 
 def max_flow(
@@ -90,20 +57,22 @@ def max_flow(
     if source == sink or max_cap is None:
         return 0.0, [], residual
 
+    src = spark.createDataFrame([(source,)], "id long")
     # scaling phases delta = 2^k .. 1, then one exact phase (delta = 0)
     delta = float(2 ** floor(log2(max_cap))) if max_cap >= 1.0 else 0.0
     total, paths, n_aug = 0.0, [], 0
     while n_aug < max_augmentations:
         adj = residual.filter(F.col("cap") >= delta - _EPS) if delta > 0 \
             else residual.filter(F.col("cap") > _EPS)
-        visited = _bfs_parents(spark, adj, source, sink, max_hops)
-        if visited is None:
+        reach = bfs(graph, src, max_hops=max_hops, edges_df=adj, target=sink)
+        path = bfs_path(reach, sink)
+        free_checkpoint(reach)
+        if path is None:
             if delta == 0.0:
                 break
             delta = delta / 2.0 if delta >= 2.0 else 0.0
             continue
         n_aug += 1
-        path = _walk_back(visited, source, sink)
         path_edges = list(zip(path, path[1:]))
         touched = path_edges + [(v, u) for u, v in path_edges]
         tdf = spark.createDataFrame(touched, "src long, dst long").dropDuplicates()
@@ -128,22 +97,10 @@ def min_cut(graph, source: int, sink: int, capacity: str = "weight",
             etype: str | None = None, max_hops: int = 64):
     """igraphalg.mincut parity: (node, partition_id) — partition 0 is the
     source side of the min s-t cut (residual-reachable after max flow)."""
-    spark = graph.spark
     _, _, residual = max_flow(graph, source, sink, capacity, etype, max_hops)
-    adj = residual.filter(F.col("cap") > _EPS)
-    reach = spark.createDataFrame([(source,)], "id long").localCheckpoint(eager=True)
-    frontier = reach
-    from memgraph_spark.session import checkpoint_with_metrics
-    for _ in range(max_hops):
-        nxt, m = checkpoint_with_metrics(
-            frontier.join(adj, frontier["id"] == adj["src"])
-            .select(F.col("dst").alias("id")).dropDuplicates()
-            .join(reach, "id", "left_anti"),
-            n=F.count(F.lit(1)))
-        if m["n"] == 0:
-            break
-        reach = reach.unionByName(nxt)
-        frontier = nxt
+    src = graph.spark.createDataFrame([(source,)], "id long")
+    reach = bfs(graph, src, max_hops=max_hops,
+                edges_df=residual.filter(F.col("cap") > _EPS)).select("id")
     edges = graph.edge(etype) if etype else graph.all_edges()
     verts = (edges.select(F.col("src").alias("id"))
              .unionAll(edges.select(F.col("dst").alias("id"))).dropDuplicates())

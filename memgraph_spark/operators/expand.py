@@ -293,45 +293,56 @@ def bfs(
     sources: DataFrame,
     etype: str | None = None,
     direction: str = "out",
-    max_hops: int = 20,
+    max_hops: int | None = 20,
     source_col: str = "id",
     edges_df: DataFrame | None = None,
+    target: int | None = None,
 ) -> DataFrame:
     """SingleSourceShortestPath / BFS (operator.cpp:2726).
 
     `sources` is a DataFrame with a node-id column; returns
-    (start BIGINT, id BIGINT, dist INT) — minimal hop distance from each
-    start to every reachable node. Each round: frontier ⋈ edges, anti-join
-    the visited set, union. Driver loop = diameter iterations only.
+    (start BIGINT, id BIGINT, dist INT, par BIGINT) — minimal hop distance
+    from each start to every reachable node, and the smallest predecessor
+    id at dist - 1 (null at the start), i.e. a BFS tree per start. Each
+    round: frontier ⋈ edges, min-parent aggregate, anti-join the visited
+    set, union. Driver loop = diameter iterations only.
 
-    `edges_df` overrides the adjacency frame — a traversal-oriented
-    (src, dst) list for callers whose edge-set semantics don't reduce to
-    one (etype, direction) pair (e.g. neighbors.at_hop's per-type
-    direction prefixes).
+    `max_hops=None` runs until the frontier is empty. `target` stops the
+    loop after the round that first reaches that node id (its arrival
+    count rides the round's checkpoint job). `edges_df` overrides the
+    adjacency frame — a traversal-oriented (src, dst) list for callers
+    whose edge-set semantics don't reduce to one (etype, direction) pair
+    (e.g. neighbors.at_hop's per-type direction prefixes, a residual
+    graph, a shortest-path tight subgraph).
     """
+    from memgraph_spark.session import checkpoint_with_metrics
     # shared persisted adjacency; every BFS round re-joins it
     edges = edges_df if edges_df is not None else graph.adjacency(etype, direction)
-    frontier = sources.select(
+    # the frontier row count (and target arrival) ride each checkpoint job
+    probe = {"n": F.count(F.lit(1))}
+    if target is not None:
+        probe["hit"] = F.count(F.when(F.col("id") == target, 1))
+    frontier, m = checkpoint_with_metrics(sources.select(
         F.col(source_col).alias("start"),
         F.col(source_col).alias("id"),
         F.lit(0).alias("dist"),
-    ).localCheckpoint(eager=True)
+        F.lit(None).cast("long").alias("par"),
+    ), **probe)
     # visited = union of per-round frontiers, each already materialized by
     # its own localCheckpoint — no O(rounds^2) re-checkpointing of the union
     visited = frontier
-    f_rows = frontier.count()
-    v_rows = f_rows
-    from memgraph_spark.session import checkpoint_with_metrics
-    for d in range(1, max_hops + 1):
+    f_rows = v_rows = m["n"]
+    d = 0
+    while not m.get("hit") and (max_hops is None or d < max_hops):
+        d += 1
         f = _maybe_broadcast(frontier, f_rows)
-        # the frontier row count rides the checkpoint job (observe)
         nxt, m = checkpoint_with_metrics(
             f.join(edges, f["id"] == edges["src"], "inner")
-            .select(F.col("start"), F.col("dst").alias("id"))
-            .dropDuplicates()
+            .groupBy("start", F.col("dst").alias("id"))
+            .agg(F.min("src").alias("par"))
             .join(_maybe_broadcast(visited, v_rows), ["start", "id"], "left_anti")
-            .withColumn("dist", F.lit(d)),
-            n=F.count(F.lit(1)),
+            .select("start", "id", F.lit(d).alias("dist"), "par"),
+            **probe,
         )
         f_rows = m["n"]
         if f_rows == 0:
@@ -340,6 +351,20 @@ def bfs(
         visited = visited.unionByName(nxt)
         frontier = nxt
     return visited
+
+
+def bfs_path(reach: DataFrame, target: int) -> list[int] | None:
+    """Node ids of the BFS-tree path from the start to `target` in a
+    single-source `bfs` result (walks `par` back on the driver), or None
+    when `target` was not reached. Collects the visited set, so pass a
+    `target`-bounded BFS."""
+    parents = {r.id: r.par for r in reach.select("id", "par").collect()}
+    if target not in parents:
+        return None
+    path = [target]
+    while parents[path[-1]] is not None:
+        path.append(parents[path[-1]])
+    return path[::-1]
 
 
 def shortest_path(
@@ -354,9 +379,8 @@ def shortest_path(
     nodes (None if unreachable). Early-exits the BFS loop on arrival."""
     spark = graph.spark
     sources = spark.createDataFrame([(source_id,)], "id long")
-    reach = bfs(graph, sources, etype, direction, max_hops)
-    row = reach.filter(F.col("id") == target_id).select(F.min("dist")).first()
-    return row[0] if row else None
+    reach = bfs(graph, sources, etype, direction, max_hops, target=target_id)
+    return reach.filter(F.col("id") == target_id).select(F.min("dist")).first()[0]
 
 
 def weighted_shortest_path(

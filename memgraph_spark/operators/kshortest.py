@@ -5,10 +5,10 @@ Reference: KShortestPaths — Yen's algorithm atop Dijkstra
 ExpandAllShortestPaths keeps all argmin predecessors (:3309).
 
 Spark re-expression:
-- Dijkstra runs as distributed iterative relaxation keeping the argmin
-  predecessor per vertex (min over a packed (cost, pred) struct);
-- path reconstruction walks predecessors — O(path length) point lookups,
-  bounded by the hop limit, never proportional to graph size;
+- one cheapest path = `expand.weighted_shortest_path` (distributed
+  Bellman-Ford relaxation) for the costs, then `expand.bfs` from the source
+  over the tight edges (cost[src] + w == cost[dst]) stopped at the target;
+  the BFS tree's `par` pointers give the path, walked back on the driver;
 - Yen's spur loop is driver-side control flow (as in the reference), but
   every shortest-path computation inside it is fully distributed;
 - all-shortest-path *counting* is BFS-layered dynamic programming: the number
@@ -21,64 +21,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dijkstra_pred(edges: DataFrame, source_id: int,
-                   max_iterations: int = 30) -> DataFrame:
-    """Single-source Dijkstra-as-relaxation returning (id, cost, pred).
-    `edges` = (src, dst, w)."""
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(source_id, 0.0, None)], "id long, cost double, pred long"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_iterations):
-        cand = (
-            frontier.join(edges, frontier["id"] == edges["src"], "inner")
-            .select(F.col("dst").alias("id"),
-                    (F.col("cost") + F.col("w")).alias("cost"),
-                    F.col("src").alias("pred"))
-            .groupBy("id")
-            .agg(F.min(F.struct("cost", "pred")).alias("s"))
-            .select("id", F.col("s.cost").alias("cost"),
-                    F.col("s.pred").alias("pred"))
-        )
-        improved = (
-            cand.join(dist.select("id", F.col("cost").alias("__old")),
-                      "id", "left")
-            .filter(F.col("__old").isNull() | (F.col("cost") < F.col("__old")))
-            .select("id", "cost", "pred")
-            .localCheckpoint(eager=True)
-        )
-        if improved.count() == 0:
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("id")
-            .agg(F.min(F.struct("cost", "pred")).alias("s"))
-            .select("id", F.col("s.cost").alias("cost"),
-                    F.col("s.pred").alias("pred"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    return dist
+from memgraph_spark.operators.expand import bfs, bfs_path, weighted_shortest_path
+from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
 
 
-def _walk_path(dist: DataFrame, source_id: int, target_id: int,
-               max_hops: int = 64) -> tuple[list[int], float] | None:
-    row = dist.filter(F.col("id") == target_id).first()
-    if row is None:
-        return None
-    cost = row["cost"]
-    path = [target_id]
-    cur = row["pred"]
-    for _ in range(max_hops):
-        if cur is None:
-            break
-        path.append(cur)
-        if cur == source_id:
-            return list(reversed(path)), cost
-        cur = dist.filter(F.col("id") == cur).first()["pred"]
-    return (list(reversed(path)), cost) if path[-1] == source_id else None
+def _cheapest_path(graph, e: DataFrame, source_id: int, target_id: int
+                   ) -> tuple[list[int], float] | None:
+    """One cheapest source->target path over `e` (src, dst, w) as (node ids,
+    cost), or None if the target is unreachable. A tight edge (the same
+    double sum the relaxation took) lies on a cheapest path, so the BFS
+    over tight edges picks, among the cheapest paths, one with the fewest
+    hops (smallest predecessor id on ties) — acyclic even through
+    zero-weight cycles, which a per-node argmin predecessor is not."""
+    if source_id == target_id:
+        return [source_id], 0.0
+    src = e.sparkSession.createDataFrame([(source_id,)], "id long")
+    cost = weighted_shortest_path(graph, src, None, "w", edges_df=e)
+    # the target's cost rides the tight frame's checkpoint job (observe)
+    tight, m = checkpoint_with_metrics(
+        e.join(cost.select(F.col("id").alias("src"), F.col("cost").alias("cs")),
+               "src")
+        .join(cost.select(F.col("id").alias("dst"), F.col("cost").alias("cd")),
+              "dst")
+        .filter(F.col("cs") + F.col("w") == F.col("cd"))
+        .select("src", "dst", "cd"),
+        cost=F.min(F.when(F.col("dst") == target_id, F.col("cd"))))
+    path = None
+    if m["cost"] is not None:
+        reach = bfs(graph, src, max_hops=None, edges_df=tight.select("src", "dst"),
+                    target=target_id)
+        path = bfs_path(reach, target_id)
+        free_checkpoint(reach)
+    free_checkpoint(tight)
+    return None if path is None else (path, m["cost"])
 
 
 def shortest_path_with_nodes(graph, source_id: int, target_id: int,
@@ -86,9 +61,8 @@ def shortest_path_with_nodes(graph, source_id: int, target_id: int,
                              weight_col: str | None = None,
                              edges_df: DataFrame | None = None):
     """One weighted shortest path as (node_id list, cost)."""
-    e = _weighted_edges(graph, etype, weight_col, edges_df)
-    dist = _dijkstra_pred(e, source_id)
-    return _walk_path(dist, source_id, target_id)
+    return _cheapest_path(graph, _weighted_edges(graph, etype, weight_col, edges_df),
+                          source_id, target_id)
 
 
 def _weighted_edges(graph, etype, weight_col, edges_df) -> DataFrame:
@@ -111,7 +85,7 @@ def k_shortest_paths(graph, source_id: int, target_id: int, k: int = 3,
     e, release_e = persist_if_needed(
         _weighted_edges(graph, etype, weight_col, edges_df))
     try:
-        first = _walk_path(_dijkstra_pred(e, source_id), source_id, target_id)
+        first = _cheapest_path(graph, e, source_id, target_id)
         if first is None:
             return []
         paths: list[tuple[list[int], float]] = [first]
@@ -133,8 +107,7 @@ def k_shortest_paths(graph, source_id: int, target_id: int, k: int = 3,
                 if root_nodes:
                     filt = filt.filter(~F.col("src").isin(list(root_nodes))
                                        & ~F.col("dst").isin(list(root_nodes)))
-                spur_hit = _walk_path(_dijkstra_pred(filt, spur),
-                                      spur, target_id)
+                spur_hit = _cheapest_path(graph, filt, spur, target_id)
                 if spur_hit is None:
                     continue
                 spur_path, spur_cost = spur_hit
@@ -178,7 +151,6 @@ def bfs_path_counts(graph, sources: DataFrame, etype: str | None = None,
         F.lit(0).alias("dist"), F.lit(1).cast("long").alias("n_paths"),
     ).localCheckpoint(eager=True)
     visited = layer
-    from memgraph_spark.session import checkpoint_with_metrics
     for d in range(1, max_hops + 1):
         # layer row count rides the checkpoint job (observe)
         nxt, m = checkpoint_with_metrics(

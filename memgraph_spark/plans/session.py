@@ -257,13 +257,12 @@ class GraphSession:
             rows = [(line,) for line in _memgraph_plan_lines(parse(inner))]
             return self.graph.spark.createDataFrame(
                 rows, "`QUERY PLAN` string")
-        if head.startswith("EXPLAIN") or head.startswith("PROFILE"):
-            keyword, inner = stripped.split(None, 1)
+        if head.startswith("PROFILE"):
+            _, inner = stripped.split(None, 1)
             df = self.execute(inner, params)
             import time as _time
             t0 = _time.perf_counter()
-            if keyword.upper() == "PROFILE":
-                df.count()
+            df.count()
             wall_ms = round((_time.perf_counter() - t0) * 1000, 3)
             import contextlib
             import io
@@ -272,8 +271,7 @@ class GraphSession:
                 df.explain("formatted")
             plan = buf.getvalue()
             rows = [(line,) for line in plan.splitlines() if line.strip()]
-            if keyword.upper() == "PROFILE":
-                rows.append((f"-- total wall time: {wall_ms} ms",))
+            rows.append((f"-- total wall time: {wall_ms} ms",))
             return self.graph.spark.createDataFrame(rows, "plan string")
         # admin statements (index/constraint DDL, ANALYZE, SHOW …) are
         # separate query types in the reference grammar too — dispatch first

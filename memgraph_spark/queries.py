@@ -270,16 +270,27 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.count_distinct(F.col("c_mktsegment")).alias("n_segments"),
          F.round(F.min("c_acctbal"), 2).alias("min_bal"),
          F.round(F.max("c_acctbal"), 2).alias("max_bal"),
-         F.round(F.avg("c_acctbal"), 2).alias("avg_bal")],
+         # exact decimal mean (scale 12) rounded half away from zero: a
+         # double mean landing on a half cent rounds by summation order
+         F.round(F.sum(money("c_acctbal")) / F.count("c_acctbal"), 2)
+         .cast("double").alias("avg_bal")],
     )
 
 
+# DuckDB divides decimals in double, so avg_bal rounds the exact mean in
+# integers: sign(S) * floor((2|S| + n) / 2n) / 100, S = the sum in cents
 ORACLE_AGG_DISTINCT = """
-SELECT n_name AS nation, count(DISTINCT c_mktsegment) AS n_segments,
-       round(min(c_acctbal), 2) AS min_bal, round(max(c_acctbal), 2) AS max_bal,
-       round(avg(c_acctbal), 2) AS avg_bal
-FROM customer JOIN nation ON n_nationkey = c_nationkey
-GROUP BY n_name
+SELECT nation, n_segments, min_bal, max_bal,
+       CAST(sign(cents) * ((2 * abs(cents) + n) // (2 * n)) / 100.0 AS DOUBLE)
+         AS avg_bal
+FROM (
+  SELECT n_name AS nation, count(DISTINCT c_mktsegment) AS n_segments,
+         round(min(c_acctbal), 2) AS min_bal, round(max(c_acctbal), 2) AS max_bal,
+         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) * 100 AS HUGEINT) AS cents,
+         count(c_acctbal) AS n
+  FROM customer JOIN nation ON n_nationkey = c_nationkey
+  GROUP BY n_name
+)
 """
 
 

@@ -23,12 +23,29 @@ def free_checkpoint(df) -> None:
     query. Call this on round N-1's checkpoint once round N's checkpoint is
     materialized. The DataFrame must not be used afterwards.
 
-    No-op for non-checkpointed frames (analyzed plan isn't a LogicalRDD).
+    A union of checkpoints (a BFS visited set) frees every branch. No-op
+    for any other frame (a plan node that is neither a LogicalRDD nor a
+    Union of them).
     """
     try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        if analyzed.getClass().getName().endswith("LogicalRDD"):
-            analyzed.rdd().unpersist(False)
+        plans, rdds = [df._jdf.queryExecution().analyzed()], []
+        while plans:
+            plan = plans.pop()
+            name = plan.getClass().getName()
+            if name.endswith(".LogicalRDD"):
+                rdds.append(plan.rdd())
+            elif name.endswith(".Union"):
+                kids = plan.children()
+                for i in range(kids.size()):
+                    kid = kids.apply(i)
+                    # unionByName aligns each later branch with a Project
+                    if kid.getClass().getName().endswith(".Project"):
+                        kid = kid.child()
+                    plans.append(kid)
+            else:
+                return
+        for rdd in rdds:
+            rdd.unpersist(False)
     except Exception:
         pass  # best-effort: a leaked block is a perf bug, not a correctness one
 
@@ -65,7 +82,7 @@ def persist_if_needed(df):
 
 
 def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -80,10 +97,9 @@ def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -
         # suites to 1-3 partitions and serializes real compute (pokec hot
         # passes 1.4-2.4x slower, sf1 total ~4x) while a pinned-worktree
         # A/B showed no clean win on the sf0.1 iterative loops either —
-        # a local-only tune and a scale-killer, exactly what the guide's
-        # §1.2 step-3 warning is about. Env-overridable for A/B only.
+        # a local-only tune and a scale-killer.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+                "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

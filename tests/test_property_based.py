@@ -5,15 +5,18 @@ distributed results)."""
 
 from collections import deque
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+import networkx as nx
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from memgraph_spark.algos import (
     bridges,
+    max_flow,
     spanning_tree,
     weakly_connected_components,
 )
 from memgraph_spark.catalog import load_tpch_graph
-from memgraph_spark.operators.expand import bfs
+from memgraph_spark.operators.expand import bfs, shortest_path, weighted_shortest_path
+from memgraph_spark.operators.kshortest import shortest_path_with_nodes
 from tests.conftest import SF_SMOKE
 
 SETTINGS = dict(max_examples=5, deadline=None,
@@ -142,3 +145,128 @@ def test_bridges_match_dfs(spark, edges):
     ours = {tuple(sorted((r.node_from, r.node_to)))
             for r in bridges(g).collect()}
     assert ours == _py_bridges(edges)
+
+
+# weighted multigraphs for the networkx comparisons: may be empty and may
+# carry self-loops, parallel edges and cycles; zero weights make zero-cost
+# cycles, the case a per-node argmin predecessor walks in circles on
+weighted_edge_lists = st.lists(
+    st.tuples(st.integers(1, 8), st.integers(1, 8), st.integers(0, 9)),
+    max_size=16)
+EMPTY = []
+LOOPY = [(1, 2, 1), (2, 3, 0), (3, 2, 0), (2, 2, 4), (1, 2, 3), (3, 4, 2),
+         (4, 1, 1)]  # cycle 1->2->3->4->1, zero-cost 2<->3, self-loop, parallel 1->2
+
+
+def _wgraph(spark, edges):
+    g = load_tpch_graph(spark, SF_SMOKE)
+    g.edges = {"E": spark.createDataFrame(
+        [(a, b, float(w)) for a, b, w in edges],
+        "src long, dst long, weight double")}
+    g._adj_cache.clear()
+    return g
+
+
+def _nx_multi(edges):
+    G = nx.MultiDiGraph()
+    G.add_nodes_from(range(1, 9))
+    G.add_weighted_edges_from(edges)
+    return G
+
+
+def _pick(edges, i):
+    return edges[i % len(edges)][0] if edges else 1
+
+
+@given(edges=weighted_edge_lists, src_pick=st.integers(0, 100))
+@example(edges=EMPTY, src_pick=0)
+@example(edges=LOOPY, src_pick=0)
+@settings(**SETTINGS)
+def test_weighted_shortest_path_matches_dijkstra(spark, edges, src_pick):
+    source = _pick(edges, src_pick)
+    g = _wgraph(spark, edges)
+    srcs = spark.createDataFrame([(source,)], "id long")
+    ours = {r.id: r.cost for r in
+            weighted_shortest_path(g, srcs, "E", "weight").collect()}
+    assert ours == nx.single_source_dijkstra_path_length(_nx_multi(edges), source)
+
+
+@given(edges=weighted_edge_lists, src_pick=st.integers(0, 100),
+       target=st.integers(1, 8))
+@example(edges=EMPTY, src_pick=0, target=2)
+@example(edges=LOOPY, src_pick=0, target=4)
+# zero-cost 2<->3 where the smallest tight predecessor of 3 is 2 and of 2
+# is 3: a per-node argmin predecessor map never reaches the source 5
+@example(edges=[(5, 3, 1), (3, 2, 0), (2, 3, 0), (2, 4, 1)], src_pick=0,
+         target=4)
+@settings(**SETTINGS)
+def test_shortest_path_with_nodes_is_a_cheapest_path(spark, edges, src_pick,
+                                                      target):
+    source = _pick(edges, src_pick)
+    g = _wgraph(spark, edges)
+    ours = shortest_path_with_nodes(g, source, target, etype="E",
+                                    weight_col="weight")
+    G = _nx_multi(edges)
+    if not nx.has_path(G, source, target):
+        assert ours is None
+        return
+    path, cost = ours
+    assert cost == nx.dijkstra_path_length(G, source, target)
+    assert path[0] == source and path[-1] == target
+    cheapest = {}
+    for a, b, w in edges:
+        cheapest[(a, b)] = min(w, cheapest.get((a, b), w))
+    assert all(p in cheapest for p in zip(path, path[1:]))
+    assert sum(cheapest[p] for p in zip(path, path[1:])) == cost
+
+
+@given(edges=weighted_edge_lists, src_pick=st.integers(0, 100),
+       sink=st.integers(1, 8))
+@example(edges=EMPTY, src_pick=0, sink=2)
+@example(edges=LOOPY, src_pick=0, sink=4)
+@settings(**SETTINGS)
+def test_max_flow_matches_networkx(spark, edges, src_pick, sink):
+    source = _pick(edges, src_pick)
+    if source == sink:
+        sink = sink % 8 + 1
+    g = _wgraph(spark, edges)
+    total, _, _ = max_flow(g, source, sink, "weight", etype="E")
+    G = nx.DiGraph()
+    G.add_nodes_from(range(1, 9))
+    for a, b, w in edges:  # parallel edges add their capacities
+        if a != b:
+            G.add_edge(a, b, capacity=G.get_edge_data(a, b, {"capacity": 0})
+                       ["capacity"] + w)
+    assert abs(total - nx.maximum_flow_value(G, source, sink)) < 1e-6
+
+
+@given(edges=weighted_edge_lists, picks=st.lists(st.integers(0, 100),
+                                                 min_size=1, max_size=2),
+       target=st.integers(1, 8))
+@example(edges=EMPTY, picks=[0], target=2)
+@example(edges=LOOPY, picks=[0, 2], target=4)
+@settings(**SETTINGS)
+def test_bfs_parents_form_min_bfs_tree(spark, edges, picks, target):
+    starts = sorted({_pick(edges, i) for i in picks})
+    g = _wgraph(spark, edges)
+    srcs = spark.createDataFrame([(s,) for s in starts], "id long")
+    rows = bfs(g, srcs, "E", "out", None).collect()
+    pairs = {(a, b) for a, b, _ in edges}
+    dist = {(r.start, r.id): r.dist for r in rows}
+    for r in rows:
+        if r.dist == 0:
+            assert r.id == r.start and r.par is None
+            continue
+        # the smallest predecessor one level up that has an edge to the node
+        preds = [u for (s, u), d in dist.items()
+                 if s == r.start and d == r.dist - 1 and (u, r.id) in pairs]
+        assert r.par == min(preds)
+    G = nx.DiGraph(list(pairs))
+    for s in starts:
+        want = nx.single_source_shortest_path_length(G, s) if s in G else {s: 0}
+        assert {i: d for (st_, i), d in dist.items() if st_ == s} == want
+    # early exit on arrival keeps the hop distance
+    hops = shortest_path(g, starts[0], target, etype="E")
+    G.add_nodes_from([starts[0], target])
+    assert hops == (nx.shortest_path_length(G, starts[0], target)
+                    if nx.has_path(G, starts[0], target) else None)
