@@ -4,7 +4,8 @@ Reference: src/mage/cpp/* and query_modules/* ship pagerank, WCC, community
 detection, centralities, node similarity etc. as C++/Python procedures over
 the in-memory graph. Here each algorithm is an iterative DataFrame program
 (Pregel-style message passing via groupBy-aggregate joins): fully distributed,
-lineage-truncated per round with localCheckpoint.
+lineage-truncated per round with localCheckpoint. The fixpoint loops run on
+`session.supersteps`; the frontier loops on `operators.expand.bfs`.
 """
 
 from memgraph_spark.algos.pagerank import pagerank  # noqa: F401

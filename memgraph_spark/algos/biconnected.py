@@ -12,7 +12,8 @@ reference's (its BCC is a single-threaded DFS, its VRP a CP solver over an
 in-memory matrix). The BCC collect is size-guarded: beyond `max_edges` the
 caller should first split by weakly-connected component.
 Past the fence, biconnected_components_distributed roots its spanning
-forest with one multi-root `operators.expand.bfs`.
+forest with one multi-root `operators.expand.bfs` and lifts its fundamental
+cycles on `session.supersteps`.
 """
 
 from __future__ import annotations
@@ -107,7 +108,8 @@ def biconnected_components_distributed(graph, etype: str | None = None,
     undirected edge, (bcc_id, node_from, node_to), ids arbitrary."""
     from memgraph_spark.algos.components import weakly_connected_components
     from memgraph_spark.operators.expand import bfs
-    from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+    from memgraph_spark.session import (checkpoint_with_metrics,
+                                        free_checkpoint, supersteps)
     spark = graph.spark
     und = (graph.adjacency(etype, "both")
            .select(F.least("src", "dst").alias("a"),
@@ -157,12 +159,9 @@ def biconnected_components_distributed(graph, etype: str | None = None,
                                F.col("depth").alias("db")), "b")
              .select("cyc", F.col("a").alias("u"), "da",
                      F.col("b").alias("v"), "db"))
-    state, m = checkpoint_with_metrics(
-        state, n=F.count(F.when(F.col("u") != F.col("v"), 1)))
     link_pieces = []
-    rounds = 0
-    while m["n"] > 0 and rounds < max_rounds:
-        rounds += 1
+
+    def lift(state, trace):
         active = state.filter(F.col("u") != F.col("v"))
         lift_u = F.col("da") >= F.col("db")
         lift_v = F.col("db") >= F.col("da")
@@ -184,13 +183,13 @@ def biconnected_components_distributed(graph, etype: str | None = None,
             F.when(lift_v, F.col("pv")).otherwise(F.col("v")).alias("v"),
             F.when(lift_v, F.col("db") - 1).otherwise(F.col("db"))
             .alias("db"))
-        done = state.filter(F.col("u") == F.col("v"))
-        new_state, m = checkpoint_with_metrics(
-            stepped.unionByName(done),
-            n=F.count(F.when(F.col("u") != F.col("v"), 1)))
-        free_checkpoint(state)
-        state = new_state
-    if m["n"] > 0:
+        return stepped.unionByName(state.filter(F.col("u") == F.col("v")))
+
+    state, trace = supersteps(
+        state, lift, lambda t: t[-1]["n"] == 0, max_rounds,
+        n=F.count(F.when(F.col("u") != F.col("v"), 1)))
+    free_checkpoint(state)
+    if trace[-1]["n"] > 0:
         # unfinished cycles would be mislabeled as already-lifted — raise
         # rather than return a partial labeling
         raise ValueError(

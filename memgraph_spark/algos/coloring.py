@@ -5,16 +5,18 @@ Parity: the reference's graph_coloring module
 its QA metaheuristic is replaced by the standard distributed greedy:
 same output contract, proper coloring guaranteed).
 
-Spark re-expression: each round, every uncolored node whose random priority
-(xxhash64) beats all uncolored neighbours picks the smallest color absent
-from its colored neighbourhood — an independent set per round, so the
-coloring is proper; expected O(log n) rounds, all joins/aggregations.
+Spark re-expression: each `session.supersteps` round, every uncolored node
+whose random priority (xxhash64) beats all uncolored neighbours picks the
+smallest color absent from its colored neighbourhood — an independent set
+per round, so the coloring is proper; expected O(log n) rounds, all joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from memgraph_spark.session import supersteps
 
 
 def color_graph(graph, etype: str | None = None,
@@ -25,18 +27,17 @@ def color_graph(graph, etype: str | None = None,
     und = graph.adjacency(etype, "both")
     nodes = (und.select(F.col("src").alias("id")).dropDuplicates()
              .withColumn("pri", F.xxhash64("id")))
-    from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
-    uncolored, um = checkpoint_with_metrics(nodes, n=F.count(F.lit(1)))
-    n_uncolored = um["n"]
-    colored = None
-    for _ in range(max_rounds):
-        if n_uncolored == 0:
-            break
-        # max uncolored-neighbour priority per uncolored node
+    colored = None  # union of each round's (id, color) checkpoint
+
+    def step(uncolored, trace):
+        nonlocal colored
+        # max uncolored-neighbour priority per uncolored node; a self-loop
+        # is skipped, else its node could never beat itself
         un_nbr = (und.join(uncolored.select(F.col("id").alias("src")), "src")
                   .join(uncolored.select(F.col("id").alias("dst"),
                                          F.col("pri").alias("pri_n")), "dst")
-                  .groupBy("src").agg(F.max("pri_n").alias("mx")))
+                  .groupBy("src").agg(F.max(F.when(
+                      F.col("src") != F.col("dst"), F.col("pri_n"))).alias("mx")))
         winners = (uncolored.join(un_nbr.withColumnRenamed("src", "id"),
                                   "id", "left")
                    .filter(F.col("mx").isNull() | (F.col("pri") > F.col("mx")))
@@ -60,11 +61,10 @@ def color_graph(graph, etype: str | None = None,
                 .select("id", "color")
                 .localCheckpoint(eager=True))
         colored = pick if colored is None else colored.unionByName(pick)
-        new_uncolored, um = checkpoint_with_metrics(
-            uncolored.join(pick.select("id"), "id", "left_anti"),
-            n=F.count(F.lit(1)))
-        free_checkpoint(uncolored)
-        uncolored, n_uncolored = new_uncolored, um["n"]
+        return uncolored.join(pick.select("id"), "id", "left_anti")
+
+    supersteps(nodes, step, lambda t: t[-1]["n"] == 0, max_rounds,
+               n=F.count(F.lit(1)))
     return colored if colored is not None else \
         graph.spark.createDataFrame([], "id long, color int")
 

@@ -7,8 +7,8 @@ label_propagation is synchronous LPA with a deterministic tie-break, the
 scalable stand-in for Louvain-style community detection.
 
 Each round's checkpoint carries the previous label so the fixpoint test is a
-cheap aggregate over the cached blocks (no extra join job); round N-1's
-checkpoint blocks are freed once round N materializes (free_checkpoint).
+cheap aggregate over the cached blocks (no extra join job); the rounds run
+on `session.supersteps`.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+from memgraph_spark.session import supersteps
 
 
 def weakly_connected_components(
@@ -39,13 +39,7 @@ def weakly_connected_components(
         .unionAll(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
     )
     und = und.repartition("a").dropDuplicates().persist()
-    labels = (
-        und.select(F.col("a").alias("id"))
-        .dropDuplicates()
-        .withColumn("component", F.col("id"))
-        .withColumn("prev", F.lit(None).cast("long"))
-        .localCheckpoint(eager=True)
-    )
+
     def _prop(frame):
         # fresh aliases (new expr ids) so two lazy steps sharing lineage
         # can't resolve the join ambiguously
@@ -67,25 +61,21 @@ def weakly_connected_components(
     # though the second step's plan embeds them twice, so per-round shuffle
     # volume is unchanged while the driver round count halves. Min-label
     # propagation is idempotent at the fixpoint, so stopping on the second
-    # sub-step's changed-count yields byte-identical labels.
-    it = 0
-    while it < max_iter:
-        if max_iter - it >= 2:
-            new_labels, m = checkpoint_with_metrics(
-                _prop(_prop(labels)),
-                changed=F.count(F.when(F.col("component") != F.col("prev"),
-                                       1)))
-            it += 2
-        else:
-            new_labels, m = checkpoint_with_metrics(
-                _prop(labels),
-                changed=F.count(F.when(F.col("component") != F.col("prev"),
-                                       1)))
-            it += 1
-        free_checkpoint(labels)
-        labels = new_labels
-        if m["changed"] == 0:
-            break
+    # sub-step's changed-count yields byte-identical labels. Round r has
+    # done 2(r-1) propagations; an odd max_iter ends on a single one.
+    def step(frame, trace):
+        two = max_iter - 2 * (len(trace) - 1) >= 2
+        return _prop(_prop(frame)) if two else _prop(frame)
+
+    # trace[0] (prev null) observes changed 0
+    labels, _ = supersteps(
+        und.select(F.col("a").alias("id"))
+        .dropDuplicates()
+        .withColumn("component", F.col("id"))
+        .withColumn("prev", F.lit(None).cast("long")),
+        step, lambda t: len(t) > 1 and t[-1]["changed"] == 0,
+        (max_iter + 1) // 2,
+        changed=F.count(F.when(F.col("component") != F.col("prev"), 1)))
     und.unpersist()
     return labels.select("id", "component")
 
@@ -106,13 +96,8 @@ def label_propagation(
     # same hash(a) layout rationale as weakly_connected_components: the
     # per-round vote join is on a, and the dedup rides the one exchange
     und = und.repartition("a").dropDuplicates().persist()
-    labels = (
-        und.select(F.col("a").alias("id")).dropDuplicates()
-        .withColumn("label", F.col("id"))
-        .withColumn("prev", F.lit(None).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
+
+    def step(labels, trace):
         votes = (
             labels.join(und, labels["id"] == und["a"], "inner")
             .groupBy(F.col("b").alias("id"), F.col("label"))
@@ -124,15 +109,17 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("s"))
             .select("id", (-F.col("s.neg")).alias("new_label"))
         )
-        new_labels, m = checkpoint_with_metrics(
-            labels.select("id", F.col("label").alias("prev"))
-            .join(best, "id", "left")
-            .select("id", F.coalesce(F.col("new_label"), F.col("prev")).alias("label"),
-                    "prev"),
-            changed=F.count(F.when(F.col("label") != F.col("prev"), 1)))
-        free_checkpoint(labels)
-        labels = new_labels
-        if m["changed"] == 0:
-            break
+        return (labels.select("id", F.col("label").alias("prev"))
+                .join(best, "id", "left")
+                .select("id", F.coalesce(F.col("new_label"), F.col("prev")).alias("label"),
+                        "prev"))
+
+    # trace[0] (prev null) observes changed 0
+    labels, _ = supersteps(
+        und.select(F.col("a").alias("id")).dropDuplicates()
+        .withColumn("label", F.col("id"))
+        .withColumn("prev", F.lit(None).cast("long")),
+        step, lambda t: len(t) > 1 and t[-1]["changed"] == 0, max_iter,
+        changed=F.count(F.when(F.col("label") != F.col("prev"), 1)))
     und.unpersist()
     return labels.select("id", "label")

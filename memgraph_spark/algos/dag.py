@@ -4,8 +4,9 @@ Parity: igraphalg.topological_sort / contains_cycle
 (src/mage/python/igraphalg.py:86-230) and igraphalg.spanning_tree (:144).
 
 Spark re-expression: topological sort is iterative zero-in-degree peeling —
-each layer is one groupBy(dst) + anti-join, O(#layers) rounds, every round
-fully distributed. A cycle exists iff peeling stalls with nodes left.
+each layer is one groupBy(dst) + anti-join, O(#layers) rounds on
+`session.supersteps`, every round fully distributed. A cycle exists iff
+peeling stalls with nodes left.
 Spanning tree is Boruvka: each round every component picks its minimum
 outgoing edge (min_by over a groupBy on component), components merge via
 hash-min label propagation — O(log n) rounds, all joins/aggs.
@@ -16,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+from memgraph_spark.session import free_checkpoint, supersteps
 
 
 def topological_layers(graph, etype: str | None = None, mode: str = "out"):
@@ -41,42 +42,39 @@ def topological_layers(graph, etype: str | None = None, mode: str = "out"):
     # job per layer (the round's zero set is a lazy filter over the
     # already-cached checkpoint, not a second materialization), and the
     # final frame IS the result — no per-layer zero checkpoints to
-    # union/free
-    def _metrics(cur: int) -> dict:
-        return dict(
-            unassigned=F.count(F.when(F.col("layer").isNull(), 1)),
-            zeros=F.count(F.when(F.col("layer") == cur, 1)))
-    layer = 0
-    x, m = checkpoint_with_metrics(
-        indeg0.withColumn(
-            "layer", F.when(F.col("indeg") == 0, F.lit(0)).cast("int")),
-        **_metrics(0))
-    while m["unassigned"] > 0:
-        if m["zeros"] == 0:
-            free_checkpoint(x)
-            return None  # no zero-in-degree node left -> cycle
+    # union/free. Round r assigns layer r; its zero count is the growth
+    # of the assigned count over round r-1.
+    def zeros(t):
+        return t[-1]["assigned"] - (t[-2]["assigned"] if len(t) > 1 else 0)
+
+    def step(x, trace):
+        layer = len(trace) - 1
         cur_zero = (x.filter(F.col("layer") == layer)
                     .select(F.col("id").alias("src")))
-        dec = (adj.join(_maybe_broadcast(cur_zero, m["zeros"]), "src")
+        dec = (adj.join(_maybe_broadcast(cur_zero, zeros(trace)), "src")
                .groupBy(F.col("dst").alias("id"))
                .agg(F.count("*").alias("c")))
         unassigned = F.col("layer").isNull()
         new_indeg = F.when(
             unassigned, F.col("indeg") - F.coalesce("c", F.lit(0))
         ).otherwise(F.col("indeg"))
-        new_x, m = checkpoint_with_metrics(
-            x.join(dec, "id", "left")
-            .select("id", new_indeg.alias("indeg"),
-                    F.when(~unassigned, F.col("layer"))
-                    .when(new_indeg == 0, F.lit(layer + 1)).cast("int")
-                    .alias("layer")),
-            **_metrics(layer + 1))
+        return (x.join(dec, "id", "left")
+                .select("id", new_indeg.alias("indeg"),
+                        F.when(~unassigned, F.col("layer"))
+                        .when(new_indeg == 0, F.lit(layer + 1)).cast("int")
+                        .alias("layer")))
+
+    x, trace = supersteps(
+        indeg0.withColumn(
+            "layer", F.when(F.col("indeg") == 0, F.lit(0)).cast("int")),
+        step, lambda t: t[-1]["unassigned"] == 0 or zeros(t) == 0, None,
+        unassigned=F.count(F.when(F.col("layer").isNull(), 1)),
+        assigned=F.count(F.col("layer")))
+    if trace[-1]["unassigned"] > 0:
         free_checkpoint(x)
-        x = new_x
-        layer += 1
+        return None  # no zero-in-degree node left -> cycle
     # x is already ONE checkpoint holding every (id, layer); the caller
-    # owns it. zeros in the last round may be 0 legitimately (all nodes
-    # assigned earlier).
+    # owns it
     return x.select("id", "layer")
 
 

@@ -10,8 +10,7 @@ list is hash-partitioned on dst ONCE and cached; the (small) rank frame is
 broadcast into the edge join, so the per-dst aggregation reuses the cached
 partitioning and a round runs without re-shuffling the edges. Past the
 broadcast threshold the rank frame shuffles by src instead — the edges still
-never move. Convergence metrics ride the checkpoint job (observe), and round
-N-1's checkpoint blocks are freed as soon as round N materializes.
+never move. The rounds run on `session.supersteps`.
 """
 
 from __future__ import annotations
@@ -19,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+from memgraph_spark.session import supersteps
 
 
 def katz_centrality(
@@ -35,38 +34,39 @@ def katz_centrality(
     from memgraph_spark.operators.expand import (BROADCAST_FRONTIER_ROWS,
                                                  _maybe_broadcast)
     raw = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    x, m0 = checkpoint_with_metrics(
-        raw.select(F.col("src").alias("id"))
-        .unionAll(raw.select(F.col("dst").alias("id")))
-        .dropDuplicates()
-        .select("id", F.lit(0.0).alias("rank"), F.lit(0.0).alias("prev")),
-        n=F.count(F.lit(1)))
-    small = m0["n"] <= BROADCAST_FRONTIER_ROWS
-    # Partition the edge list ONCE by whichever key each round's joins need,
-    # so rounds never re-shuffle it: with a broadcast-able rank frame the
-    # edge join is map-side and the per-dst aggregation reuses a dst layout;
-    # past the broadcast threshold the join itself needs a src layout (the
-    # small rank side shuffles, the edges stay put) and only the messages
-    # shuffle for the aggregation. Column-only repartition (no explicit
-    # count) keeps AQE free to coalesce small inputs — matters under the
-    # driver's vanilla session where shuffle.partitions defaults to 200.
-    e = raw.repartition("dst" if small else "src").persist()
-    for _ in range(max_iter):
-        lhs = _maybe_broadcast(x, m0["n"])
+    layout = []  # the edge list, partitioned on the first round
+
+    def step(x, trace):
+        n = trace[0]["n"]
+        if not layout:
+            # Partition the edge list ONCE by the key the rounds' joins
+            # need: a broadcast rank frame makes the join map-side and the
+            # per-dst aggregation reuses a dst layout; past the broadcast
+            # threshold the join needs a src layout (the rank side shuffles,
+            # the edges stay put). Column-only repartition lets AQE coalesce.
+            layout.append(raw.repartition(
+                "dst" if n <= BROADCAST_FRONTIER_ROWS else "src").persist())
+        e = layout[0]
+        lhs = _maybe_broadcast(x, n)
         msgs = (lhs.join(e, x["id"] == e["src"])
                 .select(F.col("dst").alias("id"),
                         (F.lit(alpha) * (F.col("rank") + 1.0)).alias("m"))
                 .groupBy("id").agg(F.sum("m").alias("recv")))
-        # convergence metric rides the checkpoint job (observe) — no probe job
-        nxt, m = checkpoint_with_metrics(
-            x.select("id", F.col("rank").alias("prev"))
-            .join(msgs, "id", "left")
-            .select("id", F.coalesce("recv", F.lit(0.0)).alias("rank"),
-                    "prev"),
-            diff=F.max(F.abs(F.col("rank") - F.col("prev"))))
-        free_checkpoint(x)
-        x = nxt
-        if m["diff"] is not None and m["diff"] < epsilon:
-            break
-    e.unpersist()
+        return (x.select("id", F.col("rank").alias("prev"))
+                .join(msgs, "id", "left")
+                .select("id", F.coalesce("recv", F.lit(0.0)).alias("rank"),
+                        "prev"))
+
+    # trace[0] (rank == prev) observes diff 0; an empty graph has n == 0
+    x, _ = supersteps(
+        raw.select(F.col("src").alias("id"))
+        .unionAll(raw.select(F.col("dst").alias("id")))
+        .dropDuplicates()
+        .select("id", F.lit(0.0).alias("rank"), F.lit(0.0).alias("prev")),
+        step,
+        lambda t: t[0]["n"] == 0 or (len(t) > 1 and t[-1]["diff"] < epsilon),
+        max_iter,
+        n=F.count(F.lit(1)), diff=F.max(F.abs(F.col("rank") - F.col("prev"))))
+    for e in layout:
+        e.unpersist()
     return x.select("id", "rank")

@@ -10,7 +10,8 @@ Spark re-expression: the classic two-phase Louvain loop.
   community's modularity gain in one join+groupBy round. Synchronous moves
   can oscillate (two symmetric nodes swapping), so only nodes with
   (xxhash(id) + round) % 2 == 0 may move each round — the standard
-  parallel-Louvain colouring trick, preserving convergence.
+  parallel-Louvain colouring trick, preserving convergence. The rounds run
+  on `session.supersteps`.
 - After local moving stabilizes, communities contract to supernodes
   (groupBy on community pairs summing weights) and the loop repeats one
   level up; the node->community mapping composes across levels.
@@ -22,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+from memgraph_spark.session import (checkpoint_with_metrics, free_checkpoint,
+                                    supersteps)
 
 
 def _local_move_round(und, deg, comm, m2, resolution, parity):
@@ -106,25 +108,20 @@ def louvain_communities(
             und.unpersist()
             deg.unpersist()
             break
-        comm_ck = deg.select("id", F.col("id").alias("comm")) \
-            .localCheckpoint(eager=True)
-        comm = comm_ck
-        still = 0
-        for rnd in range(max_rounds):
-            # moved-count rides the checkpoint job (observe); the join with
-            # the previous assignment happens once, inside the same job
-            new, mm = checkpoint_with_metrics(
-                _local_move_round(und, deg, comm, m2, resolution, rnd)
-                .join(comm.select("id", F.col("comm").alias("__old")), "id"),
-                moved=F.count(F.when(F.col("comm") != F.col("__old"), 1)))
-            free_checkpoint(comm_ck)
-            comm_ck = new
-            comm = new.select("id", "comm")
-            # a single still round can just mean the movable half had no
-            # profitable move — require both parities quiet before stopping
-            still = still + 1 if mm["moved"] == 0 else 0
-            if still >= 2:
-                break
+        # moved-count rides the checkpoint job (observe); the join with the
+        # previous assignment happens once, inside the same job. A single
+        # still round can just mean the movable half had no profitable
+        # move — require both parities quiet (trace[0] is the identity)
+        comm_ck, _ = supersteps(
+            deg.select("id", F.col("id").alias("comm"),
+                       F.lit(None).cast("long").alias("__old")),
+            lambda ck, t: _local_move_round(
+                und, deg, ck.select("id", "comm"), m2, resolution, len(t) - 1)
+            .join(ck.select("id", F.col("comm").alias("__old")), "id"),
+            lambda t: len(t) > 2 and t[-1]["moved"] == t[-2]["moved"] == 0,
+            max_rounds,
+            moved=F.count(F.when(F.col("comm") != F.col("__old"), 1)))
+        comm = comm_ck.select("id", "comm")
         und.unpersist()
         deg.unpersist()
         # compose the level mapping into the global one

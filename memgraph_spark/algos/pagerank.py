@@ -8,9 +8,8 @@ persisted; each round's plan is O(1) deep thanks to localCheckpoint.
 
 Per-round job budget: the checkpointed rank frame carries (deg, prev) so the
 dangling-mass probe and the L1-delta convergence probe are ONE aggregate
-scan over the cached blocks — no extra joins. Round N-1's checkpoint blocks
-are freed once round N materializes (free_checkpoint), so long runs don't
-evict other caches.
+scan over the cached blocks — no extra joins. The rounds run on
+`session.supersteps`.
 """
 
 from __future__ import annotations
@@ -18,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import (checkpoint_with_metrics, free_checkpoint,
-                                    persist_if_needed)
+from memgraph_spark.session import persist_if_needed, supersteps
 
 
 def pagerank(
@@ -48,40 +46,37 @@ def pagerank(
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
 
     # rank frame schema: (id, rank, prev, deg) — deg null marks dangling
-    # the dangling-mass + convergence-delta probe rides each checkpoint's
-    # materialization job via observe — zero extra jobs per round
-    _metrics = dict(
-        dangling=F.coalesce(
-            F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)),
-        delta=F.sum(F.abs(F.col("rank") - F.col("prev"))),
-    )
-    ranks, m = checkpoint_with_metrics(
-        vertices.join(out_deg, vertices["id"] == out_deg["src"], "left")
-        .select(vertices["id"], F.lit(1.0 / n).alias("rank"),
-                F.lit(0.0).alias("prev"), "deg"),
-        **_metrics)
-    for _ in range(max_iter):
-        if tol is not None and m["delta"] is not None and m["delta"] < tol:
-            break
-        dangling = m["dangling"]
+
+    def step(ranks, trace):
         msgs = (
             ranks.filter(F.col("deg").isNotNull())
             .join(e, ranks["id"] == e["src"], "inner")
             .select(F.col("dst").alias("id"), (F.col("rank") / F.col("deg")).alias("m"))
             .groupBy("id").agg(F.sum("m").alias("recv"))
         )
-        new_ranks, m = checkpoint_with_metrics(
+        return (
             ranks.select("id", F.col("rank").alias("prev"), "deg")
             .join(msgs, "id", "left")
             .select(
                 "id",
                 (F.lit((1 - damping) / n)
                  + F.lit(damping) * (F.coalesce(F.col("recv"), F.lit(0.0))
-                                     + F.lit(dangling / n))).alias("rank"),
+                                     + F.lit(trace[-1]["dangling"] / n))).alias("rank"),
                 "prev", "deg",
-            ),
-            **_metrics)
-        free_checkpoint(ranks)
-        ranks = new_ranks
+            ))
+
+    # the dangling-mass + convergence-delta probe rides each checkpoint's
+    # materialization job via observe; an empty graph observes delta None
+    ranks, _ = supersteps(
+        vertices.join(out_deg, vertices["id"] == out_deg["src"], "left")
+        .select(vertices["id"], F.lit(1.0 / max(n, 1)).alias("rank"),
+                F.lit(0.0).alias("prev"), "deg"),
+        step,
+        lambda t: t[-1]["delta"] is None
+        or (tol is not None and t[-1]["delta"] < tol),
+        max_iter,
+        dangling=F.coalesce(
+            F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)),
+        delta=F.sum(F.abs(F.col("rank") - F.col("prev"))))
     release_e(); release_v()
     return ranks.select("id", "rank")

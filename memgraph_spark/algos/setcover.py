@@ -4,11 +4,11 @@ Parity: the reference's set_cover module (src/mage/python/set_cover.py —
 `set_cover.greedy(element_vertexes, set_vertexes)` YIELD containing_set;
 pairs at equal indices define membership).
 
-Spark re-expression: the classic ln(n)-approximation greedy loop — each
-round one distributed groupBy picks the set covering the most uncovered
-elements, then an anti-join removes the newly covered elements. Rounds =
-|cover| (inherently sequential, same as the reference's solver); per-round
-work is all aggregations.
+Spark re-expression: the classic ln(n)-approximation greedy loop on
+`session.supersteps` — each round one distributed groupBy picks the set
+covering the most uncovered elements, then an anti-join removes them (the
+remaining count rides the round's checkpoint). Rounds = |cover|, inherently
+sequential like the reference's solver; per-round work is aggregations.
 """
 
 from __future__ import annotations
@@ -21,17 +21,17 @@ def set_cover_greedy(pairs: DataFrame, element_col: str = "element",
                      set_col: str = "containing_set",
                      max_rounds: int = 10_000) -> list[int]:
     """Returns the chosen set ids, in pick order."""
-    remaining = (pairs.select(F.col(element_col).alias("element"),
-                              F.col(set_col).alias("s"))
-                 .dropDuplicates().localCheckpoint(eager=True))
+    from memgraph_spark.session import supersteps
     chosen: list[int] = []
-    for _ in range(max_rounds):
-        if remaining.isEmpty():
-            break
+
+    def step(remaining, trace):
         best = (remaining.groupBy("s").agg(F.count("*").alias("n"))
                 .orderBy(F.desc("n"), F.asc("s")).first())
         chosen.append(best.s)
-        covered = remaining.filter(F.col("s") == best.s).select("element")
-        remaining = (remaining.join(covered, "element", "left_anti")
-                     .localCheckpoint(eager=True))
+        return remaining.join(remaining.filter(F.col("s") == best.s)
+                              .select("element"), "element", "left_anti")
+
+    supersteps(pairs.select(F.col(element_col).alias("element"),
+                            F.col(set_col).alias("s")).dropDuplicates(),
+               step, lambda t: t[-1]["n"] == 0, max_rounds, n=F.count("*"))
     return chosen

@@ -413,11 +413,13 @@ def weighted_shortest_path(
     e, release_e = persist_if_needed(
         edges.select(F.col("src"), F.col("dst"),
                      F.col(weight_col).cast("double").alias("__w")))
-    init = sources.select(
+    from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
+    # the start rows' count rides their checkpoint job (observe)
+    init, m = checkpoint_with_metrics(sources.select(
         F.col(source_col).alias("start"),
         F.col(source_col).alias("id"),
         F.lit(0.0).alias("cost"),
-    ).localCheckpoint(eager=True)
+    ), n=F.count(F.lit(1)))
     # dist = lazy min-agg over the checkpointed per-round improvement deltas;
     # each delta only holds strict improvements, so no per-round
     # re-materialization of the full distance table is needed. Every
@@ -425,12 +427,11 @@ def weighted_shortest_path(
     # checkpoint (and the spent delta blocks freed) — otherwise round k
     # re-aggregates k generations of deltas and the lineage deepens
     # unboundedly on long relaxation chains (skew/sf1 profile).
-    from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
     CONSOLIDATE_EVERY = 4
     pieces = init
     deltas = [init]
     frontier = init
-    f_rows = frontier.count()
+    f_rows = m["n"]
     for _ in range(max_iterations):
         f = _maybe_broadcast(frontier, f_rows)
         dist = pieces.groupBy("start", "id").agg(F.min("cost").alias("cost"))

@@ -63,6 +63,25 @@ def checkpoint_with_metrics(df, **aggs):
     return ck, obs.get
 
 
+def supersteps(init, step, halt, max_rounds, **metrics):
+    """Drive a replace-the-state fixpoint loop; returns (frame, trace).
+
+    `init` and every `step(x, trace)` are checkpointed with `metrics`
+    observed on the checkpoint job; `trace` is the list of per-round metric
+    dicts, trace[0] from `init`. Rounds run while `halt(trace)` is false
+    and at most `max_rounds` of them (None = unbounded). A round's
+    checkpoint is freed once the next one has materialized; the caller owns
+    the final frame."""
+    x, m = checkpoint_with_metrics(init, **metrics)
+    trace = [m]
+    while (max_rounds is None or len(trace) <= max_rounds) and not halt(trace):
+        nxt, m = checkpoint_with_metrics(step(x, trace), **metrics)
+        free_checkpoint(x)
+        x = nxt
+        trace.append(m)
+    return x, trace
+
+
 def persist_if_needed(df):
     """Persist `df` unless an equivalent plan is already cached.
 

@@ -3,15 +3,20 @@
 hypothesis generates small random graphs, pure-python oracles check the
 distributed results)."""
 
-from collections import deque
+from collections import Counter, deque
 
 import networkx as nx
+import numpy as np
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from memgraph_spark.algos import (
     bridges,
+    color_graph,
+    katz_centrality,
     max_flow,
+    pagerank,
     spanning_tree,
+    topological_layers,
     weakly_connected_components,
 )
 from memgraph_spark.catalog import load_tpch_graph
@@ -131,10 +136,14 @@ def _py_bridges(edges):
             else:
                 low[v] = min(low[v], disc[w])
     import sys
+    limit = sys.getrecursionlimit()
     sys.setrecursionlimit(10_000)
-    for v in adj:
-        if v not in disc:
-            dfs(v, None)
+    try:
+        for v in adj:
+            if v not in disc:
+                dfs(v, None)
+    finally:
+        sys.setrecursionlimit(limit)
     return out
 
 
@@ -270,3 +279,85 @@ def test_bfs_parents_form_min_bfs_tree(spark, edges, picks, target):
     G.add_nodes_from([starts[0], target])
     assert hops == (nx.shortest_path_length(G, starts[0], target)
                     if nx.has_path(G, starts[0], target) else None)
+
+
+# directed multigraphs for the superstep loops: may be empty and may carry
+# self-loops, duplicate edges and cycles
+multi_edge_lists = st.lists(
+    st.tuples(st.integers(1, 8), st.integers(1, 8)), max_size=16)
+MULTI = [(1, 2), (1, 2), (2, 3), (3, 1), (3, 3), (3, 4), (4, 5)]
+DAG = [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (1, 5), (6, 5)]
+
+
+def _nx_weighted(edges):
+    """DiGraph whose edge weight is the edge's multiplicity."""
+    G = nx.DiGraph()
+    for (a, b), k in Counter(edges).items():
+        G.add_edge(a, b, weight=k)
+    return G
+
+
+@given(edges=multi_edge_lists)
+@example(edges=EMPTY)
+@example(edges=MULTI)
+@settings(**SETTINGS)
+def test_katz_matches_networkx(spark, edges):
+    df = spark.createDataFrame(edges, "src long, dst long")
+    ours = {r.id: r.rank for r in katz_centrality(
+        df, alpha=0.05, epsilon=1e-12, max_iter=200).collect()}
+    # x = alpha A^T (x + 1) is networkx's unnormalized Katz (beta=1) minus 1
+    ref = nx.katz_centrality(_nx_weighted(edges), alpha=0.05, beta=1,
+                             normalized=False, weight="weight", tol=1e-12)
+    assert ours.keys() == ref.keys()
+    assert all(abs(ours[n] - (ref[n] - 1)) < 1e-9 for n in ref)
+
+
+@given(edges=multi_edge_lists)
+@example(edges=EMPTY)
+@example(edges=MULTI)
+@settings(**SETTINGS)
+def test_pagerank_matches_google_matrix(spark, edges):
+    df = spark.createDataFrame(edges, "src long, dst long")
+    ours = {r.id: r.rank for r in
+            pagerank(df, max_iter=100).collect()}
+    if not edges:
+        assert ours == {}
+        return
+    G = nx.MultiDiGraph(edges)  # parallel edges add up in the matrix
+    P = nx.google_matrix(G, alpha=0.85)
+    x = np.full(len(G), 1.0 / len(G))
+    for _ in range(2000):
+        x = x @ P
+    assert ours.keys() == set(G)
+    # stops at an L1 step < tol=1e-6 (error < 0.85 / 0.15 * 1e-6) or after
+    # 100 rounds (error < 2 * 0.85^100)
+    assert all(abs(ours[n] - x[i]) < 1e-5 for i, n in enumerate(G))
+
+
+@given(edges=multi_edge_lists)
+@example(edges=EMPTY)
+@example(edges=MULTI)
+@example(edges=DAG)
+@settings(**SETTINGS)
+def test_topological_layers_match_generations(spark, edges):
+    out = topological_layers(_graph(spark, edges), "E")
+    G = nx.MultiDiGraph(edges)
+    if not nx.is_directed_acyclic_graph(G):
+        assert out is None
+        return
+    assert {r.id: r.layer for r in out.collect()} == {
+        n: i for i, gen in enumerate(nx.topological_generations(G))
+        for n in gen}
+
+
+@given(edges=multi_edge_lists)
+@example(edges=EMPTY)
+@example(edges=MULTI)
+@settings(**SETTINGS)
+def test_color_graph_is_proper(spark, edges):
+    colors = {r.id: r.color for r in color_graph(_graph(spark, edges), "E")
+              .collect()}
+    assert colors.keys() == {n for e in edges for n in e}
+    assert set(colors.values()) == set(range(len(set(colors.values()))))
+    # a self-loop is no conflict: only distinct endpoints must differ
+    assert all(colors[a] != colors[b] for a, b in edges if a != b)
