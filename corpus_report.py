@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                 "tests"))
 
 from gql_corpus import (  # noqa: E402
-    corpus_files, graphs_dir_for, parse_feature, run_scenario,
+    CORPUS_ROOT, corpus_files, graphs_dir_for, parse_feature, run_scenario,
 )
 from memgraph_spark.session import get_spark  # noqa: E402
 
@@ -113,6 +113,10 @@ def changed_feature_patterns() -> set[str] | None:
 
 
 def main() -> None:
+    if not os.path.isdir(CORPUS_ROOT):
+        sys.exit(f"corpus_report: corpus root {CORPUS_ROOT} is missing; "
+                 "nothing was run — corpus_results.json is the pinned "
+                 "snapshot")
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     verbose = "-v" in sys.argv
     pattern = args[0] if args else None

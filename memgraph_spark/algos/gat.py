@@ -13,17 +13,12 @@ for each edge j -> i (self-loops included):
     out_i = sum_j alpha_ij u_j + b
 
 relu between layers, softmax cross-entropy on top. GATv2 swaps the
-attention formula (a . LeakyReLU(W_s h_j + W_d h_i), algos/gatv2.py);
-GATJK adds 3-head attention + JumpingKnowledge (algos/gatjk.py) —
-both now train without torch too.
+attention formula (algos/gatv2.py); GATJK stacks 3-head layers of these
+heads with JumpingKnowledge (algos/gatjk.py).
 
-Same execution model as algos/sage.py: per-node states are
-(id, array<double>) frames, per-edge attention lives in an
-(src, dst, alpha) frame (never materializing edge x dim rows except
-inside algebraic posexplode aggregations), matmuls are Arrow-batched
-mapInPandas, weight/attention gradients reduce via treeAggregate.
-Deviations documented in sage.py apply here too (no BatchNorm/dropout;
-full-batch deterministic GD with explicit L2 weight decay).
+Execution model and shared deviations: algos/nn_kernels.py. Per-edge
+attention lives in an (src, dst, alpha) frame; edge x dim rows exist
+only inside nn_kernels.scatter_sum.
 """
 
 from __future__ import annotations
@@ -32,7 +27,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.algos.sage import _np_rows
+from memgraph_spark.algos.nn_kernels import (
+    bias_relu, edge_softmax, feature_nodes, np_rows, scatter_sum, self_loops,
+    train_node_classifier, tree_sum)
 from memgraph_spark.session import free_checkpoint
 
 NEG_SLOPE = 0.2
@@ -55,7 +52,7 @@ def _map_u(h: DataFrame, W, a_src, a_dst) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            U = _np_rows(pdf["h"]) @ W_
+            U = np_rows(pdf["h"]) @ W_
             yield pd.DataFrame({"id": pdf["id"], "u": list(U),
                                 "ssrc": U @ asrc_, "sdst": U @ adst_})
 
@@ -63,146 +60,70 @@ def _map_u(h: DataFrame, W, a_src, a_dst) -> DataFrame:
         fn, "id long, u array<double>, ssrc double, sdst double")
 
 
-def _attention(adj_self: DataFrame, uf: DataFrame) -> DataFrame:
-    """(src, dst, alpha, pos_pre): per-edge softmax attention over each
+def _attention(adj: DataFrame, uf: DataFrame) -> DataFrame:
+    """(src, dst, pos_pre, alpha): per-edge softmax attention over each
     destination's in-neighbourhood. pos_pre carries LeakyReLU' for
     backward (1.0 where the pre-activation was positive, NEG_SLOPE
     elsewhere)."""
-    e = (adj_self
-         .join(uf.select(F.col("id").alias("src"),
-                         F.col("ssrc").alias("sj")), "src")
-         .join(uf.select(F.col("id").alias("dst"),
-                         F.col("sdst").alias("si")), "dst")
-         .select("src", "dst", (F.col("sj") + F.col("si")).alias("pre")))
-    e = e.select(
+    pre = (adj
+           .join(uf.select(F.col("id").alias("src"),
+                           F.col("ssrc").alias("sj")), "src")
+           .join(uf.select(F.col("id").alias("dst"),
+                           F.col("sdst").alias("si")), "dst")
+           .select("src", "dst", (F.col("sj") + F.col("si")).alias("pre")))
+    pos = F.col("pre") > 0
+    return edge_softmax(pre.select(
         "src", "dst",
-        F.when(F.col("pre") > 0, F.col("pre"))
-        .otherwise(F.col("pre") * NEG_SLOPE).alias("e"),
-        F.when(F.col("pre") > 0, F.lit(1.0))
-        .otherwise(F.lit(NEG_SLOPE)).alias("pos_pre"))
-    mx = e.groupBy("dst").agg(F.max("e").alias("mx"))
-    e = (e.join(mx, "dst")
-         .select("src", "dst", "pos_pre",
-                 F.exp(F.col("e") - F.col("mx")).alias("ex")))
-    sm = e.groupBy("dst").agg(F.sum("ex").alias("z"))
-    return (e.join(sm, "dst")
-            .select("src", "dst", "pos_pre",
-                    (F.col("ex") / F.col("z")).alias("alpha")))
+        F.when(pos, F.lit(1.0)).otherwise(F.lit(NEG_SLOPE)).alias("pos_pre"),
+        F.when(pos, F.col("pre"))
+        .otherwise(F.col("pre") * NEG_SLOPE).alias("e")))
 
 
-def _weighted_gather(att: DataFrame, uf: DataFrame,
-                     weight_col: str = "alpha",
-                     from_col: str = "src",
-                     to_col: str = "dst") -> DataFrame:
-    """(id, v): sum over edges of weight * u[from] grouped by `to` —
-    posexplode + sum, algebraic (partial-aggregated, skew-immune)."""
-    rows = (att.join(uf.select(F.col("id").alias(from_col), "u"),
-                     from_col)
-            .select(F.col(to_col).alias("id"), weight_col,
-                    F.posexplode("u").alias("pos", "x"))
-            .groupBy("id", "pos")
-            .agg(F.sum(F.col(weight_col) * F.col("x")).alias("v"))
-            .groupBy("id").agg(
-                F.transform(F.array_sort(F.collect_list(
-                    F.struct("pos", "v"))),
-                    lambda s: s.getField("v")).alias("v")))
-    return rows
-
-
-def _vec_grads(joined: DataFrame, left: str, right: str, dim: int):
-    """treeAggregate of sum(scalar_left * vec_right) -> dim floats."""
-    def part(rows):
-        acc = np.zeros(dim)
-        any_row = False
-        for r in rows:
-            any_row = True
-            acc += float(r[left]) * np.asarray(r[right], dtype=np.float64)
-        return iter([acc]) if any_row else iter(())
-
-    return joined.select(left, right).rdd.mapPartitions(part) \
-        .treeAggregate(np.zeros(dim), lambda a, b: a + b,
-                       lambda a, b: a + b)
-
-
-def _mat_grad(joined: DataFrame, d_in: int, d_out: int):
-    """treeAggregate of sum(outer(h, g)) over (h, g) rows."""
-    def part(rows):
-        acc = np.zeros((d_in, d_out))
-        any_row = False
-        for r in rows:
-            any_row = True
-            acc += np.outer(np.asarray(r["h"], dtype=np.float64),
-                            np.asarray(r["g"], dtype=np.float64))
-        return iter([acc]) if any_row else iter(())
-
-    return joined.select("h", "g").rdd.mapPartitions(part) \
-        .treeAggregate(np.zeros((d_in, d_out)), lambda a, b: a + b,
-                       lambda a, b: a + b)
-
-
-class _GatLayerState:
-    """Per-epoch persisted frames one GAT layer needs for backward."""
+class GatState:
+    """One layer's forward frames — h_in (its input), uf (the per-node
+    transform), att (per-edge attention), out — and `frames`, the
+    checkpoints to free once backward is done."""
 
     def __init__(self, h_in, uf, att, out):
-        self.h_in = h_in        # (id, h) input (post-relu of prev layer)
-        self.uf = uf            # (id, u, ssrc, sdst)
-        self.att = att          # (src, dst, alpha, pos_pre)
-        self.out = out          # (id, h) = relu'd output (or logits)
+        self.h_in, self.uf, self.att, self.out = h_in, uf, att, out
+        self.frames = [uf, att]
+
+
+def head_forward(h: DataFrame, adj: DataFrame, lay: dict) -> GatState:
+    """One attention head over `adj`; out = (id, v) is the (lazy)
+    alpha-weighted sum of u = h @ W over each destination's in-edges.
+    uf and att are checkpointed: the attention/backward plans are deep
+    enough that carrying full lineage into every downstream join blows
+    driver heap on plan compilation."""
+    uf = _map_u(h, lay["W"], lay["a_src"], lay["a_dst"]) \
+        .localCheckpoint(eager=True)
+    att = _attention(adj, uf).localCheckpoint(eager=True)
+    out = scatter_sum(att, uf.select("id", F.col("u").alias("v")),
+                      weight="alpha")
+    return GatState(h, uf, att, out)
 
 
 def _gat_forward_layer(h: DataFrame, adj_self: DataFrame, lay: dict,
-                       dim_out: int, relu: bool) -> _GatLayerState:
+                       dim_out: int, relu: bool) -> GatState:
+    """One GATConv layer: out = (id, h) = head + b, relu'd between
+    layers. `dim_out`, the output width, is implied by `lay` (unread)."""
+    st = head_forward(h, adj_self, lay)
+    st.out = bias_relu(st.out, lay["b"], relu).localCheckpoint(eager=True)
+    st.frames.append(st.out)
+    return st
+
+
+def head_backward(st: GatState, g: DataFrame, lay: dict, need_dh: bool,
+                  relu: bool = True):
+    """(dW, da_src, da_dst, dh|None) of one head; g = (id, g) =
+    dL/d(head output). dh carries relu' of the input when `relu` (the
+    input went through relu); GATJK routes its ELU itself."""
     import pandas as pd
-    # localCheckpoint, not persist: the attention/backward plans are deep
-    # enough that carrying full lineage into every downstream join blows
-    # driver heap on plan compilation; checkpoints truncate to RDD scans
-    uf = _map_u(h, lay["W"], lay["a_src"], lay["a_dst"]) \
-        .localCheckpoint(eager=True)
-    att = _attention(adj_self, uf).localCheckpoint(eager=True)
-    agg = _weighted_gather(att, uf)
-    b_ = np.asarray(lay["b"], dtype=np.float64)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Z = _np_rows(pdf["v"]) + b_
-            if relu:
-                np.maximum(Z, 0.0, out=Z)
-            yield pd.DataFrame({"id": pdf["id"], "h": list(Z)})
-
-    out = agg.mapInPandas(fn, "id long, h array<double>") \
-        .localCheckpoint(eager=True)
-    return _GatLayerState(h, uf, att, out)
-
-
-def _gat_backward_layer(st: _GatLayerState, g: DataFrame, lay: dict,
-                        d_in: int, d_out: int, need_dh: bool,
-                        act: str | None = "relu", need_db: bool = True):
-    """Returns (dW, da_src, da_dst, db, dh_frame|None). `g` is
-    (id, g array) = dL/d(pre-bias aggregation output). `act` names the
-    activation the INPUT frame h_in went through, so dh carries its
-    derivative: "relu" (default, this module's trainer), or None when
-    the caller handles the activation itself (GATJK routes ELU + the
-    jumping-knowledge gradient outside the per-head backward). Callers
-    that compute the conv bias gradient themselves (GATJK sums graw
-    once across heads) pass need_db=False to skip the per-head bias
-    aggregation job; db is then returned as None."""
-    import pandas as pd
-    if need_db:
-        db = np.asarray(
-            g.select(F.posexplode("g").alias("pos", "x"))
-            .groupBy("pos").agg(F.sum("x").alias("s"))
-            .orderBy("pos").select("s").rdd
-            .map(lambda r: r["s"]).collect(), dtype=np.float64)
-        if db.shape != (d_out,):      # no gradient rows at all
-            db = np.zeros(d_out)
-    else:
-        db = None
+    W = np.asarray(lay["W"], dtype=np.float64)
+    d_out = W.shape[1]
     # edge-level attention gradient: dalpha_ij = g_i . u_j
-    gsel = g.select(F.col("id").alias("dst"), F.col("g"))
-    usel = st.uf.select(F.col("id").alias("src"), "u")
-    edge = (st.att.join(gsel, "dst").join(usel, "src")
+    edge = (st.att.join(g.select(F.col("id").alias("dst"), "g"), "dst")
+            .join(st.uf.select(F.col("id").alias("src"), "u"), "src")
             .select("src", "dst", "alpha", "pos_pre",
                     _dot(F.col("g"), F.col("u")).alias("dal")))
     s_i = edge.groupBy("dst").agg(
@@ -212,211 +133,167 @@ def _gat_backward_layer(st: _GatLayerState, g: DataFrame, lay: dict,
                     (F.col("alpha") * (F.col("dal") - F.col("S"))
                      * F.col("pos_pre")).alias("dpre"))) \
         .localCheckpoint(eager=True)
-    ds_src = edge.groupBy("src").agg(F.sum("dpre").alias("ds"))
-    ds_dst = edge.groupBy("dst").agg(F.sum("dpre").alias("ds"))
-    # attention-vector gradients: da_src = sum_j ds_src[j] u_j, etc.
-    da_src = _vec_grads(
-        ds_src.join(st.uf.select(F.col("id").alias("src"), "u"), "src"),
-        "ds", "u", d_out)
-    da_dst = _vec_grads(
-        ds_dst.join(st.uf.select(F.col("id").alias("dst"), "u"), "dst"),
-        "ds", "u", d_out)
     # dU = value path (alpha-weighted scatter of g_i back to each source
     # j) + attention paths ds_src*a_src + ds_dst*a_dst
-    val = (edge.select("src", "dst", "alpha").join(gsel, "dst")
-           .select(F.col("src").alias("id"), "alpha",
-                   F.posexplode("g").alias("pos", "x"))
-           .groupBy("id", "pos")
-           .agg(F.sum(F.col("alpha") * F.col("x")).alias("v"))
-           .groupBy("id").agg(
-               F.transform(F.array_sort(F.collect_list(
-                   F.struct("pos", "v"))),
-                   lambda s: s.getField("v")).alias("val")))
-    asrc_ = np.asarray(lay["a_src"], dtype=np.float64)
-    adst_ = np.asarray(lay["a_dst"], dtype=np.float64)
+    val = scatter_sum(edge.select("src", "dst", "alpha"),
+                      g.select("id", F.col("g").alias("v")),
+                      "dst", "src", weight="alpha")
     zeros = F.array_repeat(F.lit(0.0), d_out)
-    du_in = (st.uf.select("id")
+    du_in = (st.uf.select("id", "u")
              .join(val, "id", "left")
-             .join(ds_src.select(F.col("src").alias("id"),
-                                 F.col("ds").alias("dss")), "id", "left")
-             .join(ds_dst.select(F.col("dst").alias("id"),
-                                 F.col("ds").alias("dsd")), "id", "left")
-             .select("id", F.coalesce("val", zeros).alias("val"),
+             .join(edge.groupBy(F.col("src").alias("id"))
+                   .agg(F.sum("dpre").alias("dss")), "id", "left")
+             .join(edge.groupBy(F.col("dst").alias("id"))
+                   .agg(F.sum("dpre").alias("dsd")), "id", "left")
+             .select("id", "u", F.coalesce("v", zeros).alias("v"),
                      F.coalesce("dss", F.lit(0.0)).alias("dss"),
                      F.coalesce("dsd", F.lit(0.0)).alias("dsd")))
+    asrc_ = np.asarray(lay["a_src"], dtype=np.float64)
+    adst_ = np.asarray(lay["a_dst"], dtype=np.float64)
 
     def du_fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            DU = (_np_rows(pdf["val"])
+            DU = (np_rows(pdf["v"])
                   + pdf["dss"].to_numpy()[:, None] * asrc_
                   + pdf["dsd"].to_numpy()[:, None] * adst_)
-            yield pd.DataFrame({"id": pdf["id"], "g": list(DU)})
+            yield pd.DataFrame({"id": pdf["id"], "g": list(DU),
+                                "u": pdf["u"], "dss": pdf["dss"],
+                                "dsd": pdf["dsd"]})
 
-    du = du_in.mapInPandas(du_fn, "id long, g array<double>") \
-        .localCheckpoint(eager=True)
-    dW = _mat_grad(st.h_in.join(du, "id"), d_in, d_out)
+    du = du_in.mapInPandas(
+        du_fn, "id long, g array<double>, u array<double>, dss double, "
+               "dsd double").localCheckpoint(eager=True)
+    hj = st.h_in.join(du, "id")
+    # dW = sum_i outer(h_i, du_i); da_src = sum_j ds_src[j] u_j, etc.
+    dW, da_src, da_dst = tree_sum(
+        hj, ["h", "g", "u", "dss", "dsd"],
+        lambda r: (np.outer(r["h"], r["g"]),
+                   r["dss"] * np.asarray(r["u"]),
+                   r["dsd"] * np.asarray(r["u"])),
+        (np.zeros_like(W), np.zeros(d_out), np.zeros(d_out)))
     dh = None
     if need_dh:
-        W_t = np.asarray(lay["W"], dtype=np.float64).T
+        W_t = W.T
 
         def dh_fn(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                DH = _np_rows(pdf["g"]) @ W_t
-                if act == "relu":
-                    DH *= (_np_rows(pdf["h"]) > 0.0)  # relu' of h_in
+                DH = np_rows(pdf["g"]) @ W_t
+                if relu:
+                    DH *= (np_rows(pdf["h"]) > 0.0)
                 yield pd.DataFrame({"id": pdf["id"], "g": list(DH)})
 
-        dh = (st.h_in.join(du, "id")
-              .mapInPandas(dh_fn, "id long, g array<double>")) \
+        dh = hj.mapInPandas(dh_fn, "id long, g array<double>") \
             .localCheckpoint(eager=True)
     free_checkpoint(edge)
     free_checkpoint(du)
+    return dW, da_src, da_dst, dh
+
+
+def _gat_backward_layer(st: GatState, g: DataFrame, lay: dict,
+                        d_in: int, d_out: int, need_dh: bool):
+    """(dW, da_src, da_dst, db, dh|None) of one d_in -> d_out layer whose
+    input went through relu; g = (id, g) = dL/d(layer output)."""
+    (db,) = tree_sum(g, ["g"], lambda r: (r["g"],), (np.zeros(d_out),))
+    dW, da_src, da_dst, dh = head_backward(st, g, lay, need_dh)
     return dW, da_src, da_dst, db, dh
 
 
-def gat_train(graph, hidden_sizes=None, num_epochs: int = 100,
-              learning_rate: float = 0.1, weight_decay: float = 5e-4,
-              split_ratio: float = 0.8, features_attr: str = "features",
-              label_attr: str = "class", etype: str | None = None,
-              seed: int = 1):
-    """Trains the single-head GAT stack; returns (epoch_rows, model)."""
-    import pandas as pd
-    hidden_sizes = list(hidden_sizes or [16, 16])
-    spark = graph.spark
-    feat = F.col(features_attr).cast("array<double>")
-    nodes = (graph.all_nodes([features_attr, label_attr])
-             .select("id", feat.alias("h"),
-                     F.col(label_attr).cast("long").alias("y"))
-             .filter(F.col("h").isNotNull()))
-    probe = nodes.select(F.size("h").alias("d")).filter("d > 0").first()
-    if probe is None:
-        raise ValueError(
-            f"node_classification.train: no node carries a non-empty "
-            f"'{features_attr}' array property")
-    d0 = int(probe["d"])
-    nodes = nodes.filter(F.size("h") == d0)
-    classes = [int(r["y"]) for r in nodes.filter(F.col("y").isNotNull())
-               .select("y").distinct().orderBy("y").collect()]
-    if not classes:
-        raise ValueError(
-            f"node_classification.train: no node carries the "
-            f"'{label_attr}' property")
-    k = len(classes)
-    cmap = F.create_map(*[x for c, i in
-                          ((F.lit(c), F.lit(i))
-                           for i, c in enumerate(classes)) for x in (c, i)])
-    labeled = (nodes.filter(F.col("y").isNotNull())
-               .withColumn("yi", cmap[F.col("y")].cast("int"))
-               .withColumn("train",
-                           F.pmod(F.xxhash64("id"), 1000)
-                           < int(split_ratio * 1000)))
-    # undirected adjacency + self-loops (GATConv add_self_loops default)
-    und = graph.adjacency(etype, "both").select("src", "dst")
-    adj_self = und.unionByName(
-        nodes.select(F.col("id").alias("src"),
-                     F.col("id").alias("dst"))).persist()
-    adj_self.count()
-    X = nodes.select("id", "h").persist()
-    meta = labeled.select("id", "yi", "train").persist()
-    counts = meta.agg(
-        F.sum(F.when(F.col("train"), 1).otherwise(0)).alias("tr")).first()
-    n_train = int(counts["tr"] or 0)
+def init_head(d_in: int, d_out: int, rng) -> dict:
+    """Glorot-uniform W, a_src, a_dst (in that draw order — the numpy
+    twins rebuild it from the seed) and a zero bias."""
+    lim = np.sqrt(6.0 / (d_in + d_out))
+    lim_a = np.sqrt(6.0 / (d_out + 1))
+    return {"W": rng.uniform(-lim, lim, (d_in, d_out)),
+            "a_src": rng.uniform(-lim_a, lim_a, d_out),
+            "a_dst": rng.uniform(-lim_a, lim_a, d_out),
+            "b": np.zeros(d_out)}
 
-    dims = [d0] + hidden_sizes + [k]
-    rng = np.random.default_rng(seed)
-    layers = []
-    for i in range(len(dims) - 1):
-        lim = np.sqrt(6.0 / (dims[i] + dims[i + 1]))
-        lim_a = np.sqrt(6.0 / (dims[i + 1] + 1))
-        layers.append({
-            "W": rng.uniform(-lim, lim, (dims[i], dims[i + 1])),
-            "a_src": rng.uniform(-lim_a, lim_a, dims[i + 1]),
-            "a_dst": rng.uniform(-lim_a, lim_a, dims[i + 1]),
-            "b": np.zeros(dims[i + 1])})
-    L = len(layers)
-    from memgraph_spark.algos.sage import _softmax_grad_frame
-    rows = []
-    for epoch in range(1, int(num_epochs) + 1):
-        states = []
+
+class GatEncoder:
+    """Single-head GATConv stack over the self-loop-augmented adjacency,
+    relu between layers — nn_kernels.train_node_classifier's encoder
+    protocol. GATv2 overrides the three layer methods."""
+
+    kind = "gat"
+    meta: dict = {}
+
+    def __init__(self, X, und, dims, rng):
+        self.X = X
+        self.adj = self_loops(und, X).persist()
+        self.adj.count()
+        self.params = {"layers": [self.init_layer(dims[i], dims[i + 1], rng)
+                                  for i in range(len(dims) - 1)]}
+
+    init_layer = staticmethod(init_head)
+
+    @staticmethod
+    def layer_forward(h, adj, lay, relu):
+        return _gat_forward_layer(h, adj, lay, len(lay["b"]), relu)
+
+    @staticmethod
+    def layer_backward(st, g, lay, need_dh):
+        dW, das, dad, db, dh = _gat_backward_layer(
+            st, g, lay, *lay["W"].shape, need_dh)
+        return {"W": dW, "a_src": das, "a_dst": dad, "b": db}, dh
+
+    def forward(self):
+        layers = self.params["layers"]
+        states, cur = [], self.X
+        for li, lay in enumerate(layers):
+            states.append(self.layer_forward(cur, self.adj, lay,
+                                             li < len(layers) - 1))
+            cur = states[-1].out
+        return cur, states
+
+    def backward(self, states, g):
+        layers = self.params["layers"]
+        grads = [None] * len(layers)
+        for li in range(len(layers) - 1, -1, -1):
+            grads[li], dh = self.layer_backward(states[li], g, layers[li],
+                                                li > 0)
+            if dh is not None:
+                states[li].frames.append(dh)
+                g = dh
+        return {"layers": grads}
+
+    @staticmethod
+    def free(states):
+        for st in states:
+            for fr in st.frames:
+                free_checkpoint(fr)
+
+    def close(self):
+        self.adj.unpersist()
+
+    @classmethod
+    def embed(cls, X: DataFrame, und: DataFrame, layers) -> DataFrame:
+        """(id, h): the trained stack over X — a checkpoint the caller
+        frees."""
+        adj = self_loops(und, X)
         cur = X
         for li, lay in enumerate(layers):
-            st = _gat_forward_layer(cur, adj_self, lay, dims[li + 1],
-                                    relu=(li < L - 1))
-            states.append(st)
+            st = cls.layer_forward(cur, adj, lay, li < len(layers) - 1)
+            for fr in st.frames[:-1]:
+                free_checkpoint(fr)
+            if li > 0:
+                free_checkpoint(cur)     # previous layer's checkpointed out
             cur = st.out
-        zl = (states[-1].out.join(meta, "id")
-              .select("id", "h", "yi", "train"))
-        gframe = _softmax_grad_frame(zl, k, n_train) \
-            .localCheckpoint(eager=True)
-        m = gframe.agg(
-            F.avg(F.when(F.col("is_train"), F.col("loss"))).alias("lo"),
-            F.avg(F.when(~F.col("is_train"), F.col("loss"))).alias("vlo"),
-            F.avg(F.when(F.col("is_train"), F.col("hit"))).alias("acc"),
-            F.avg(F.when(~F.col("is_train"), F.col("hit"))).alias("vacc")
-        ).first()
-        rows.append((epoch, float(m["lo"] or 0.0), float(m["vlo"] or 0.0),
-                     [float(m["acc"] or 0.0)], [float(m["vacc"] or 0.0)]))
-        g = gframe.select("id", "g")
-        grads = []
-        extra = [gframe]
-        for li in range(L - 1, -1, -1):
-            dW, das, dad, db, dh = _gat_backward_layer(
-                states[li], g, layers[li], dims[li], dims[li + 1],
-                need_dh=(li > 0))
-            grads.append((dW, das, dad, db))
-            if dh is not None:
-                extra.append(dh)
-                g = dh
-        grads.reverse()
-        lr, wd = learning_rate, weight_decay
-        for lay, (dW, das, dad, db) in zip(layers, grads):
-            lay["W"] -= lr * (dW + wd * lay["W"])
-            lay["a_src"] -= lr * (das + wd * lay["a_src"])
-            lay["a_dst"] -= lr * (dad + wd * lay["a_dst"])
-            lay["b"] -= lr * db
-        for st in states:
-            free_checkpoint(st.uf)
-            free_checkpoint(st.att)
-            free_checkpoint(st.out)
-        for fr in extra:
-            free_checkpoint(fr)
-    out_schema = ("epoch int, loss double, val_loss double, "
-                  "train_log array<double>, val_log array<double>")
-    model = {"kind": "gat", "classes": classes,
-             "layers": [{"W": lay["W"].tolist(),
-                         "a_src": lay["a_src"].tolist(),
-                         "a_dst": lay["a_dst"].tolist(),
-                         "b": lay["b"].tolist()} for lay in layers],
-             "features_attr": features_attr, "label_attr": label_attr,
-             "etype": etype, "d0": d0}
-    for fr in (X, meta, adj_self):
-        fr.unpersist()
-    return spark.createDataFrame(rows, out_schema), model
+        return cur
+
+
+def gat_train(graph, **kw):
+    """Trains the single-head GAT stack; returns (epoch_rows, model).
+    Keyword arguments as nn_kernels.train_node_classifier."""
+    return train_node_classifier(graph, GatEncoder, **kw)
 
 
 def gat_forward(graph, model) -> DataFrame:
     """(id, h=z_L): the trained stack over the whole graph."""
-    feat = F.col(model["features_attr"]).cast("array<double>")
-    nodes = (graph.all_nodes([model["features_attr"]])
-             .select("id", feat.alias("h"))
-             .filter(F.col("h").isNotNull())
-             .filter(F.size("h") == int(model["d0"])))
-    und = graph.adjacency(model["etype"], "both").select("src", "dst")
-    adj_self = und.unionByName(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-    cur = nodes
-    L = len(model["layers"])
-    dims_out = [len(lay["b"]) for lay in model["layers"]]
-    for li, lay in enumerate(model["layers"]):
-        st = _gat_forward_layer(cur, adj_self, lay, dims_out[li],
-                                relu=(li < L - 1))
-        free_checkpoint(st.uf)
-        free_checkpoint(st.att)
-        if li > 0:
-            free_checkpoint(cur)     # previous layer's checkpointed out
-        cur = st.out
-    return cur
+    X, _ = feature_nodes(graph, model["features_attr"], d0=model["d0"])
+    return GatEncoder.embed(
+        X, graph.adjacency(model["etype"], "both").select("src", "dst"),
+        model["layers"])

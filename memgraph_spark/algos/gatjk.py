@@ -9,18 +9,15 @@ forward (gatjk.py:85): xs collects every post-activation layer output
 plus the last conv's raw output; jump("max") takes the elementwise max
 across layers; final_project maps to out_channels.
 
-Composed from algos/gat.py's single-head pieces: each head is an
-independent attention computation (_map_u/_attention/_weighted_gather);
-heads concatenate into the conv output; backward slices the gradient
-per head and reuses the GAT attention backward with act=None, since the
-activation (ELU, whose derivative is recoverable from the
-post-activation value: 1 where x>0 else x+1) and the JK max-mask
-routing are handled at this level. Documented deviations (sage.py):
-no BatchNorm/dropout; full-batch deterministic GD with L2 weight decay.
-JK "max" requires equal hidden sizes (torch errors on mismatched dims
-the same way); "cat"/"lstm" JK modes stay torch-gated — and are
-UNREACHABLE from the reference's own procedure surface: its
-set_model_parameters constructs GATJK with only
+Each head is algos/gat.py's attention head (gat.head_forward /
+head_backward); heads concatenate into the conv output, and backward
+slices the gradient per head. The ELU (whose derivative is recoverable
+from the post-activation value: 1 where x>0 else x+1) and the JK
+max-mask routing are handled here. Execution model and shared
+deviations: algos/nn_kernels.py. JK "max" requires equal hidden sizes
+(torch errors on mismatched dims the same way); "cat"/"lstm" JK modes
+stay torch-gated — and are UNREACHABLE from the reference's own
+procedure surface: its set_model_parameters constructs GATJK with only
 (in_channels, hidden_features_size, out_channels)
 (node_classification.py:220-224), so jk_type is always the "max"
 default implemented here.
@@ -28,257 +25,158 @@ default implemented here.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.algos.gat import (
-    _GatLayerState, _attention, _gat_backward_layer, _map_u, _mat_grad,
-    _weighted_gather)
-from memgraph_spark.algos.sage import _np_rows, _softmax_grad_frame
+from memgraph_spark.algos.gat import head_backward, head_forward, init_head
+from memgraph_spark.algos.nn_kernels import (
+    bias_relu, feature_nodes, np_rows, train_node_classifier, tree_sum)
 from memgraph_spark.session import free_checkpoint
 
 HEADS = 3
 
 
-def _concat_heads(node_ids: DataFrame, parts: list[DataFrame], d: int,
-                  b) -> DataFrame:
-    """(id, h): concat per-head gather outputs (+ conv bias), zeros for
-    nodes with no in-edges (add_self_loops=False leaves them without
-    attention rows; PyG sums an empty neighbourhood to 0)."""
-    import pandas as pd
-    zeros = F.array_repeat(F.lit(0.0), d)
-    out = node_ids
-    cols = []
-    for hi, p in enumerate(parts):
-        out = out.join(p.withColumnRenamed("v", f"__h{hi}"), "id", "left")
-        cols.append(F.coalesce(f"__h{hi}", zeros))
-    out = out.select("id", F.concat(*cols).alias("v"))
-    b_ = np.asarray(b, dtype=np.float64)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"id": pdf["id"],
-                                "h": list(_np_rows(pdf["v"]) + b_)})
-
-    return out.mapInPandas(fn, "id long, h array<double>")
-
-
-def _conv_forward(h: DataFrame, adj: DataFrame, conv: dict, d_out: int):
-    """One multi-head GATConv: returns (raw_out_frame, head_states)."""
-    states = []
-    parts = []
-    for head in conv["heads"]:
-        uf = _map_u(h, head["W"], head["a_src"], head["a_dst"]) \
-            .localCheckpoint(eager=True)
-        att = _attention(adj, uf).localCheckpoint(eager=True)
-        states.append(_GatLayerState(h, uf, att, None))
-        parts.append(_weighted_gather(att, uf))
-    raw = _concat_heads(h.select("id"), parts, d_out, conv["b"]) \
-        .localCheckpoint(eager=True)
-    return raw, states
+def _conv_forward(h: DataFrame, adj: DataFrame, conv: dict):
+    """One multi-head GATConv: (raw (id, h) checkpoint, head states).
+    Nodes with no in-edges get zeros (add_self_loops=False leaves them
+    without attention rows; PyG sums an empty neighbourhood to 0)."""
+    zeros = F.array_repeat(F.lit(0.0), len(conv["heads"][0]["b"]))
+    states = [head_forward(h, adj, head) for head in conv["heads"]]
+    out = h.select("id")
+    for hi, st in enumerate(states):
+        out = out.join(st.out.withColumnRenamed("v", f"__h{hi}"), "id",
+                       "left")
+    out = out.select("id", F.concat(*[F.coalesce(f"__h{hi}", zeros)
+                                      for hi in range(len(states))])
+                     .alias("v"))
+    return bias_relu(out, conv["b"], False).localCheckpoint(eager=True), \
+        states
 
 
 def _elu(x):
     return np.where(x > 0, x, np.exp(np.minimum(x, 0.0)) - 1.0)
 
 
-def _apply_elu(raw: DataFrame) -> DataFrame:
+def _map_rows(frame: DataFrame, fn, schema: str) -> DataFrame:
+    """Arrow-batched `fn(pdf) -> dict of columns` over the frame."""
     import pandas as pd
 
-    def fn(batches):
+    def run(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"id": pdf["id"],
-                                "h": list(_elu(_np_rows(pdf["h"])))})
+            if len(pdf):
+                yield pd.DataFrame(fn(pdf))
 
-    return raw.mapInPandas(fn, "id long, h array<double>")
+    return frame.mapInPandas(run, schema)
 
 
-def gatjk_train(graph, hidden_sizes=None, num_epochs: int = 100,
-                learning_rate: float = 0.1, weight_decay: float = 5e-4,
-                split_ratio: float = 0.8,
-                features_attr: str = "features",
-                label_attr: str = "class", etype: str | None = None,
-                seed: int = 1, heads: int = HEADS):
-    """Trains the GATJK stack; returns (epoch_rows, model)."""
-    import pandas as pd
-    hidden_sizes = list(hidden_sizes or [16, 16])
-    if len(set(hidden_sizes)) != 1:
-        raise ValueError(
-            "GATJK with jk='max' needs equal hidden sizes (the torch "
-            "JumpingKnowledge stacks equal-width layer outputs)")
-    spark = graph.spark
-    feat = F.col(features_attr).cast("array<double>")
-    nodes = (graph.all_nodes([features_attr, label_attr])
-             .select("id", feat.alias("h"),
-                     F.col(label_attr).cast("long").alias("y"))
-             .filter(F.col("h").isNotNull()))
-    probe = nodes.select(F.size("h").alias("d")).filter("d > 0").first()
-    if probe is None:
-        raise ValueError(
-            f"node_classification.train: no node carries a non-empty "
-            f"'{features_attr}' array property")
-    d0 = int(probe["d"])
-    nodes = nodes.filter(F.size("h") == d0)
-    classes = [int(r["y"]) for r in nodes.filter(F.col("y").isNotNull())
-               .select("y").distinct().orderBy("y").collect()]
-    if not classes:
-        raise ValueError(
-            f"node_classification.train: no node carries the "
-            f"'{label_attr}' property")
-    k = len(classes)
-    cmap = F.create_map(*[x for c, i in
-                          ((F.lit(c), F.lit(i))
-                           for i, c in enumerate(classes)) for x in (c, i)])
-    labeled = (nodes.filter(F.col("y").isNotNull())
-               .withColumn("yi", cmap[F.col("y")].cast("int"))
-               .withColumn("train",
-                           F.pmod(F.xxhash64("id"), 1000)
-                           < int(split_ratio * 1000)))
-    adj = graph.adjacency(etype, "both").select("src", "dst").persist()
-    adj.count()
-    X = nodes.select("id", "h").persist()
-    meta = labeled.select("id", "yi", "train").persist()
-    n_train = int(meta.filter("train").count())
-
-    # conv l: in_dims[l] -> hidden * heads (concat); JK width = hw
-    hw = hidden_sizes[-1] * heads
-    in_dims = [d0] + [hw] * (len(hidden_sizes) - 1)
-    rng = np.random.default_rng(seed)
-    convs = []
-    for li, d_in in enumerate(in_dims):
-        d_head = hidden_sizes[li]
-        lim = np.sqrt(6.0 / (d_in + d_head))
-        lim_a = np.sqrt(6.0 / (d_head + 1))
-        convs.append({
-            "heads": [{"W": rng.uniform(-lim, lim, (d_in, d_head)),
-                       "a_src": rng.uniform(-lim_a, lim_a, d_head),
-                       "a_dst": rng.uniform(-lim_a, lim_a, d_head),
-                       "b": np.zeros(d_head)}        # unused; bias below
-                      for _ in range(heads)],
-            "b": np.zeros(d_head * heads)})
-    lim_f = np.sqrt(6.0 / (hw + k))
-    Wf = rng.uniform(-lim_f, lim_f, (hw, k))
-    bf = np.zeros(k)
+def _stack_forward(X: DataFrame, adj: DataFrame, params: dict):
+    """Conv stack -> JK max -> final linear. Returns (z, state): z =
+    (id, h) logits over the jk checkpoint; state = (ck, xs, layers, jk)
+    with ck every checkpoint made (jk last), xs the JK inputs and layers
+    each conv's head states."""
+    convs = params["convs"]
     L = len(convs)
-    rows = []
-    for epoch in range(1, int(num_epochs) + 1):
-        ck = []                                  # checkpoints to free
-        # ---- forward
-        xs = []                                  # JK inputs per layer
-        cur = X
-        all_states = []
-        for li, conv in enumerate(convs):
-            raw, states = _conv_forward(cur, adj, conv,
-                                        hidden_sizes[li] * heads)
-            ck.append(raw)
-            for st in states:
-                ck.extend([st.uf, st.att])
-            all_states.append((raw, states, cur))
-            if li < L - 1:
-                nxt = _apply_elu(raw).localCheckpoint(eager=True)
-                ck.append(nxt)
-                xs.append(nxt)
-                cur = nxt
-            else:
-                xs.append(raw)                   # last conv raw into JK
-        # JK max + argmax masks
-        jk_in = xs[0].withColumnRenamed("h", "__x0")
-        for li in range(1, L):
-            jk_in = jk_in.join(xs[li].withColumnRenamed("h", f"__x{li}"),
-                               "id")
+    ck, xs, layers, cur = [], [], [], X
+    for li, conv in enumerate(convs):
+        raw, states = _conv_forward(cur, adj, conv)
+        ck.append(raw)
+        ck += [fr for st in states for fr in st.frames]
+        layers.append(states)
+        if li < L - 1:
+            cur = _map_rows(raw, lambda pdf: {
+                "id": pdf["id"], "h": list(_elu(np_rows(pdf["h"])))},
+                "id long, h array<double>").localCheckpoint(eager=True)
+            ck.append(cur)
+            xs.append(cur)
+        else:
+            xs.append(raw)                   # last conv raw into JK
+    jk_in = xs[0].withColumnRenamed("h", "__x0")
+    for li in range(1, L):
+        jk_in = jk_in.join(xs[li].withColumnRenamed("h", f"__x{li}"), "id")
 
-        def jk_fn(batches, _L=L):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                stack = np.stack([_np_rows(pdf[f"__x{li}"])
-                                  for li in range(_L)])
-                am = stack.argmax(axis=0)
-                mx = stack.max(axis=0)
-                yield pd.DataFrame({
-                    "id": pdf["id"], "jk": list(mx),
-                    "am": list(am.astype(np.float64))})
+    def jk_fn(pdf):
+        stack = np.stack([np_rows(pdf[f"__x{li}"]) for li in range(L)])
+        return {"id": pdf["id"], "jk": list(stack.max(axis=0)),
+                "am": list(stack.argmax(axis=0).astype(np.float64))}
 
-        jk = jk_in.mapInPandas(
-            jk_fn, "id long, jk array<double>, am array<double>") \
-            .localCheckpoint(eager=True)
-        ck.append(jk)
-        Wf_ = Wf.copy(); bf_ = bf.copy()
+    jk = _map_rows(jk_in, jk_fn,
+                   "id long, jk array<double>, am array<double>") \
+        .localCheckpoint(eager=True)
+    ck.append(jk)
+    Wf = np.asarray(params["Wf"], dtype=np.float64)
+    bf = np.asarray(params["bf"], dtype=np.float64)
+    z = _map_rows(jk, lambda pdf: {
+        "id": pdf["id"], "h": list(np_rows(pdf["jk"]) @ Wf + bf)},
+        "id long, h array<double>")
+    return z, (ck, xs, layers, jk)
 
-        def z_fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                yield pd.DataFrame({
-                    "id": pdf["id"],
-                    "h": list(_np_rows(pdf["jk"]) @ Wf_ + bf_)})
 
-        zl = (jk.mapInPandas(z_fn, "id long, h array<double>")
-              .join(meta, "id").select("id", "h", "yi", "train"))
-        gframe = _softmax_grad_frame(zl, k, n_train) \
-            .localCheckpoint(eager=True)
-        ck.append(gframe)
-        m = gframe.agg(
-            F.avg(F.when(F.col("is_train"), F.col("loss"))).alias("lo"),
-            F.avg(F.when(~F.col("is_train"), F.col("loss"))).alias("vlo"),
-            F.avg(F.when(F.col("is_train"), F.col("hit"))).alias("acc"),
-            F.avg(F.when(~F.col("is_train"), F.col("hit"))).alias("vacc")
-        ).first()
-        rows.append((epoch, float(m["lo"] or 0.0), float(m["vlo"] or 0.0),
-                     [float(m["acc"] or 0.0)], [float(m["vacc"] or 0.0)]))
-        # ---- backward: final linear
-        G = gframe.select("id", "g")
+class GatjkEncoder:
+    """GATJK stack (multi-head GATConv layers, ELU, JK max, final
+    linear) — nn_kernels.train_node_classifier's encoder protocol."""
+
+    kind = "gatjk"
+
+    def __init__(self, X, und, dims, rng, heads: int = HEADS):
+        self.X = X
+        hidden = list(dims[1:-1])
+        self.meta = {"hidden_sizes": hidden, "heads": heads}
+        self.adj = und        # the catalog's persisted adjacency index
+        # conv l: in_dims[l] -> hidden * heads (concat); JK width = hw
+        hw, k = hidden[-1] * heads, dims[-1]
+        in_dims = [dims[0]] + [hw] * (len(hidden) - 1)
+        convs = [{"heads": [init_head(d_in, hidden[li], rng)   # b unused
+                            for _ in range(heads)],
+                  "b": np.zeros(hidden[li] * heads)}
+                 for li, d_in in enumerate(in_dims)]
+        lim_f = np.sqrt(6.0 / (hw + k))
+        self.params = {"convs": convs,
+                       "Wf": rng.uniform(-lim_f, lim_f, (hw, k)),
+                       "bf": np.zeros(k)}
+
+    def forward(self):
+        return _stack_forward(self.X, self.adj, self.params)
+
+    def backward(self, state, G):
+        ck, xs, layers, jk = state
+        convs, Wf = self.params["convs"], self.params["Wf"]
+        L = len(convs)
+        # ---- final linear
         gj = jk.join(G, "id").localCheckpoint(eager=True)
         ck.append(gj)
-        dWf = _mat_grad(gj.withColumnRenamed("jk", "h"), hw, k)
-        dbf = np.asarray(
-            gj.select(F.posexplode("g").alias("pos", "x"))
-            .groupBy("pos").agg(F.sum("x").alias("s"))
-            .orderBy("pos").select("s").rdd
-            .map(lambda r: r["s"]).collect(), dtype=np.float64)
-        if dbf.shape != (k,):
-            dbf = np.zeros(k)
+        dWf, dbf = tree_sum(gj, ["jk", "g"],
+                            lambda r: (np.outer(r["jk"], r["g"]), r["g"]),
+                            (np.zeros_like(Wf), np.zeros(Wf.shape[1])))
         Wf_t = Wf.T.copy()
 
-        def djk_fn(batches, _L=L):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                DJK = _np_rows(pdf["g"]) @ Wf_t
-                am = _np_rows(pdf["am"]).astype(int)
-                for li in range(_L):
-                    col = DJK * (am == li)
-                    pdf[f"__d{li}"] = list(col)
-                out = {"id": pdf["id"]}
-                for li in range(_L):
-                    out[f"d{li}"] = pdf[f"__d{li}"]
-                yield pd.DataFrame(out)
+        def djk_fn(pdf):
+            DJK = np_rows(pdf["g"]) @ Wf_t
+            am = np_rows(pdf["am"]).astype(int)
+            return {"id": pdf["id"],
+                    **{f"d{li}": list(DJK * (am == li)) for li in range(L)}}
 
-        schema = "id long, " + ", ".join(
-            f"d{li} array<double>" for li in range(L))
-        dxs_all = gj.mapInPandas(djk_fn, schema) \
+        dxs_all = _map_rows(gj, djk_fn, "id long, " + ", ".join(
+            f"d{li} array<double>" for li in range(L))) \
             .localCheckpoint(eager=True)
         ck.append(dxs_all)
-        # per-layer JK gradients (frames); route with through-path
-        conv_grads = [None] * L
-        g_above = None                           # dh into layer li's xs
+        # ---- convs, top down: JK gradient + the through-path from above
+        grads = [None] * L
+        g_above = None
         for li in range(L - 1, -1, -1):
-            raw, states, h_in = all_states[li]
-            zerosv = F.array_repeat(F.lit(0.0),
-                                    hidden_sizes[li] * heads)
+            states = layers[li]
+            heads = convs[li]["heads"]
+            d_head = len(heads[0]["b"])
+            zerosv = F.array_repeat(F.lit(0.0), d_head * len(heads))
             # base on the FULL node set: dxs_all carries labeled ids only
             # (the softmax gradient frame), but unlabeled nodes still
             # receive through-path gradient from the layer above
-            gsum = (X.select("id")
+            gsum = (self.X.select("id")
                     .join(dxs_all.select(
                         "id", F.col(f"d{li}").alias("gj")), "id", "left")
-                    .select("id",
-                            F.coalesce("gj", zerosv).alias("gj")))
+                    .select("id", F.coalesce("gj", zerosv).alias("gj")))
             if g_above is not None:
                 gsum = (gsum.join(g_above, "id", "left")
                         .select("id", F.zip_with(
@@ -287,132 +185,70 @@ def gatjk_train(graph, hidden_sizes=None, num_epochs: int = 100,
             if li < L - 1:
                 # xs[li] is post-ELU: d raw = d xs * ELU'(raw), where
                 # ELU' = 1 if x>0 else x+1 from the post-activation x
-                ex = xs[li]
+                def elu_bw(pdf):
+                    Xp = np_rows(pdf["h"])
+                    return {"id": pdf["id"], "g": list(
+                        np_rows(pdf["gj"]) * np.where(Xp > 0, 1.0, Xp + 1.0))}
 
-                def elu_bw(batches):
-                    for pdf in batches:
-                        if not len(pdf):
-                            continue
-                        Xp = _np_rows(pdf["h"])
-                        D = _np_rows(pdf["gj"]) * np.where(
-                            Xp > 0, 1.0, Xp + 1.0)
-                        yield pd.DataFrame({"id": pdf["id"],
-                                            "g": list(D)})
-
-                graw = (ex.join(gsum, "id")
-                        .mapInPandas(elu_bw, "id long, g array<double>")
-                        ).localCheckpoint(eager=True)
+                graw = _map_rows(xs[li].join(gsum, "id"), elu_bw,
+                                 "id long, g array<double>")
             else:
-                graw = gsum.withColumnRenamed("gj", "g") \
-                    .localCheckpoint(eager=True)
+                graw = gsum.withColumnRenamed("gj", "g")
+            graw = graw.localCheckpoint(eager=True)
             ck.append(graw)
             # per-head backward; dh accumulates across heads
-            d_head = hidden_sizes[li]
-            d_in = in_dims[li]
-            head_grads = []
-            dh_acc = None
-            for hi, head in enumerate(convs[li]["heads"]):
-                st = states[hi]
+            head_grads, dh_acc = [], None
+            for hi, (head, st) in enumerate(zip(heads, states)):
                 g_h = graw.select(
-                    "id", F.slice("g", hi * d_head + 1, d_head)
-                    .alias("g"))
-                dW, das, dad, _db_unused, dh = _gat_backward_layer(
-                    st, g_h, head, d_in, d_head,
-                    need_dh=(li > 0), act=None, need_db=False)
-                head_grads.append((dW, das, dad))
+                    "id", F.slice("g", hi * d_head + 1, d_head).alias("g"))
+                dW, das, dad, dh = head_backward(st, g_h, head, li > 0,
+                                                 relu=False)
+                head_grads.append({"W": dW, "a_src": das, "a_dst": dad})
                 if dh is not None:
                     ck.append(dh)
-                    if dh_acc is None:
-                        dh_acc = dh
-                    else:
-                        dh_acc = (dh_acc.withColumnRenamed("g", "g1")
-                                  .join(dh.withColumnRenamed("g", "g2"),
-                                        "id")
-                                  .select("id", F.zip_with(
-                                      "g1", "g2",
-                                      lambda x, y: x + y).alias("g")))
+                    dh_acc = dh if dh_acc is None else (
+                        dh_acc.withColumnRenamed("g", "g1")
+                        .join(dh.withColumnRenamed("g", "g2"), "id")
+                        .select("id", F.zip_with(
+                            "g1", "g2", lambda x, y: x + y).alias("g")))
             # conv bias gradient = graw column sums
-            db = np.asarray(
-                graw.select(F.posexplode("g").alias("pos", "x"))
-                .groupBy("pos").agg(F.sum("x").alias("s"))
-                .orderBy("pos").select("s").rdd
-                .map(lambda r: r["s"]).collect(), dtype=np.float64)
-            if db.shape != (d_head * heads,):
-                db = np.zeros(d_head * heads)
-            conv_grads[li] = (head_grads, db)
+            (db,) = tree_sum(graw, ["g"], lambda r: (r["g"],),
+                             (np.zeros(d_head * len(heads)),))
+            grads[li] = {"heads": head_grads, "b": db}
+            g_above = None
             if dh_acc is not None:
                 g_above = dh_acc.localCheckpoint(eager=True)
                 ck.append(g_above)
-            else:
-                g_above = None
-        # ---- updates
-        lr, wd = learning_rate, weight_decay
-        for conv, (head_grads, db) in zip(convs, conv_grads):
-            for head, (dW, das, dad) in zip(conv["heads"], head_grads):
-                head["W"] -= lr * (dW + wd * head["W"])
-                head["a_src"] -= lr * (das + wd * head["a_src"])
-                head["a_dst"] -= lr * (dad + wd * head["a_dst"])
-            conv["b"] -= lr * db
-        Wf -= lr * (dWf + wd * Wf)
-        bf -= lr * dbf
-        for fr in ck:
+        return {"convs": grads, "Wf": dWf, "bf": dbf}
+
+    @staticmethod
+    def free(state):
+        for fr in state[0]:
             free_checkpoint(fr)
-    out_schema = ("epoch int, loss double, val_loss double, "
-                  "train_log array<double>, val_log array<double>")
-    model = {"kind": "gatjk", "classes": classes,
-             "convs": [{"heads": [{kk: vv.tolist() for kk, vv in
-                                   hd.items()} for hd in c["heads"]],
-                        "b": c["b"].tolist()} for c in convs],
-             "Wf": Wf.tolist(), "bf": bf.tolist(),
-             "hidden_sizes": hidden_sizes, "heads": heads,
-             "features_attr": features_attr, "label_attr": label_attr,
-             "etype": etype, "d0": d0}
-    for fr in (X, meta, adj):
-        fr.unpersist()
-    return spark.createDataFrame(rows, out_schema), model
+
+    def close(self):
+        pass
+
+
+def gatjk_train(graph, hidden_sizes=None, heads: int = HEADS, **kw):
+    """Trains the GATJK stack; returns (epoch_rows, model). Keyword
+    arguments as nn_kernels.train_node_classifier."""
+    hidden_sizes = list(hidden_sizes or [16, 16])
+    if len(set(hidden_sizes)) != 1:
+        raise ValueError(
+            "GATJK with jk='max' needs equal hidden sizes (the torch "
+            "JumpingKnowledge stacks equal-width layer outputs)")
+    return train_node_classifier(
+        graph, functools.partial(GatjkEncoder, heads=heads),
+        hidden_sizes=hidden_sizes, **kw)
 
 
 def gatjk_forward(graph, model) -> DataFrame:
     """(id, h=z): the trained GATJK stack over the whole graph."""
-    import pandas as pd
-    feat = F.col(model["features_attr"]).cast("array<double>")
-    nodes = (graph.all_nodes([model["features_attr"]])
-             .select("id", feat.alias("h"))
-             .filter(F.col("h").isNotNull())
-             .filter(F.size("h") == int(model["d0"])))
-    adj = graph.adjacency(model["etype"], "both").select("src", "dst")
-    hidden = model["hidden_sizes"]
-    heads = int(model["heads"])
-    convs = [{"heads": [{kk: np.asarray(vv) for kk, vv in hd.items()}
-                        for hd in c["heads"]],
-              "b": np.asarray(c["b"])} for c in model["convs"]]
-    L = len(convs)
-    xs = []
-    cur = nodes
-    for li, conv in enumerate(convs):
-        raw, states = _conv_forward(cur, adj, conv, hidden[li] * heads)
-        for st in states:
-            free_checkpoint(st.uf)
-            free_checkpoint(st.att)
-        if li < L - 1:
-            cur = _apply_elu(raw).localCheckpoint(eager=True)
-            xs.append(cur)
-        else:
-            xs.append(raw)
-    jk_in = xs[0].withColumnRenamed("h", "__x0")
-    for li in range(1, L):
-        jk_in = jk_in.join(xs[li].withColumnRenamed("h", f"__x{li}"),
-                           "id")
-    Wf = np.asarray(model["Wf"])
-    bf = np.asarray(model["bf"])
-
-    def fn(batches, _L=L):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            stack = np.stack([_np_rows(pdf[f"__x{li}"])
-                              for li in range(_L)])
-            yield pd.DataFrame({"id": pdf["id"],
-                                "h": list(stack.max(axis=0) @ Wf + bf)})
-
-    return jk_in.mapInPandas(fn, "id long, h array<double>")
+    X, _ = feature_nodes(graph, model["features_attr"], d0=model["d0"])
+    z, (ck, _xs, _layers, _jk) = _stack_forward(
+        X, graph.adjacency(model["etype"], "both").select("src", "dst"),
+        model)
+    for fr in ck[:-1]:                       # z reads only the jk checkpoint
+        free_checkpoint(fr)
+    return z

@@ -17,13 +17,12 @@ edge j -> i (self-loops included):
 
 relu between layers, softmax cross-entropy on top.
 
-Execution model follows algos/gat.py, with one difference: GATv2's
-attention logit needs the d-dimensional q_ij per edge. Those edge-level
+Execution model and shared deviations: algos/nn_kernels.py; the layer
+stack is algos/gat.py's GatEncoder with these layer methods. GATv2's
+attention logit needs the d-dimensional q_ij per edge: those edge-level
 vector ops stay INSIDE array columns via JVM higher-order functions
 (zip_with/aggregate/transform) — no edge x dim row explosion and no
-Python in the edge path; only the final scatters posexplode into
-algebraic sums. Per-epoch frames localCheckpoint (plan truncation).
-Regularization deviations documented in sage.py apply.
+Python in the edge path outside nn_kernels.scatter_sum.
 """
 
 from __future__ import annotations
@@ -32,7 +31,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.algos.sage import _np_rows, _softmax_grad_frame
+from memgraph_spark.algos.gat import GatEncoder, GatState
+from memgraph_spark.algos.nn_kernels import (
+    bias_relu, edge_softmax, feature_nodes, np_rows, scatter_sum,
+    train_node_classifier, tree_sum)
 from memgraph_spark.session import free_checkpoint
 
 NEG_SLOPE = 0.2
@@ -56,7 +58,7 @@ def _map_uv(h: DataFrame, Wl, Wr) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            H = _np_rows(pdf["h"])
+            H = np_rows(pdf["h"])
             yield pd.DataFrame({"id": pdf["id"], "ul": list(H @ Wl_),
                                 "ur": list(H @ Wr_)})
 
@@ -67,118 +69,48 @@ def _attention_v2(adj_self: DataFrame, uv: DataFrame, a) -> DataFrame:
     """(src, dst, alpha): per-destination softmax over
     e = a . LeakyReLU(ul_j + ur_i), all JVM-side."""
     al = _arr_lit(a)
-    e = (adj_self
-         .join(uv.select(F.col("id").alias("src"),
-                         F.col("ul").alias("ulj")), "src")
-         .join(uv.select(F.col("id").alias("dst"),
-                         F.col("ur").alias("uri")), "dst")
-         .select("src", "dst",
-                 F.aggregate(
-                     F.zip_with(
-                         F.zip_with(F.col("ulj"), F.col("uri"),
-                                    lambda x, y: x + y),
-                         al, lambda q, av: _leaky(q) * av),
-                     F.lit(0.0), lambda acc, x: acc + x).alias("e")))
-    mx = e.groupBy("dst").agg(F.max("e").alias("mx"))
-    e = (e.join(mx, "dst")
-         .select("src", "dst", F.exp(F.col("e") - F.col("mx")).alias("ex")))
-    sm = e.groupBy("dst").agg(F.sum("ex").alias("z"))
-    return (e.join(sm, "dst")
-            .select("src", "dst", (F.col("ex") / F.col("z")).alias("alpha")))
-
-
-def _gather(edges: DataFrame, vec: DataFrame, vec_col: str,
-            from_col: str, to_col: str, weight_col: str | None,
-            out_col: str) -> DataFrame:
-    """(id, out_col): sum over edges of [weight *] vec[from], grouped by
-    `to` — posexplode + sum (algebraic)."""
-    j = edges.join(vec.select(F.col("id").alias(from_col), vec_col),
-                   from_col)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    return (j.select(F.col(to_col).alias("id"), w.alias("__w"),
-                     F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("id", "pos")
-            .agg(F.sum(F.col("__w") * F.col("x")).alias("v"))
-            .groupBy("id").agg(
-                F.transform(F.array_sort(F.collect_list(
-                    F.struct("pos", "v"))),
-                    lambda s: s.getField("v")).alias(out_col)))
-
-
-class _V2State:
-    def __init__(self, h_in, uv, att, out):
-        self.h_in, self.uv, self.att, self.out = h_in, uv, att, out
+    return edge_softmax(
+        adj_self
+        .join(uv.select(F.col("id").alias("src"),
+                        F.col("ul").alias("ulj")), "src")
+        .join(uv.select(F.col("id").alias("dst"),
+                        F.col("ur").alias("uri")), "dst")
+        .select("src", "dst",
+                F.aggregate(
+                    F.zip_with(
+                        F.zip_with(F.col("ulj"), F.col("uri"),
+                                   lambda x, y: x + y),
+                        al, lambda q, av: _leaky(q) * av),
+                    F.lit(0.0), lambda acc, x: acc + x).alias("e")))
 
 
 def _forward_layer(h: DataFrame, adj_self: DataFrame, lay: dict,
-                   relu: bool) -> _V2State:
-    import pandas as pd
+                   relu: bool) -> GatState:
     uv = _map_uv(h, lay["Wl"], lay["Wr"]).localCheckpoint(eager=True)
     att = _attention_v2(adj_self, uv, lay["a"]).localCheckpoint(eager=True)
-    agg = _gather(att, uv.select("id", F.col("ul").alias("u")), "u",
-                  "src", "dst", "alpha", "v")
-    b_ = np.asarray(lay["b"], dtype=np.float64)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Z = _np_rows(pdf["v"]) + b_
-            if relu:
-                np.maximum(Z, 0.0, out=Z)
-            yield pd.DataFrame({"id": pdf["id"], "h": list(Z)})
-
-    out = agg.mapInPandas(fn, "id long, h array<double>") \
-        .localCheckpoint(eager=True)
-    return _V2State(h, uv, att, out)
+    agg = scatter_sum(att, uv.select("id", F.col("ul").alias("v")),
+                      weight="alpha")
+    st = GatState(h, uv, att,
+                  bias_relu(agg, lay["b"], relu).localCheckpoint(eager=True))
+    st.frames.append(st.out)
+    return st
 
 
-def _vec_sum(df: DataFrame, col: str, dim: int):
-    """treeAggregate elementwise sum of an array column -> dim floats."""
-    def part(rows):
-        acc = np.zeros(dim)
-        any_row = False
-        for r in rows:
-            any_row = True
-            acc += np.asarray(r[col], dtype=np.float64)
-        return iter([acc]) if any_row else iter(())
-
-    return df.select(col).rdd.mapPartitions(part) \
-        .treeAggregate(np.zeros(dim), lambda a, b: a + b,
-                       lambda a, b: a + b)
-
-
-def _mat_grad(joined: DataFrame, left: str, right: str,
-              d_in: int, d_out: int):
-    def part(rows):
-        acc = np.zeros((d_in, d_out))
-        any_row = False
-        for r in rows:
-            any_row = True
-            acc += np.outer(np.asarray(r[left], dtype=np.float64),
-                            np.asarray(r[right], dtype=np.float64))
-        return iter([acc]) if any_row else iter(())
-
-    return joined.select(left, right).rdd.mapPartitions(part) \
-        .treeAggregate(np.zeros((d_in, d_out)), lambda a, b: a + b,
-                       lambda a, b: a + b)
-
-
-def _backward_layer(st: _V2State, g: DataFrame, lay: dict,
-                    d_in: int, d_out: int, need_dh: bool):
-    """Returns (dWl, dWr, da, db, dh|None)."""
+def _backward_layer(st: GatState, g: DataFrame, lay: dict, need_dh: bool):
+    """({Wl, Wr, a, b} gradients, dh|None); g = dL/d(layer output)."""
     import pandas as pd
     al = _arr_lit(lay["a"])
-    db = _vec_sum(g, "g", d_out)
+    d_in, d_out = lay["Wl"].shape
+    (db,) = tree_sum(g, ["g"], lambda r: (r["g"],), (np.zeros(d_out),))
     gsel = g.select(F.col("id").alias("dst"), "g")
     # edge frame with q-dependent terms, all JVM HOFs:
     #   dal   = g_i . ul_j                       (attention logit grad)
     #   lrq   = LeakyReLU(q_ij)                  (for da)
     #   dposq = leaky'(q_ij) (1.0 / NEG_SLOPE)   (for dq)
     edge = (st.att
-            .join(st.uv.select(F.col("id").alias("src"),
+            .join(st.uf.select(F.col("id").alias("src"),
                                F.col("ul").alias("ulj")), "src")
-            .join(st.uv.select(F.col("id").alias("dst"),
+            .join(st.uf.select(F.col("id").alias("dst"),
                                F.col("ur").alias("uri")), "dst")
             .join(gsel, "dst")
             .select(
@@ -206,30 +138,21 @@ def _backward_layer(st: _V2State, g: DataFrame, lay: dict,
                     * F.when(q > 0, F.lit(1.0))
                     .otherwise(F.lit(NEG_SLOPE))).alias("dq"))
             ).localCheckpoint(eager=True)
-    da = _vec_sum(edge, "da_part", d_out)
+    (da,) = tree_sum(edge, ["da_part"], lambda r: (r["da_part"],),
+                     (np.zeros(d_out),))
     # dul[j] = sum_i (alpha_ij g_i + dq_ij);  dur[i] = sum_j dq_ij
-    dul_val = _gather(edge.select("src", "dst", "alpha"), gsel
-                      .withColumnRenamed("g", "u")
-                      .withColumnRenamed("dst", "id"),
-                      "u", "dst", "src", "alpha", "val")
-    dul_q = (edge.select(F.col("src").alias("id"),
-                         F.posexplode("dq").alias("pos", "x"))
-             .groupBy("id", "pos").agg(F.sum("x").alias("v"))
-             .groupBy("id").agg(
-                 F.transform(F.array_sort(F.collect_list(
-                     F.struct("pos", "v"))),
-                     lambda s: s.getField("v")).alias("dq")))
-    dur = (edge.select(F.col("dst").alias("id"),
-                       F.posexplode("dq").alias("pos", "x"))
-           .groupBy("id", "pos").agg(F.sum("x").alias("v"))
-           .groupBy("id").agg(
-               F.transform(F.array_sort(F.collect_list(
-                   F.struct("pos", "v"))),
-                   lambda s: s.getField("v")).alias("dur")))
+    dul_val = scatter_sum(edge.select("src", "dst", "alpha"),
+                          g.select("id", F.col("g").alias("v")),
+                          "dst", "src", weight="alpha")
+    dul_q = scatter_sum(edge.select("src", F.col("dq").alias("v")),
+                        to_col="src")
+    dur = scatter_sum(edge.select("dst", F.col("dq").alias("v")),
+                      to_col="dst")
     zeros = F.array_repeat(F.lit(0.0), d_out)
-    du = (st.uv.select("id")
-          .join(dul_val, "id", "left").join(dul_q, "id", "left")
-          .join(dur, "id", "left")
+    du = (st.uf.select("id")
+          .join(dul_val.withColumnRenamed("v", "val"), "id", "left")
+          .join(dul_q.withColumnRenamed("v", "dq"), "id", "left")
+          .join(dur.withColumnRenamed("v", "dur"), "id", "left")
           .select("id",
                   F.zip_with(F.coalesce("val", zeros),
                              F.coalesce("dq", zeros),
@@ -237,8 +160,10 @@ def _backward_layer(st: _V2State, g: DataFrame, lay: dict,
                   F.coalesce("dur", zeros).alias("dur"))
           ).localCheckpoint(eager=True)
     hj = st.h_in.join(du, "id").localCheckpoint(eager=True)
-    dWl = _mat_grad(hj, "h", "dul", d_in, d_out)
-    dWr = _mat_grad(hj, "h", "dur", d_in, d_out)
+    dWl, dWr = tree_sum(
+        hj, ["h", "dul", "dur"],
+        lambda r: (np.outer(r["h"], r["dul"]), np.outer(r["h"], r["dur"])),
+        (np.zeros((d_in, d_out)), np.zeros((d_in, d_out))))
     dh = None
     if need_dh:
         Wl_t = np.asarray(lay["Wl"], dtype=np.float64).T
@@ -248,9 +173,9 @@ def _backward_layer(st: _V2State, g: DataFrame, lay: dict,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                DH = (_np_rows(pdf["dul"]) @ Wl_t
-                      + _np_rows(pdf["dur"]) @ Wr_t)
-                DH *= (_np_rows(pdf["h"]) > 0.0)
+                DH = (np_rows(pdf["dul"]) @ Wl_t
+                      + np_rows(pdf["dur"]) @ Wr_t)
+                DH *= (np_rows(pdf["h"]) > 0.0)
                 yield pd.DataFrame({"id": pdf["id"], "g": list(DH)})
 
         dh = hj.mapInPandas(dh_fn, "id long, g array<double>") \
@@ -258,141 +183,38 @@ def _backward_layer(st: _V2State, g: DataFrame, lay: dict,
     free_checkpoint(edge)
     free_checkpoint(du)
     free_checkpoint(hj)
-    return dWl, dWr, da, db, dh
+    return {"Wl": dWl, "Wr": dWr, "a": da, "b": db}, dh
 
 
-def gatv2_train(graph, hidden_sizes=None, num_epochs: int = 100,
-                learning_rate: float = 0.1, weight_decay: float = 5e-4,
-                split_ratio: float = 0.8,
-                features_attr: str = "features",
-                label_attr: str = "class", etype: str | None = None,
-                seed: int = 1):
-    """Trains the single-head GATv2 stack; returns (epoch_rows, model)."""
-    hidden_sizes = list(hidden_sizes or [16, 16])
-    spark = graph.spark
-    feat = F.col(features_attr).cast("array<double>")
-    nodes = (graph.all_nodes([features_attr, label_attr])
-             .select("id", feat.alias("h"),
-                     F.col(label_attr).cast("long").alias("y"))
-             .filter(F.col("h").isNotNull()))
-    probe = nodes.select(F.size("h").alias("d")).filter("d > 0").first()
-    if probe is None:
-        raise ValueError(
-            f"node_classification.train: no node carries a non-empty "
-            f"'{features_attr}' array property")
-    d0 = int(probe["d"])
-    nodes = nodes.filter(F.size("h") == d0)
-    classes = [int(r["y"]) for r in nodes.filter(F.col("y").isNotNull())
-               .select("y").distinct().orderBy("y").collect()]
-    if not classes:
-        raise ValueError(
-            f"node_classification.train: no node carries the "
-            f"'{label_attr}' property")
-    k = len(classes)
-    cmap = F.create_map(*[x for c, i in
-                          ((F.lit(c), F.lit(i))
-                           for i, c in enumerate(classes)) for x in (c, i)])
-    labeled = (nodes.filter(F.col("y").isNotNull())
-               .withColumn("yi", cmap[F.col("y")].cast("int"))
-               .withColumn("train",
-                           F.pmod(F.xxhash64("id"), 1000)
-                           < int(split_ratio * 1000)))
-    und = graph.adjacency(etype, "both").select("src", "dst")
-    adj_self = und.unionByName(
-        nodes.select(F.col("id").alias("src"),
-                     F.col("id").alias("dst"))).persist()
-    adj_self.count()
-    X = nodes.select("id", "h").persist()
-    meta = labeled.select("id", "yi", "train").persist()
-    n_train = int(meta.filter("train").count())
+def _init_layer(d_in: int, d_out: int, rng) -> dict:
+    """Glorot-uniform Wl, Wr, a (in that draw order) and a zero bias."""
+    lim = np.sqrt(6.0 / (d_in + d_out))
+    lim_a = np.sqrt(6.0 / (d_out + 1))
+    return {"Wl": rng.uniform(-lim, lim, (d_in, d_out)),
+            "Wr": rng.uniform(-lim, lim, (d_in, d_out)),
+            "a": rng.uniform(-lim_a, lim_a, d_out),
+            "b": np.zeros(d_out)}
 
-    dims = [d0] + hidden_sizes + [k]
-    rng = np.random.default_rng(seed)
-    layers = []
-    for i in range(len(dims) - 1):
-        lim = np.sqrt(6.0 / (dims[i] + dims[i + 1]))
-        lim_a = np.sqrt(6.0 / (dims[i + 1] + 1))
-        layers.append({
-            "Wl": rng.uniform(-lim, lim, (dims[i], dims[i + 1])),
-            "Wr": rng.uniform(-lim, lim, (dims[i], dims[i + 1])),
-            "a": rng.uniform(-lim_a, lim_a, dims[i + 1]),
-            "b": np.zeros(dims[i + 1])})
-    L = len(layers)
-    rows = []
-    for epoch in range(1, int(num_epochs) + 1):
-        states = []
-        cur = X
-        for li, lay in enumerate(layers):
-            st = _forward_layer(cur, adj_self, lay, relu=(li < L - 1))
-            states.append(st)
-            cur = st.out
-        zl = (states[-1].out.join(meta, "id")
-              .select("id", "h", "yi", "train"))
-        gframe = _softmax_grad_frame(zl, k, n_train) \
-            .localCheckpoint(eager=True)
-        m = gframe.agg(
-            F.avg(F.when(F.col("is_train"), F.col("loss"))).alias("lo"),
-            F.avg(F.when(~F.col("is_train"), F.col("loss"))).alias("vlo"),
-            F.avg(F.when(F.col("is_train"), F.col("hit"))).alias("acc"),
-            F.avg(F.when(~F.col("is_train"), F.col("hit"))).alias("vacc")
-        ).first()
-        rows.append((epoch, float(m["lo"] or 0.0), float(m["vlo"] or 0.0),
-                     [float(m["acc"] or 0.0)], [float(m["vacc"] or 0.0)]))
-        g = gframe.select("id", "g")
-        grads = []
-        extra = [gframe]
-        for li in range(L - 1, -1, -1):
-            dWl, dWr, da, db, dh = _backward_layer(
-                states[li], g, layers[li], dims[li], dims[li + 1],
-                need_dh=(li > 0))
-            grads.append((dWl, dWr, da, db))
-            if dh is not None:
-                extra.append(dh)
-                g = dh
-        grads.reverse()
-        lr, wd = learning_rate, weight_decay
-        for lay, (dWl, dWr, da, db) in zip(layers, grads):
-            lay["Wl"] -= lr * (dWl + wd * lay["Wl"])
-            lay["Wr"] -= lr * (dWr + wd * lay["Wr"])
-            lay["a"] -= lr * (da + wd * lay["a"])
-            lay["b"] -= lr * db
-        for st in states:
-            free_checkpoint(st.uv)
-            free_checkpoint(st.att)
-            free_checkpoint(st.out)
-        for fr in extra:
-            free_checkpoint(fr)
-    out_schema = ("epoch int, loss double, val_loss double, "
-                  "train_log array<double>, val_log array<double>")
-    model = {"kind": "gatv2", "classes": classes,
-             "layers": [{"Wl": lay["Wl"].tolist(),
-                         "Wr": lay["Wr"].tolist(),
-                         "a": lay["a"].tolist(),
-                         "b": lay["b"].tolist()} for lay in layers],
-             "features_attr": features_attr, "label_attr": label_attr,
-             "etype": etype, "d0": d0}
-    for fr in (X, meta, adj_self):
-        fr.unpersist()
-    return spark.createDataFrame(rows, out_schema), model
+
+class Gatv2Encoder(GatEncoder):
+    """Single-head GATv2Conv stack over the self-loop-augmented
+    adjacency, relu between layers."""
+
+    kind = "gatv2"
+    init_layer = staticmethod(_init_layer)
+    layer_forward = staticmethod(_forward_layer)
+    layer_backward = staticmethod(_backward_layer)
+
+
+def gatv2_train(graph, **kw):
+    """Trains the single-head GATv2 stack; returns (epoch_rows, model).
+    Keyword arguments as nn_kernels.train_node_classifier."""
+    return train_node_classifier(graph, Gatv2Encoder, **kw)
 
 
 def gatv2_forward(graph, model) -> DataFrame:
     """(id, h=z_L): the trained stack over the whole graph."""
-    feat = F.col(model["features_attr"]).cast("array<double>")
-    nodes = (graph.all_nodes([model["features_attr"]])
-             .select("id", feat.alias("h"))
-             .filter(F.col("h").isNotNull())
-             .filter(F.size("h") == int(model["d0"])))
-    und = graph.adjacency(model["etype"], "both").select("src", "dst")
-    adj_self = und.unionByName(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-    cur = nodes
-    L = len(model["layers"])
-    for li, lay in enumerate(model["layers"]):
-        st = _forward_layer(cur, adj_self, lay, relu=(li < L - 1))
-        free_checkpoint(st.uv)
-        free_checkpoint(st.att)
-        if li > 0:
-            free_checkpoint(cur)
-        cur = st.out
-    return cur
+    X, _ = feature_nodes(graph, model["features_attr"], d0=model["d0"])
+    return Gatv2Encoder.embed(
+        X, graph.adjacency(model["etype"], "both").select("src", "dst"),
+        model["layers"])

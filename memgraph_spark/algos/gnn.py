@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.algos.nn_kernels import (EPOCH_SCHEMA, class_split,
+                                             feature_nodes)
+
 try:  # pragma: no cover - torch is absent in the build environment
     import torch  # noqa: F401
     _HAS_TORCH = True
@@ -186,22 +189,14 @@ NC_WIDE_MAX = 4096          # max aggregate expressions in the wide path
 
 
 def _nc_design(graph, features_attr: str, label_attr: str,
-               etype: str | None):
+               etype: str | None, d: int | None = None):
     """(id, x array<double>, y long|null) where x = standardized
-    [own features ++ mean one-hop neighbour features]. Returns
-    (frame, D_own). Neighbour means come from a posexplode + groupBy —
-    no driver materialization, no whole-table broadcast."""
-    feat = F.col(features_attr).cast("array<double>")
-    nodes = (graph.all_nodes([features_attr, label_attr])
-             .select("id", feat.alias("f"),
-                     F.col(label_attr).cast("long").alias("y"))
-             .filter(F.col("f").isNotNull()))
-    probe = nodes.select(F.size("f").alias("d")).filter("d > 0").first()
-    if probe is None:
-        return None, 0
-    d = int(probe["d"])
-    nodes = nodes.filter(F.size("f") == d)
-    own_long = nodes.select("id", F.posexplode("f").alias("pos", "v"))
+    [own features ++ mean one-hop neighbour features] over the nodes
+    nn_kernels.feature_nodes selects. Returns (frame, D_own). Neighbour
+    means come from a posexplode + groupBy — no driver materialization,
+    no whole-table broadcast."""
+    nodes, d = feature_nodes(graph, features_attr, label_attr, d)
+    own_long = nodes.select("id", F.posexplode("h").alias("pos", "v"))
     und = graph.adjacency(etype, "both").select("src", "dst")
     nb_long = (und.join(own_long.withColumnRenamed("id", "src"), "src")
                .groupBy(F.col("dst").alias("id"), "pos")
@@ -212,7 +207,7 @@ def _nc_design(graph, features_attr: str, label_attr: str,
     zeros = F.array_repeat(F.lit(0.0), d)
     x = (nodes.join(nb_arr, "id", "left")
          .select("id", "y",
-                 F.concat("f", F.coalesce("nf", zeros)).alias("x")))
+                 F.concat("h", F.coalesce("nf", zeros)).alias("x")))
     # standardize per dimension (stats computed in long form: 2D rows
     # cross to the driver, never the data)
     stats = (x.select(F.posexplode("x").alias("pos", "v"))
@@ -242,10 +237,10 @@ def _nc_epoch_wide(data, W, B, classes):
     lse = m + F.log(F.aggregate(
         F.transform(zarr, lambda z: F.exp(z - m)),
         F.lit(0.0), lambda acc, v: acc + v))
-    yidx = F.col("__yi")
+    yidx = F.col("yi")
     logp_y = F.element_at(zarr, yidx + 1) - lse
     hit = (F.array_position(zarr, m) - 1 == yidx).cast("double")
-    tr = ~F.col("__val")
+    tr = F.col("train")
     aggs = [F.avg(F.when(tr, -logp_y)).alias("__loss"),
             F.avg(F.when(~tr, -logp_y)).alias("__vloss"),
             F.avg(F.when(tr, hit)).alias("__acc"),
@@ -293,15 +288,15 @@ def _nc_epoch_long(data, x_long, W, B, classes, spark):
                .alias("lse"),
                F.first("pred").alias("pred")))
     soft = (logits.join(lse, "id")
-            .join(data.select("id", "__yi", "__val"), "id")
-            .select("id", "c", "__yi", "__val", "pred",
+            .join(data.select("id", "yi", "train"), "id")
+            .select("id", "c", "yi", "train", "pred",
                     (F.exp(F.col("z") - F.col("lse"))
-                     - (F.col("c") == F.col("__yi")).cast("double"))
+                     - (F.col("c") == F.col("yi")).cast("double"))
                     .alias("err"),
-                    F.when(F.col("c") == F.col("__yi"),
+                    F.when(F.col("c") == F.col("yi"),
                            F.col("z") - F.col("lse")).alias("logp_y")))
-    tr = ~F.col("__val")
-    hit = (F.col("pred") == F.col("__yi")).cast("double")
+    tr = F.col("train")
+    hit = (F.col("pred") == F.col("yi")).cast("double")
     obs = Observation()
     soft = soft.observe(
         obs,
@@ -385,30 +380,9 @@ def node_classification_train(graph, num_epochs: int = 100,
         return rows
     spark = graph.spark
     design, d_own = _nc_design(graph, features_attr, label_attr, etype)
-    out_schema = ("epoch int, loss double, val_loss double, "
-                  "train_log array<double>, val_log array<double>")
-    if design is None:
-        raise ValueError(
-            f"node_classification.train: no node carries a non-empty "
-            f"'{features_attr}' array property")
-    labeled = design.filter(F.col("y").isNotNull())
-    classes = [int(r["y"]) for r in
-               labeled.select("y").distinct().orderBy("y").collect()]
-    if not classes:
-        raise ValueError(
-            f"node_classification.train: no node carries the "
-            f"'{label_attr}' property")
+    data, classes = class_split(design, label_attr, split_ratio)
     k, D = len(classes), 2 * d_own
-    cmap = F.create_map(*[x for c, i in
-                          ((F.lit(c), F.lit(i))
-                           for i, c in enumerate(classes)) for x in (c, i)])
-    # deterministic split: stable across epochs and runs
-    data = (labeled
-            .withColumn("__yi", cmap[F.col("y")].cast("int"))
-            .withColumn("__val",
-                        (F.pmod(F.xxhash64("id"), 1000)
-                         >= int(split_ratio * 1000)))
-            .persist())
+    data = data.persist()
     data.count()
     wide = k * (D + 1) + 4 <= NC_WIDE_MAX
     x_long = None
@@ -442,7 +416,7 @@ def node_classification_train(graph, num_epochs: int = 100,
                        "features_attr": features_attr,
                        "label_attr": label_attr, "etype": etype,
                        "d_own": d_own}
-    return spark.createDataFrame(rows, out_schema)
+    return spark.createDataFrame(rows, EPOCH_SCHEMA)
 
 
 def node_classification_predict(graph, vertex) -> DataFrame:
@@ -477,9 +451,9 @@ def node_classification_predict(graph, vertex) -> DataFrame:
             [(int(best), "Prediction complete.")],
             "predicted_class long, status string")
     design, _ = _nc_design(graph, model["features_attr"],
-                           model["label_attr"], model["etype"])
-    row = (design.filter(F.col("id") == nid).select("x").first()
-           if design is not None else None)
+                           model["label_attr"], model["etype"],
+                           model["d_own"])
+    row = design.filter(F.col("id") == nid).select("x").first()
     if row is None:
         return graph.spark.createDataFrame(
             [(-1, f"node {nid} has no '{model['features_attr']}' "

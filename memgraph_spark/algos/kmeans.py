@@ -39,7 +39,13 @@ def kmeans(
     per iteration instead of O(n * k * d)); the returned assignment
     still covers every input row. train_rows=None keeps full-corpus
     training, bit-identical to before the parameter existed (the init
-    rows are the first k of the same ordering either way)."""
+    rows are the first k of the same ordering either way); train_rows
+    below n_clusters raises ValueError."""
+    if train_rows is not None and int(train_rows) < int(n_clusters):
+        raise ValueError(
+            f"kmeans: train_rows={train_rows} is below n_clusters="
+            f"{n_clusters}; the init draws its centroids from the training "
+            "rows")
     pts = df.select(F.col(id_col).alias("id"),
                     F.col(vec_col).cast("array<double>").alias("v")) \
         .filter(F.col("v").isNotNull()).persist()

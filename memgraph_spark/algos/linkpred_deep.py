@@ -15,12 +15,10 @@ probabilities with one GlobalUniform negative per positive edge
 (link_prediction_util.py:304,356), per-epoch loss/accuracy/auc/
 precision/recall/f1 metrics (link_prediction_util.py evaluate()).
 
-Execution model — the proven algos/sage.py / algos/gat.py discipline:
-node states are (id, array<double>) frames; the encoder forward/backward
-REUSE sage.encoder_forward/encoder_backward (aggregators mean/max/pool/
-gcn) and gat._gat_forward_layer/_gat_backward_layer; pair scoring and
-predictor gradients are Arrow-batched mapInPandas + mapPartitions/
-treeAggregate; the driver holds only the weight dict and Adam moments.
+Execution model: algos/nn_kernels.py. The encoders are sage.SageEncoder
+and gat.GatEncoder; pair scoring is Arrow-batched mapInPandas, predictor
+gradients reduce through nn_kernels.tree_sum; the driver holds only the
+weight dict and the nn_kernels.Adam moments.
 
 Documented deviations (batching/regularization, not layer algebra):
 - deterministic full-batch epochs instead of shuffled 512-edge
@@ -54,9 +52,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.algos.sage import (_np_rows, _sage_layer,
-                                       _with_self_loops, encoder_backward,
-                                       encoder_forward, init_sage_layers)
+from memgraph_spark.algos.gat import GatEncoder
+from memgraph_spark.algos.nn_kernels import (Adam, np_rows, scatter_sum,
+                                             tree_sum)
+from memgraph_spark.algos.sage import SageEncoder
 from memgraph_spark.session import free_checkpoint
 
 AUC_BINS = 8192
@@ -78,31 +77,6 @@ DEFAULTS = {
 }
 
 _LAYER_TYPES = ("graph_attn", "graph_sage", "logistic")
-
-
-class _Adam:
-    """torch.optim.Adam parity (bias-corrected moments, eps 1e-8) over a
-    flat {name: ndarray} parameter dict — the reference's optimizer
-    default (link_prediction.py:83 Optimizers.ADAM_OPT)."""
-
-    def __init__(self, params: dict, lr: float, weight_decay: float = 0.0):
-        self.lr = float(lr)
-        self.wd = float(weight_decay)
-        self.m = {k: np.zeros_like(v) for k, v in params.items()}
-        self.v = {k: np.zeros_like(v) for k, v in params.items()}
-        self.t = 0
-
-    def step(self, params: dict, grads: dict,
-             b1: float = 0.9, b2: float = 0.999, eps: float = 1e-8):
-        self.t += 1
-        c1 = 1.0 - b1 ** self.t
-        c2 = 1.0 - b2 ** self.t
-        for k, g in grads.items():
-            if self.wd:
-                g = g + self.wd * params[k]
-            m = self.m[k] = b1 * self.m[k] + (1 - b1) * g
-            v = self.v[k] = b2 * self.v[k] + (1 - b2) * g * g
-            params[k] -= self.lr * (m / c1) / (np.sqrt(v / c2) + eps)
 
 
 def _validate(cfg: dict) -> dict:
@@ -202,7 +176,7 @@ def _score_pairs(pairs: DataFrame, W: dict, predictor: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            ZU, ZV = _np_rows(pdf["zu"]), _np_rows(pdf["zv"])
+            ZU, ZV = np_rows(pdf["zu"]), np_rows(pdf["zv"])
             if predictor == "mlp":
                 X = np.concatenate([ZU, ZV], axis=1)
                 H1 = np.maximum(X @ W1 + b1, 0.0)
@@ -287,7 +261,7 @@ def _predictor_backward(train_scored: DataFrame, W: dict, predictor: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            ZU, ZV = _np_rows(pdf["zu"]), _np_rows(pdf["zv"])
+            ZU, ZV = np_rows(pdf["zu"]), np_rows(pdf["zv"])
             err = ((pdf["p"] - pdf["y"]).to_numpy()
                    / max(n_pairs, 1))[:, None]
             if predictor == "mlp":
@@ -301,44 +275,25 @@ def _predictor_backward(train_scored: DataFrame, W: dict, predictor: str,
             yield pd.DataFrame({
                 "id": np.concatenate([pdf["u"].to_numpy(),
                                       pdf["v"].to_numpy()]),
-                "gv": list(DU) + list(DV)})
+                "v": list(DU) + list(DV)})
 
-    gmsg = train_scored.mapInPandas(node_fn, "id long, gv array<double>")
-    gz = (gmsg.select("id", F.posexplode("gv").alias("pos", "x"))
-          .groupBy("id", "pos").agg(F.sum("x").alias("x"))
-          .groupBy("id").agg(
-              F.transform(F.array_sort(F.collect_list(
-                  F.struct("pos", "x"))),
-                  lambda s: s.getField("x")).alias("g")))
+    gz = scatter_sum(
+        train_scored.mapInPandas(node_fn, "id long, v array<double>"),
+        to_col="id").withColumnRenamed("v", "g")
     if predictor != "mlp":
         return gz, {}
 
-    def part(rows):
-        dW1 = np.zeros_like(W1)
-        db1 = np.zeros_like(b1)
-        dw2 = np.zeros_like(w2)
-        db2 = np.zeros(1)
-        any_row = False
-        for r in rows:
-            any_row = True
-            x = np.concatenate([np.asarray(r["zu"], dtype=np.float64),
-                                np.asarray(r["zv"], dtype=np.float64)])
-            h1 = np.maximum(x @ W1 + b1, 0.0)
-            err = (float(r["p"]) - float(r["y"])) / max(n_pairs, 1)
-            dh1 = err * w2 * (h1 > 0.0)
-            dW1 += np.outer(x, dh1)
-            db1 += dh1
-            dw2 += err * h1
-            db2 += err
-        return iter([(dW1, db1, dw2, db2)]) if any_row else iter(())
+    def row_grads(r):
+        x = np.concatenate([r["zu"], r["zv"]])
+        h1 = np.maximum(x @ W1 + b1, 0.0)
+        err = (float(r["p"]) - float(r["y"])) / max(n_pairs, 1)
+        dh1 = err * w2 * (h1 > 0.0)
+        return np.outer(x, dh1), dh1, err * h1, err
 
-    zero = (np.zeros_like(W1), np.zeros_like(b1), np.zeros_like(w2),
-            np.zeros(1))
-    dW1, db1, dw2, db2 = (
-        train_scored.select("zu", "zv", "p", "y").rdd.mapPartitions(part)
-        .treeAggregate(zero,
-                       lambda a, b: tuple(x + y for x, y in zip(a, b)),
-                       lambda a, b: tuple(x + y for x, y in zip(a, b))))
+    dW1, db1, dw2, db2 = tree_sum(
+        train_scored, ["zu", "zv", "p", "y"], row_grads,
+        (np.zeros_like(W1), np.zeros_like(b1), np.zeros_like(w2),
+         np.zeros(1)))
     return gz, {"p_W1": dW1, "p_b1": db1, "p_w2": dw2, "p_b2": db2}
 
 
@@ -366,16 +321,10 @@ def linkpred_train(graph, **cfg) -> DataFrame:
     if p["layer_type"] == "logistic":
         raise ValueError("linkpred_train is the deep path; the logistic "
                          "baseline is dispatched in procedures.py")
-    spark = graph.spark
     X, d0 = _node_features(graph, p["node_features_property"])
     X = X.persist()
     etype = p["target_relation"]
     und = graph.adjacency(etype, "both").select("src", "dst")
-    sage_adj = und
-    if p["layer_type"] == "graph_sage" and p["aggregator"] == "gcn":
-        sage_adj = _with_self_loops(und, X).persist()
-    deg = (sage_adj.groupBy(F.col("src").alias("id"))
-           .agg(F.count("*").cast("double").alias("deg")))
     # supervision edges: the target relation's (src, dst), deterministic
     # split like preprocess() (random permutation by fixed seed -> here a
     # stable hash; same edge always lands in the same side)
@@ -395,44 +344,10 @@ def linkpred_train(graph, **cfg) -> DataFrame:
     dims = [d0] + p["hidden_features_size"]
     d_out = dims[-1]
     rng = np.random.default_rng(int(p["seed"]))
-    pre_cache: list = []
-    if p["layer_type"] == "graph_sage":
-        enc_layers = init_sage_layers(dims, p["aggregator"], rng)
-        X0 = A0 = S0 = None
-        if p["aggregator"] == "lstm":
-            # the layer-0 SEQUENCE (raw X in pinned order) is
-            # weight-independent => built once across epochs
-            from memgraph_spark.algos.sage import _lstm_seq
-            S0 = _lstm_seq(sage_adj, X).persist()
-            S0.count()
-            pre_cache.append(S0)
-        elif p["aggregator"] != "pool":
-            from memgraph_spark.algos.sage import (_max_neighbor,
-                                                   _mean_neighbor)
-            if p["aggregator"] == "max":
-                M0, A0 = _max_neighbor(sage_adj, X, d0, cache=pre_cache)
-                A0.count()
-            else:
-                M0 = _mean_neighbor(sage_adj, X, d0).persist()
-            X0 = X.join(M0, "id").persist()
-            X0.count()
-            M0.unpersist()   # only needed to build X0, now materialized
-    else:
-        # single-head GATConv layers (algos/gat.py) with self-loops
-        lim_fn = lambda i, o: np.sqrt(6.0 / (i + o))  # noqa: E731
-        enc_layers = []
-        for i in range(len(dims) - 1):
-            lim = lim_fn(dims[i], dims[i + 1])
-            lim_a = lim_fn(dims[i + 1], 1)
-            enc_layers.append({
-                "W": rng.uniform(-lim, lim, (dims[i], dims[i + 1])),
-                "a_src": rng.uniform(-lim_a, lim_a, dims[i + 1]),
-                "a_dst": rng.uniform(-lim_a, lim_a, dims[i + 1]),
-                "b": np.zeros(dims[i + 1])})
-        gat_adj = und.unionByName(
-            X.select(F.col("id").alias("src"),
-                     F.col("id").alias("dst"))).persist()
-        gat_adj.count()
+    # graph_attn: single-head GATConv layers with self-loops
+    enc = (SageEncoder(X, und, dims, rng, p["aggregator"])
+           if p["layer_type"] == "graph_sage"
+           else GatEncoder(X, und, dims, rng))
     # predictor weights (MLPPredictor: Linear(2h, h), Linear(h, 1))
     W: dict = {}
     if p["predictor_type"] == "mlp":
@@ -442,39 +357,18 @@ def linkpred_train(graph, **cfg) -> DataFrame:
         lim2 = np.sqrt(6.0 / (d_out + 1))
         W["p_w2"] = rng.uniform(-lim2, lim2, d_out)
         W["p_b2"] = np.zeros(1)
-
-    def flat_params():
-        out = dict(W)
-        for li, lay in enumerate(enc_layers):
-            for k2, v in lay.items():
-                out[f"l{li}_{k2}"] = v
-        return out
-
-    params = flat_params()
-    opt = (_Adam(params, float(p["learning_rate"]),
-                 float(p["weight_decay"]))
+    # one flat {name: array} view over predictor + encoder weights (the
+    # same arrays, updated in place)
+    params = dict(W)
+    for li, lay in enumerate(enc.params["layers"]):
+        for k2, v in lay.items():
+            params[f"l{li}_{k2}"] = v
+    opt = (Adam(params, float(p["learning_rate"]), float(p["weight_decay"]))
            if p["optimizer"] == "ADAM" else None)
     rows = []
     for epoch in range(1, int(p["num_epochs"]) + 1):
         # ---- encoder forward -> z (id, h) embeddings frame
-        if p["layer_type"] == "graph_sage":
-            inputs, args, qs, cleanup = encoder_forward(
-                X, sage_adj, enc_layers, dims, p["aggregator"],
-                X0=X0, A0=A0, seq0=S0)
-            z = _sage_layer(inputs[-1], enc_layers[-1]["Wr"],
-                            enc_layers[-1]["Wn"], enc_layers[-1]["b"],
-                            relu=False)
-            states = None
-        else:
-            from memgraph_spark.algos.gat import _gat_forward_layer
-            states, cleanup = [], []
-            cur = X
-            for li, lay in enumerate(enc_layers):
-                st = _gat_forward_layer(cur, gat_adj, lay, dims[li + 1],
-                                        relu=(li < len(enc_layers) - 1))
-                states.append(st)
-                cur = st.out
-            z = states[-1].out
+        z, state = enc.forward()
         z = z.localCheckpoint(eager=True)
         # ---- pairs: positives + hash-drawn negatives, embeddings joined
         negs = _draw_negatives(sup, pool, n_nodes, epoch,
@@ -502,49 +396,12 @@ def linkpred_train(graph, **cfg) -> DataFrame:
         n_train_pairs = mets.get("train", {}).get("n", 0)
         # ---- backward: predictor -> node grads -> encoder
         train_scored = scored.filter(F.col("split") == "train")
-        gz, pred_grads = _predictor_backward(
+        gz, grads = _predictor_backward(
             train_scored, W, p["predictor_type"], d_out, n_train_pairs)
         gz = gz.localCheckpoint(eager=True)
-        grads: dict = dict(pred_grads)
-        if p["layer_type"] == "graph_sage":
-            enc_grads = encoder_backward(
-                gz, inputs, args, qs, sage_adj, deg, enc_layers, dims,
-                p["aggregator"], cleanup)
-            for li, (dWr, dWn, db, pg) in enumerate(enc_grads):
-                if p["aggregator"] != "gcn":
-                    grads[f"l{li}_Wr"] = dWr
-                grads[f"l{li}_Wn"] = dWn
-                grads[f"l{li}_b"] = db
-                if pg is not None and len(pg) == 2:
-                    grads[f"l{li}_Wp"], grads[f"l{li}_bp"] = pg
-                elif pg is not None:
-                    dWih, dWhh, dbl = pg
-                    grads[f"l{li}_Wih"] = dWih
-                    grads[f"l{li}_Whh"] = dWhh
-                    # b_ih/b_hh grads coincide; both params step (torch)
-                    grads[f"l{li}_bih"] = dbl
-                    grads[f"l{li}_bhh"] = dbl
-        else:
-            from memgraph_spark.algos.gat import _gat_backward_layer
-            g = gz
-            extra = []
-            for li in range(len(enc_layers) - 1, -1, -1):
-                dW, das, dad, db, dh = _gat_backward_layer(
-                    states[li], g, enc_layers[li], dims[li],
-                    dims[li + 1], need_dh=(li > 0))
-                grads[f"l{li}_W"] = dW
-                grads[f"l{li}_a_src"] = das
-                grads[f"l{li}_a_dst"] = dad
-                grads[f"l{li}_b"] = db
-                if dh is not None:
-                    extra.append(dh)
-                    g = dh
-            for st in states:
-                free_checkpoint(st.uf)
-                free_checkpoint(st.att)
-                free_checkpoint(st.out)
-            for fr in extra:
-                free_checkpoint(fr)
+        for li, lay in enumerate(enc.backward(state, gz)["layers"]):
+            for k2, g2 in lay.items():
+                grads[f"l{li}_{k2}"] = g2
         # ---- update
         if opt is not None:
             opt.step(params, grads)
@@ -555,15 +412,14 @@ def linkpred_train(graph, **cfg) -> DataFrame:
         scored.unpersist()
         free_checkpoint(gz)
         free_checkpoint(z)
-        for fr in cleanup:
-            fr.unpersist()
+        enc.free(state)
     model = {"kind": p["layer_type"], "predictor": p["predictor_type"],
              "aggregator": p["aggregator"], "dims": dims,
              "d0": d0, "etype": etype,
              "node_features_property": p["node_features_property"],
              "enc_layers": [{k2: np.asarray(v).tolist()
                              for k2, v in lay.items()}
-                            for lay in enc_layers],
+                            for lay in enc.params["layers"]],
              "predictor_weights": {k2: np.asarray(v).tolist()
                                    for k2, v in W.items()}}
     graph._lp_deep_model = model
@@ -576,16 +432,8 @@ def linkpred_train(graph, **cfg) -> DataFrame:
     for fr in (X, sup):
         fr.unpersist()
     free_checkpoint(pool)
-    if p["layer_type"] == "graph_sage":
-        if X0 is not None:
-            X0.unpersist()
-        for fr in pre_cache:
-            fr.unpersist()
-        if sage_adj is not und:
-            sage_adj.unpersist()
-    else:
-        gat_adj.unpersist()
-    return spark.createDataFrame(
+    enc.close()
+    return graph.spark.createDataFrame(
         rows, "epoch int, split string, loss double, accuracy double, "
               "auc double, precision double, recall double, f1 double")
 
@@ -596,46 +444,11 @@ def linkpred_forward(graph, model) -> DataFrame:
     X, _d0 = _node_features(graph, model["node_features_property"])
     X = X.filter(F.size("h") == int(model["d0"]))
     und = graph.adjacency(model["etype"], "both").select("src", "dst")
-    dims = model["dims"]
     layers = [{k2: np.asarray(v) for k2, v in lay.items()}
               for lay in model["enc_layers"]]
     if model["kind"] == "graph_sage":
-        from memgraph_spark.algos.sage import (_max_neighbor,
-                                               _mean_neighbor, _pool_q)
-        adj = und
-        if model["aggregator"] == "gcn":
-            adj = _with_self_loops(und, X)
-        cur = X
-        for li, lay in enumerate(layers):
-            if model["aggregator"] == "max":
-                m, _a = _max_neighbor(adj, cur, dims[li])
-            elif model["aggregator"] == "pool":
-                qh = (_pool_q(cur, lay["Wp"], lay["bp"])
-                      .withColumnRenamed("q", "h"))
-                m, _a = _max_neighbor(adj, qh, dims[li])
-            elif model["aggregator"] == "lstm":
-                from memgraph_spark.algos.sage import (_lstm_forward,
-                                                       _lstm_seq)
-                m = _lstm_forward(_lstm_seq(adj, cur), cur, lay,
-                                  dims[li])
-            else:
-                m = _mean_neighbor(adj, cur, dims[li])
-            cur = _sage_layer(cur.join(m, "id"), lay["Wr"], lay["Wn"],
-                              lay["b"], relu=(li < len(layers) - 1))
-        return cur
-    from memgraph_spark.algos.gat import _gat_forward_layer
-    adj_self = und.unionByName(
-        X.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-    cur = X
-    for li, lay in enumerate(layers):
-        st = _gat_forward_layer(cur, adj_self, lay, dims[li + 1],
-                                relu=(li < len(layers) - 1))
-        free_checkpoint(st.uf)
-        free_checkpoint(st.att)
-        if li > 0:
-            free_checkpoint(cur)
-        cur = st.out
-    return cur
+        return SageEncoder.embed(X, und, layers, model["aggregator"])
+    return GatEncoder.embed(X, und, layers)
 
 
 def linkpred_save(model: dict, save_dir: str) -> str:

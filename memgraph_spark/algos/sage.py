@@ -48,32 +48,25 @@ three extra aggregators implemented here follow the DGL algebra:
   bounded under power-law degree skew; a supernode's O(deg) BPTT tape
   is the inherent cost of the sequence semantics (DGL pays the same).
 
-Documented deviations from the torch path (regularization, not layer
-algebra): no BatchNorm1d or dropout(0.5) between layers — this is
-deterministic full-batch gradient descent with explicit L2 weight_decay
-(the reference uses Adam + those stochastic regularizers). Undirected
-(both-direction) neighbourhood, matching the repo's baseline and the
-reference's usual undirected social inputs.
-
-Execution model (nothing large on the driver):
-- node states are (id, array<double>) frames; the mean-neighbour
-  aggregation is posexplode + avg — algebraic, partial-aggregated,
-  skew-immune;
-- matmuls run in Arrow-batched pandas form via mapInPandas with the
-  small weight matrices in the task closure;
-- weight gradients reduce via mapPartitions + treeAggregate (the
-  node2vec trainer's established pattern): the driver holds only the
-  O(sum d_l*d_{l+1}) parameter/gradient floats;
-- the neighbour half of backprop is the transpose of the forward mean:
-  each node scatters g_i @ Wn^T / deg_i to its neighbours through the
-  same adjacency join.
+Execution model and shared deviations: algos/nn_kernels.py. The
+mean-neighbour aggregation is posexplode + avg (algebraic, like
+nn_kernels.scatter_sum); the neighbour half of backprop is the
+transpose of the forward mean: each node scatters g_i @ Wn^T / deg_i to
+its neighbours through the same adjacency join.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from memgraph_spark.algos.nn_kernels import (
+    feature_nodes, np_rows, project, scatter_sum, self_loops,
+    train_node_classifier, tree_sum)
+from memgraph_spark.session import free_checkpoint
 
 
 def _mean_neighbor(adj: DataFrame, h: DataFrame, dim: int) -> DataFrame:
@@ -126,11 +119,6 @@ def _max_neighbor(adj: DataFrame, h: DataFrame, dim: int, cache=None):
     m = (h.select("id").join(m, "id", "left")
          .select("id", F.coalesce("m", zeros).alias("m")))
     return m, nb.select("id", "pos", "am")
-
-
-def _np_rows(col):
-    """Column of array<double> (pandas Series of lists) -> 2-D ndarray."""
-    return np.array(col.to_list(), dtype=np.float64)
 
 
 def _lstm_seq(adj: DataFrame, h: DataFrame) -> DataFrame:
@@ -301,15 +289,6 @@ def _lstm_forward(seq: DataFrame, h: DataFrame, lay, d: int) -> DataFrame:
             .select("id", F.coalesce("m", zeros).alias("m")))
 
 
-def _with_self_loops(adj: DataFrame, nodes: DataFrame) -> DataFrame:
-    """adj ∪ {(i, i)} over `nodes` (id) — the gcn aggregator is the mean
-    aggregator over this augmented adjacency (DGL divides by deg+1 and
-    adds the node's own state)."""
-    loops = nodes.select(F.col("id").alias("src"),
-                         F.col("id").alias("dst"))
-    return adj.unionByName(loops).dropDuplicates()
-
-
 def _pool_q(h: DataFrame, Wp, bp) -> DataFrame:
     """(id, q = relu(h @ Wp + bp)): the learned per-neighbour transform
     the 'pool' aggregator maxes over (DGL SAGEConv fc_pool). relu' for
@@ -322,7 +301,7 @@ def _pool_q(h: DataFrame, Wp, bp) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = _np_rows(pdf["h"]) @ Wp_ + bp_
+            Q = np_rows(pdf["h"]) @ Wp_ + bp_
             np.maximum(Q, 0.0, out=Q)
             yield pd.DataFrame({"id": pdf["id"], "q": list(Q)})
 
@@ -347,86 +326,24 @@ def _route_argmax(msgs: DataFrame, arg: DataFrame, d: int) -> DataFrame:
                 .alias("nbr")))
 
 
-def _sage_layer(joined: DataFrame, Wr, Wn, b, relu: bool,
-                extra_cols=()) -> DataFrame:
-    """(id, h, m[, extra...]) -> (id, h=z[, extra...]) with
-    z = h@Wr + m@Wn + b, relu'd between layers. Arrow-batched."""
+def _sage_layer(joined: DataFrame, Wr, Wn, b, relu: bool) -> DataFrame:
+    """(id, h, m) -> (id, h=z) with z = h@Wr + m@Wn + b, relu'd between
+    layers. Arrow-batched."""
     import pandas as pd
     Wr_, Wn_, b_ = (np.asarray(Wr, dtype=np.float64),
                     np.asarray(Wn, dtype=np.float64),
                     np.asarray(b, dtype=np.float64))
-    out_fields = "id long, h array<double>" + "".join(
-        f", {c} {t}" for c, t in extra_cols)
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            Z = _np_rows(pdf["h"]) @ Wr_ + _np_rows(pdf["m"]) @ Wn_ + b_
+            Z = np_rows(pdf["h"]) @ Wr_ + np_rows(pdf["m"]) @ Wn_ + b_
             if relu:
                 np.maximum(Z, 0.0, out=Z)
-            out = {"id": pdf["id"], "h": list(Z)}
-            for c, _t in extra_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({"id": pdf["id"], "h": list(Z)})
 
-    return joined.mapInPandas(fn, out_fields)
-
-
-def _softmax_grad_frame(zframe: DataFrame, k: int,
-                        n_train: int) -> DataFrame:
-    """(id, h=z_L, yi, train) -> (id, g, loss, hit, is_train): per-node
-    cross-entropy gradient rows (g = (softmax - onehot)/n_train on train
-    nodes, 0 elsewhere) plus per-node metrics."""
-    import pandas as pd
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Z = _np_rows(pdf["h"])
-            Z = Z - Z.max(axis=1, keepdims=True)
-            E = np.exp(Z)
-            P = E / E.sum(axis=1, keepdims=True)
-            y = pdf["yi"].to_numpy()
-            tr = pdf["train"].to_numpy().astype(bool)
-            G = P.copy()
-            G[np.arange(len(y)), y] -= 1.0
-            G /= max(n_train, 1)
-            G[~tr] = 0.0
-            logp = np.log(np.clip(P[np.arange(len(y)), y], 1e-12, None))
-            hit = (P.argmax(axis=1) == y).astype(np.float64)
-            yield pd.DataFrame({"id": pdf["id"], "g": list(G),
-                                "loss": -logp, "hit": hit,
-                                "is_train": tr})
-
-    return zframe.mapInPandas(
-        fn, "id long, g array<double>, loss double, hit double, "
-            "is_train boolean")
-
-
-def _weight_grads(joined: DataFrame, d_in: int, d_out: int):
-    """treeAggregate of (dWr, dWn, db) over (h, m, g) rows — only
-    d_in x d_out floats reach the driver."""
-    def part(rows):
-        dWr = np.zeros((d_in, d_out))
-        dWn = np.zeros((d_in, d_out))
-        db = np.zeros(d_out)
-        any_row = False
-        for r in rows:
-            any_row = True
-            g = np.asarray(r["g"], dtype=np.float64)
-            dWr += np.outer(np.asarray(r["h"], dtype=np.float64), g)
-            dWn += np.outer(np.asarray(r["m"], dtype=np.float64), g)
-            db += g
-        return iter([(dWr, dWn, db)]) if any_row else iter(())
-
-    zero = (np.zeros((d_in, d_out)), np.zeros((d_in, d_out)),
-            np.zeros(d_out))
-    return joined.select("h", "m", "g").rdd.mapPartitions(part) \
-        .treeAggregate(zero,
-                       lambda a, b: (a[0] + b[0], a[1] + b[1], a[2] + b[2]),
-                       lambda a, b: (a[0] + b[0], a[1] + b[1], a[2] + b[2]))
+    return joined.mapInPandas(fn, "id long, h array<double>")
 
 
 def _dh_tail(gframe: DataFrame, hprev: DataFrame, nbr: DataFrame,
@@ -436,16 +353,7 @@ def _dh_tail(gframe: DataFrame, hprev: DataFrame, nbr: DataFrame,
     the scattered neighbour gradient `nbr` (id, nbr), zeros for nodes
     absent from either side."""
     import pandas as pd
-    Wr_t = np.asarray(Wr_t, dtype=np.float64)
-
-    def own_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"id": pdf["id"],
-                                "own": list(_np_rows(pdf["g"]) @ Wr_t)})
-
-    own = gframe.mapInPandas(own_fn, "id long, own array<double>")
+    own = project(gframe, "g", Wr_t, "own")
     zeros = F.array_repeat(F.lit(0.0), d_prev)
     joined = (hprev.join(own, "id", "left").join(nbr, "id", "left")
               .select("id", "h",
@@ -456,9 +364,9 @@ def _dh_tail(gframe: DataFrame, hprev: DataFrame, nbr: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            G = _np_rows(pdf["own"]) + _np_rows(pdf["nbr"])
+            G = np_rows(pdf["own"]) + np_rows(pdf["nbr"])
             if mask_relu:
-                G *= (_np_rows(pdf["h"]) > 0.0)        # relu'
+                G *= (np_rows(pdf["h"]) > 0.0)        # relu'
             yield pd.DataFrame({"id": pdf["id"], "g": list(G)})
 
     return joined.mapInPandas(mask_fn, "id long, g array<double>")
@@ -487,32 +395,17 @@ def _backprop_to_prev(gframe: DataFrame, hprev: DataFrame,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                M = (_np_rows(pdf["g"]) @ Wn_t) \
+                M = (np_rows(pdf["g"]) @ Wn_t) \
                     / pdf["deg"].to_numpy()[:, None]
-                yield pd.DataFrame({"id": pdf["id"], "msg": list(M)})
+                yield pd.DataFrame({"id": pdf["id"], "v": list(M)})
 
         msgs = gframe.join(deg, "id").mapInPandas(
-            msg_fn, "id long, msg array<double>")
+            msg_fn, "id long, v array<double>")
         # scatter: i's message reaches every j adjacent to i (adj is
-        # (src=i, dst=j) oriented); posexplode + sum = algebraic
-        nbr = (adj.join(msgs.select(F.col("id").alias("src"), "msg"),
-                        "src")
-               .select(F.col("dst").alias("id"),
-                       F.posexplode("msg").alias("pos", "v"))
-               .groupBy("id", "pos").agg(F.sum("v").alias("v"))
-               .groupBy("id").agg(
-                   F.transform(F.array_sort(F.collect_list(
-                       F.struct("pos", "v"))),
-                       lambda s: s.getField("v")).alias("nbr")))
+        # (src=i, dst=j) oriented)
+        nbr = scatter_sum(adj, msgs).withColumnRenamed("v", "nbr")
     else:
-        def msg_fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                M = _np_rows(pdf["g"]) @ Wn_t
-                yield pd.DataFrame({"id": pdf["id"], "msg": list(M)})
-
-        msgs = gframe.mapInPandas(msg_fn, "id long, msg array<double>")
+        msgs = project(gframe, "g", Wn_t, "msg")
         # route (i, pos) to its argmax contributor; positions a node
         # never won arrive sparse, so densify through a pos->v map
         nbr = _route_argmax(msgs, arg, d_prev)
@@ -533,22 +426,12 @@ def _backprop_pool(gframe: DataFrame, hprev: DataFrame, q: DataFrame,
       dh_j  = g_j @ Wr^T + dq_j @ Wp^T [* relu'(h_j) when hprev is a
               hidden state]
 
-    dWp/dbp reduce via treeAggregate (only d_prev x d_prev floats reach
-    the driver); everything row-shaped stays in frames."""
+    dWp/dbp reduce via nn_kernels.tree_sum; everything row-shaped stays
+    in frames."""
     import pandas as pd
     Wr_t = np.asarray(Wr, dtype=np.float64).T
     Wn_t = np.asarray(Wn, dtype=np.float64).T
-    Wp_ = np.asarray(Wp, dtype=np.float64)
-
-    def msg_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = _np_rows(pdf["g"]) @ Wn_t
-            yield pd.DataFrame({"id": pdf["id"], "msg": list(M)})
-
-    msgs = gframe.mapInPandas(msg_fn, "id long, msg array<double>")
-    routed = _route_argmax(msgs, arg, d_prev)
+    routed = _route_argmax(project(gframe, "g", Wn_t, "msg"), arg, d_prev)
     # dq rows: only nodes that won at least one position contribute
     dq_join = (routed.join(q, "id").join(hprev, "id"))
 
@@ -556,7 +439,7 @@ def _backprop_pool(gframe: DataFrame, hprev: DataFrame, q: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            DQ = _np_rows(pdf["nbr"]) * (_np_rows(pdf["q"]) > 0.0)
+            DQ = np_rows(pdf["nbr"]) * (np_rows(pdf["q"]) > 0.0)
             yield pd.DataFrame({"id": pdf["id"], "h": pdf["h"],
                                 "dq": list(DQ)})
 
@@ -564,35 +447,14 @@ def _backprop_pool(gframe: DataFrame, hprev: DataFrame, q: DataFrame,
         dq_fn, "id long, h array<double>, dq array<double>")
     dq = dq.localCheckpoint(eager=True)
 
-    def part(rows):
-        dWp = np.zeros((d_prev, d_prev))
-        dbp = np.zeros(d_prev)
-        any_row = False
-        for r in rows:
-            any_row = True
-            v = np.asarray(r["dq"], dtype=np.float64)
-            dWp += np.outer(np.asarray(r["h"], dtype=np.float64), v)
-            dbp += v
-        return iter([(dWp, dbp)]) if any_row else iter(())
-
-    zero = (np.zeros((d_prev, d_prev)), np.zeros(d_prev))
-    dWp, dbp = dq.select("h", "dq").rdd.mapPartitions(part) \
-        .treeAggregate(zero, lambda a, b: (a[0] + b[0], a[1] + b[1]),
-                       lambda a, b: (a[0] + b[0], a[1] + b[1]))
+    dWp, dbp = tree_sum(dq, ["h", "dq"],
+                        lambda r: (np.outer(r["h"], r["dq"]), r["dq"]),
+                        (np.zeros((d_prev, d_prev)), np.zeros(d_prev)))
     if not need_dh:
-        from memgraph_spark.session import free_checkpoint
         free_checkpoint(dq)
         return None, dWp, dbp, None
 
-    def nbr_fn(batches):
-        Wp_t = Wp_.T
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"id": pdf["id"],
-                                "nbr": list(_np_rows(pdf["dq"]) @ Wp_t)})
-
-    nbr = dq.mapInPandas(nbr_fn, "id long, nbr array<double>")
+    nbr = project(dq, "dq", np.asarray(Wp, dtype=np.float64).T, "nbr")
     out = _dh_tail(gframe, hprev, nbr, Wr_t, d_prev, mask_relu)
     return out, dWp, dbp, dq
 
@@ -618,8 +480,7 @@ def _backprop_lstm(gframe: DataFrame, hprev: DataFrame, seq: DataFrame,
     row count is bounded by the chunk's distinct neighbour count, not
     its timestep count). The frame is persisted (appended to `cleanup`)
     because the param reduction and the dh scatter both consume it;
-    param sums reduce JVM-side via posexplode + sum, so only
-    d_in*4d + d*4d + 4d floats reach the driver."""
+    param sums reduce through nn_kernels.tree_sum."""
     import pandas as pd
     Wn_t = np.asarray(lay["Wn"], dtype=np.float64).T
     Wr_t = np.asarray(Wr, dtype=np.float64).T
@@ -632,15 +493,7 @@ def _backprop_lstm(gframe: DataFrame, hprev: DataFrame, seq: DataFrame,
     n_par = d_in * 4 * d + d * 4 * d + 4 * d
     cap = _lstm_cap(d)
 
-    def msg_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame({"id": pdf["id"],
-                                "msg": list(_np_rows(pdf["g"]) @ Wn_t)})
-
-    msgs = gframe.mapInPandas(msg_fn, "id long, msg array<double>")
-    bjoin = seq.join(msgs, "id")
+    bjoin = seq.join(project(gframe, "g", Wn_t, "msg"), "id")
 
     def bptt_fn(batches):
         for pdf in batches:
@@ -650,7 +503,7 @@ def _backprop_lstm(gframe: DataFrame, hprev: DataFrame, seq: DataFrame,
             for s, e in _lstm_chunks(lens_all, cap):
                 vs = pdf["vs"].iloc[s:e]
                 flat = np.concatenate([_seq_mat(v) for v in vs], axis=0)
-                dm = _np_rows(pdf["msg"].iloc[s:e])
+                dm = np_rows(pdf["msg"].iloc[s:e])
                 _, dWih, dWhh, db, dflat = _np_lstm(
                     flat, lens_all[s:e], Wih_, Whh_, b_, dm=dm)
                 flatp = np.concatenate(
@@ -678,11 +531,8 @@ def _backprop_lstm(gframe: DataFrame, hprev: DataFrame, seq: DataFrame,
         # both the param reduction and the dh scatter consume it
         out = out.persist()
         cleanup.append(out)
-    flat_sum = np.zeros(n_par)
-    for r in (out.filter("p")
-              .select(F.posexplode("v").alias("pos", "x"))
-              .groupBy("pos").agg(F.sum("x").alias("x")).collect()):
-        flat_sum[int(r["pos"])] = float(r["x"])
+    (flat_sum,) = tree_sum(out.filter("p"), ["v"], lambda r: (r["v"],),
+                           (np.zeros(n_par),))
     cut1 = d_in * 4 * d
     cut2 = cut1 + d * 4 * d
     dWih = flat_sum[:cut1].reshape(d_in, 4 * d)
@@ -691,159 +541,12 @@ def _backprop_lstm(gframe: DataFrame, hprev: DataFrame, seq: DataFrame,
     if not need_dh:
         return None, (dWih, dWhh, db)
 
-    nbr = (out.filter(~F.col("p"))
-           .select("id", F.posexplode("v").alias("pos", "x"))
-           .groupBy("id", "pos").agg(F.sum("x").alias("x"))
-           .groupBy("id").agg(
-               F.transform(F.array_sort(F.collect_list(
-                   F.struct("pos", "x"))),
-                   lambda s: s.getField("x")).alias("nbr")))
+    nbr = scatter_sum(out.filter(~F.col("p")), to_col="id") \
+        .withColumnRenamed("v", "nbr")
     return _dh_tail(gframe, hprev, nbr, Wr_t, d_prev, mask_relu), \
         (dWih, dWhh, db)
 
 
-def encoder_forward(X, adj, layers, dims, aggregator,
-                    X0=None, A0=None, seq0=None):
-    """Forward through the SAGE stack up to (but excluding) the final
-    affine layer: persists each layer's (id, h, m) input frame plus the
-    aggregation routing state backward needs. Shared by the
-    node-classification trainer below and the deep link-prediction
-    encoder (algos/linkpred_deep.py). Callers with a weight-independent
-    layer-0 neighbour input (mean/max/gcn) pass precomputed (X0, A0) so
-    it isn't rebuilt per epoch; pool rebuilds it through the learned
-    fc_pool each call; lstm callers pass the weight-independent layer-0
-    SEQUENCE frame as `seq0` (the aggregation itself is
-    weight-dependent and refreshes per epoch). For lstm the `args` list
-    carries each layer's sequence frame (backward re-walks it in BPTT).
-    Returns (inputs, args, qs, cleanup)."""
-    use_pool = aggregator == "pool"
-    use_max = aggregator == "max"
-    use_lstm = aggregator == "lstm"
-    cleanup = []
-    if use_lstm:
-        if seq0 is None:
-            seq0 = _lstm_seq(adj, X).persist()
-            cleanup.append(seq0)
-        m0 = _lstm_forward(seq0, X, layers[0], dims[0])
-        cur = X.join(m0, "id").persist()
-        cur.count()
-        cleanup.append(cur)
-        inputs, args, qs = [cur], [seq0], [None]
-    elif use_pool:
-        # persist the h-named frame; the q-named view for backward is a
-        # lazy rename OVER the cache (a post-persist rename would be a
-        # different plan and recompute)
-        qh0 = (_pool_q(X, layers[0]["Wp"], layers[0]["bp"])
-               .withColumnRenamed("q", "h").persist())
-        m0, a0 = _max_neighbor(adj, qh0, dims[0], cache=cleanup)
-        cur = X.join(m0, "id").persist()
-        cur.count()
-        cleanup += [qh0, cur]
-        inputs, args = [cur], [a0]
-        qs = [qh0.withColumnRenamed("h", "q")]
-    elif X0 is not None:
-        inputs, args, qs = [X0], [A0], [None]
-        cur = X0
-    else:
-        if use_max:
-            m0, a0 = _max_neighbor(adj, X, dims[0], cache=cleanup)
-        else:
-            m0, a0 = _mean_neighbor(adj, X, dims[0]), None
-        cur = X.join(m0, "id").persist()
-        cur.count()
-        cleanup.append(cur)
-        inputs, args, qs = [cur], [a0], [None]
-    for li, lay in enumerate(layers[:-1]):
-        h_next = _sage_layer(cur, lay["Wr"], lay["Wn"], lay["b"],
-                             relu=True)
-        if use_pool:
-            nxt_lay = layers[li + 1]
-            h_next = h_next.persist()
-            cleanup.append(h_next)
-            qh = (_pool_q(h_next, nxt_lay["Wp"], nxt_lay["bp"])
-                  .withColumnRenamed("q", "h").persist())
-            m_next, a_next = _max_neighbor(adj, qh, dims[li + 1],
-                                           cache=cleanup)
-            cleanup.append(qh)
-            args.append(a_next)
-            qs.append(qh.withColumnRenamed("h", "q"))
-        elif use_max:
-            m_next, a_next = _max_neighbor(adj, h_next, dims[li + 1],
-                                           cache=cleanup)
-            args.append(a_next)
-            qs.append(None)
-        elif use_lstm:
-            # h_next feeds three consumers (the seq shuffle, the
-            # forward's id base, the cur join) — persist like pool does
-            h_next = h_next.persist()
-            cleanup.append(h_next)
-            seq_next = _lstm_seq(adj, h_next).persist()
-            cleanup.append(seq_next)
-            m_next = _lstm_forward(seq_next, h_next, layers[li + 1],
-                                   dims[li + 1])
-            args.append(seq_next)
-            qs.append(None)
-        else:
-            m_next = _mean_neighbor(adj, h_next, dims[li + 1])
-            args.append(None)
-            qs.append(None)
-        cur = h_next.join(m_next, "id").persist()
-        cur.count()
-        cleanup.append(cur)
-        inputs.append(cur)
-    return inputs, args, qs, cleanup
-
-
-def encoder_backward(g, inputs, args, qs, adj, deg, layers, dims,
-                     aggregator, cleanup):
-    """Backward through the SAGE stack from g = dL/d(z_L). Returns a
-    per-layer grads list [(dWr, dWn, db, extra), ...] where extra is
-    None (mean/max/gcn), (dWp, dbp) for pool, or (dWih, dWhh, db_lstm)
-    for lstm; intermediate frames are appended to `cleanup` (caller
-    unpersists)."""
-    from memgraph_spark.session import free_checkpoint
-    use_pool = aggregator == "pool"
-    use_lstm = aggregator == "lstm"
-    L = len(layers)
-    raw = []
-    pool_grads = [None] * L
-    for li in range(L - 1, -1, -1):
-        joined = inputs[li].join(g, "id")
-        raw.append(_weight_grads(joined, dims[li], dims[li + 1]))
-        if use_lstm:
-            dh, lg = _backprop_lstm(
-                g, inputs[li].select("id", "h"), args[li], layers[li],
-                layers[li]["Wr"], dims[li], need_dh=li > 0,
-                mask_relu=li > 0, cleanup=cleanup)
-            pool_grads[li] = lg
-            if li > 0:
-                dh = dh.persist()
-                dh.count()
-                cleanup.append(dh)
-                g = dh
-        elif use_pool:
-            dh, dWp, dbp, dqh = _backprop_pool(
-                g, inputs[li].select("id", "h"), qs[li], args[li],
-                layers[li]["Wr"], layers[li]["Wn"], layers[li]["Wp"],
-                dims[li], need_dh=li > 0, mask_relu=li > 0)
-            pool_grads[li] = (dWp, dbp)
-            if li > 0:
-                dh = dh.persist()
-                dh.count()
-                cleanup.append(dh)
-                free_checkpoint(dqh)
-                g = dh
-        elif li > 0:
-            nxt = _backprop_to_prev(
-                g, inputs[li].select("id", "h"), adj, deg,
-                layers[li]["Wr"], layers[li]["Wn"],
-                dims[li], arg=args[li]).persist()
-            nxt.count()
-            cleanup.append(nxt)
-            g = nxt
-    raw.reverse()
-    return [(dWr, dWn, db, pool_grads[i])
-            for i, (dWr, dWn, db) in enumerate(raw)]
 
 
 def init_sage_layers(dims, aggregator, rng):
@@ -877,184 +580,219 @@ def init_sage_layers(dims, aggregator, rng):
     return layers
 
 
-def sage_train(graph, hidden_sizes=None, num_epochs: int = 100,
-               learning_rate: float = 0.1, weight_decay: float = 5e-4,
-               split_ratio: float = 0.8, features_attr: str = "features",
-               label_attr: str = "class", etype: str | None = None,
-               seed: int = 1, aggregator: str = "mean"):
-    """Trains the SAGE stack; returns (epoch_rows, model dict).
+class SageEncoder:
+    """SAGEConv stack, relu between layers —
+    nn_kernels.train_node_classifier's encoder protocol, and the
+    graph_sage encoder of algos/linkpred_deep.py. `aggregator` is the
+    SAGEConv aggregation: 'mean' or 'max' (PyG aggr) plus 'pool', 'gcn'
+    and 'lstm' (DGL aggregator_type — see the module docstring)."""
 
-    epoch_rows match node_classification.train's record shape
-    (epoch, loss, val_loss, train_log=[acc], val_log=[acc]); the model
-    dict carries per-layer (Wr, Wn, b [, Wp, bp for pool | Wih, Whh,
-    bih, bhh for lstm]) for predict.
-    `aggregator` is the SAGEConv aggregation: 'mean' or 'max' (PyG aggr)
-    plus 'pool', 'gcn' and 'lstm' (DGL aggregator_type — see module
-    docstring for the exact algebra; lstm's neighbour order is pinned
-    to ascending id, a documented deterministic deviation from the
-    torch path's incidental edge-storage order)."""
+    kind = "sage"
+
+    def __init__(self, X, und, dims, rng, aggregator: str = "mean"):
+        self.X, self.dims, self.aggregator = X, dims, aggregator
+        self.meta = {"aggregator": aggregator}
+        self.cache = []                  # frames kept across epochs
+        self.adj = und
+        if aggregator == "gcn":
+            # gcn = mean over the self-loop-augmented adjacency, Wr pinned 0
+            self.adj = self_loops(und, X).dropDuplicates().persist()
+            self.cache.append(self.adj)
+        self.deg = (self.adj.groupBy(F.col("src").alias("id"))
+                    .agg(F.count("*").cast("double").alias("deg")))
+        self.X0 = self.A0 = self.S0 = None
+        if aggregator == "lstm":
+            # the layer-0 SEQUENCE is weight-independent (raw X in pinned
+            # order) => built once; the aggregation itself re-runs per
+            # epoch through the learned LSTM
+            self.S0 = _lstm_seq(self.adj, X).persist()
+            self.S0.count()
+            self.cache.append(self.S0)
+        elif aggregator != "pool":
+            # layer-0 neighbour input is weight-independent for
+            # mean/max/gcn => computed ONCE; pool's layer-0 input goes
+            # through the learned fc_pool, so it refreshes per epoch
+            if aggregator == "max":
+                M0, self.A0 = _max_neighbor(self.adj, X, dims[0],
+                                            cache=self.cache)
+                self.A0.count()
+            else:
+                M0 = _mean_neighbor(self.adj, X, dims[0]).persist()
+            self.X0 = X.join(M0, "id").persist()
+            self.X0.count()
+            self.cache.append(self.X0)
+            if aggregator != "max":
+                M0.unpersist()           # only needed to build X0
+        self.params = {"layers": init_sage_layers(dims, aggregator, rng)}
+
+    def forward(self):
+        """Persists each layer's (id, h, m) input frame plus the
+        aggregation routing state backward needs; for lstm `args`
+        carries each layer's sequence frame (backward re-walks it in
+        BPTT)."""
+        layers, dims, adj = self.params["layers"], self.dims, self.adj
+        use_pool = self.aggregator == "pool"
+        use_max = self.aggregator == "max"
+        use_lstm = self.aggregator == "lstm"
+        cleanup = []
+        if use_lstm:
+            m0 = _lstm_forward(self.S0, self.X, layers[0], dims[0])
+            cur = self.X.join(m0, "id").persist()
+            cur.count()
+            cleanup.append(cur)
+            inputs, args, qs = [cur], [self.S0], [None]
+        elif use_pool:
+            # persist the h-named frame; the q-named view for backward is
+            # a lazy rename OVER the cache (a post-persist rename would be
+            # a different plan and recompute)
+            qh0 = (_pool_q(self.X, layers[0]["Wp"], layers[0]["bp"])
+                   .withColumnRenamed("q", "h").persist())
+            m0, a0 = _max_neighbor(adj, qh0, dims[0], cache=cleanup)
+            cur = self.X.join(m0, "id").persist()
+            cur.count()
+            cleanup += [qh0, cur]
+            inputs, args = [cur], [a0]
+            qs = [qh0.withColumnRenamed("h", "q")]
+        else:
+            inputs, args, qs = [self.X0], [self.A0], [None]
+            cur = self.X0
+        for li, lay in enumerate(layers[:-1]):
+            h_next = _sage_layer(cur, lay["Wr"], lay["Wn"], lay["b"],
+                                 relu=True)
+            if use_pool:
+                nxt_lay = layers[li + 1]
+                h_next = h_next.persist()
+                cleanup.append(h_next)
+                qh = (_pool_q(h_next, nxt_lay["Wp"], nxt_lay["bp"])
+                      .withColumnRenamed("q", "h").persist())
+                m_next, a_next = _max_neighbor(adj, qh, dims[li + 1],
+                                               cache=cleanup)
+                cleanup.append(qh)
+                args.append(a_next)
+                qs.append(qh.withColumnRenamed("h", "q"))
+            elif use_max:
+                m_next, a_next = _max_neighbor(adj, h_next, dims[li + 1],
+                                               cache=cleanup)
+                args.append(a_next)
+                qs.append(None)
+            elif use_lstm:
+                # h_next feeds three consumers (the seq shuffle, the
+                # forward's id base, the cur join) — persist like pool does
+                h_next = h_next.persist()
+                cleanup.append(h_next)
+                seq_next = _lstm_seq(adj, h_next).persist()
+                cleanup.append(seq_next)
+                m_next = _lstm_forward(seq_next, h_next, layers[li + 1],
+                                       dims[li + 1])
+                args.append(seq_next)
+                qs.append(None)
+            else:
+                m_next = _mean_neighbor(adj, h_next, dims[li + 1])
+                args.append(None)
+                qs.append(None)
+            cur = h_next.join(m_next, "id").persist()
+            cur.count()
+            cleanup.append(cur)
+            inputs.append(cur)
+        last = layers[-1]
+        z = _sage_layer(cur, last["Wr"], last["Wn"], last["b"], relu=False)
+        return z, (inputs, args, qs, cleanup)
+
+    def backward(self, state, g):
+        inputs, args, qs, cleanup = state
+        layers, dims, agg = self.params["layers"], self.dims, self.aggregator
+        grads = [None] * len(layers)
+        for li in range(len(layers) - 1, -1, -1):
+            lay = layers[li]
+            hprev = inputs[li].select("id", "h")
+            dWr, dWn, db = tree_sum(
+                inputs[li].join(g, "id"), ["h", "m", "g"],
+                lambda r: (np.outer(r["h"], r["g"]),
+                           np.outer(r["m"], r["g"]), r["g"]),
+                (np.zeros((dims[li], dims[li + 1])),
+                 np.zeros((dims[li], dims[li + 1])), np.zeros(dims[li + 1])))
+            grads[li] = {"Wn": dWn, "b": db}
+            if agg != "gcn":             # gcn has no root weight
+                grads[li]["Wr"] = dWr
+            dh = None
+            if agg == "lstm":
+                dh, (dWih, dWhh, dbl) = _backprop_lstm(
+                    g, hprev, args[li], lay, lay["Wr"], dims[li],
+                    need_dh=li > 0, mask_relu=li > 0, cleanup=cleanup)
+                # b_ih and b_hh gradients coincide; both update (torch)
+                grads[li].update(Wih=dWih, Whh=dWhh, bih=dbl, bhh=dbl)
+            elif agg == "pool":
+                dh, dWp, dbp, dqh = _backprop_pool(
+                    g, hprev, qs[li], args[li], lay["Wr"], lay["Wn"],
+                    lay["Wp"], dims[li], need_dh=li > 0, mask_relu=li > 0)
+                grads[li].update(Wp=dWp, bp=dbp)
+            elif li > 0:
+                dh = _backprop_to_prev(g, hprev, adj=self.adj, deg=self.deg,
+                                       Wr=lay["Wr"], Wn=lay["Wn"],
+                                       d_prev=dims[li], arg=args[li])
+            if li > 0:
+                dh = dh.persist()
+                dh.count()
+                cleanup.append(dh)
+                if agg == "pool":
+                    free_checkpoint(dqh)
+                g = dh
+        return {"layers": grads}
+
+    @staticmethod
+    def free(state):
+        for fr in state[3]:
+            fr.unpersist()
+
+    def close(self):
+        for fr in self.cache:
+            fr.unpersist()
+
+    @staticmethod
+    def embed(X: DataFrame, und: DataFrame, layers,
+              aggregator: str) -> DataFrame:
+        """(id, h): the trained stack over X — the reference's predict
+        also evaluates model(x, edge_index) on the full graph
+        (train_model.py)."""
+        adj = (self_loops(und, X).dropDuplicates() if aggregator == "gcn"
+               else und)
+        cur = X
+        for li, lay in enumerate(layers):
+            d = len(lay["Wn"])           # the layer's input width
+            if aggregator == "max":
+                m, _arg = _max_neighbor(adj, cur, d)
+            elif aggregator == "pool":
+                qh = (_pool_q(cur, lay["Wp"], lay["bp"])
+                      .withColumnRenamed("q", "h"))
+                m, _arg = _max_neighbor(adj, qh, d)
+            elif aggregator == "lstm":
+                m = _lstm_forward(_lstm_seq(adj, cur), cur, lay, d)
+            else:                        # mean and gcn (self-loop adj)
+                m = _mean_neighbor(adj, cur, d)
+            cur = _sage_layer(cur.join(m, "id"), lay["Wr"], lay["Wn"],
+                              lay["b"], relu=(li < len(layers) - 1))
+        return cur
+
+
+def sage_train(graph, aggregator: str = "mean", **kw):
+    """Trains the SAGE stack; returns (epoch_rows, model dict) — keyword
+    arguments as nn_kernels.train_node_classifier. The model carries
+    per-layer (Wr, Wn, b [, Wp, bp for pool | Wih, Whh, bih, bhh for
+    lstm]) for predict. lstm's neighbour order is pinned to ascending
+    id, a documented deterministic deviation from the torch path's
+    incidental edge-storage order."""
     aggregator = str(aggregator).lower()
     if aggregator not in ("mean", "max", "pool", "gcn", "lstm"):
         raise NotImplementedError(
             f"SAGE aggregator {aggregator!r}: mean/max/pool/gcn/lstm "
             "run without torch (the reference SAGEConv aggregators)")
-    hidden_sizes = list(hidden_sizes or [16, 16])
-    spark = graph.spark
-    feat = F.col(features_attr).cast("array<double>")
-    nodes = (graph.all_nodes([features_attr, label_attr])
-             .select("id", feat.alias("h"),
-                     F.col(label_attr).cast("long").alias("y"))
-             .filter(F.col("h").isNotNull()))
-    probe = nodes.select(F.size("h").alias("d")).filter("d > 0").first()
-    if probe is None:
-        raise ValueError(
-            f"node_classification.train: no node carries a non-empty "
-            f"'{features_attr}' array property")
-    d0 = int(probe["d"])
-    nodes = nodes.filter(F.size("h") == d0)
-    classes = [int(r["y"]) for r in nodes.filter(F.col("y").isNotNull())
-               .select("y").distinct().orderBy("y").collect()]
-    if not classes:
-        raise ValueError(
-            f"node_classification.train: no node carries the "
-            f"'{label_attr}' property")
-    k = len(classes)
-    cmap = F.create_map(*[x for c, i in
-                          ((F.lit(c), F.lit(i))
-                           for i, c in enumerate(classes)) for x in (c, i)])
-    # labeled design frame with a deterministic split (same scheme as the
-    # baseline trainer: stable across epochs and runs)
-    labeled = (nodes.filter(F.col("y").isNotNull())
-               .withColumn("yi", cmap[F.col("y")].cast("int"))
-               .withColumn("train",
-                           F.pmod(F.xxhash64("id"), 1000)
-                           < int(split_ratio * 1000)))
-    X = nodes.select("id", "h").persist()
-    adj = graph.adjacency(etype, "both").select("src", "dst")
-    if aggregator == "gcn":
-        # gcn = mean over the self-loop-augmented adjacency, Wr pinned 0
-        adj = _with_self_loops(adj, X).persist()
-    deg = (adj.groupBy(F.col("src").alias("id"))
-           .agg(F.count("*").cast("double").alias("deg")))
-
-    meta = labeled.select("id", "yi", "train").persist()
-    counts = meta.agg(
-        F.sum(F.when(F.col("train"), 1).otherwise(0)).alias("tr"),
-        F.count("*").alias("n")).first()
-    n_train = int(counts["tr"] or 0)
-    use_max = aggregator == "max"
-    use_pool = aggregator == "pool"
-    use_lstm = aggregator == "lstm"
-    A0 = M0 = X0 = S0 = None
-    pre_cache: list = []
-    if use_lstm:
-        # the layer-0 SEQUENCE is weight-independent (raw X in pinned
-        # order) => built once; the aggregation itself re-runs per epoch
-        # through the learned LSTM
-        S0 = _lstm_seq(adj, X).persist()
-        S0.count()
-    elif not use_pool:
-        # layer-0 neighbour input is weight-independent for mean/max/gcn
-        # => computed ONCE outside the epoch loop; pool's layer-0 input
-        # goes through the learned fc_pool, so it refreshes per epoch
-        if use_max:
-            M0, A0 = _max_neighbor(adj, X, d0, cache=pre_cache)
-            A0.count()
-        else:
-            M0 = _mean_neighbor(adj, X, d0).persist()
-        X0 = X.join(M0, "id").persist()
-        X0.count()
-
-    dims = [d0] + hidden_sizes + [k]
-    rng = np.random.default_rng(seed)
-    layers = init_sage_layers(dims, aggregator, rng)
-    rows = []
-    for epoch in range(1, int(num_epochs) + 1):
-        # ---- forward: encoder_forward persists each layer's (id, h, m)
-        # input frame plus the aggregation state backward needs
-        inputs, args, qs, cleanup = encoder_forward(
-            X, adj, layers, dims, aggregator, X0=X0, A0=A0, seq0=S0)
-        zL = _sage_layer(
-            inputs[-1].join(meta, "id"),
-            layers[-1]["Wr"], layers[-1]["Wn"], layers[-1]["b"],
-            relu=False, extra_cols=(("yi", "int"), ("train", "boolean")))
-        gframe = _softmax_grad_frame(zL, k, n_train).persist()
-        m = gframe.agg(
-            F.avg(F.when(F.col("is_train"), F.col("loss"))).alias("lo"),
-            F.avg(F.when(~F.col("is_train"), F.col("loss"))).alias("vlo"),
-            F.avg(F.when(F.col("is_train"), F.col("hit"))).alias("acc"),
-            F.avg(F.when(~F.col("is_train"), F.col("hit"))).alias("vacc")
-        ).first()
-        rows.append((epoch, float(m["lo"] or 0.0), float(m["vlo"] or 0.0),
-                     [float(m["acc"] or 0.0)], [float(m["vacc"] or 0.0)]))
-        # ---- backward
-        grads = encoder_backward(
-            gframe.select("id", "g"), inputs, args, qs, adj, deg,
-            layers, dims, aggregator, cleanup)
-        for lay, (dWr, dWn, db, pg) in zip(layers, grads):
-            if aggregator != "gcn":     # gcn has no root weight
-                lay["Wr"] -= learning_rate * (dWr
-                                              + weight_decay * lay["Wr"])
-            lay["Wn"] -= learning_rate * (dWn + weight_decay * lay["Wn"])
-            lay["b"] -= learning_rate * db
-            if pg is not None and len(pg) == 2:
-                dWp, dbp = pg
-                lay["Wp"] -= learning_rate * (dWp
-                                              + weight_decay * lay["Wp"])
-                lay["bp"] -= learning_rate * dbp
-            elif pg is not None:
-                dWih, dWhh, dbl = pg
-                lay["Wih"] -= learning_rate * (dWih
-                                               + weight_decay * lay["Wih"])
-                lay["Whh"] -= learning_rate * (dWhh
-                                               + weight_decay * lay["Whh"])
-                # b_ih and b_hh gradients coincide; both update (torch)
-                lay["bih"] -= learning_rate * dbl
-                lay["bhh"] -= learning_rate * dbl
-        gframe.unpersist()
-        for fr in cleanup:
-            fr.unpersist()
-    out_schema = ("epoch int, loss double, val_loss double, "
-                  "train_log array<double>, val_log array<double>")
-    model = {"kind": "sage", "classes": classes,
-             "layers": [{k2: v.tolist() for k2, v in lay.items()}
-                        for lay in layers],
-             "features_attr": features_attr, "label_attr": label_attr,
-             "etype": etype, "d0": d0, "aggregator": aggregator}
-    for fr in (X, meta, M0, X0, A0, S0, *pre_cache):
-        if fr is not None:
-            fr.unpersist()
-    if aggregator == "gcn":
-        adj.unpersist()
-    return spark.createDataFrame(rows, out_schema), model
+    return train_node_classifier(
+        graph, functools.partial(SageEncoder, aggregator=aggregator), **kw)
 
 
 def sage_forward(graph, model) -> DataFrame:
-    """(id, h=z_L): run the trained stack over the whole graph — the
-    reference's predict also evaluates model(x, edge_index) on the full
-    graph (train_model.py)."""
-    feat = F.col(model["features_attr"]).cast("array<double>")
-    nodes = (graph.all_nodes([model["features_attr"]])
-             .select("id", feat.alias("h"))
-             .filter(F.col("h").isNotNull())
-             .filter(F.size("h") == int(model["d0"])))
-    adj = graph.adjacency(model["etype"], "both").select("src", "dst")
-    aggr = model.get("aggregator", "mean")
-    if aggr == "gcn":
-        adj = _with_self_loops(adj, nodes)
-    cur = nodes
-    dims = [int(model["d0"])] + [len(lay["b"]) for lay in model["layers"]]
-    for li, lay in enumerate(model["layers"]):
-        if aggr == "max":
-            m, _arg = _max_neighbor(adj, cur, dims[li])
-        elif aggr == "pool":
-            qh = (_pool_q(cur, lay["Wp"], lay["bp"])
-                  .withColumnRenamed("q", "h"))
-            m, _arg = _max_neighbor(adj, qh, dims[li])
-        elif aggr == "lstm":
-            m = _lstm_forward(_lstm_seq(adj, cur), cur, lay, dims[li])
-        else:                            # mean and gcn (self-loop adj)
-            m = _mean_neighbor(adj, cur, dims[li])
-        cur = _sage_layer(cur.join(m, "id"), lay["Wr"], lay["Wn"],
-                          lay["b"], relu=(li < len(model["layers"]) - 1))
-    return cur
+    """(id, h=z_L): run the trained stack over the whole graph."""
+    X, _ = feature_nodes(graph, model["features_attr"], d0=model["d0"])
+    return SageEncoder.embed(
+        X, graph.adjacency(model["etype"], "both").select("src", "dst"),
+        model["layers"], model.get("aggregator", "mean"))

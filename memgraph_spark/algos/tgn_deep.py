@@ -78,6 +78,8 @@ import math
 
 import numpy as np
 
+from memgraph_spark.algos.nn_kernels import Adam
+
 SUPPORTED_LAYERS = ("graph_sum", "graph_attn")
 SUPPORTED_UPDATERS = ("gru", "rnn")
 SUPPORTED_AGGREGATORS = ("mean", "last")
@@ -160,8 +162,6 @@ class TGNDeep:
         self.nn = int(p.get("num_neighbors", 5))
         self.heads = int(p.get("num_attention_heads", 1))
         self.seed = int(p.get("seed", 1))
-        self.lr = float(p.get("learning_rate", 1e-4))
-        self.wd = float(p.get("weight_decay", 5e-5))
         self.emb = self.M + self.NF
         self.raw_dim = 2 * self.M + 1 + self.EF
         self.msg_dim = (self.raw_dim if self.message_fn == "identity"
@@ -173,9 +173,8 @@ class TGNDeep:
                 f"query dim {qd} (= memory+node_features+time dims)")
         self.rng = np.random.default_rng(self.seed)
         self.W = self._init_weights()
-        self.adam_m = {k: np.zeros_like(v) for k, v in self.W.items()}
-        self.adam_v = {k: np.zeros_like(v) for k, v in self.W.items()}
-        self.adam_t = 0
+        self.adam = Adam(self.W, float(p.get("learning_rate", 1e-4)),
+                         float(p.get("weight_decay", 5e-5)))
         self.batch_counter = 0
         self.losses: list[float] = []
 
@@ -737,7 +736,7 @@ class TGNDeep:
                     dmem[:len(dnm)] += dnm[:len(dmem)]
                 self._message_backward(msg_cache, dmem, grads)
         if train and update_weights:
-            self._adam_step(grads)
+            self.adam.step(self.W, grads)
             self.losses.append(float(loss))
         # persistent state deltas
         new_memory = {int(n): new_mem[i]
@@ -777,18 +776,6 @@ class TGNDeep:
             out.append((int(d), np.concatenate(
                 [snap(d), snap(s), [t - last(d)], ef]), float(t)))
         return out
-
-    def _adam_step(self, grads, b1=0.9, b2=0.999, eps=1e-8):
-        self.adam_t += 1
-        t = self.adam_t
-        for k, g in grads.items():
-            if self.wd:
-                g = g + self.wd * self.W[k]
-            m = self.adam_m[k] = b1 * self.adam_m[k] + (1 - b1) * g
-            v = self.adam_v[k] = b2 * self.adam_v[k] + (1 - b2) * g * g
-            mh = m / (1 - b1 ** t)
-            vh = v / (1 - b2 ** t)
-            self.W[k] -= self.lr * mh / (np.sqrt(vh) + eps)
 
     # --------------------------------------------- finite-diff support
 

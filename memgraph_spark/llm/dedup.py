@@ -194,6 +194,8 @@ def simhash(text: Column, bits: int = 64) -> Column:
     pinned by tests/test_llm.py::test_simhash_arrow_equals_column_build.
     Set SPARK_GRAFT_SIMHASH_JVM=1 to force the pure-column build
     (environments without Python workers)."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
     if os.environ.get("SPARK_GRAFT_SIMHASH_JVM"):
         return simhash_column_build(text, bits)
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
@@ -207,8 +209,6 @@ def _simhash_votes_arrow(hashes: Column, bits: int = 64) -> Column:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
     n_bits = bits
 
     @pandas_udf("long")

@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,6 +37,11 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("memgraph-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("memgraph-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
+    # The first F.col in a process runs pyspark's call-site capture, which
+    # imports IPython/jedi, and jedi raises the recursion limit. Doing it
+    # here keeps that import out of any hypothesis test, which would warn
+    # that the recursion limit will not be reset.
+    F.col("id")
     yield s

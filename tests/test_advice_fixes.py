@@ -135,3 +135,31 @@ def test_bolt_rejects_bad_credentials(spark):
     finally:
         admin._AUTH["users"].pop("alice", None)
         srv.stop()
+
+
+def test_kmeans_refuses_train_rows_below_n_clusters(spark):
+    """train_rows < n_clusters used to return fewer than k centroids: the
+    init drew limit(k) from a smaller training sample."""
+    from memgraph_spark.algos.kmeans import kmeans
+    df = spark.createDataFrame([(i, [float(i), 0.0]) for i in range(6)],
+                               "id long, embedding array<double>")
+    with pytest.raises(ValueError, match="train_rows=2 is below"):
+        kmeans(df, 3, train_rows=2)
+    _assign, cents = kmeans(df, 3, train_rows=3, return_model=True)
+    assert len(cents) == 3
+
+
+@pytest.mark.parametrize("jvm", [False, True])
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_bits_checked_on_both_paths(spark, monkeypatch, jvm, bits):
+    """SPARK_GRAFT_SIMHASH_JVM=1 used to skip the bits range check, so
+    bits=0 raised IndexError inside the column build."""
+    from pyspark.sql import functions as F
+
+    from memgraph_spark.llm.dedup import simhash
+    if jvm:
+        monkeypatch.setenv("SPARK_GRAFT_SIMHASH_JVM", "1")
+    else:
+        monkeypatch.delenv("SPARK_GRAFT_SIMHASH_JVM", raising=False)
+    with pytest.raises(ValueError, match=r"bits must be in \[1, 64\]"):
+        simhash(F.col("text"), bits)

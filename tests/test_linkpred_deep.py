@@ -103,7 +103,8 @@ def test_linkpred_sage_mlp_matches_local_numpy_twin(spark):
               "l0_b": layers[0]["b"], "l1_Wr": layers[1]["Wr"],
               "l1_Wn": layers[1]["Wn"], "l1_b": layers[1]["b"],
               "p_W1": W1, "p_b1": b1, "p_w2": w2, "p_b2": b2}
-    adam = LP._Adam(params, lr)
+    from memgraph_spark.algos.nn_kernels import Adam
+    adam = Adam(params, lr)
 
     def mean_nbr(H):
         M = np.zeros_like(H)

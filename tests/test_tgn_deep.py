@@ -246,7 +246,7 @@ def test_deep_train_and_eval_replays_epochs(spark):
     assert (1, "eval") in kinds and (2, "eval") in kinds
     assert all(0.0 <= r.precision <= 1.0 for r in rows)
     # weights persisted across epochs: the trainer saw every batch
-    assert g._tgn_state["deep"].adam_t > 0
+    assert g._tgn_state["deep"].adam.t > 0
     TB.tgn_reset(g)
 
 
