@@ -369,7 +369,11 @@ def linkpred_train(graph, **cfg) -> DataFrame:
     for epoch in range(1, int(p["num_epochs"]) + 1):
         # ---- encoder forward -> z (id, h) embeddings frame
         z, state = enc.forward()
-        z = z.localCheckpoint(eager=True)
+        # GatEncoder's output is already its last layer's checkpoint (freed
+        # with `state`); SageEncoder's is lazy
+        own_z = isinstance(enc, SageEncoder)
+        if own_z:
+            z = z.localCheckpoint(eager=True)
         # ---- pairs: positives + hash-drawn negatives, embeddings joined
         negs = _draw_negatives(sup, pool, n_nodes, epoch,
                                int(p["num_neg_per_pos_edge"]))
@@ -411,7 +415,8 @@ def linkpred_train(graph, **cfg) -> DataFrame:
                 params[k2] -= lr * (g2 + wd * params[k2])
         scored.unpersist()
         free_checkpoint(gz)
-        free_checkpoint(z)
+        if own_z:
+            free_checkpoint(z)
         enc.free(state)
     model = {"kind": p["layer_type"], "predictor": p["predictor_type"],
              "aggregator": p["aggregator"], "dims": dims,

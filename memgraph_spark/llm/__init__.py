@@ -5,11 +5,12 @@ These extend the reference's surface (text_search / vector_search modules,
 query_modules/text_search_module.cpp, query_modules/vector_search_module.cpp)
 with the operations a large-scale LLM data pipeline needs. Hot paths are
 JVM-side column expressions (shingling, minhash, n-gram Jaccard) or one
-vectorized Arrow/numpy pass per batch (simhash votes, LSH signatures) — no
-Python row-at-a-time UDFs; JVM-only fallbacks exist for environments without
-Python workers (simhash_column_build, lsh_signature_jvm). Candidate
-generation is LSH band-bucket shuffle joins, never O(n²) cross joins at
-scale.
+vectorized Arrow/numpy pass per batch (simhash votes, LSH band words) — no
+Python row-at-a-time UDFs, so these operators need Python workers. Every
+pair operator is filter-and-verify: `dedup.candidate_pairs` self-joins
+band, chunk or prefix keys (never an O(n²) cross join at scale) and an
+exact check (`dedup.jaccard_verify`, hamming distance, the exact metric)
+verifies the candidates.
 """
 
 from memgraph_spark.llm.dedup import (  # noqa: F401

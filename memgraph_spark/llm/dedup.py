@@ -1,12 +1,13 @@
 """Deduplication: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-Tokenization and hashing are JVM-side (higher-order functions over arrays +
-xxhash64, whole-stage-codegen'd). The SimHash bit-vote runs as one
-vectorized numpy pass per Arrow batch (`_simhash_votes_arrow`); everything
-else stays pure column expressions. Environments without Python workers can
-set SPARK_GRAFT_SIMHASH_JVM=1 to route simhash() through the pure-column
-`simhash_column_build` (bit-identical, slower). Candidate generation
-shuffles on band hashes (O(n) per band), never all-pairs.
+Every pair operator is filter-and-verify: `candidate_pairs` self-joins a
+keyed frame (band hashes, simhash chunks, prefix tokens — O(n) per key,
+never all-pairs) into distinct candidate pairs, and an exact check
+verifies them (`jaccard_verify` for the set-similarity joins, the hamming
+distance for SimHash). Tokenization and hashing are JVM-side
+(higher-order functions over arrays + xxhash64, whole-stage-codegen'd);
+the SimHash bit-vote runs as one vectorized numpy pass per Arrow batch
+(`_simhash_votes_arrow`).
 """
 
 from __future__ import annotations
@@ -30,6 +31,62 @@ def _guard_all_pairs(df: DataFrame, op: str, scale_alt: str) -> None:
             f"{op} is an exact all-pairs (O(n²)) fallback and the input "
             f"has {n} rows (> {ALL_PAIRS_MAX_ROWS}); use {scale_alt} for "
             "large corpora, or raise SPARK_GRAFT_ALL_PAIRS_MAX explicitly")
+
+
+# -- filter and verify ------------------------------------------------------
+
+def candidate_pairs(keyed: DataFrame, keys: list[str],
+                    pair_filter: Column | None = None) -> DataFrame:
+    """The filter step of every pair join: self-join `keyed` — (id, key
+    columns…, payload…) — on `keys`, keep id_a < id_b, apply
+    `pair_filter` (a predicate over the two sides' `<col>_a` / `<col>_b`)
+    and return the distinct (id_a, id_b) pairs. Every non-key column
+    rides along as `<col>_a` / `<col>_b` (a pair's payload is the same
+    whichever key matched)."""
+    cols = [c for c in keyed.columns if c not in keys]
+
+    def side(s):
+        return keyed.select(*keys, *[F.col(c).alias(f"{c}_{s}") for c in cols])
+
+    pair = side("a").join(side("b"), keys).filter(F.col("id_a") < F.col("id_b"))
+    if pair_filter is not None:
+        pair = pair.filter(pair_filter)
+    return (pair.select(*[f"{c}_{s}" for s in "ab" for c in cols])
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def jaccard_verify(cand: DataFrame, sets: DataFrame,
+                   threshold: float) -> DataFrame:
+    """The verify step of the set-similarity joins: exact Jaccard of each
+    candidate (id_a, id_b) over `sets` — (id, distinct-element array) —
+    kept at >= threshold, rounded to 4 places.
+
+    |A∪B| = |A|+|B|−|A∩B| exactly (the arrays are distinct), so the union
+    array is never built and the intersect is the only per-pair set
+    pass. That pass is compute-dense but byte-light (two longs per
+    candidate row): AQE's byte-based coalescing would pack the deduped
+    pair list into ONE post-shuffle partition and run the whole verify on
+    a single core (measured 22.6s of a 37.6s minhash query at sf0.1), so
+    the candidates are spread round-robin first — a keyed repartition on
+    (id_a, id_b) is statically pruned as redundant with the dedup's
+    exchange and AQE then re-coalesces it."""
+    id_col, set_col = sets.columns
+
+    def side(s):
+        return sets.select(F.col(id_col).alias(f"id_{s}"),
+                           F.col(set_col).alias(f"set_{s}"),
+                           F.size(set_col).alias(f"n_{s}"))
+
+    return (
+        cand.select("id_a", "id_b")
+        .repartition(cand.sparkSession.sparkContext.defaultParallelism)
+        .join(side("a"), "id_a").join(side("b"), "id_b")
+        .withColumn("__i", F.size(F.array_intersect("set_a", "set_b")))
+        .withColumn("jaccard",
+                    F.col("__i") / (F.col("n_a") + F.col("n_b") - F.col("__i")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+    )
 
 
 # -- exact ------------------------------------------------------------------
@@ -118,16 +175,15 @@ def minhash_lsh_pairs(
         shingle(F.col(text_col), k).alias("sh"),
     ).filter(F.size("sh") > 0).repartition(spark.sparkContext.defaultParallelism, "id")
     # the shingle frame feeds THREE consumers (signatures + both sides of
-    # the exact-Jaccard verify join); materialize it once per call instead
+    # jaccard_verify's join); materialize it once per call instead
     # of re-running the substring transform three times. Per-invocation
     # localCheckpoint, no cross-run caching; the stored arrays are the
     # standard fuzzy-dedup signature-table materialization.
     docs = docs.localCheckpoint(eager=True)
     sigs = docs.select("id", minhash_signature(F.col("sh"), num_perm).alias("sig"))
     # both sides of the band self-join embed this frame; without the
-    # checkpoint the broadcast side re-runs the whole num_perm-hash
-    # signature pipeline a second time (visible as a duplicated
-    # Generate+signature subtree under the BroadcastExchange)
+    # checkpoint the second side re-runs the whole num_perm-hash signature
+    # pipeline (a duplicated Generate+signature subtree in the plan)
     banded = sigs.select(
         "id",
         F.explode(
@@ -138,43 +194,8 @@ def minhash_lsh_pairs(
             ])
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bh").localCheckpoint(eager=True)
-    cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bh"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates()
-        # the exact-Jaccard verify below is compute-dense but byte-light
-        # (two longs per candidate row): AQE's byte-based coalescing packs
-        # the deduped pair list into ONE post-shuffle partition and the
-        # whole verify stage — an array_intersect over the shingle sets
-        # per pair — runs on a single core (measured 22.6s of a 37.6s
-        # query at sf0.1). Round-robin with an explicit partition count:
-        # a keyed repartition on (id_a, id_b) is statically pruned as
-        # redundant with the dedup's exchange and AQE then re-coalesces it.
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    # |A∪B| = |A|+|B|−|A∩B| exactly (sh is array_distinct'd), so the
-    # per-pair union ARRAY never needs building and the per-doc sizes are
-    # computed once on the doc frame instead of per pair — the intersect
-    # becomes the only per-pair set pass (the same arithmetic-union
-    # rewrite change 15 landed for the ngram path; integer-exact, the
-    # jaccard double divides the same two ints as before)
-    a = docs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                    F.size("sh").alias("__na"))
-    b = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                    F.size("sh").alias("__nb"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    verified = (
-        cand.join(a, "id_a").join(b, "id_b")
-        .withColumn("__i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+    return jaccard_verify(candidate_pairs(banded, ["band", "bh"]), docs,
+                          threshold)
 
 
 # -- simhash ----------------------------------------------------------------
@@ -191,13 +212,9 @@ def simhash(text: Column, bits: int = 64) -> Column:
     sf0.1 under the old build (guide §4.2: hand whole batches to
     vectorized native code). Bit-exact vs `simhash_column_build` — votes
     are integer sums, the sign decision and bit packing are identical;
-    pinned by tests/test_llm.py::test_simhash_arrow_equals_column_build.
-    Set SPARK_GRAFT_SIMHASH_JVM=1 to force the pure-column build
-    (environments without Python workers)."""
+    pinned by tests/test_llm.py::test_simhash_arrow_equals_column_build."""
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
-    if os.environ.get("SPARK_GRAFT_SIMHASH_JVM"):
-        return simhash_column_build(text, bits)
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
     return _simhash_votes_arrow(hashes, bits)
@@ -253,9 +270,9 @@ def _simhash_votes_arrow(hashes: Column, bits: int = 64) -> Column:
 
 
 def simhash_column_build(text: Column, bits: int = 64) -> Column:
-    """The pure-column-expression simhash (64 aggregate() passes per row).
-    Kept as the reference implementation for the bit-equality test and as
-    a no-python-workers fallback."""
+    """The pure-column-expression simhash (64 aggregate() passes per row):
+    the reference implementation the Arrow vote is tested bit-equal
+    against."""
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
 
@@ -304,15 +321,9 @@ def simhash_near_pairs(
             for c in range(4)
         ])).alias("cc"),
     ).select("id", "sh", "cc.chunk", "cc.cv")
-    cand = (
-        chunks.alias("l").join(chunks.alias("r"), ["chunk", "cv"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.col("l.sh").alias("sh_a"), F.col("r.sh").alias("sh_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        candidate_pairs(chunks, ["chunk", "cv"])
+        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -354,8 +365,8 @@ def ngram_jaccard_pairs(
     impossible, so every shared token sits in A's suffix, capping the
     overlap at ceil(t*|A|) - 1 < t*|A| <= t*|A u B| <= |A n B|, a
     contradiction. The candidate join is therefore an inverted-index
-    equi-join on prefix tokens instead of an O(n^2) crossJoin; the exact
-    intersect then verifies each candidate once (sf0.1: 310k-1.1M
+    equi-join on prefix tokens instead of an O(n^2) crossJoin;
+    jaccard_verify then checks each candidate once (sf0.1: 310k-1.1M
     candidates vs 7.4M size-filter survivors before). Any total order is
     correct; lexicographic (array_sort + slice, zero extra exchanges)
     A/B-measured 0.60x vs ascending-document-frequency order (which
@@ -372,7 +383,7 @@ def ngram_jaccard_pairs(
     # small file (one task), and the per-doc split/transform is the
     # compute-dense part — the explicit numPartitions keeps AQE from
     # byte-coalescing it back to one task; the exchange is reused by all
-    # three consumers (prefix / verify-a / verify-b)
+    # three consumers (prefix / both sides of jaccard_verify)
     docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")) \
              .repartition(spread, "id") \
              .select("id", word_ngrams(F.col("t"), n).alias("ng")) \
@@ -389,32 +400,12 @@ def ngram_jaccard_pairs(
         "id", "sz",
         F.explode(F.slice(F.array_sort("ng"), F.lit(1), prefix_len))
          .alias("tok"))
-    cand = (
-        prefix.alias("a").join(prefix.alias("b"), "tok")
-        .filter(F.col("a.id") < F.col("b.id"))
-        # size filter (Jaccard >= t implies t*|B| <= |A| and t*|A| <= |B|)
-        .filter((F.col("a.sz") >= threshold * F.col("b.sz"))
-                & (F.col("b.sz") >= threshold * F.col("a.sz")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    a = docs.select(F.col("id").alias("id_a"), F.col("ng").alias("ng_a"),
-                    F.col("sz").alias("sz_a"))
-    b = docs.select(F.col("id").alias("id_b"), F.col("ng").alias("ng_b"),
-                    F.col("sz").alias("sz_b"))
-    return (
-        cand.join(a, "id_a").join(b, "id_b")
-        # |A u B| = |A| + |B| - |A n B| exactly (distinct arrays), so the
-        # union ARRAY never needs building — the intersect is the only
-        # per-pair set pass
-        .withColumn("inter", F.size(F.array_intersect("ng_a", "ng_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    # size filter (Jaccard >= t implies t*|B| <= |A| and t*|A| <= |B|)
+    cand = candidate_pairs(
+        prefix, ["tok"],
+        (F.col("sz_a") >= threshold * F.col("sz_b"))
+        & (F.col("sz_b") >= threshold * F.col("sz_a")))
+    return jaccard_verify(cand, docs.select("id", "ng"), threshold)
 
 
 # -- near-duplicate clustering / corpus dedup --------------------------------

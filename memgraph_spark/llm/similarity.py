@@ -6,14 +6,18 @@ vector_search_module.cpp) exposed as `vector_search.search(k, query)`.
 
 Spark-first re-expression: exact brute-force top-k (zip_with dot product +
 TakeOrdered) as the baseline; random-hyperplane LSH bucketing as the scale
-path (candidates from matching buckets only — the HNSW role). All vector math
-is JVM higher-order functions, no Python UDFs.
+path (candidates from matching buckets only — the HNSW role). The exact
+metrics are JVM higher-order functions; the hyperplane signature is one
+numpy matmul per Arrow batch (`lsh_band_buckets`, the only LSH kernel).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from memgraph_spark.llm.dedup import candidate_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -101,65 +105,40 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def lsh_signature(vec: Column, dim: int, n_planes: int = 16) -> Column:
-    """Random-hyperplane signature: bit i = sign(<v, h_i>) packed to a long.
-
-    Arrow-batched: one numpy matmul per batch replaces n_planes interpreted
-    higher-order dot products per row (the signature step dominated the LSH
-    pipeline — ~10x on the 2000x128 bench corpus, and the same vectorized
-    kernel shape a 100 TB corpus wants)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array([_hyperplane(dim, i + 1) for i in range(n_planes)],
-                      dtype=np.float64)           # n_planes x dim
-    weights = np.left_shift(np.uint64(1),
-                            np.arange(n_planes, dtype=np.uint64))
-
-    @pandas_udf("long")
-    def _sig(v):
-        import pandas as pd
-        rows = [(x if x is not None and len(x) == dim else [0.0] * dim)
-                for x in v]
-        m = np.asarray(rows, dtype=np.float64)    # batch x dim
-        bits = (m @ planes.T) > 0                 # batch x n_planes
-        packed = (bits.astype(np.uint64) * weights).sum(
-            axis=1, dtype=np.uint64).astype(np.int64)
-        return pd.Series(packed)
-
-    return _sig(vec)
+def _planes(dim: int, n_planes: int) -> np.ndarray:
+    return np.array([_hyperplane(dim, i + 1) for i in range(n_planes)],
+                    dtype=np.float64)             # n_planes x dim
 
 
-def lsh_signature_jvm(vec: Column, dim: int, n_planes: int = 16) -> Column:
-    """JVM-only signature (no Arrow round-trip) — kept for environments
-    where python workers are undesirable; bit-identical up to float
-    summation order."""
-    sig = F.lit(0).cast("long")
-    for i in range(n_planes):
-        h = F.array(*[F.lit(v) for v in _hyperplane(dim, i + 1)])
-        # shiftleft survives bit 63 (a python literal 1 << 63 overflows
-        # the JVM long); OR-packing keeps the sign bit exact
-        bit = F.shiftleft(F.lit(1).cast("long"), i)
-        sig = sig.bitwiseOR(
-            F.when(dot(vec, h) > 0, bit).otherwise(F.lit(0).cast("long")))
-    return sig
+def _band_words(m: np.ndarray, planes: np.ndarray, bands: int) -> np.ndarray:
+    """(n x dim) float64 vectors -> (n x bands) int64 band words: with
+    rows = len(planes) / bands, band b packs the sign bits of hyperplanes
+    [b*rows, (b+1)*rows) LSB-first."""
+    rows = len(planes) // bands
+    weights = np.left_shift(np.uint64(1), np.arange(rows, dtype=np.uint64))
+    bits = (m @ planes.T) > 0                     # n x n_planes
+    bb = bits.reshape(len(m), bands, rows).astype(np.uint64)
+    return (bb * weights).sum(axis=2, dtype=np.uint64).astype(np.int64)
+
+
+def _rows_per_band(n_planes: int, bands: int) -> int:
+    if not 1 <= bands <= n_planes:
+        raise ValueError(
+            f"LSH tuning needs 1 <= bands <= n_planes (got n_planes="
+            f"{n_planes}, bands={bands}): each band needs >= 1 hyperplane")
+    return n_planes // bands
 
 
 def lsh_band_buckets(vec: Column, dim: int, rows: int, bands: int) -> Column:
-    """array<long> of per-band LSH bucket values: band b packs the sign
-    bits of hyperplanes [b*rows, (b+1)*rows) LSB-first. Identical values
-    to slicing the packed `lsh_signature` long when rows*bands <= 64,
-    but with no 64-plane cap — wide adaptive tunings (rows*bands > 64)
-    carry one word per band instead of one packed long. One numpy matmul
-    per Arrow batch, same kernel shape as lsh_signature."""
-    import numpy as np
+    """array<long> of per-band LSH bucket values (`_band_words`), with no
+    64-plane cap — wide adaptive tunings (rows*bands > 64) carry one word
+    per band. One numpy matmul per Arrow batch replaces rows*bands
+    interpreted higher-order dot products per row (~10x on the 2000x128
+    bench corpus, and the vectorized kernel shape a 100 TB corpus wants).
+    Null or wrong-length vectors sign as the zero vector."""
     from pyspark.sql.functions import pandas_udf
 
-    n_planes = rows * bands
-    planes = np.array([_hyperplane(dim, i + 1) for i in range(n_planes)],
-                      dtype=np.float64)           # n_planes x dim
-    weights = np.left_shift(np.uint64(1), np.arange(rows, dtype=np.uint64))
-    n_bands, n_rows_band = bands, rows
+    planes = _planes(dim, rows * bands)
 
     @pandas_udf("array<long>")
     def _buckets(v):
@@ -167,10 +146,7 @@ def lsh_band_buckets(vec: Column, dim: int, rows: int, bands: int) -> Column:
         rws = [(x if x is not None and len(x) == dim else [0.0] * dim)
                for x in v]
         m = np.asarray(rws, dtype=np.float64)     # batch x dim
-        bits = (m @ planes.T) > 0                 # batch x n_planes
-        bb = bits.reshape(len(rws), n_bands, n_rows_band).astype(np.uint64)
-        packed = (bb * weights).sum(axis=2, dtype=np.uint64).astype(np.int64)
-        return pd.Series(list(packed))            # batch x bands
+        return pd.Series(list(_band_words(m, planes, bands)))
 
     return _buckets(vec)
 
@@ -211,21 +187,21 @@ def lsh_candidate_pairs(
     The hyperplane family is seeded per plane index and bands are packed
     per-band words (lsh_band_buckets), so at or below the design size
     (n <= 8 * 2^(n_planes/bands)) buckets and output pairs are
-    byte-identical to the fixed tuning. bits/band caps at 24 (16M
-    buckets/band), bands at 16 — past that design point (~134M rows)
-    occupancy grows linearly again and the honest next step is IVF/graph
-    indexes, not more planes."""
+    byte-identical to the fixed tuning. The growth caps at 24 bits/band
+    (16M buckets/band; a wider explicit tuning is kept as given) and 16
+    bands — past that design point (~134M rows) occupancy grows linearly
+    again and the honest next step is IVF/graph indexes, not more planes.
+    Raises ValueError unless 1 <= bands <= n_planes."""
+    rows0 = rows = _rows_per_band(n_planes, bands)
     first = df.select(vec_col).first()
     if first is None:
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long")
     dim = len(first[0])
-    rows = n_planes // bands
     if n_rows is not None:
         import math
-        rows0 = rows
-        rows = min(max(rows, math.ceil(math.log2(max(2, int(n_rows)) / 8))),
-                   24)
+        rows = max(rows0, min(math.ceil(math.log2(max(2, int(n_rows)) / 8)),
+                              24))
         if rows > rows0:
             q0 = LSH_DESIGN_P ** rows0
             target = 1.0 - (1.0 - q0) ** bands   # base recall at p*
@@ -239,12 +215,9 @@ def lsh_candidate_pairs(
     # regardless of band count (guide §4.1) and the tuning is free to
     # exceed 64 total planes
     v = v.withColumn("bk", lsh_band_buckets(F.col("v"), dim, rows, bands))
-    bandrows = v.select("id", F.posexplode("bk").alias("band", "bucket"))
-    a = bandrows.select("band", "bucket", F.col("id").alias("id_a"))
-    b_ = bandrows.select("band", "bucket", F.col("id").alias("id_b"))
-    return (a.join(b_, on=["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").dropDuplicates())
+    return candidate_pairs(
+        v.select("id", F.posexplode("bk").alias("band", "bucket")),
+        ["band", "bucket"])
 
 
 def lsh_bucket_topk(
@@ -260,22 +233,14 @@ def lsh_bucket_topk(
     with the query (bands x (n_planes/bands)-bit chunks), then exact cosine
     on candidates only. At scale the bucket join replaces the full scan."""
     dim = len(query_vec)
-    rows = n_planes // bands
-    mask = (1 << rows) - 1
+    rows = _rows_per_band(n_planes, bands)
     v = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    v = v.withColumn("sig", lsh_signature(F.col("v"), dim, n_planes))
-
-    import math
-    qsig = 0
-    for i in range(n_planes):
-        h = _hyperplane(dim, i + 1)
-        if sum(a * b for a, b in zip(query_vec, h)) > 0:
-            qsig |= 1 << i
-    cond = None
-    for b in range(bands):
-        c = (F.shiftrightunsigned("sig", b * rows).bitwiseAND(F.lit(mask))
-             == F.lit((qsig >> (b * rows)) & mask))
-        cond = c if cond is None else (cond | c)
+    v = v.withColumn("bk", lsh_band_buckets(F.col("v"), dim, rows, bands))
+    qw = _band_words(np.asarray([query_vec], dtype=np.float64),
+                     _planes(dim, rows * bands), bands)[0]
+    cond = F.lit(False)
+    for b, w in enumerate(qw):
+        cond = cond | (F.col("bk")[b] == F.lit(int(w)))
     q = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
     return (
         v.filter(cond)

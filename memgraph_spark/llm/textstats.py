@@ -3,8 +3,7 @@ document fingerprinting. Parity surface: the reference's text_search module
 (query_modules/text_search_module.cpp:23-31) plus the LLM-pipeline mandate.
 
 Everything is a deterministic column expression so the same logic is
-re-expressible as the DuckDB oracle (except fingerprints, which embed the
-engine hash function).
+re-expressible as the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -85,27 +84,26 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint_exact(df: DataFrame, text_col: str = "text", k: int = 7,
-                      window: int = 4, mod: int = 1_000_000_007) -> DataFrame:
-    """Winnowing fingerprint with an ENGINE-NEUTRAL k-gram hash: each
-    k-gram hashes to a base-31 polynomial of its character codes mod a
-    prime, so a SQL oracle (DuckDB ascii/list_transform) computes the
-    identical signature — unlike `fingerprint`, whose xxhash64 grams are
-    rows-only. Same winnowing as `fingerprint`: min of every `window`
-    consecutive gram hashes, distinct. Pure column expressions, no UDF.
+def fingerprint(df: DataFrame, text_col: str = "text", k: int = 7,
+                window: int = 4, mod: int = 1_000_000_007) -> DataFrame:
+    """Winnowing fingerprint: hash every character k-gram, keep the min
+    hash of every `window` consecutive grams, distinct. The gram hash is
+    ENGINE-NEUTRAL — a base-31 polynomial of the gram's character codes
+    mod `mod` — so a SQL oracle (DuckDB ascii/list_transform) computes
+    the identical signature. Pure column expressions, no UDF.
 
     The char codes are extracted ONCE per row into an array column
     (split(text, '') + ascii, O(L)) and the gram polynomial reads them
-    back with O(1) element_at: the original per-gram
-    `ascii(substr(text, i+j, 1))` paid an O(i) UTF-8 scan per character
-    access (substr must walk the string to find a char offset), i.e.
-    O(k·L²) per document — measured 500+ s for the sf0.01 oracle suite,
-    ~3 s after. The codes array lives in its own projection so it
-    materializes per row instead of re-evaluating inside each lambda."""
+    back with O(1) element_at: a per-gram `substr` pays an O(i) UTF-8
+    scan per character access (substr must walk the string to find a
+    char offset), i.e. O(k·L²) per document — measured 500+ s for the
+    sf0.01 oracle suite, ~3 s after. The codes array lives in its own
+    projection so it materializes per row instead of re-evaluating
+    inside each lambda."""
     text = F.col(text_col)
     coeffs = [31 ** (k - 1 - j) for j in range(k)]
     # split('', -1) yields one single-char element per char (no trailing
-    # empty); ascii() of each is the same code point substr+ascii saw
+    # empty); ascii() of each is the char's code point
     codes = F.when(
         text.isNotNull() & (F.length(text) >= k),
         F.transform(F.split(text, ""), lambda c: F.ascii(c).cast("long")),
@@ -133,23 +131,3 @@ def fingerprint_exact(df: DataFrame, text_col: str = "text", k: int = 7,
     ).otherwise(F.array_distinct(g))
     return (with_grams.withColumn("fingerprints", fp)
             .drop("__fp_cs", "__fp_g"))
-
-
-def fingerprint(df: DataFrame, text_col: str = "text", k: int = 7,
-                window: int = 4) -> DataFrame:
-    """Winnowing fingerprint: hash all k-grams, keep the min hash of every
-    `window` consecutive k-grams, distinct. Output depends on xxhash64 ->
-    rows-only check (no cross-engine oracle)."""
-    text = F.col(text_col)
-    grams = F.when(
-        F.length(text) >= k,
-        F.transform(F.sequence(F.lit(1), F.length(text) - k + 1),
-                    lambda i: F.xxhash64(text.substr(i, F.lit(k)))),
-    ).otherwise(F.array().cast("array<long>"))
-    fp = F.when(
-        F.size(grams) >= window,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.size(grams) - window + 1),
-                        lambda i: F.array_min(F.slice(grams, i, window)))),
-    ).otherwise(F.array_distinct(grams))
-    return df.withColumn("fingerprints", fp)

@@ -608,7 +608,7 @@ _TAIL = [
     "dedup_simhash",    # no_oracle by design (hash-dependent)
     "embed_ann_lsh",    # no_oracle by design (approximate)
     "embed_ann_ivf",    # no_oracle by design (approximate)
-    "text_fingerprint", # no_oracle by design (hash-dependent)
+    "text_fingerprint", # rows-only twin of text_fingerprint_exact
 ]
 QUERIES = {k: v for k, v in QUERIES.items() if k not in _TAIL} | {
     k: QUERIES[k] for k in _TAIL if k in QUERIES}

@@ -264,20 +264,18 @@ FROM best GROUP BY 1
 
 
 def q_text_fingerprint(spark, sf_dir):
-    """Winnowing fingerprints (hash-dependent -> rows-only): per-doc distinct
-    fingerprint count."""
+    """Winnowing fingerprints: per-doc distinct fingerprint count. Rows-only
+    (text_fingerprint_exact pins the same hash against its oracle)."""
     fp = fingerprint(_docs(spark, sf_dir))
     return fp.select("doc_id", F.size("fingerprints").alias("n_fingerprints"))
 
 
 def q_text_fingerprint_exact(spark, sf_dir):
     """Winnowing fingerprints with the engine-neutral polynomial k-gram
-    hash (llm/textstats.fingerprint_exact): per-doc signature summary
-    (count, min, max, sum mod p) — hash-EXACT against the DuckDB oracle,
-    unlike q_text_fingerprint whose xxhash64 grams are rows-only."""
-    from memgraph_spark.llm.textstats import fingerprint_exact
+    hash (llm/textstats.fingerprint): per-doc signature summary
+    (count, min, max, sum mod p) — hash-EXACT against the DuckDB oracle."""
     mod = 1_000_000_007
-    fp = fingerprint_exact(_docs(spark, sf_dir), mod=mod)
+    fp = fingerprint(_docs(spark, sf_dir), mod=mod)
     return fp.select(
         "doc_id",
         F.size("fingerprints").cast("long").alias("n_fp"),

@@ -100,6 +100,16 @@ def persist_if_needed(df):
     return p, (lambda: p.unpersist())
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 16g: a fixed 16g
+    heap lets two concurrent JVMs outgrow a smaller machine."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{max(1, min(16 << 10, phys // 2 >> 20))}m"
+
+
 def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     return (
@@ -122,7 +132,8 @@ def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

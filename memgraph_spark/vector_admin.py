@@ -17,6 +17,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.llm.similarity import dot, norm
+
 _CFG_DEFAULTS = {"metric": "l2sq", "scalar_kind": "f32",
                  "resize_coefficient": 2, "capacity": 64}
 
@@ -184,18 +186,16 @@ def validate_dimensions(graph, label: str, diff: DataFrame) -> None:
 
 
 def _metric_cols(idx: dict, vec_col, qv: list[float]):
+    """(distance, similarity) columns of the index's exact metric (cos /
+    l2sq) against the literal query vector `qv`."""
     q = F.array(*[F.lit(v) for v in qv])
     vec = F.transform(vec_col, lambda x: x.cast("double"))
     if idx["metric"] == "cos":
-        dot = F.aggregate(F.zip_with(vec, q, lambda a, b: a * b),
-                          F.lit(0.0), lambda acc, v: acc + v)
-        norm = (F.sqrt(F.aggregate(vec, F.lit(0.0),
-                                   lambda acc, v: acc + v * v))
-                * F.sqrt(F.lit(sum(v * v for v in qv))))
-        dist = 1.0 - dot / norm
+        dist = 1.0 - dot(vec, q) / (
+            norm(vec) * F.sqrt(F.lit(sum(v * v for v in qv))))
         return dist, 1.0 - dist
-    dist = F.aggregate(F.zip_with(vec, q, lambda a, b: (a - b) * (a - b)),
-                       F.lit(0.0), lambda acc, v: acc + v)
+    diff = F.zip_with(vec, q, lambda a, b: a - b)
+    dist = dot(diff, diff)
     return dist, 1.0 / (1.0 + dist)
 
 
@@ -248,21 +248,7 @@ def search(graph, index_name: str, k: int, query_vector) -> DataFrame:
         raise ValueError("query vector dimension mismatch")
     nodes = indexed_nodes(graph, idx)
     prop = idx["property"]
-    q = F.array(*[F.lit(v) for v in qv])
-    vec = F.transform(F.col(prop), lambda x: x.cast("double"))
-    if idx["metric"] == "cos":
-        dot = F.aggregate(F.zip_with(vec, q, lambda a, b: a * b),
-                          F.lit(0.0), lambda acc, v: acc + v)
-        norm = (F.sqrt(F.aggregate(vec, F.lit(0.0),
-                                   lambda acc, v: acc + v * v))
-                * F.sqrt(F.lit(sum(v * v for v in qv))))
-        dist = 1.0 - dot / norm
-        sim = 1.0 - dist
-    else:  # l2sq
-        dist = F.aggregate(F.zip_with(vec, q, lambda a, b:
-                                      (a - b) * (a - b)),
-                           F.lit(0.0), lambda acc, v: acc + v)
-        sim = 1.0 / (1.0 + dist)
+    dist, sim = _metric_cols(idx, F.col(prop), qv)
     prop_cols = [c for c in nodes.columns if c not in ("id", "labels")]
     # the index stores f32 (scalar_kind default): reads through the index
     # observe the quantized values, exactly like usearch dequantization

@@ -149,17 +149,59 @@ def test_kmeans_refuses_train_rows_below_n_clusters(spark):
     assert len(cents) == 3
 
 
-@pytest.mark.parametrize("jvm", [False, True])
 @pytest.mark.parametrize("bits", [0, 65])
-def test_simhash_bits_checked_on_both_paths(spark, monkeypatch, jvm, bits):
-    """SPARK_GRAFT_SIMHASH_JVM=1 used to skip the bits range check, so
-    bits=0 raised IndexError inside the column build."""
+def test_simhash_bits_checked(spark, bits):
+    """simhash() refuses a bit width outside [1, 64] before building."""
     from pyspark.sql import functions as F
 
     from memgraph_spark.llm.dedup import simhash
-    if jvm:
-        monkeypatch.setenv("SPARK_GRAFT_SIMHASH_JVM", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_SIMHASH_JVM", raising=False)
     with pytest.raises(ValueError, match=r"bits must be in \[1, 64\]"):
         simhash(F.col("text"), bits)
+
+
+def _lsh_corpus(spark, n, dim, seed):
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(size=(4, dim))
+    vecs = centers[rng.integers(0, 4, n)] + 0.3 * rng.normal(size=(n, dim))
+    return spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("n_rows", [None, 100])
+def test_lsh_refuses_fewer_planes_than_bands(spark, n_rows):
+    """n_planes < bands leaves 0 hyperplanes per band: with n_rows the
+    band growth took log(0) (math domain error), without it the worker's
+    matmul failed on an empty plane array."""
+    from memgraph_spark.llm.similarity import lsh_candidate_pairs
+    df = _lsh_corpus(spark, 20, 4, 3)
+    with pytest.raises(ValueError, match="bands <= n_planes"):
+        lsh_candidate_pairs(df, n_planes=2, bands=4, n_rows=n_rows).collect()
+
+
+def test_lsh_n_rows_never_narrows_a_wide_tuning(spark):
+    """The 24-bit cap bounds only the adaptive growth: n_planes=128,
+    bands=4 (32 bits per band) used to shrink to 24 bits once n_rows was
+    passed. On a small corpus n_rows must be a no-op for that tuning."""
+    from memgraph_spark.llm.similarity import lsh_candidate_pairs
+    df = _lsh_corpus(spark, 60, 8, 5).localCheckpoint(eager=True)
+
+    def pairs(**kw):
+        return {(r.id_a, r.id_b) for r in lsh_candidate_pairs(
+            df, n_planes=128, bands=4, **kw).collect()}
+
+    fixed = pairs()
+    assert fixed                      # the tight clusters share buckets
+    assert pairs(n_rows=60) == fixed
+    assert pairs(n_rows=10**9) == fixed
+
+
+def test_default_driver_memory_is_half_of_physical_capped_at_16g():
+    import os
+
+    from memgraph_spark.session import default_driver_memory
+    mb = int(default_driver_memory().removesuffix("m"))
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    assert 1 <= mb <= 16 << 10
+    assert mb == min(16 << 10, phys_mb // 2)

@@ -413,3 +413,40 @@ def test_simhash_narrow_bits_matches_column_build(spark):
             a, b = (r["a"] or 0), (r["b"] or 0)
             assert a == b, (bits, r["doc_id"], a, b)
             assert 0 <= a < (1 << bits), (bits, a)
+
+
+# top-1 recall of algo_knn's LSH branch on the corpus below, measured at
+# 0.7110 (deterministic: seeded data, hash-seeded hyperplanes)
+KNN_LSH_RECALL_FLOOR = 0.70
+
+
+def test_algo_knn_lsh_branch_recall(spark, tmp_path, monkeypatch):
+    """q_algo_knn's LSH branch (forced with SPARK_GRAFT_KNN_EXACT_MAX=0)
+    against its exact branch on a seeded clustered corpus of 3000
+    vectors, past the 2048-row design size of its 8-bit bands (so the
+    adaptive tuning widens rows and bands). The floor is the measured
+    top-1 recall rounded down, not a target."""
+    import numpy as np
+
+    from memgraph_spark.queries_algos import q_algo_knn
+
+    rng = np.random.default_rng(11)
+    n, dim, n_clusters = 3000, 32, 60
+    centers = rng.normal(size=(n_clusters, dim))
+    vecs = (centers[rng.integers(0, n_clusters, n)]
+            + 0.5 * rng.normal(size=(n, dim))).astype(np.float32)
+    spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    monkeypatch.delenv("SPARK_GRAFT_KNN_EXACT_MAX", raising=False)
+    exact = {r.node: r.neighbour
+             for r in q_algo_knn(spark, str(tmp_path)).collect()}
+    monkeypatch.setenv("SPARK_GRAFT_KNN_EXACT_MAX", "0")
+    lsh = {r.node: r.neighbour
+           for r in q_algo_knn(spark, str(tmp_path)).collect()}
+    assert len(exact) == len(lsh) == n
+    recall = sum(lsh[k] == exact[k] for k in exact) / n
+    print(f"algo_knn LSH top-1 recall: {recall:.4f}")
+    assert recall >= KNN_LSH_RECALL_FLOOR, recall
