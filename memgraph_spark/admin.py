@@ -21,6 +21,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 
 def _norm(q: str) -> str:
     return re.sub(r"\s+", " ", q.strip().rstrip(";").strip())
@@ -282,8 +284,7 @@ def _try_operational(graph, q, u, spark):
 
     m = _re.match(r"TERMINATE TRANSACTIONS (.+)$", q, _re.I)
     if m:
-        return spark.createDataFrame(
-            [], "transaction_id string, killed boolean")
+        return empty_frame(spark, "transaction_id string, killed boolean")
     if u == "LOCK DATA DIRECTORY":
         graph.data_dir_locked = True
         return status("locked")
@@ -310,7 +311,7 @@ def _try_descriptions(graph, q, u, spark):
         graph.descriptions = {}
 
     def empty():
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     _pat = r"\(((?::\w+)+)\)-\[:(\w+)\]->\(((?::\w+)+)\)"
     targets = (
@@ -445,13 +446,13 @@ def _try_server_params(q: str, u: str, spark, params, session):
             _SERVER_PARAMS["global"][m.group(2)] = val
         else:
             _SERVER_PARAMS["db"].setdefault(db, {})[m.group(2)] = val
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
     m = re.match(r"UNSET (GLOBAL )?PARAMETER (\w+)$", q, re.I)
     if m:
         scope = (_SERVER_PARAMS["global"] if m.group(1)
                  else _SERVER_PARAMS["db"].get(db, {}))
         scope.pop(m.group(2), None)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
     if u == "SHOW PARAMETERS":
         rows = [(k, _json.dumps(v, separators=(",", ":")), "global")
                 for k, v in sorted(_SERVER_PARAMS["global"].items())]
@@ -533,7 +534,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         if not hasattr(graph, "settings"):
             graph.settings = {}
         graph.settings[m.group(1)] = m.group(2)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
     m = re.match(r"SHOW DATABASE SETTING '([^']+)'$", q, re.I)
     if m:
         v = getattr(graph, "settings", {}).get(m.group(1), "")
@@ -551,7 +552,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             if m.group(4) else None
         tag = "text-edge" if m.group(1) else "text"
         graph.index_registry.append((m.group(3), props, tag, m.group(2)))
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     # point index DDL (PointIndexQuery — the physical "index" is the
     # pruning-friendly struct column layout; functions/spatial.py)
@@ -560,14 +561,14 @@ def try_admin(graph, query: str, params: dict | None = None,
         entry = (m.group(1), (m.group(2),), "point", None)
         if entry not in graph.index_registry:
             graph.index_registry.append(entry)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
     m = re.match(r"DROP POINT INDEX ON :(\w+) ?\((\w+)\)$", q, re.I)
     if m:
         graph.index_registry = [
             e for e in graph.index_registry
             if not (len(e) >= 3 and e[2] == "point" and e[0] == m.group(1)
                     and tuple(e[1] or ()) == (m.group(2),))]
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"CREATE VECTOR (EDGE )?INDEX (\w+) ON "
                  r"((?::[\w|:&]+)?) ?\((\w+)\)"
@@ -577,7 +578,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         vector_admin.create_vector_index(
             graph, m.group(2), m.group(3) or "", m.group(4), m.group(5),
             params, on_edges=bool(m.group(1)))
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "SHOW VECTOR INDEX INFO":
         from memgraph_spark import vector_admin
@@ -585,7 +586,7 @@ def try_admin(graph, query: str, params: dict | None = None,
 
     if u == "FREE MEMORY":
         # usearch/jemalloc release in the reference; no-op here
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "DUMP DATABASE":
         # DumpQuery (src/query/dump.cpp): the graph as a stream of Cypher
@@ -613,7 +614,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         graph.index_registry = [
             e for e in graph.index_registry
             if not (len(e) == 4 and e[3] == m.group(2) and e[2] in tags)]
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     # edge-property indexes (EdgeIndexQuery): typed and global
     m = re.match(r"CREATE EDGE INDEX ON :(\w+) ?\(([^)]*)\)$", q, re.I)
@@ -622,13 +623,13 @@ def try_admin(graph, query: str, params: dict | None = None,
                  "edge", None)
         if entry not in graph.index_registry:
             graph.index_registry.append(entry)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
     m = re.match(r"CREATE GLOBAL EDGE INDEX ON :?\((\w+)\)$", q, re.I)
     if m:
         entry = (None, (m.group(1),), "edge-global", None)
         if entry not in graph.index_registry:
             graph.index_registry.append(entry)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"CREATE INDEX ON :(\w+)(?: ?\(([^)]*)\))?"
                  r"(?: WITH CONFIG (.*))?$", q, re.I)
@@ -662,7 +663,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             entry = (label, None)
         if entry not in graph.index_registry:
             graph.index_registry.append(entry)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"DROP INDEX ON :(\w+)(?: ?\(([^)]*)\))?"
                  r"(?: WITH CONFIG (.*))?$", q, re.I)
@@ -693,7 +694,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         for v in victims:
             if v in graph.index_registry:
                 graph.index_registry.remove(v)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "SHOW INDEX INFO":
         def vs(sv):   # string slot of the variant property column
@@ -764,7 +765,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             graph.constraint_registry._constraints.pop()
             raise ValueError(
                 f"constraint violated by {n_bad} existing nodes")
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"DROP CONSTRAINT ON \(\w+:(\w+)\) ASSERT "
                  r"(?:EXISTS ?\(\w+\.(\w+)\)|\w+\.(\w+) IS UNIQUE)$", q, re.I)
@@ -775,7 +776,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             c for c in graph.constraint_registry.show()
             if not (c.kind == kind and c.label == label
                     and prop in c.properties)]
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "SHOW CONSTRAINT INFO":
         rows = [(c.kind, c.label, list(c.properties))
@@ -798,8 +799,8 @@ def try_admin(graph, query: str, params: dict | None = None,
     if u == "SHOW TRANSACTIONS":
         # IN_MEMORY_ANALYTICAL semantics: no interactive transactions — the
         # only "transaction" is the current batch job itself
-        return spark.createDataFrame(
-            [], "username string, transaction_id string, query array<string>")
+        return empty_frame(spark, "username string, transaction_id string, "
+                                  "query array<string>")
 
     if u == "SHOW SCHEMA INFO":
         from memgraph_spark.schema import schema_info
@@ -818,7 +819,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         if len(set(vals)) != len(vals):
             raise ValueError(f"duplicate enum values in {name}")
         graph.enum_registry[name] = vals
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"ALTER ENUM (\w+) ADD VALUE (\w+)$", q, re.I)
     if m:
@@ -829,7 +830,7 @@ def try_admin(graph, query: str, params: dict | None = None,
         if val in vals:
             raise ValueError(f"enum value {name}::{val} already exists")
         vals.append(val)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"ALTER ENUM (\w+) UPDATE VALUE (\w+) TO (\w+)$", q, re.I)
     if m:
@@ -872,7 +873,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             out = _rewrite(df)
             if out is not None:
                 graph.set_edge_version(et, out)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if re.match(r"ALTER ENUM (\w+) REMOVE VALUE (\w+)$", q, re.I) \
             or re.match(r"DROP ENUM (\w+)$", q, re.I):
@@ -953,7 +954,7 @@ def try_admin(graph, query: str, params: dict | None = None,
             batch_interval_ms=int(cfg.get("batch_interval", 100)),
             batch_size=int(cfg["batch_size"]) if "batch_size" in cfg else None,
             kind=kind, transform_name=transform)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"(START|STOP) ALL STREAMS$", q, re.I)
     if m:
@@ -963,7 +964,7 @@ def try_admin(graph, query: str, params: dict | None = None,
                 reg.start(name)
             else:
                 reg.stop(name)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"(START|STOP|DROP|CHECK) STREAM (\w+)"
                  r"(?: BATCH_LIMIT (\d+))?(?: TIMEOUT (\d+))?$", q, re.I)
@@ -987,7 +988,7 @@ def try_admin(graph, query: str, params: dict | None = None,
                 [(info["name"], info["batches_run"],
                   "; ".join(info["errors"]))],
                 "name string, batches_run long, errors string")
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "SHOW STREAMS":
         # reference header (interpreter.cpp:3246): name, type,
@@ -1015,12 +1016,12 @@ def try_admin(graph, query: str, params: dict | None = None,
     if m:
         name, event, stmt = m.group(1), m.group(2) or "ANY", m.group(3)
         _triggers().create_trigger(name, event, stmt)
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     m = re.match(r"DROP TRIGGER (\w+)$", q, re.I)
     if m:
         _triggers().drop_trigger(m.group(1))
-        return spark.createDataFrame([], "status string")
+        return empty_frame(spark, "status string")
 
     if u == "SHOW TRIGGERS":
         rows = [(t["name"], t["event"], t["fired"])

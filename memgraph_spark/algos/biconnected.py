@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 
 def biconnected_components(graph, etype: str | None = None,
                            max_edges: int = 2_000_000) -> DataFrame:
@@ -115,8 +117,7 @@ def biconnected_components_distributed(graph, etype: str | None = None,
            .select(F.least("src", "dst").alias("a"),
                    F.greatest("src", "dst").alias("b"))
            .filter(F.col("a") != F.col("b")).dropDuplicates().persist())
-    empty = spark.createDataFrame(
-        [], "bcc_id long, node_from long, node_to long")
+    empty = empty_frame(spark, "bcc_id long, node_from long, node_to long")
     if und.isEmpty():
         und.unpersist()
         return empty

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from memgraph_spark.algos.components import weakly_connected_components
 from memgraph_spark.operators.expand import bfs
+from memgraph_spark.session import empty_frame
 
 
 def _forest_parents(graph, forest):
@@ -103,7 +104,7 @@ def fundamental_cycles(graph, etype: str | None = None,
     non_tree = und.join(forest, ["src", "dst"], "left_anti") \
         .limit(max_cycles).collect()
     if not non_tree:
-        return graph.spark.createDataFrame([], "cycle_id long, node long")
+        return empty_frame(graph.spark, "cycle_id long, node long")
     tree = _forest_parents(graph, forest)
     par = {r.id: (r.par, r.depth) for r in tree.collect()}
     rows = []

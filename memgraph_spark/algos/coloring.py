@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import supersteps
+from memgraph_spark.session import empty_frame, supersteps
 
 
 def color_graph(graph, etype: str | None = None,
@@ -66,7 +66,7 @@ def color_graph(graph, etype: str | None = None,
     supersteps(nodes, step, lambda t: t[-1]["n"] == 0, max_rounds,
                n=F.count(F.lit(1)))
     return colored if colored is not None else \
-        graph.spark.createDataFrame([], "id long, color int")
+        empty_frame(graph.spark, "id long, color int")
 
 
 def link_prediction_scores(graph, etype: str | None = None, top_k: int = 50,

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import free_checkpoint, supersteps
+from memgraph_spark.session import empty_frame, free_checkpoint, supersteps
 
 
 def topological_layers(graph, etype: str | None = None, mode: str = "out"):
@@ -140,7 +140,7 @@ def spanning_tree(graph, weights: str | None = None,
     und.unpersist()
     free_checkpoint(comp)
     if not picked:
-        return graph.spark.createDataFrame([], "src long, dst long")
+        return empty_frame(graph.spark, "src long, dst long")
     out = picked[0]
     for df in picked[1:]:
         out = out.unionByName(df)

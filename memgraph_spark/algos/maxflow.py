@@ -23,7 +23,7 @@ from math import floor, log2
 from pyspark.sql import functions as F
 
 from memgraph_spark.operators.expand import bfs, bfs_path
-from memgraph_spark.session import free_checkpoint
+from memgraph_spark.session import empty_frame, free_checkpoint
 
 _RESIDUAL_SCHEMA = "src long, dst long, cap double"
 _EPS = 1e-9
@@ -86,7 +86,7 @@ def max_flow(
             cur[(v, u)] = cur.get((v, u), 0.0) + flow
         new_rows = [(s, d, c) for (s, d), c in cur.items() if c > _EPS]
         patch = spark.createDataFrame(new_rows, _RESIDUAL_SCHEMA) if new_rows \
-            else spark.createDataFrame([], _RESIDUAL_SCHEMA)
+            else empty_frame(spark, _RESIDUAL_SCHEMA)
         residual = (residual.join(F.broadcast(tdf), ["src", "dst"], "left_anti")
                     .unionByName(patch)
                     .localCheckpoint(eager=True))

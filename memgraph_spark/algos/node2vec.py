@@ -33,6 +33,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 
 def node2vec_walks(
     graph,
@@ -287,12 +289,11 @@ def node2vec_embeddings(
     else:
         corpus = [r.seq for r in seqs.collect()]
         if not corpus:
-            return graph.spark.createDataFrame(
-                [], "node long, embedding array<double>")
+            return empty_frame(
+                graph.spark, "node long, embedding array<double>")
         vocab, W = _sgns_train(corpus, vector_size, window, epochs, negative,
                                alpha, min_alpha, seed)
     if not len(vocab):
-        return graph.spark.createDataFrame(
-            [], "node long, embedding array<double>")
+        return empty_frame(graph.spark, "node long, embedding array<double>")
     rows = [(int(n), [float(x) for x in W[i]]) for i, n in enumerate(vocab)]
     return graph.spark.createDataFrame(rows, "node long, embedding array<double>")

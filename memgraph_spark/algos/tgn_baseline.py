@@ -44,6 +44,8 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 DEFAULTS = {
     "batch_size": 64,
     "memory_dimension": 16,
@@ -477,7 +479,7 @@ def tgn_update(graph, edges) -> DataFrame:
     # session.py's void_like pass-through; a 0-row typed frame would
     # annihilate every frame row through the per-row join
     from pyspark.sql import types as T
-    return graph.spark.createDataFrame([], T.StructType([]))
+    return empty_frame(graph.spark, T.StructType([]))
 
 
 def tgn_get(graph) -> DataFrame:
@@ -488,8 +490,8 @@ def tgn_get(graph) -> DataFrame:
     st = _state(graph)
     if st["deep"] is not None:
         if st["deep_emb"] is None:
-            return graph.spark.createDataFrame(
-                [], "node long, embedding array<double>")
+            return empty_frame(
+                graph.spark, "node long, embedding array<double>")
         return st["deep_emb"].select(
             F.col("id").alias("node"),
             F.transform("emb", lambda x: F.round(x, 6))

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 KEY_BITS = 56
 
 # Stable label -> code registry for the built-in tpch graph (FIXTURES.md §1).
@@ -329,8 +331,8 @@ class PropertyGraph:
             # a type no edge has matches nothing (MATCH over :NEVER_SEEN
             # is empty, not an error — MatchAcceptance2 "Variable length
             # patterns and nulls")
-            return self.spark.createDataFrame(
-                [], "src BIGINT, dst BIGINT, eid BIGINT")
+            return empty_frame(
+                self.spark, "src BIGINT, dst BIGINT, eid BIGINT")
         return self.edges[etype]
 
     def all_nodes(self, properties: list[str] | None = None) -> DataFrame:
@@ -384,7 +386,7 @@ class PropertyGraph:
         if not dfs:
             schema = "id BIGINT, labels ARRAY<STRING>" + "".join(
                 f", {p} STRING" for p in properties)
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -423,7 +425,7 @@ class PropertyGraph:
         if not dfs:
             schema = "src BIGINT, dst BIGINT, type STRING" + "".join(
                 f", {p} STRING" for p in properties)
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

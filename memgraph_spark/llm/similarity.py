@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from memgraph_spark.llm.dedup import candidate_pairs
+from memgraph_spark.session import empty_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -195,8 +196,7 @@ def lsh_candidate_pairs(
     rows0 = rows = _rows_per_band(n_planes, bands)
     first = df.select(vec_col).first()
     if first is None:
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long")
+        return empty_frame(df.sparkSession, "id_a long, id_b long")
     dim = len(first[0])
     if n_rows is not None:
         import math

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from memgraph_spark.procedures import register
+from memgraph_spark.session import empty_frame
 
 
 # -- shared traversal core ---------------------------------------------------
@@ -366,7 +367,7 @@ def _search(g, label_properties, op, value, require_all):
         hit = df.filter(pred).select(F.col("id").alias("node"))
         out = hit if out is None else out.unionByName(hit)
     if out is None:
-        return g.spark.createDataFrame([], "node long")
+        return empty_frame(g.spark, "node long")
     return out.dropDuplicates()
 
 

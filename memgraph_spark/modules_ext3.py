@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from memgraph_spark.procedures import register
+from memgraph_spark.session import empty_frame
 
 # ---------------------------------------------------------------------------
 # meta_util.schema (src/mage/python/meta_util.py:33)
@@ -73,7 +74,7 @@ def _mgps_components(g):
 def _mgps_await_indexes(g, seconds: int = 300):
     """mgps.await_indexes(seconds) — no-op: index registration is
     synchronous here too (mgps.py:15)."""
-    return g.spark.createDataFrame([], "done boolean")
+    return empty_frame(g.spark, "done boolean")
 
 
 def _mgps_validate(g, predicate, message, params):
@@ -81,7 +82,7 @@ def _mgps_validate(g, predicate, message, params):
     holds (mgps.py:36)."""
     if predicate:
         raise ValueError(str(message) % tuple(params or []))
-    return g.spark.createDataFrame([], "ok boolean")
+    return empty_frame(g.spark, "ok boolean")
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 # Frontiers smaller than this are broadcast in iterative joins so the big
 # edge table never shuffles; larger frontiers fall back to shuffle joins
 # (the 100 TB path — AQE handles skew there).
@@ -156,8 +158,8 @@ def _edges_with_eid(graph, etype, direction: str) -> DataFrame:
         else:
             dfs.append(out.unionAll(inn))
     if not dfs:
-        return graph.spark.createDataFrame(
-            [], "__from BIGINT, __to BIGINT, __eid BIGINT, __fwd BOOLEAN")
+        return empty_frame(graph.spark, "__from BIGINT, __to BIGINT, "
+                           "__eid BIGINT, __fwd BOOLEAN")
     res = dfs[0]
     for d in dfs[1:]:
         res = res.unionAll(d)

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from memgraph_spark.functions import AGGREGATES, FUNCTIONS
 from memgraph_spark.plans import cypher_ast as A
+from memgraph_spark.session import empty_frame
 
 
 @dataclass
@@ -109,7 +110,7 @@ def _probe_twin(df: DataFrame) -> DataFrame | None:
     twin = df.__dict__.get("_mg_typeof_twin")
     if twin is None:
         try:
-            twin = df.sparkSession.createDataFrame([], df.schema)
+            twin = empty_frame(df.sparkSession, df.schema)
         except Exception:
             twin = False
         df.__dict__["_mg_typeof_twin"] = twin

@@ -37,6 +37,7 @@ from memgraph_spark.plans.exprs import (
 from memgraph_spark.plans.parser import parse
 from memgraph_spark.plans.traversal import TraversalMixin
 from memgraph_spark.plans.writes import WriteMixin
+from memgraph_spark.session import empty_frame
 
 REL_META = ("eid", "type", "src", "dst")
 
@@ -259,9 +260,11 @@ class GraphSession:
                 rows, "`QUERY PLAN` string")
         if head.startswith("PROFILE"):
             _, inner = stripped.split(None, 1)
-            df = self.execute(inner, params)
             import time as _time
+            # the clock covers compile too: eager writes and loop rounds
+            # run inside execute(), before the final action
             t0 = _time.perf_counter()
+            df = self.execute(inner, params)
             df.count()
             wall_ms = round((_time.perf_counter() - t0) * 1000, 3)
             import contextlib
@@ -515,8 +518,8 @@ class QueryCompiler(WriteMixin, TraversalMixin):
             # write-only query: zero records, like the reference's Bolt
             # stream (counters travel in the summary — GraphSession exposes
             # them as .last_summary, the driver's result_summary equivalent)
-            return self.g.spark.createDataFrame(
-                [], " BIGINT, ".join(WRITE_COUNTERS) + " BIGINT")
+            return empty_frame(
+                self.g.spark, " BIGINT, ".join(WRITE_COUNTERS) + " BIGINT")
         return result
 
     def _compile_clauses(self, clauses: list) -> DataFrame | None:
@@ -891,9 +894,9 @@ class QueryCompiler(WriteMixin, TraversalMixin):
             dfs.append(e.select(F.col("eid").alias("__eid"),
                                 F.struct(*fields).alias("__det")))
         if not dfs:
-            return self.g.spark.createDataFrame(
-                [], "__eid BIGINT, __det STRUCT<eid BIGINT, type STRING, "
-                    "src BIGINT, dst BIGINT>")
+            return empty_frame(
+                self.g.spark, "__eid BIGINT, __det STRUCT<eid BIGINT, "
+                "type STRING, src BIGINT, dst BIGINT>")
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -992,9 +995,9 @@ class QueryCompiler(WriteMixin, TraversalMixin):
         chosen = [t for t in (types or self.g.edge_types())
                   if t in self.g.edges]
         if not chosen:  # no matching edge tables: statically empty expand
-            return self.g.spark.createDataFrame(
-                [], f"src BIGINT, dst BIGINT, {rsym}_eid BIGINT, "
-                    f"{rsym}_type STRING, {rsym}_src BIGINT, {rsym}_dst BIGINT")
+            return empty_frame(
+                self.g.spark, f"src BIGINT, dst BIGINT, {rsym}_eid BIGINT, "
+                f"{rsym}_type STRING, {rsym}_src BIGINT, {rsym}_dst BIGINT")
         prop_names: set[str] = set()
         if want_props:
             for t in chosen:
@@ -1635,7 +1638,7 @@ class QueryCompiler(WriteMixin, TraversalMixin):
             # VOID / zero-output procedure without YIELD: in-query it
             # neither consumes nor multiplies rows; standalone = empty
             if standalone and cl.yield_mode == "none":
-                self.df = self.g.spark.createDataFrame([], T.StructType([]))
+                self.df = empty_frame(self.g.spark, T.StructType([]))
             return
         if cl.yield_mode == "none" and not standalone:
             # reference: in-query CALL with outputs must YIELD (the TCK pins
@@ -1819,11 +1822,11 @@ class QueryCompiler(WriteMixin, TraversalMixin):
                 res = fn(self.g, *[None] * len(cl.args))
             except Exception:
                 if cl.yield_mode == "list":
-                    res = self.g.spark.createDataFrame(
-                        [], T.StructType([T.StructField(col, T.NullType())
-                                          for col, _a in cl.yields]))
+                    res = empty_frame(self.g.spark, T.StructType(
+                        [T.StructField(col, T.NullType())
+                         for col, _a in cl.yields]))
                 elif cl.yield_mode == "dash":
-                    res = self.g.spark.createDataFrame([], T.StructType([]))
+                    res = empty_frame(self.g.spark, T.StructType([]))
                 else:
                     raise CompileError(
                         f"CALL {cl.name} over an empty frame with YIELD *: "

@@ -890,11 +890,10 @@ class WriteMixin:
                        .withColumn("__hit", F.lit(True))
                        .localCheckpoint(eager=True))
             self.df = self.df.withColumn(f"{sym}_{skey}", val)
-        if kind == "node":
-            self._apply_node_update(updates, skey, additive=delta_ast is not None)
-        else:
-            self._apply_edge_update(updates, skey, additive=delta_ast is not None)
-        self.counters["properties_set"] += updates.count()
+        apply = (self._apply_node_update if kind == "node"
+                 else self._apply_edge_update)
+        self.counters["properties_set"] += apply(
+            updates, skey, additive=delta_ast is not None)
 
     def _set_property_nested(self, sym: str, kind: str, skey: str,
                              rest: list[str], value: A.Expr,
@@ -923,7 +922,7 @@ class WriteMixin:
                         .withColumn("__hit", F.lit(True))
                         .localCheckpoint(eager=True))
                     self._all_props_cache = None
-                    self._apply_node_update(updates, pcol)
+                    n_set = self._apply_node_update(updates, pcol)
                     fields = [
                         (val_c if f == pcol else member.getField(f)).alias(f)
                         for f in mt.names]
@@ -933,7 +932,7 @@ class WriteMixin:
                     self.df = self.df.withColumn(sym, F.struct(*[
                         (new_member if f == skey
                          else col.getField(f)).alias(f) for f in t.names]))
-                    self.counters["properties_set"] += updates.count()
+                    self.counters["properties_set"] += n_set
                     return
         if kind not in ("node", "rel"):
             raise CompileError(f"cannot SET a property on a {kind}")
@@ -956,21 +955,21 @@ class WriteMixin:
                    .withColumn("__hit", F.lit(True))
                    .localCheckpoint(eager=True))
         self.df = self.df.withColumn(col_name, val)
-        if kind == "node":
-            self._apply_node_update(updates, skey)
-        else:
-            self._apply_edge_update(updates, skey)
-        self.counters["properties_set"] += updates.count()
+        apply = (self._apply_node_update if kind == "node"
+                 else self._apply_edge_update)
+        self.counters["properties_set"] += apply(updates, skey)
 
     def _apply_node_update(self, updates: DataFrame, key: str,
-                           additive: bool = False) -> None:
-        # only touch label tables whose id range intersects the update set.
-        # Pure tables (engine-minted ids) prune by the id-derived label code;
-        # mixed tables (user-supplied swaps, REMOVE-label moves keep foreign
-        # codes) can't be code-tested and get a semi-join probe instead —
-        # skipping them silently dropped SET writes.
-        codes = {r[0] for r in updates.select(
-            F.shiftrightunsigned(F.col("id"), KEY_BITS)).distinct().collect()}
+                           additive: bool = False) -> int:
+        """Write `updates` (id, __v, __hit) into `key`; returns its row
+        count. Only label tables whose id range intersects the update set
+        are touched. Pure tables (engine-minted ids) prune by the
+        id-derived label code; mixed tables (user-supplied swaps,
+        REMOVE-label moves keep foreign codes) can't be code-tested and get
+        a semi-join probe instead — skipping them silently dropped SET
+        writes. One collect yields both the codes and the row count."""
+        codes = dict(updates.groupBy(
+            F.shiftrightunsigned(F.col("id"), KEY_BITS)).count().collect())
         for label in list(self.g.nodes):
             code = LABEL_CODES.get(label)
             if label not in self.g._mixed_id_labels and code is not None:
@@ -987,9 +986,12 @@ class WriteMixin:
                             .otherwise(old))
                 .drop("__v", "__hit")),
                 keys_allocated=True, id_scheme_preserved=True)
+        return sum(codes.values())
 
     def _apply_edge_update(self, updates: DataFrame, key: str,
-                           additive: bool = False) -> None:
+                           additive: bool = False) -> int:
+        """Write `updates` (eid, __v, __hit) into `key` of every edge
+        table; returns its row count."""
         for etype, t in list(self.g.edges.items()):
             old, new = _reconcile_update(t, updates, key, additive)
             self.g.set_edge_version(etype, (
@@ -997,6 +999,7 @@ class WriteMixin:
                 .withColumn(key, F.when(F.col("__hit"), new)
                             .otherwise(old))
                 .drop("__v", "__hit")), ids_allocated=True)
+        return updates.count()
 
     def _set_properties(self, sym: str, value: A.Expr, replace: bool) -> None:
         """SetProperties = / += (operator.hpp:1539) from a map literal or

@@ -29,6 +29,7 @@ from memgraph_spark.algos import (
     weakly_connected_components,
 )
 from memgraph_spark.llm.textstats import language_id, quality_score, token_stats
+from memgraph_spark.session import empty_frame
 
 PROCEDURES: dict[str, Callable[..., DataFrame]] = {}
 
@@ -340,7 +341,7 @@ def _simple_paths(g, v, to, cutoff: int = -1):
         found.append(step.filter(F.element_at(F.col("path"), -1) == int(to)))
         frontier = step.filter(F.element_at(F.col("path"), -1) != int(to))
     if not found:
-        return g.spark.createDataFrame([], "path array<long>")
+        return empty_frame(g.spark, "path array<long>")
     out = found[0]
     for df in found[1:]:
         out = out.unionByName(df)
@@ -567,7 +568,7 @@ def _incident_type_rows(g) -> DataFrame:
                      .union(e.select(F.col("dst").alias("id")))
                      .distinct().withColumn("t", F.lit(t)))
     if not parts:
-        return g.spark.createDataFrame([], "id long, t string")
+        return empty_frame(g.spark, "id long, t string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1080,7 +1081,7 @@ def _n2vo_update(g, edges=None):
             free_checkpoint(st["edges_df"])
             st["edges_df"] = merged
         st["dirty"] = True
-    return g.spark.createDataFrame([], T.StructType([]))
+    return empty_frame(g.spark, T.StructType([]))
 
 
 def _n2vo_get(g):
@@ -1099,8 +1100,7 @@ def _n2vo_get(g):
     st = _n2vo_state(g)
     _n2vo_require_init(st)
     if st.get("edges_df") is None:
-        return g.spark.createDataFrame(
-            [], "node long, embedding array<double>")
+        return empty_frame(g.spark, "node long, embedding array<double>")
     if st["dirty"] or st["emb"] is None:
         from memgraph_spark.algos.node2vec import node2vec_embeddings
         from memgraph_spark.catalog import PropertyGraph
@@ -1218,7 +1218,7 @@ def _do_when(g, condition, if_query: str, else_query: str = "", params=None):
     from memgraph_spark.plans import GraphSession
     q = if_query if condition else else_query
     if not q:
-        return g.spark.createDataFrame([], "value string")
+        return empty_frame(g.spark, "value string")
     out = GraphSession(g).execute(q, params or {})
     return out.select(F.to_json(F.struct(*out.columns)).alias("value"))
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from memgraph_spark.catalog import KEY_BITS, register_label
 from memgraph_spark.procedures import register
+from memgraph_spark.session import empty_frame
 
 _INTERNAL = {"id", "src", "dst", "eid", "labels", "type"}
 
@@ -232,7 +233,7 @@ def _refactor_normalize_as_boolean(g, entity, property_key, true_values,
         # the normalized boolean, the rest a best-effort boolean cast
         g.set_node_version(label, df.withColumn(
             property_key, F.when(hit, norm).otherwise(col.cast("boolean"))))
-    return g.spark.createDataFrame([], "success boolean")
+    return empty_frame(g.spark, "success boolean")
 
 
 def _refactor_collapse_node(g, nodes, rel_type):
@@ -458,7 +459,7 @@ def _refactor_merge_nodes(g, nodes, config=None):
     strategy = str(config.get("properties", "combine")).lower()
     nids = [int(n) for n in nodes]
     if not nids:
-        return g.spark.createDataFrame([], "node long")
+        return empty_frame(g.spark, "node long")
     target, rest = nids[0], nids[1:]
     t_label = _node_label(g, target)
     t_row = g.nodes[t_label].filter(F.col("id") == target).first()

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from memgraph_spark.catalog import PropertyGraph
+from memgraph_spark.session import empty_frame
 
 
 def schema_info(graph: PropertyGraph) -> DataFrame:
@@ -98,7 +99,7 @@ class ConstraintSet:
         """Rows violating one constraint (empty DataFrame == satisfied)."""
         df = self.graph.nodes.get(c.label)
         if df is None:
-            return self.graph.spark.createDataFrame([], "id long")
+            return empty_frame(self.graph.spark, "id long")
         if c.kind == "exists":
             p = c.properties[0]
             if p not in df.columns:
@@ -107,7 +108,7 @@ class ConstraintSet:
         # unique: groups with >1 row on the key properties
         cols = [p for p in c.properties if p in df.columns]
         if len(cols) != len(c.properties):
-            return self.graph.spark.createDataFrame([], "id long")
+            return empty_frame(self.graph.spark, "id long")
         dups = (df.groupBy(*cols).agg(F.count("*").alias("__n"))
                 .filter(F.col("__n") > 1).drop("__n"))
         return df.join(dups, on=cols, how="left_semi").select("id")

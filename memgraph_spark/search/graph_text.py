@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from memgraph_spark.session import empty_frame
+
 
 def resolve_index(g, name: str, edges: bool = False):
     tag = "text-edge" if edges else "text"
@@ -299,8 +301,8 @@ def search(g, index_name: str, q: str, config=None,
     meta = EDGE_META if edges else NODE_META
     df = _edge_df(g, label) if edges else _node_df(g, label)
     if df is None:
-        return g.spark.createDataFrame([], "node string").select(
-            F.lit(None).alias("node")).limit(0)
+        return empty_frame(g.spark, "node string").select(
+            F.lit(None).alias("node"))
     if conf["distance"] > 0:
         pred = _combine_pred(df, ast, props, meta, conf)
     else:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.session import empty_frame
+
 K1 = 1.2
 B = 0.75
 
@@ -65,7 +67,7 @@ def bm25_search(df: DataFrame, query: str, id_col: str = "doc_id",
     terms = sorted({t for t in
                     __import__("re").split(r"[^a-z0-9]+", query.lower()) if t})
     if not terms:
-        return df.sparkSession.createDataFrame([], "doc_id long, score double")
+        return empty_frame(df.sparkSession, "doc_id long, score double")
     # literal IN-list filter, not a broadcast join against a 3-row terms
     # DataFrame: the predicate pushes into the (cached) index scan and the
     # per-query createDataFrame + broadcast-exchange job disappears —

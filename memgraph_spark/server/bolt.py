@@ -19,6 +19,7 @@ import socket
 import socketserver
 import struct
 import threading
+import time
 
 from memgraph_spark.server import packstream as ps
 
@@ -256,7 +257,9 @@ class _RowStream:
     through the Bolt server no longer materializes every row driver-side
     (VERDICT r3 anti-pattern #1). Encoding to Bolt values happens per
     record at PULL time. A one-row pushback buffer answers `has_more`
-    without losing the peeked row."""
+    without losing the peeked row. Empty results (write-only statements,
+    DDL acks) arrive pre-folded by `session.empty_frame` to an empty local
+    relation, so draining them runs no Spark job."""
 
     def __init__(self, it, schema_fields, kinds, v5):
         self._it = it
@@ -320,6 +323,7 @@ class _Session:
         self.fields: list[str] = []
         self.rows: list | None = None
         self.cursor = 0
+        self.stream_s = 0.0  # PULL/DISCARD seconds of the last RUN's result
 
     def success(self, meta=None):
         write_message(self.sock, SUCCESS, meta or {},
@@ -382,6 +386,7 @@ class _Session:
                          "Authentication required before running queries")
             return True
         if tag == RUN:
+            t0 = time.perf_counter()
             query = msg.fields[0]
             params = msg.fields[1] if len(msg.fields) > 1 else {}
             try:
@@ -393,7 +398,10 @@ class _Session:
                 # partition at a time and are encoded per PULL
                 self.rows = _RowStream(df.toLocalIterator(),
                                        df.schema.fields, kinds, self.v5)
-                self.success({"fields": self.fields, "t_first": 0})
+                self.stream_s = 0.0
+                # t_first: RUN to fields-ready (compile + eager writes)
+                self.success({"fields": self.fields, "t_first": int(
+                    (time.perf_counter() - t0) * 1000)})
             except Exception as exc:  # noqa: BLE001 - wire-level boundary
                 # parse/compile errors keep the SyntaxError code; anything
                 # else maps to the reference's generic query-failure code
@@ -409,6 +417,7 @@ class _Session:
                 self.failure("Memgraph.ClientError.Request.Invalid",
                              "PULL with no active result")
                 return True
+            t0 = time.perf_counter()
             n = -1
             if msg.fields and isinstance(msg.fields[0], dict):
                 n = int(msg.fields[0].get("n", -1))
@@ -436,19 +445,24 @@ class _Session:
                     "Memgraph.ClientError.MemgraphError.MemgraphError",
                     str(exc))
                 return True
+            self.stream_s += time.perf_counter() - t0
             if more:
                 self.success({"has_more": True})
             else:
                 self.rows = None
-                self.success({"type": "r", "t_last": 0})
+                # t_last: streaming time summed over the result's PULLs
+                self.success({"type": "r",
+                              "t_last": int(self.stream_s * 1000)})
             return True
         if tag == DISCARD:
+            t0 = time.perf_counter()
             if self.rows is not None:
                 # half-pulled stream: release the local-iterator socket /
                 # serving thread now instead of at GC
                 self.rows.close()
                 self.rows = None
-            self.success({"type": "r", "t_last": 0})
+            self.stream_s += time.perf_counter() - t0
+            self.success({"type": "r", "t_last": int(self.stream_s * 1000)})
             return True
         if tag in (BEGIN, COMMIT, ROLLBACK):
             # every RUN materializes a new table version (Accumulate

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def empty_frame(spark: SparkSession, schema):
+    """Zero-row DataFrame of `schema` (a StructType or DDL string) whose
+    consumption runs no Spark job.
+
+    `createDataFrame([], schema)` alone is an RDD of defaultParallelism
+    empty partitions: `toLocalIterator()` starts a job per partition and
+    `collect()` one job. `limit(0)` lets Catalyst's OptimizeLimitZero fold
+    the plan to an empty local relation, and an empty union branch folds
+    away the same way. Every empty result is built here."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def free_checkpoint(df) -> None:
     """Release the cached blocks behind an eager localCheckpoint DataFrame.
 

@@ -394,3 +394,27 @@ def test_discard_half_pulled_stream_closes_iterator(server):
         sock.close()
     finally:
         B._RowStream.close = orig_close
+
+
+def test_success_metadata_carries_timings(server):
+    """RUN's SUCCESS reports `t_first` (RUN to fields-ready: compile plus
+    eager writes) and the final PULL/DISCARD SUCCESS `t_last` (time spent
+    streaming), both in whole milliseconds."""
+    sock = _login(server)
+    run = _roundtrip(sock, RUN, "MATCH (p:P) RETURN p.name AS name", {}, {})
+    t_first = run.fields[0]["t_first"]
+    write_message(sock, PULL, {"n": -1})
+    msg = read_message(sock)
+    while msg.tag == RECORD:
+        msg = read_message(sock)
+    t_last = msg.fields[0]["t_last"]
+    for t in (t_first, t_last):
+        assert isinstance(t, int) and t >= 0
+    assert t_first + t_last > 0
+    run = _roundtrip(sock, RUN, "UNWIND range(1, 10) AS x RETURN x", {}, {})
+    assert isinstance(run.fields[0]["t_first"], int)
+    done = _roundtrip(sock, DISCARD, {"n": -1})
+    assert done.tag == SUCCESS
+    assert isinstance(done.fields[0]["t_last"], int)
+    assert done.fields[0]["t_last"] >= 0
+    sock.close()
