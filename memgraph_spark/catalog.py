@@ -21,9 +21,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import empty_frame
+from memgraph_spark.session import checkpoint_with_metrics, empty_frame
 
 KEY_BITS = 56
+# rows per partition of a consolidated table version that has outgrown its
+# partitions (_maybe_consolidate); about one 128 MB file split of narrow rows
+CONSOLIDATED_PARTITION_ROWS = 1 << 20
 
 # Stable label -> code registry for the built-in tpch graph (FIXTURES.md §1).
 LABEL_CODES = {
@@ -150,11 +153,25 @@ class PropertyGraph:
 
     # -- versioned writes (SURVEY §1.2: batch-append snapshot semantics; the
     # -- reference's MVCC delta chains become immutable table versions) ------
+    # A write version is the previous version plus one small delta, kept
+    # flat so a later read pays no Spark job for it:
+    # - a delta of at most writes.LOCAL_DELTA_MAX rows is a LocalRelation
+    #   (created rows, SET update sets, the frame a CREATE matched),
+    #   collected once when the write runs; a read never re-runs the
+    #   write's MATCH. A read's filters fold created rows away at plan
+    #   time. A SET of atomic values (bool, int, float, string) becomes
+    #   literals in the new version's projection, an id set and an
+    #   id -> value map; any other local update set has exact size stats,
+    #   so the version joins it by broadcast with no shuffle.
+    # - a larger delta is a localCheckpoint, joined as before: the
+    #   path that scales.
+    # - every 12th version of a table is checkpointed and coalesced back to
+    #   the partitions the table had before (_maybe_consolidate).
     def set_node_version(self, label: str, df: DataFrame,
                          keys_allocated: bool = False,
                          id_scheme_preserved: bool = False) -> None:
         self.nodes[label] = self._maybe_consolidate(
-            "_node_vers", label, df)
+            "_node_vers", label, df, self.nodes.get(label))
         # a new node version breaks the edge<->node single-scan equivalence
         for key in [k for k in self.co_scan if self.co_scan[k][0] == label]:
             del self.co_scan[key]
@@ -194,7 +211,7 @@ class PropertyGraph:
     def set_edge_version(self, etype: str, df: DataFrame,
                          ids_allocated: bool = False) -> None:
         self.edges[etype] = self._maybe_consolidate(
-            "_edge_vers", etype, df)
+            "_edge_vers", etype, df, self.edges.get(etype))
         if not ids_allocated:
             # an external table swap may introduce arbitrary eids — the
             # in-memory eid allocator must re-derive its base from the data
@@ -232,22 +249,44 @@ class PropertyGraph:
         self._eid_seq = base + n
         return base
 
-    def _maybe_consolidate(self, attr: str, key: str,
-                           df: DataFrame) -> DataFrame:
+    def _maybe_consolidate(self, attr: str, key: str, df: DataFrame,
+                           prev: DataFrame | None) -> DataFrame:
         """Bound the union-chain depth of versioned tables: every 12th
         version localCheckpoints the table, so a statement with hundreds of
         CREATE clauses keeps O(1)-deep plans instead of an O(N) union (the
-        same flat-lineage rule the iterative operators follow)."""
+        same flat-lineage rule the iterative operators follow). `prev` is
+        the version `df` replaces.
+
+        The checkpoint keeps one partition per union branch, i.e. one per
+        delta since the last consolidation, and a Bolt read streams one
+        Spark job per partition. So it is coalesced (narrow, no new job)
+        back to the partitions the table had before its first write, or at
+        its last consolidation: only the delta partitions are absorbed, and
+        a scan of the table keeps its parallelism. A table that has grown
+        past CONSOLIDATED_PARTITION_ROWS rows per such partition (counted
+        by the checkpoint job itself) keeps one partition per that many
+        rows. The bound counts rows, not bytes."""
         if not hasattr(self, "_ver_counts"):
-            self._ver_counts = {}
+            self._ver_counts, self._ver_floor = {}, {}
         k = (attr, key)
         c = self._ver_counts.get(k, 0) + 1
         self._ver_counts[k] = c
+        # the table before its first write; its partitions are counted at
+        # the first consolidation, which replaces it by that count
+        self._ver_floor.setdefault(k, prev)
         if c % 12 == 0:
             try:
-                return df.localCheckpoint(eager=True)
+                ck, m = checkpoint_with_metrics(df, rows=F.count(F.lit(1)))
             except Exception:  # noqa: BLE001 — keep the lazy plan on failure
                 return df
+            floor = self._ver_floor[k]
+            if isinstance(floor, DataFrame):
+                floor = floor.rdd.getNumPartitions()
+            want = max(floor or 1,
+                       -(-m["rows"] // CONSOLIDATED_PARTITION_ROWS))
+            self._ver_floor[k] = want
+            return (ck.coalesce(want) if ck.rdd.getNumPartitions() > want
+                    else ck)
         return df
 
     def set_extra_labels(self, df: DataFrame | None) -> None:

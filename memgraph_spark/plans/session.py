@@ -471,11 +471,12 @@ class QueryCompiler(WriteMixin, TraversalMixin):
         return base
 
     def _seed(self) -> DataFrame:
-        # Once (operator.hpp:55): ONE row, ONE partition — a default-
+        # Once (operator.hpp:55): ONE row in a local relation — a default-
         # parallelism range would give every CREATE-chain diff 8+ empty
-        # partitions, multiplying task counts across version unions
-        return self.g.spark.range(0, 1, 1, 1) \
-            .select(F.lit(1).alias("__once"))
+        # partitions, multiplying task counts across version unions, and
+        # a literal CREATE over a local row folds to a local relation that a
+        # later read's filter prunes at plan time
+        return self.g.spark.sql("VALUES (1) AS t(__once)")
 
     def _static_int(self, e: A.Expr, what: str) -> int:
         if isinstance(e, A.Literal) and isinstance(e.value, int):

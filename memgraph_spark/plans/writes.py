@@ -5,11 +5,13 @@ Reference: CreateNode (operator.hpp:411), CreateExpand (:494), Delete
 (operator.cpp:4764), SetProperty/SetProperties/SetLabels (:1448-1590), Merge
 (:7194) mutate MVCC storage per pulled row. Spark re-expression: every write
 computes a *diff DataFrame* from the current frame, eagerly materializes it
-(localCheckpoint — the Accumulate barrier, operator.hpp:1870, comes free:
-reads after a write see the new table version, reads before it were planned
-against the old one), and swaps a new immutable table version into the
-PropertyGraph. At lake scale the same diffs become Delta/Iceberg MERGE /
-append commits; correctness never depends on in-place mutation.
+(the Accumulate barrier, operator.hpp:1870, comes free: reads after a write
+see the new table version, reads before it were planned against the old
+one), and swaps a new immutable table version into the PropertyGraph. A diff
+of at most LOCAL_DELTA_MAX rows materializes as a LocalRelation, a larger
+one as a localCheckpoint (catalog "versioned writes"). At lake scale
+the same diffs become Delta/Iceberg MERGE / append commits; correctness
+never depends on in-place mutation.
 
 Deliberately NOT ported (SURVEY §1.2): per-object MVCC delta chains, WAL,
 replication — a table version IS the snapshot.
@@ -29,6 +31,14 @@ from memgraph_spark.catalog import KEY_BITS, LABEL_CODES, register_label
 from memgraph_spark.operators.scan import prefix_columns
 from memgraph_spark.plans import cypher_ast as A
 from memgraph_spark.plans.exprs import CompileError, compile_expr
+from memgraph_spark.session import (
+    checkpoint_with_metrics, collect_local, free_checkpoint, is_local,
+    local_frame, observe_metrics, pin_small)
+
+# Largest write delta (created rows, update set, DELETE victims) kept as a
+# driver-side LocalRelation. Above it a delta is a localCheckpoint: the path
+# that scales. Either way it is evaluated once (_pin).
+LOCAL_DELTA_MAX = 1000
 
 
 _NOT_LIT = object()
@@ -207,6 +217,59 @@ def _nested_remove(old: "F.Column", oldt, path: list[str]):
     return F.struct(*([old.getField(f).alias(f)
                        for f in oldt.names if f != key]
                       + [inner.alias(key)]))
+
+
+def _pin(df: DataFrame, fits: bool | None = None,
+         **sets) -> tuple[DataFrame, int, dict]:
+    """(df evaluated once, its row count, the distinct values of each
+    `sets` column). At most LOCAL_DELTA_MAX rows become a LocalRelation,
+    and the values are read off it without a job. `fits` says whether df
+    is known to be that small: True collects it, False checkpoints it
+    straight away (the checkpoint job counts it and collects the values).
+    None tries it (session.pin_small): more rows stay in the local
+    checkpoint that job filled, and one more job over its blocks counts
+    them and collects the values."""
+    metrics = {"__n": F.count(F.lit(1))}
+    metrics.update({k: F.collect_set(c) for k, c in sets.items()})
+    if fits is None:
+        df, n = pin_small(df, LOCAL_DELTA_MAX)
+        if n is None:
+            m = observe_metrics(df, **metrics)
+            return df, m["__n"], {k: set(m[k]) for k in sets}
+    elif fits:
+        df, n = collect_local(df)
+    else:
+        df, m = checkpoint_with_metrics(df, **metrics)
+        return df, m["__n"], {k: set(m[k]) for k in sets}
+    return df, n, {k: {r[0] for r in df.select(c).collect()}
+                   for k, c in sets.items()}
+
+
+def _label_code(col: str) -> "F.Column":
+    """The label code an engine-minted id carries in its top bits."""
+    return F.shiftrightunsigned(F.col(col), KEY_BITS)
+
+
+_LITERAL_TYPES = (T.BooleanType, T.LongType, T.IntegerType, T.DoubleType,
+                  T.StringType)
+
+
+def _with_update(t: DataFrame, updates: DataFrame, key: str) -> DataFrame:
+    """`t` with the update set's __v and __hit beside each row (null where
+    the row is not updated). A local update set of atomic values is
+    inlined as literals, an id set and an id -> value map, so a read of
+    the new version runs no broadcast job for it; anything else joins."""
+    vt = updates.schema["__v"].dataType
+    if not (is_local(updates) and isinstance(vt, _LITERAL_TYPES)):
+        return t.join(updates, on=key, how="left")
+    rows = [r for r in updates.select(key, "__v").collect()
+            if r[0] is not None]
+    hit = F.col(key).isin([r[0] for r in rows])
+    vals = (F.create_map(*[x for k, v in rows for x in
+                           (F.lit(k).cast("long"), F.lit(v).cast(vt))])
+            [F.col(key)] if rows else F.lit(None).cast(vt))
+    return t.withColumns({"__v": F.when(hit, vals),
+                          "__hit": F.when(hit, F.lit(True))})
 
 
 def _union_missing(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -402,7 +465,7 @@ class WriteMixin:
         fields = list(pend["schema"].items())
         st = T.StructType([T.StructField(c, t) for c, t in fields])
         data = [tuple(r.get(c) for c, _t in fields) for r in pend["rows"]]
-        df = self.g.spark.createDataFrame(data, st).coalesce(1)
+        df = local_frame(self.g.spark, data, st)
         if kind == "nodes":
             existing = self.g.nodes.get(key)
             self.g.set_node_version(
@@ -550,6 +613,21 @@ class WriteMixin:
         for s in dead:
             self.symbols.pop(s, None)
 
+    def _pin_matched(self) -> tuple[int | None, DataFrame | None]:
+        """(rows of the frame a CREATE clause writes from, the checkpoint
+        to free once the clause has pinned its rows). The first CREATE
+        clause of a statement evaluates its frame once (pin_small): at most
+        LOCAL_DELTA_MAX rows become a LocalRelation, so a later read never
+        re-runs the MATCH. A larger frame stays in a local checkpoint,
+        uncounted (None); the clause's own checkpoint reads it, counts it,
+        and then frees it."""
+        n = getattr(self, "_rows_hint", None)
+        if n is not None:
+            return n, None
+        self.df, n = pin_small(self.df, LOCAL_DELTA_MAX)
+        self._rows_hint = n
+        return n, (self.df if n is None else None)
+
     def _create_node(self, np: A.NodePattern, sym: str) -> None:
         """CreateNode (operator.hpp:411): one node per input row. Ids are
         (label_code << KEY_BITS) + key; key comes from the pattern's `key`
@@ -572,20 +650,18 @@ class WriteMixin:
         np = A.NodePattern(np.var, labels,
                            {k: self._lift(v) for k, v in np.props.items()},
                            dyn_labels=np.dyn_labels)
+        n_rows, matched = self._pin_matched()
         env = self._env()
-        n_rows = getattr(self, "_rows_hint", None)
-        if n_rows is None:
-            n_rows = self.df.count()
-            self._rows_hint = n_rows
         if "key" in np.props:
             key = compile_expr(np.props["key"], env).cast("long")
             # explicit keys may exceed the allocator's view — re-derive
             getattr(self.g, "_key_seq", {}).pop(label, None)
         else:
             # in-memory key allocator (catalog.alloc_node_keys): one count
-            # of the (checkpointed) frame instead of a max-aggregate over
-            # the label table's union chain per CREATE clause
-            base = self.g.alloc_node_keys(label, n_rows)
+            # of the pinned frame instead of a max-aggregate over the label
+            # table's union chain per CREATE clause. An uncounted frame
+            # reserves its keys once the pin below has counted it
+            base = self.g.alloc_node_keys(label, n_rows or 0)
             if n_rows == 1:
                 key = F.lit(base).cast("long")
             else:
@@ -614,13 +690,20 @@ class WriteMixin:
                 F.when(c.isNotNull(),
                        F.array_union(F.col(f"{sym}_labels"), F.array(c)))
                 .otherwise(F.col(f"{sym}_labels")))
-        # pin allocated ids. A single-row frame with literal keys is
-        # deterministic, so a giant CREATE-chain statement (LargeCreateQuery:
-        # hundreds of clauses) only checkpoints every 8th clause — plan
-        # depth stays bounded without a full-width materialization per node
+        # pin allocated ids: row-numbered keys must be evaluated once. A
+        # single row gets a literal key over a frame that is already
+        # evaluated (_pin_matched, or the one-row seed), so a giant
+        # CREATE-chain statement (LargeCreateQuery: hundreds of clauses)
+        # only pins every 8th clause to bound its plan depth
         self._create_ctr = getattr(self, "_create_ctr", 0) + 1
         if n_rows != 1 or self._create_ctr % 8 == 0:
-            aug = aug.localCheckpoint(eager=True)
+            aug, n, _ = _pin(aug, fits=n_rows is not None
+                             and n_rows <= LOCAL_DELTA_MAX)
+            if n_rows is None and "key" not in np.props:
+                self.g.alloc_node_keys(label, n)
+            n_rows = self._rows_hint = n
+            if matched is not None:
+                free_checkpoint(matched)
         self._all_props_cache = None  # new property columns may exist now
         prop_cols = [c for c in aug.columns
                      if c.startswith(f"{sym}_") and c != f"{sym}_labels"]
@@ -683,18 +766,16 @@ class WriteMixin:
                  f"{rsym}_dst": F.col(f"{dst}_id")}
         ecols.update({f"{rsym}_{A.prop_col(k)}": compile_expr(ve, env)
                       for k, ve in rel.props.items()})
-        aug = self.df.withColumns(ecols)
         tcol = (F.lit(etype) if dyn is None
                 else compile_expr(self._lift(dyn), env).cast("string"))
         # sequential edge ids in creation order (storage assigns edge gids
         # from a counter, storage.hpp edge_id_) — small ints keep id(e)
         # arithmetic exact; the per-batch window is the id-allocator step,
         # everything downstream stays partitioned
-        n_rows = getattr(self, "_rows_hint", None)
-        if n_rows is None:
-            n_rows = self.df.count()
-            self._rows_hint = n_rows
-        base = self.g.alloc_edge_ids(n_rows)
+        n_rows, matched = self._pin_matched()
+        aug = self.df.withColumns(ecols)
+        # an uncounted frame reserves its ids once the pin below counted it
+        base = self.g.alloc_edge_ids(n_rows or 0)
         eid_col = (F.lit(base).cast("long") if n_rows == 1
                    else F.lit(base) - 1 + F.row_number().over(
                        Window.orderBy(F.monotonically_increasing_id())))
@@ -702,7 +783,13 @@ class WriteMixin:
                .withColumn(f"{rsym}_eid", eid_col))
         self._create_ctr = getattr(self, "_create_ctr", 0) + 1
         if n_rows != 1 or self._create_ctr % 8 == 0:
-            aug = aug.localCheckpoint(eager=True)
+            aug, n, _ = _pin(aug, fits=n_rows is not None
+                             and n_rows <= LOCAL_DELTA_MAX)
+            if n_rows is None:
+                self.g.alloc_edge_ids(n)
+            n_rows = self._rows_hint = n
+            if matched is not None:
+                free_checkpoint(matched)
         cols = {f"{rsym}_src": "src", f"{rsym}_dst": "dst",
                 f"{rsym}_eid": "eid"}
         cols.update({c: c[len(rsym) + 1:] for c in aug.columns
@@ -839,6 +926,7 @@ class WriteMixin:
         env = self._env()
         key_col = f"{sym}_id" if kind == "node" else f"{sym}_eid"
         key_name = "id" if kind == "node" else "eid"
+        rel_sym = sym if kind == "rel" else None
         if kind not in ("node", "rel"):
             raise CompileError(f"cannot SET a property on a {kind}")
         if delta_ast is not None:
@@ -853,11 +941,8 @@ class WriteMixin:
                 delta_ast = None
         if delta_ast is not None:
             d = d0 * sign
-            updates = (self.df.select(F.col(key_col).alias(key_name),
-                                      d.alias("__v"))
-                       .groupBy(key_name).agg(F.sum("__v").alias("__v"))
-                       .withColumn("__hit", F.lit(True))
-                       .localCheckpoint(eager=True))
+            updates, rows, hit = self._update_set(
+                key_name, F.col(key_col), d, rel_sym, additive=True)
             # frame columns see the accumulated final value too
             upd = updates.select(F.col(key_name).alias("__uk"),
                                  F.col("__v").alias("__uv"))
@@ -884,16 +969,13 @@ class WriteMixin:
                 raise CompileError(
                     "InvalidPropertyType: cannot store a list of maps "
                     "as a property")
-            updates = (self.df.select(F.col(key_col).alias(key_name),
-                                      val.alias("__v"))
-                       .dropDuplicates([key_name])
-                       .withColumn("__hit", F.lit(True))
-                       .localCheckpoint(eager=True))
+            updates, rows, hit = self._update_set(
+                key_name, F.col(key_col), val, rel_sym)
             self.df = self.df.withColumn(f"{sym}_{skey}", val)
         apply = (self._apply_node_update if kind == "node"
                  else self._apply_edge_update)
-        self.counters["properties_set"] += apply(
-            updates, skey, additive=delta_ast is not None)
+        apply(updates, skey, hit, additive=delta_ast is not None)
+        self.counters["properties_set"] += rows
 
     def _set_property_nested(self, sym: str, kind: str, skey: str,
                              rest: list[str], value: A.Expr,
@@ -915,14 +997,10 @@ class WriteMixin:
                         and "labels" in mt.names:
                     pcol = A.prop_col(rest[0])
                     val_c = compile_expr(self._lift(value), env)
-                    updates = (self.df.select(
-                        member.getField("id").alias("id"),
-                        val_c.alias("__v"))
-                        .dropDuplicates(["id"])
-                        .withColumn("__hit", F.lit(True))
-                        .localCheckpoint(eager=True))
+                    updates, n_set, codes = self._update_set(
+                        "id", member.getField("id"), val_c)
                     self._all_props_cache = None
-                    n_set = self._apply_node_update(updates, pcol)
+                    self._apply_node_update(updates, pcol, codes)
                     fields = [
                         (val_c if f == pcol else member.getField(f)).alias(f)
                         for f in mt.names]
@@ -949,27 +1027,47 @@ class WriteMixin:
             val_c = compile_expr(self._lift(value), env)
             vt = env.typeof(val_c)
             val = _nested_value(old, oldt, rest, val_c, vt, op)
-        updates = (self.df.select(F.col(key_col).alias(key_name),
-                                  val.alias("__v"))
-                   .dropDuplicates([key_name])
-                   .withColumn("__hit", F.lit(True))
-                   .localCheckpoint(eager=True))
+        updates, rows, hit = self._update_set(
+            key_name, F.col(key_col), val, sym if kind == "rel" else None)
         self.df = self.df.withColumn(col_name, val)
         apply = (self._apply_node_update if kind == "node"
                  else self._apply_edge_update)
-        self.counters["properties_set"] += apply(updates, skey)
+        apply(updates, skey, hit)
+        self.counters["properties_set"] += rows
 
-    def _apply_node_update(self, updates: DataFrame, key: str,
-                           additive: bool = False) -> int:
-        """Write `updates` (id, __v, __hit) into `key`; returns its row
-        count. Only label tables whose id range intersects the update set
-        are touched. Pure tables (engine-minted ids) prune by the
-        id-derived label code; mixed tables (user-supplied swaps,
-        REMOVE-label moves keep foreign codes) can't be code-tested and get
-        a semi-join probe instead — skipping them silently dropped SET
-        writes. One collect yields both the codes and the row count."""
-        codes = dict(updates.groupBy(
-            F.shiftrightunsigned(F.col("id"), KEY_BITS)).count().collect())
+    def _update_set(self, key_name: str, key, val,
+                    rel_sym: str | None = None, additive: bool = False
+                    ) -> tuple[DataFrame, int, set | None]:
+        """(update set, its row count, what it touches): one (key_name,
+        __v, __hit) row per written id, additive deltas summed per id,
+        evaluated once (_pin). A node set touches the label codes of its
+        ids. An edge symbol whose frame binds its type adds __type, and the
+        set touches those types; else None, every type."""
+        cols = [key.alias(key_name), val.alias("__v")]
+        touched = {}
+        if key_name == "id":
+            touched["hit"] = _label_code("id")
+        elif rel_sym is not None and f"{rel_sym}_type" in self.df.columns:
+            cols.append(F.col(f"{rel_sym}_type").alias("__type"))
+            touched["hit"] = F.col("__type")
+        pairs = self.df.select(*cols)
+        if additive:
+            keys = [c for c in pairs.columns if c != "__v"]
+            pairs = pairs.groupBy(*keys).agg(F.sum("__v").alias("__v"))
+        else:
+            pairs = pairs.dropDuplicates([key_name])
+        updates, n, got = _pin(pairs.withColumn("__hit", F.lit(True)),
+                               **touched)
+        return updates, n, got.get("hit")
+
+    def _apply_node_update(self, updates: DataFrame, key: str, codes: set,
+                           additive: bool = False) -> None:
+        """Write `updates` (id, __v, __hit) into `key`. Only label tables
+        whose id range intersects the update set are touched. Pure tables
+        (engine-minted ids) prune by the id-derived label `codes` of the
+        update set; mixed tables (user-supplied swaps, REMOVE-label moves
+        keep foreign codes) can't be code-tested and get a semi-join probe
+        instead — skipping them silently dropped SET writes."""
         for label in list(self.g.nodes):
             code = LABEL_CODES.get(label)
             if label not in self.g._mixed_id_labels and code is not None:
@@ -981,25 +1079,30 @@ class WriteMixin:
             t = self.g.node(label)
             old, new = _reconcile_update(t, updates, key, additive)
             self.g.set_node_version(label, (
-                t.join(updates, on="id", how="left")
+                _with_update(t, updates, "id")
                 .withColumn(key, F.when(F.col("__hit"), new)
                             .otherwise(old))
                 .drop("__v", "__hit")),
                 keys_allocated=True, id_scheme_preserved=True)
-        return sum(codes.values())
 
     def _apply_edge_update(self, updates: DataFrame, key: str,
-                           additive: bool = False) -> int:
-        """Write `updates` (eid, __v, __hit) into `key` of every edge
-        table; returns its row count."""
-        for etype, t in list(self.g.edges.items()):
+                           types: set | None,
+                           additive: bool = False) -> None:
+        """Write `updates` (eid, __v, __hit[, __type]) into `key` of the
+        edge `types`, or of every edge table when None. A rewritten type
+        loses its adjacency caches, so an untouched type must keep its
+        version."""
+        etypes = [et for et in self.g.edges if types is None or et in types]
+        if "__type" in updates.columns:
+            updates = updates.drop("__type")
+        for etype in etypes:
+            t = self.g.edges[etype]
             old, new = _reconcile_update(t, updates, key, additive)
             self.g.set_edge_version(etype, (
-                t.join(updates, on="eid", how="left")
+                _with_update(t, updates, "eid")
                 .withColumn(key, F.when(F.col("__hit"), new)
                             .otherwise(old))
                 .drop("__v", "__hit")), ids_allocated=True)
-        return updates.count()
 
     def _set_properties(self, sym: str, value: A.Expr, replace: bool) -> None:
         """SetProperties = / += (operator.hpp:1539) from a map literal or
@@ -1100,6 +1203,27 @@ class WriteMixin:
                     f"{sym}_labels", F.array_except(f"{sym}_labels", rm))
 
     # -- DELETE --------------------------------------------------------------
+    def _delete_edges(self, eids: DataFrame) -> int:
+        """Remove the edges named by `eids` (eid[, __type]); returns how
+        many. Only the types named in __type are touched, or every type
+        without one; each touched table is counted once."""
+        typed = "__type" in eids.columns
+        eids, _, got = _pin(
+            eids.filter(F.col("eid").isNotNull()).dropDuplicates(["eid"]),
+            **({"types": F.col("__type")} if typed else {}))
+        etypes = [et for et in self.g.edges
+                  if not typed or et in got["types"]]
+        eids = eids.select("eid")
+        n = 0
+        for etype in etypes:
+            t = self.g.edges[etype]
+            gone = t.join(eids, on="eid", how="left_semi").count()
+            kept = t.join(eids, on="eid", how="left_anti")
+            if gone:
+                n += gone
+                self.g.set_edge_version(etype, kept, ids_allocated=True)
+        return n
+
     def _delete(self, cl: A.Delete) -> None:
         """Delete (operator.cpp:4764): anti-join victims out of their tables.
         Plain DELETE errors on still-connected vertices; DETACH also removes
@@ -1117,13 +1241,8 @@ class WriteMixin:
             return None
 
         def _delete_eids(eids) -> None:
-            eids = eids.dropDuplicates().localCheckpoint(eager=True)
-            n = 0
-            for etype, t in list(self.g.edges.items()):
-                kept = t.join(eids, on="eid", how="left_anti")
-                n += t.count() - kept.count()
-                self.g.set_edge_version(etype, kept, ids_allocated=True)
-            self.counters["relationships_deleted"] += n
+            self.counters["relationships_deleted"] += \
+                self._delete_edges(eids)
 
         for e in cl.exprs:
             if not isinstance(e, A.Var) or \
@@ -1174,14 +1293,10 @@ class WriteMixin:
                     "DELETE expects node, relationship or path values")
             sym, kind = e.name, self.symbols.get(e.name)
             if kind == "rel":
-                eids = (self.df.select(F.col(f"{sym}_eid").alias("eid"))
-                        .dropDuplicates().localCheckpoint(eager=True))
-                n = 0
-                for etype, t in list(self.g.edges.items()):
-                    kept = t.join(eids, on="eid", how="left_anti")
-                    n += t.count() - kept.count()
-                    self.g.set_edge_version(etype, kept, ids_allocated=True)
-                self.counters["relationships_deleted"] += n
+                cols = [F.col(f"{sym}_eid").alias("eid")]
+                if f"{sym}_type" in self.df.columns:
+                    cols.append(F.col(f"{sym}_type").alias("__type"))
+                _delete_eids(self.df.select(*cols))
                 self.deleted.add(sym)
             elif kind == "node":
                 ids = (self.df.select(F.col(f"{sym}_id").alias("id"))
@@ -1196,15 +1311,8 @@ class WriteMixin:
                     # earlier batches (periodic_delete.feature expects error)
                     raise CompileError(
                         "cannot periodically DELETE a path")
-                eids = (self.df.select(
-                            F.explode(F.col(f"{sym}_eids")).alias("eid"))
-                        .dropDuplicates().localCheckpoint(eager=True))
-                n = 0
-                for etype, t in list(self.g.edges.items()):
-                    kept = t.join(eids, on="eid", how="left_anti")
-                    n += t.count() - kept.count()
-                    self.g.set_edge_version(etype, kept, ids_allocated=True)
-                self.counters["relationships_deleted"] += n
+                _delete_eids(self.df.select(
+                    F.explode(F.col(f"{sym}_eids")).alias("eid")))
                 ids = self.df.select(
                     F.explode(F.col(f"{sym}_nids")).alias("id"))
                 node_ids = ids if node_ids is None else node_ids.unionByName(ids)
@@ -1213,34 +1321,49 @@ class WriteMixin:
                 raise CompileError(f"cannot DELETE a {kind}")
         if node_ids is None:
             return
-        node_ids = node_ids.dropDuplicates().localCheckpoint(eager=True)
+        node_ids, _, got = _pin(
+            node_ids.filter(F.col("id").isNotNull()).dropDuplicates(["id"]),
+            codes=_label_code("id"))
+        codes = got["codes"]
+        srcs = node_ids.select(F.col("id").alias("src"),
+                               F.lit(True).alias("__s"))
+        dsts = node_ids.select(F.col("id").alias("dst"),
+                               F.lit(True).alias("__d"))
         incident = 0
         for etype, t in list(self.g.edges.items()):
-            hit = (t.join(node_ids.withColumnRenamed("id", "src"),
-                          on="src", how="left_semi").count()
-                   + t.join(node_ids.withColumnRenamed("id", "dst"),
-                            on="dst", how="left_semi").count())
+            # one count of the edges with a victim at either end
+            hit = (t.join(srcs, "src", "left").join(dsts, "dst", "left")
+                   .filter(F.col("__s") | F.col("__d")).count())
+            kept = (t.join(node_ids.withColumnRenamed("id", "src"),
+                           on="src", how="left_anti")
+                    .join(node_ids.withColumnRenamed("id", "dst"),
+                          on="dst", how="left_anti"))
             if hit and not cl.detach:
                 raise CompileError("cannot DELETE a vertex that still has "
                                    "edges (use DETACH DELETE)")
             if hit:
-                kept = (t.join(node_ids.withColumnRenamed("id", "src"),
-                               on="src", how="left_anti")
-                        .join(node_ids.withColumnRenamed("id", "dst"),
-                              on="dst", how="left_anti"))
-                incident += t.count() - kept.count()
+                incident += hit
                 self.g.set_edge_version(etype, kept, ids_allocated=True)
         self.counters["relationships_deleted"] += incident
         deleted = 0
         for label, t in list(self.g.nodes.items()):
-            kept = t.join(node_ids, on="id", how="left_anti")
-            deleted += t.count() - kept.count()
+            # engine-minted ids name their label; only mixed-id tables
+            # (see _apply_node_update) are probed by the count itself
+            code = LABEL_CODES.get(label)
+            if (label not in self.g._mixed_id_labels and code is not None
+                    and code not in codes):
+                continue
+            gone = t.join(node_ids, on="id", how="left_semi").count()
+            if not gone:
+                continue
+            deleted += gone
             # keys_allocated=True: deleting the max-key node must NOT rewind
             # the allocator — a later CREATE would mint the deleted node's id
             # and clients holding the old id would resolve to the new node
             # (storage gid counters are monotonic in the reference too)
-            self.g.set_node_version(label, kept, keys_allocated=True,
-                                    id_scheme_preserved=True)
+            self.g.set_node_version(
+                label, t.join(node_ids, on="id", how="left_anti"),
+                keys_allocated=True, id_scheme_preserved=True)
         if self.g.extra_labels is not None:
             self.g.set_extra_labels(self.g.extra_labels.join(
                 node_ids, on="id", how="left_anti"))

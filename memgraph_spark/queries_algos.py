@@ -35,10 +35,15 @@ dedup_edges AS (SELECT DISTINCT src, dst FROM edges)
 
 
 def q_algo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-1 cosine neighbour per embedding (knn module parity;
-    src/mage/cpp/knn_module). All-pairs + per-node TakeOrdered below the
-    all-pairs fence; past it the candidate set comes from the LSH band
-    join (llm/similarity.py) — the scale path — with exact re-ranking."""
+    """Top-1 cosine neighbour per embedding (knn module parity;
+    src/mage/cpp/knn_module): exact up to the 4096-row all-pairs fence,
+    approximate above it. Up to the fence, all pairs + per-node
+    TakeOrdered; past it the candidate set comes from the LSH band join
+    (llm/similarity.py) — the scale path — re-ranked exactly among the
+    candidates, so a true neighbour outside every shared band is missed.
+    Measured top-1 recall of that branch against the exact one: 0.711 on a
+    seeded clustered corpus of 3000 vectors
+    (tests/test_llm.py::test_algo_knn_lsh_branch_recall)."""
     import os
     from memgraph_spark.llm.similarity import cosine, dot, norm
     emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -7,9 +7,12 @@ driver-side loops over collect().
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def empty_frame(spark: SparkSession, schema):
@@ -22,6 +25,79 @@ def empty_frame(spark: SparkSession, schema):
     the plan to an empty local relation, and an empty union branch folds
     away the same way. Every empty result is built here."""
     return spark.createDataFrame([], schema).limit(0)
+
+
+def _relation(spark: SparkSession, jrows, jschema) -> DataFrame:
+    """A LocalRelation over a JVM `List<Row>`: exact size statistics (a
+    join against it plans as a broadcast), and filters and projections over
+    it fold at optimization time."""
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema),
+                     spark)
+
+
+def is_local(df: DataFrame) -> bool:
+    """Whether Catalyst folds `df` to a LocalRelation (collecting it then
+    runs no Spark job)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getName().endswith(".LocalRelation")
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """DataFrame over driver-side rows whose consumption runs no Spark job.
+
+    `createDataFrame(rows, schema)` is an RDD without size statistics; its
+    partitions survive every filter. Here the rows travel as one JSON
+    literal, which Catalyst parses into a one-row local relation without a
+    job, and become a LocalRelation of their own. Values must be
+    JSON-representable: booleans, integers, floats, strings, lists."""
+    names = schema.names
+    text = json.dumps([dict(zip(names, r)) for r in rows])
+    packed = spark.sql("VALUES (1) AS t(__one)").select(
+        F.from_json(F.lit(text), T.ArrayType(schema)).alias("rows"))
+    jrows = packed._jdf.collectAsList().get(0).getList(0)
+    return _relation(spark, jrows,
+                     packed._jdf.schema().fields()[0].dataType().elementType())
+
+
+def collect_local(df: DataFrame) -> tuple[DataFrame, int]:
+    """(LocalRelation copy of every row of `df`, their count): one Spark
+    job, none for a frame that already folds to a local relation. For
+    frames known to be small."""
+    jrows = df._jdf.collectAsList()
+    return _relation(df.sparkSession, jrows, df._jdf.schema()), jrows.size()
+
+
+def pin_small(df: DataFrame, limit: int) -> tuple[DataFrame, int | None]:
+    """`df` evaluated once: (a LocalRelation copy, its row count) when it
+    has at most `limit` rows, else (a local checkpoint of it, None).
+
+    One Spark job evaluates `df` into the blocks of a lazy localCheckpoint
+    while at most `limit + 1` of its rows go to the driver in a single
+    collect_list; the blocks are freed once the copy is taken. So a larger
+    frame is never evaluated twice: a later job over the checkpoint reads
+    its blocks. A frame that already folds to a local relation is copied
+    without a job."""
+    if is_local(df):
+        return collect_local(df)
+    ck = df.localCheckpoint(eager=False)
+    jrows = (ck.limit(limit + 1)
+             .agg(F.collect_list(F.struct("*")).alias("rows"))
+             ._jdf.collectAsList().get(0).getList(0))
+    if jrows.size() > limit:
+        return ck, None
+    free_checkpoint(ck)
+    return _relation(df.sparkSession, jrows, df._jdf.schema()), jrows.size()
+
+
+def observe_metrics(df: DataFrame, **aggs) -> dict:
+    """The aggregate metrics (name -> aggregate Column) of `df`, computed
+    in one Spark job with no shuffle: `df` is observed while it is
+    written to the no-op sink."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    df.observe(obs, *[c.alias(n) for n, c in aggs.items()]) \
+        .write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
 def free_checkpoint(df) -> None:

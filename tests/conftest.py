@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -45,3 +46,26 @@ def spark():
     # that the recursion limit will not be reset.
     F.col("id")
     yield s
+
+
+_job_groups = itertools.count()
+
+
+def settle_listeners(spark) -> None:
+    """Wait until the listener bus has delivered every event, so that
+    `statusTracker` sees every job started so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started by `fn()` on this thread, read from a fresh job
+    group through `statusTracker`."""
+    sc = spark.sparkContext
+    group = f"counted-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    settle_listeners(spark)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

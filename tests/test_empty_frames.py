@@ -10,7 +10,6 @@ after the listener bus has delivered every event."""
 from __future__ import annotations
 
 import ast
-import itertools
 import re
 from pathlib import Path
 
@@ -24,32 +23,13 @@ from memgraph_spark.server import BoltServer
 from memgraph_spark.server.bolt import PULL, RECORD, RUN, SUCCESS, \
     read_message, write_message
 from memgraph_spark.session import empty_frame
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs, settle_listeners
 from tests.test_bolt import _login, _roundtrip
-
-_groups = itertools.count()
-
-
-def _settle(spark) -> None:
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs started by `fn()` on this thread."""
-    sc = spark.sparkContext
-    group = f"empty-frames-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    _settle(spark)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _drain_jobs(spark, df) -> tuple[int, int]:
-    return (_jobs(spark, lambda: list(df.toLocalIterator())),
-            _jobs(spark, df.collect))
+    return (count_jobs(spark, lambda: list(df.toLocalIterator())),
+            count_jobs(spark, df.collect))
 
 
 def _graph(spark) -> PropertyGraph:
@@ -155,11 +135,11 @@ def test_bolt_write_pull_sends_no_record_and_runs_no_job(spark, server):
                       {}, {})
     assert resp.tag == SUCCESS
     assert resp.fields[0]["fields"] == list(WRITE_COUNTERS)
-    _settle(spark)
+    settle_listeners(spark)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     records, meta = _pull_all(sock)
-    _settle(spark)
+    settle_listeners(spark)
     assert records == []
     assert set(tracker.getJobIdsForGroup(None)) == before
     assert meta["type"] == "r"
