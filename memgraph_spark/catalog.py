@@ -17,11 +17,13 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import checkpoint_with_metrics, empty_frame
+from memgraph_spark.session import (
+    checkpoint_with_metrics, empty_frame, observe_metrics)
 
 KEY_BITS = 56
 # rows per partition of a consolidated table version that has outgrown its
@@ -236,15 +238,14 @@ class PropertyGraph:
         from max(eid) across ALL edge tables: user-supplied edge
         DataFrames carry arbitrary eids, and eid is the global join key
         for edge SET/DELETE — starting at 0 would silently update or
-        delete unrelated edges on collision."""
+        delete unrelated edges on collision. The seed is one no-shuffle job
+        over the union of every table's eid, not one job per edge type."""
         if getattr(self, "_eid_seq", None) is None:
-            mx = -1
-            for df in self.edges.values():
-                if "eid" in df.columns:
-                    row = df.agg(F.max("eid")).first()
-                    if row[0] is not None:
-                        mx = max(mx, int(row[0]))
-            self._eid_seq = mx + 1
+            eids = [df.select(F.col("eid").cast("long").alias("eid"))
+                    for df in self.edges.values() if "eid" in df.columns]
+            mx = observe_metrics(reduce(DataFrame.unionAll, eids),
+                                 mx=F.max("eid"))["mx"] if eids else None
+            self._eid_seq = 0 if mx is None else int(mx) + 1
         base = self._eid_seq
         self._eid_seq = base + n
         return base

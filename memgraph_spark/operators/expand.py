@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import empty_frame
+from memgraph_spark.session import empty_frame, persist_if_needed, supersteps
 
 # Frontiers smaller than this are broadcast in iterative joins so the big
 # edge table never shuffles; larger frontiers fall back to shuffle joins
@@ -397,11 +397,15 @@ def weighted_shortest_path(
 ) -> DataFrame:
     """ExpandWeightedShortestPath (operator.cpp:3000, Dijkstra with a pq).
 
-    Distributed re-expression: Bellman-Ford-style iterative relaxation with a
-    per-(start,node) min-aggregation until fixpoint — the scalable equivalent
-    of Dijkstra when the frontier is a DataFrame. Returns (start, id, cost).
-    Pass `edges_df` (src, dst, <weight_col>) to mix edge types with
-    heterogeneous weights (the reference's weight lambda).
+    Distributed re-expression: Bellman-Ford-style relaxation on
+    `session.supersteps` until no distance improves — the scalable
+    equivalent of Dijkstra when the frontier is a DataFrame. The state is
+    (start, id, cost, fresh): each round joins the fresh rows (broadcast
+    while small) with the edges and takes ONE groupBy(start, id) over the
+    candidates and the state, min(new) beside min(old); a row is fresh when
+    its new cost beats the old one. Returns (start, id, cost), one row per
+    (start, id). Pass `edges_df` (src, dst, <weight_col>) to mix edge types
+    with heterogeneous weights (the reference's weight lambda).
     """
     edges = edges_df if edges_df is not None else graph.edge(etype)
     if direction == "in":
@@ -411,62 +415,37 @@ def weighted_shortest_path(
         edges = edges.unionByName(
             edges.withColumnRenamed("src", "__t").withColumnRenamed("dst", "src")
                  .withColumnRenamed("__t", "dst"))
-    from memgraph_spark.session import persist_if_needed
     e, release_e = persist_if_needed(
         edges.select(F.col("src"), F.col("dst"),
                      F.col(weight_col).cast("double").alias("__w")))
-    from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
-    # the start rows' count rides their checkpoint job (observe)
-    init, m = checkpoint_with_metrics(sources.select(
+    init = sources.select(
         F.col(source_col).alias("start"),
         F.col(source_col).alias("id"),
         F.lit(0.0).alias("cost"),
-    ), n=F.count(F.lit(1)))
-    # dist = lazy min-agg over the checkpointed per-round improvement deltas;
-    # each delta only holds strict improvements, so no per-round
-    # re-materialization of the full distance table is needed. Every
-    # CONSOLIDATE_EVERY rounds the delta union is collapsed into ONE
-    # checkpoint (and the spent delta blocks freed) — otherwise round k
-    # re-aggregates k generations of deltas and the lineage deepens
-    # unboundedly on long relaxation chains (skew/sf1 profile).
-    CONSOLIDATE_EVERY = 4
-    pieces = init
-    deltas = [init]
-    frontier = init
-    f_rows = m["n"]
-    for _ in range(max_iterations):
-        f = _maybe_broadcast(frontier, f_rows)
-        dist = pieces.groupBy("start", "id").agg(F.min("cost").alias("cost"))
-        cand = (
-            f.join(e, f["id"] == e["src"], "inner")
-            .select(F.col("start"), F.col("dst").alias("id"),
-                    (F.col("cost") + F.col("__w")).alias("cost"))
-            .groupBy("start", "id").agg(F.min("cost").alias("cost"))
-        )
-        # keep candidates strictly better than the current distance; the
-        # row count rides the checkpoint job (observe)
-        improved, m = checkpoint_with_metrics(
-            cand.join(dist.withColumnRenamed("cost", "__old"), ["start", "id"], "left")
-            .filter(F.col("__old").isNull() | (F.col("cost") < F.col("__old")))
-            .select("start", "id", "cost"),
-            n=F.count(F.lit(1)),
-        )
-        f_rows = m["n"]
-        if f_rows == 0:
-            break
-        pieces = pieces.unionByName(improved)
-        deltas.append(improved)
-        frontier = improved
-        if len(deltas) >= CONSOLIDATE_EVERY:
-            pieces = (pieces.groupBy("start", "id")
-                      .agg(F.min("cost").alias("cost"))
-                      .localCheckpoint(eager=True))
-            # the frontier delta stays live for the next round's join;
-            # every other generation is folded into the consolidation
-            for d in deltas:
-                if d is not frontier:
-                    free_checkpoint(d)
-            deltas = [frontier]
+        F.lit(True).alias("fresh"),
+    )
+
+    def relax(state, trace):
+        fresh = _maybe_broadcast(state.filter("fresh"), trace[-1]["fresh"])
+        cand = fresh.join(e, fresh["id"] == e["src"], "inner").select(
+            "start", F.col("dst").alias("id"),
+            (F.col("cost") + F.col("__w")).alias("new"))
+        best = (cand.unionByName(state.select(
+                    "start", "id", F.col("cost").alias("old")),
+                    allowMissingColumns=True)
+                .groupBy("start", "id")
+                .agg(F.min("new").alias("new"), F.min("old").alias("old")))
+        # a start duplicated in `sources` is folded by this groupBy
+        return best.select(
+            "start", "id", F.least("new", "old").alias("cost"),
+            F.coalesce(F.col("new") < F.col("old"), F.col("old").isNull())
+            .alias("fresh"))
+
+    # the fresh-row count rides each round's checkpoint job (observe)
+    dist, trace = supersteps(init, relax, lambda t: t[-1]["fresh"] == 0,
+                             max_iterations,
+                             fresh=F.count(F.when(F.col("fresh"), 1)))
     release_e()
-    out = pieces.groupBy("start", "id").agg(F.min("cost").alias("cost"))
-    return out
+    out = dist.select("start", "id", "cost")
+    # no round ran, so nothing folded duplicated starts
+    return out.dropDuplicates(["start", "id"]) if len(trace) == 1 else out

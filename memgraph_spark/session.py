@@ -223,5 +223,12 @@ def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # pyspark wraps every DataFrame/Column call to capture its Python
+        # call site: a dozen py4j round trips and a stack walk, so F.col
+        # costs ~2 ms instead of ~0.6 ms, and iterative loops build frames
+        # on the driver every round. Off, an AnalysisException keeps its
+        # condition and message and only loses the Python file:line
+        # fragment of its DataFrame context
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

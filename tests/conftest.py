@@ -5,7 +5,6 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,11 +39,6 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("memgraph-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
-    # The first F.col in a process runs pyspark's call-site capture, which
-    # imports IPython/jedi, and jedi raises the recursion limit. Doing it
-    # here keeps that import out of any hypothesis test, which would warn
-    # that the recursion limit will not be reset.
-    F.col("id")
     yield s
 
 

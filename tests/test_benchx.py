@@ -58,3 +58,13 @@ def test_sf1_key_shift_integrity(spark, small, monkeypatch):
     assert (dangling_cust, dangling_ord) == (0, 0)
     # keys are disjoint across copies
     assert orders.select("o_orderkey").distinct().count() == orders.count()
+
+
+def test_quiet_window_gates_on_the_five_minute_load(monkeypatch):
+    import bench
+    loads = iter([(0.5, 3.0, 3.0), (2.5, 1.0, 3.0), (1.0, 1.5, 3.0)])
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: next(loads))
+    guard = bench.wait_for_quiet_window(threshold=2.0, max_attempts=3,
+                                        sleep_s=0)
+    assert guard == {"ambient_trail": [[0.5, 3.0], [2.5, 1.0], [1.0, 1.5]],
+                     "quiet": True, "threshold": 2.0}

@@ -335,3 +335,18 @@ def test_consolidated_version_keeps_the_loaded_partitions(spark):
     assert g.nodes["P"].rdd.getNumPartitions() == 3
     assert gs.execute("MATCH (n:P {name: 'a'}) RETURN n.p AS p"
                       ).collect()[0].p == 11
+
+
+def test_edge_id_seed_is_one_job(spark):
+    g = load_tpch_graph(spark, SF_SMOKE)
+    tables = [df for df in g.edges.values() if "eid" in df.columns]
+    assert len(tables) > 1
+    top = max(r[0] for r in (df.agg(F.max("eid")).first() for df in tables)
+              if r[0] is not None)
+    base = []
+    assert count_jobs(spark, lambda: base.append(g.alloc_edge_ids(2))) == 1
+    assert base == [top + 1]
+    assert count_jobs(spark, lambda: base.append(g.alloc_edge_ids(1))) == 0
+    assert base[1] == top + 3
+    assert _tiny(spark).alloc_edge_ids(1) == 7
+    assert PropertyGraph(spark, nodes={}, edges={}).alloc_edge_ids(1) == 0
