@@ -277,9 +277,7 @@ def _try_operational(graph, q, u, spark):
         # would mint duplicate node keys / edge ids
         graph._key_seq = {}
         graph._eid_seq = None
-        for cache in (graph._adj_cache, graph._eid_cache):
-            cache.clear()
-        graph._count_cache.clear()
+        graph.forget()
         return status(f"recovered from {path}")
 
     m = _re.match(r"TERMINATE TRANSACTIONS (.+)$", q, _re.I)

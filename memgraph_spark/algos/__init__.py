@@ -5,7 +5,9 @@ detection, centralities, node similarity etc. as C++/Python procedures over
 the in-memory graph. Here each algorithm is an iterative DataFrame program
 (Pregel-style message passing via groupBy-aggregate joins): fully distributed,
 lineage-truncated per round with localCheckpoint. The fixpoint loops run on
-`session.supersteps`; the frontier loops on `operators.expand.bfs`.
+`session.supersteps` (replace the state each round); the accumulating
+frontier loops (BFS layers, variable-length paths, simple paths) on
+`session.frontier` (keep every round), most through `operators.expand.bfs`.
 """
 
 from memgraph_spark.algos.pagerank import pagerank  # noqa: F401

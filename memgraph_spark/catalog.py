@@ -218,19 +218,30 @@ class PropertyGraph:
             # an external table swap may introduce arbitrary eids — the
             # in-memory eid allocator must re-derive its base from the data
             self._eid_seq = None
+        self.forget(etype)
+
+    def forget(self, etype: str | None = None) -> None:
+        """Drop what the catalog derived from edge type `etype`: its
+        persisted adjacency and eid tables and the all-types ones built
+        over it, its degree hint, its co-located scans and its endpoint-label
+        guarantees. Call it when the type's table changes, is renamed or is
+        dropped. `etype=None` drops them for every type, and the per-label
+        row counts too: the tables were swapped wholesale."""
+        def hit(t):
+            return etype is None or t in (etype, None)
+
         for cache in (self._adj_cache, self._eid_cache):
-            for key, cached in list(cache.items()):
-                if key[0] in (etype, None):
-                    cached.unpersist()
-                    del cache[key]
-        for key in (etype, None):
-            self.degree_hint.pop(key, None)
+            for key in [k for k in cache if hit(k[0])]:
+                cache.pop(key).unpersist()
+        for key in [k for k in self.degree_hint if hit(k)]:
+            del self.degree_hint[key]
         # a new edge version breaks the edge<->node single-scan equivalence
-        for key in [k for k in self.co_scan if k[0] == etype]:
-            del self.co_scan[key]
-        # ... and the FK endpoint guarantee (created edges carry user dsts)
-        for key in [k for k in self.endpoint_labels if k[0] == etype]:
-            del self.endpoint_labels[key]
+        # and the FK endpoint guarantee (created edges carry user dsts)
+        for cache in (self.co_scan, self.endpoint_labels):
+            for key in [k for k in cache if hit(k[0])]:
+                del cache[key]
+        if etype is None:
+            self._count_cache.clear()
 
     def alloc_edge_ids(self, n: int) -> int:
         """Allocate n consecutive edge ids from an in-memory counter

@@ -184,8 +184,6 @@ def _bulk_create(graph, node_rows, edge_rows):
             df = graph.edges[etype].unionByName(df,
                                                 allowMissingColumns=True)
         graph.set_edge_version(etype, df, ids_allocated=True)
-    graph._adj_cache.clear()
-    graph._eid_cache.clear()
     return len(node_rows), len(edge_rows), idx_to_id
 
 

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memgraph_spark.operators.expand import expand_variable
 from memgraph_spark.procedures import register
 from memgraph_spark.session import empty_frame
 
@@ -24,8 +26,9 @@ from memgraph_spark.session import empty_frame
 
 def _parse_rel_filter(graph, relationships) -> DataFrame:
     """APOC-style relationship filter list: 'TYPE>' out, '<TYPE' in, 'TYPE'
-    both; empty list = every type, both directions. Returns an oriented
-    (src, dst, eid) table (path_module/algorithm/path.cpp filter parsing)."""
+    both; empty list = every type, both directions. Returns the oriented
+    (__from, __to, __eid, __fwd) table `expand_variable` walks
+    (path_module/algorithm/path.cpp filter parsing)."""
     specs = []
     for raw in (relationships or []):
         s = str(raw).strip()
@@ -35,22 +38,14 @@ def _parse_rel_filter(graph, relationships) -> DataFrame:
             specs.append((s[:-1], "out"))
         else:
             specs.append((s, "both"))
-    if not specs:
-        specs = [(None, "both")]
-    parts = []
-    for etype, direction in specs:
-        e = graph.eid_edges(etype or None, direction)
-        parts.append(e.select(F.col("__from").alias("src"),
-                              F.col("__to").alias("dst"),
-                              F.col("__eid").alias("eid")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName,
+                  [graph.eid_edges(etype or None, direction)
+                   for etype, direction in specs or [(None, "both")]])
 
 
-def _parse_label_filter(labels):
-    """'+L' allowlist / '-L' denylist (plain 'L' counts as allow)."""
+def _label_ids(graph, labels) -> DataFrame | None:
+    """`id` frame of the nodes that pass the label filter: '+L' allowlist,
+    '-L' denylist (plain 'L' counts as allow); None for no filter."""
     allow, deny = [], []
     for raw in (labels or []):
         s = str(raw).strip()
@@ -60,12 +55,8 @@ def _parse_label_filter(labels):
             allow.append(s[1:])
         elif s:
             allow.append(s)
-    return allow, deny
-
-
-def _label_ok(graph, allow, deny):
-    """(id, ok) frame for the label filter — null-safe join target."""
-    nodes = graph.all_nodes([])
+    if not (allow or deny):
+        return None
     ok = F.lit(True)
     if allow:
         ok = ok & (F.size(F.array_intersect(
@@ -73,63 +64,22 @@ def _label_ok(graph, allow, deny):
     if deny:
         ok = ok & (F.size(F.array_intersect(
             F.col("labels"), F.array(*[F.lit(d) for d in deny]))) == 0)
-    return nodes.select("id", ok.alias("__ok"))
+    return graph.all_nodes([]).filter(ok).select("id")
 
 
-def _start_df(graph, start) -> DataFrame:
+def _expand(graph, start, relationships, labels, min_hops, max_hops):
+    """path.expand / path.subgraph_* traversal: `expand_variable` from the
+    start ids over the relationship filter's edges, every path continuing
+    only through nodes that pass the label filter. Columns s_id, n_id,
+    p_nids (path nodes after the start), p_eids."""
     ids = [int(x) for x in (start if isinstance(start, (list, tuple))
                             else [start])]
-    return graph.spark.createDataFrame([(i,) for i in ids], "s_id long")
-
-
-def _expand_paths(graph, start, relationships, labels, min_hops, max_hops):
-    """Shared path.expand / path.subgraph_* traversal: per-round edge join
-    with per-path edge uniqueness and the label allow/deny filter, exactly
-    the ExpandVariable pattern (lazy for shallow bounds, eager above)."""
-    edges = _parse_rel_filter(graph, relationships)
-    allow, deny = _parse_label_filter(labels)
-    lbl = _label_ok(graph, allow, deny) if (allow or deny) else None
-    lo, hi = int(min_hops or 0), int(max_hops or 3)
-    cur = _start_df(graph, start).select(
-        F.col("s_id"),
-        F.col("s_id").alias("__node"),
-        F.lit(0).alias("__depth"),
-        F.array("s_id").alias("__nodes"),
-        F.array().cast("array<long>").alias("__rels"),
-    )
-    results = [cur] if lo == 0 else []
-    eager = hi > 3
-    for depth in range(1, hi + 1):
-        stepped = (
-            cur.join(edges, cur["__node"] == edges["src"], "inner")
-            .filter(~F.array_contains(F.col("__rels"), F.col("eid")))
-            .select(
-                "s_id",
-                F.col("dst").alias("__node"),
-                (F.col("__depth") + 1).alias("__depth"),
-                F.array_append("__nodes", F.col("dst")).alias("__nodes"),
-                F.array_append("__rels", F.col("eid")).alias("__rels"),
-            )
-        )
-        if lbl is not None:
-            stepped = (stepped.join(lbl, stepped["__node"] == lbl["id"],
-                                    "left")
-                       .filter(F.coalesce("__ok", F.lit(False)))
-                       .drop("id", "__ok"))
-        if eager:
-            stepped = stepped.localCheckpoint(eager=True)
-            if stepped.isEmpty():
-                cur = stepped
-                break
-        cur = stepped
-        if depth >= lo:
-            results.append(cur)
-    if not results:
-        return cur.limit(0)
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    starts = graph.spark.createDataFrame([(i,) for i in ids], "s_id long")
+    return expand_variable(
+        starts, graph, None, "s", "n", int(min_hops or 0),
+        int(max_hops or 3), path_prefix="p",
+        edges=_parse_rel_filter(graph, relationships),
+        node_ids=_label_ids(graph, labels))
 
 
 # -- path module (src/mage/cpp/path_module) ----------------------------------
@@ -139,9 +89,10 @@ def _path_expand(g, start, relationships=None, labels=None,
     """path.expand(start, relationships, labels, min_hops, max_hops)
     YIELD result — the path as struct(nodes: [ids], rels: [eids])
     (path_module.cpp:41)."""
-    paths = _expand_paths(g, start, relationships, labels, min_hops, max_hops)
-    return paths.select(F.struct(F.col("__nodes").alias("nodes"),
-                                 F.col("__rels").alias("rels")).alias("result"))
+    paths = _expand(g, start, relationships, labels, min_hops, max_hops)
+    return paths.select(F.struct(
+        F.concat(F.array("s_id"), F.col("p_nids")).alias("nodes"),
+        F.col("p_eids").alias("rels")).alias("result"))
 
 
 def _path_subgraph_nodes(g, start, config=None):
@@ -149,11 +100,11 @@ def _path_subgraph_nodes(g, start, config=None):
     (path_module.cpp:66). Config keys (APOC spelling): relationshipFilter,
     labelFilter, minHops/minLevel, maxHops/maxLevel."""
     c = dict(config or {})
-    paths = _expand_paths(
+    paths = _expand(
         g, start, c.get("relationshipFilter"), c.get("labelFilter"),
         c.get("minHops", c.get("minLevel", 0)),
         c.get("maxHops", c.get("maxLevel", 3)))
-    return paths.select(F.col("__node").alias("node")).dropDuplicates()
+    return paths.select(F.col("n_id").alias("node")).dropDuplicates()
 
 
 def _path_subgraph_all(g, start, config=None):
@@ -161,11 +112,12 @@ def _path_subgraph_all(g, start, config=None):
     subgraph on every reached node (path_module.cpp:75)."""
     nodes = _path_subgraph_nodes(g, start, config)
     edges = _parse_rel_filter(g, (config or {}).get("relationshipFilter"))
-    sub = (edges.join(nodes.withColumnRenamed("node", "src"), "src",
+    sub = (edges.join(nodes.withColumnRenamed("node", "__from"), "__from",
                       "left_semi")
-           .join(nodes.withColumnRenamed("node", "dst"), "dst", "left_semi"))
+           .join(nodes.withColumnRenamed("node", "__to"), "__to",
+                 "left_semi"))
     return (nodes.agg(F.collect_set("node").alias("nodes"))
-            .crossJoin(sub.agg(F.collect_set("eid").alias("rels"))))
+            .crossJoin(sub.agg(F.collect_set("__eid").alias("rels"))))
 
 
 def _path_create(g, start_node, rel_map=None):
@@ -181,8 +133,8 @@ def _path_create(g, start_node, rel_map=None):
     nodes, rels = [sid], []
     if eids:
         e = _parse_rel_filter(g, None)
-        rows = {r.eid: (r.src, r.dst)
-                for r in e.filter(F.col("eid").isin(eids)).collect()}
+        rows = {r["__eid"]: (r["__from"], r["__to"])
+                for r in e.filter(F.col("__eid").isin(eids)).collect()}
         cur = sid
         for eid in eids:
             if eid not in rows:

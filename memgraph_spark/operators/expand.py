@@ -14,10 +14,14 @@ localCheckpoint() truncates lineage so round N's plan doesn't embed rounds
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.session import empty_frame, persist_if_needed, supersteps
+from memgraph_spark.session import (
+    MAX_ROUNDS, empty_frame, frontier, persist_if_needed, supersteps,
+    union_rounds)
 
 # Frontiers smaller than this are broadcast in iterative joins so the big
 # edge table never shuffles; larger frontiers fall back to shuffle joins
@@ -173,11 +177,12 @@ def expand_variable(
     from_sym: str,
     to_sym: str,
     lower: int = 1,
-    upper: int = 8,
+    upper: int | None = 8,
     direction: str = "out",
     depth_col: str | None = None,
-    hops: dict | None = None,
     path_prefix: str | None = None,
+    edges: DataFrame | None = None,
+    node_ids: DataFrame | None = None,
 ) -> DataFrame:
     """ExpandVariable (operator.cpp:2199): `-[:T*lo..hi]->`.
 
@@ -185,21 +190,21 @@ def expand_variable(
     table, accumulating the visited-edge set per path (Cypher edge-isomorphism:
     an edge may not repeat within a path; nodes may — EdgeUniquenessFilter,
     operator.hpp:1768). Returns the input columns + `{to_sym}_id` (+ depth).
+    `upper=None` runs until a round adds no rows.
 
     With path_prefix, also returns `{path_prefix}_nids` (tail node ids, i.e.
     excluding the start), `{path_prefix}_eids`, `{path_prefix}_dirs` — the
     per-row path segment for named-path reconstruction.
+
+    `edges` overrides the oriented (__from, __to, __eid, __fwd) table of
+    (etype, direction); `node_ids` (an `id` frame) keeps only the steps
+    that reach one of its nodes, so a path continues through them alone.
     """
-    if upper is None:
-        # unbounded: the eager loop below breaks as soon as a round adds no
-        # rows (edge-uniqueness bounds path length by |E|); the constant is
-        # a runaway backstop, not a semantic cap
-        upper = 10_000
     # persisted once per (etype, direction) in the catalog — every round
     # re-joins this table and must not re-derive it from the scans
-    e = graph.eid_edges(etype, direction)
+    e = edges if edges is not None else graph.eid_edges(etype, direction)
     base_cols = df.columns
-    cur = df.select(
+    init = df.select(
         "*",
         F.col(f"{from_sym}_id").alias("__node"),
         F.lit(0).alias("__depth"),
@@ -207,26 +212,10 @@ def expand_variable(
         F.array().cast("array<long>").alias("__edges"),
         F.array().cast("array<boolean>").alias("__dirs"),
     )
-    results = []
-    if lower == 0:
-        results.append(cur)
-    # Single-hop expansions compile to ONE lazy plan (a broadcast-able join,
-    # no per-round materialization). Everything deeper takes the eager loop:
-    # depth k>=2 in a lazy plan joins hop k-1's output against the edge frame
-    # with NO size information, so Catalyst sort-merge-joins it — a full
-    # shuffle of the edge table per extra depth even when the frontier is a
-    # few hundred rows (AQE materializes both shuffle stages before it can
-    # rewrite the join). The eager loop's checkpoint makes the frontier count
-    # known and `_maybe_broadcast` keeps the edges unshuffled below the
-    # 500k-row fence — the BFS frontier-join shape, measured 0.70x at sf0.1
-    # and structurally safer at scale. Lineage truncation and the hops
-    # budget ride the same per-round checkpoint.
-    lazy = upper <= 1 and hops is None
-    cur_rows = None
-    for depth in range(1, upper + 1):
-        lhs = cur if cur_rows is None else _maybe_broadcast(cur, cur_rows)
+
+    def hop(cur: DataFrame) -> DataFrame:
         stepped = (
-            lhs.join(e, lhs["__node"] == e["__from"], "inner")
+            cur.join(e, cur["__node"] == e["__from"], "inner")
             .filter(~F.array_contains(F.col("__edges"), F.col("__eid")))
             .select(
                 *base_cols,
@@ -237,30 +226,31 @@ def expand_variable(
                 F.array_append("__dirs", F.col("__fwd")).alias("__dirs"),
             )
         )
-        if lazy:
-            cur = stepped
-            if depth >= lower:
-                results.append(cur)
-            continue
-        from memgraph_spark.session import checkpoint_with_metrics
-        stepped, _m = checkpoint_with_metrics(stepped, n=F.count(F.lit(1)))
-        cur_rows = _m["n"]
-        if cur_rows == 0:
-            cur = stepped
-            break
-        cur = stepped
-        if depth >= lower:
-            results.append(cur)
-        # USING HOPS LIMIT (hops_limit.hpp): each expanded path-edge row
-        # consumes quota; on exhaustion stop with partial results (the
-        # reference's hops_limit_partial_results=true default)
-        if hops is not None and hops.get("limit"):
-            hops["used"] += cur_rows
-            if hops["used"] >= hops["limit"]:
-                hops["reached"] = True
-                break
-    path_cols = ([f"{path_prefix}_nids", f"{path_prefix}_eids",
-                  f"{path_prefix}_dirs"] if path_prefix else [])
+        if node_ids is not None:
+            stepped = stepped.join(
+                node_ids, stepped["__node"] == node_ids["id"], "left_semi")
+        return stepped
+
+    # Single-hop expansions compile to ONE lazy plan (a broadcast-able join,
+    # no per-round materialization). Everything deeper runs on
+    # session.frontier from the first hop, so the input rows are read once,
+    # by that hop's checkpoint job: depth k>=2 in a lazy plan joins hop
+    # k-1's output against the edge frame with NO size information, so
+    # Catalyst sort-merge-joins it — a full shuffle of the edge table per
+    # extra depth even when the frontier is a few hundred rows (AQE
+    # materializes both shuffle stages before it can rewrite the join).
+    # Each round's checkpoint makes the frontier count known and
+    # `_maybe_broadcast` keeps the edges unshuffled below the 500k-row
+    # fence — the BFS frontier-join shape, measured 0.70x at sf0.1 and
+    # structurally safer at scale.
+    if upper is not None and upper <= 1:
+        rounds = [init, hop(init)][:upper + 1]
+    else:
+        deeper, _ = frontier(
+            hop(init), lambda rs, t: hop(_maybe_broadcast(rs[-1], t[-1]["n"])),
+            max_rounds=(MAX_ROUNDS if upper is None else upper) - 1)
+        rounds = [init, *deeper]
+    results = rounds[lower:]
     if not results:
         extra = {f"{to_sym}_id": F.lit(None).cast("long")}
         if depth_col:
@@ -270,24 +260,40 @@ def expand_variable(
             extra[f"{path_prefix}_eids"] = F.lit(None).cast("array<long>")
             extra[f"{path_prefix}_dirs"] = F.lit(None).cast("array<boolean>")
         return df.limit(0).withColumns(extra)
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    # rebound the additive rounds×P partition count (see traversal.py
-    # _traversal_results) — same rows, far fewer tasks downstream
-    p = int(out.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    if len(results) > 1 and out.rdd.getNumPartitions() > p:
-        out = out.coalesce(p)
-    keep = base_cols + [f"{to_sym}_id"] + ([depth_col] if depth_col else []) \
-        + path_cols
-    out = out.withColumnRenamed("__node", f"{to_sym}_id")
+    keep = [*base_cols, F.col("__node").alias(f"{to_sym}_id")]
     if depth_col:
-        out = out.withColumnRenamed("__depth", depth_col)
+        keep.append(F.col("__depth").alias(depth_col))
     if path_prefix:
-        out = (out.withColumnRenamed("__tail", f"{path_prefix}_nids")
-               .withColumnRenamed("__edges", f"{path_prefix}_eids")
-               .withColumnRenamed("__dirs", f"{path_prefix}_dirs"))
-    return out.select(*keep)
+        keep += [F.col("__tail").alias(f"{path_prefix}_nids"),
+                 F.col("__edges").alias(f"{path_prefix}_eids"),
+                 F.col("__dirs").alias(f"{path_prefix}_dirs")]
+    return union_rounds(results).select(*keep)
+
+
+def bfs_layers(edges: DataFrame, init: DataFrame, agg, max_hops: int | None,
+               halt=None, **probe) -> DataFrame:
+    """Layered BFS on session.frontier from `init` (start, id, dist, <agg
+    column>): round d joins layer d-1 with `edges` (src, dst), folds the
+    arrivals per (start, id) with `agg` (an aggregate Column over the
+    frontier's columns), drops every pair an earlier layer reached and
+    stamps dist = d. Returns the union of the layers. `probe` metrics
+    ride each layer's checkpoint job for `halt(trace)`."""
+    name = init.columns[3]
+
+    def layer(rounds, trace):
+        f = _maybe_broadcast(rounds[-1], trace[-1]["n"])
+        seen = reduce(DataFrame.unionByName,
+                      [r.select("start", "id") for r in rounds])
+        return (f.join(edges, f["id"] == edges["src"], "inner")
+                .groupBy("start", F.col("dst").alias("id"))
+                .agg(agg.alias(name))
+                .join(_maybe_broadcast(seen, sum(m["n"] for m in trace)),
+                      ["start", "id"], "left_anti")
+                .select("start", "id", F.lit(len(rounds)).alias("dist"),
+                        name))
+
+    rounds, _ = frontier(init, layer, halt, max_hops, **probe)
+    return reduce(DataFrame.unionByName, rounds)
 
 
 def bfs(
@@ -306,8 +312,8 @@ def bfs(
     (start BIGINT, id BIGINT, dist INT, par BIGINT) — minimal hop distance
     from each start to every reachable node, and the smallest predecessor
     id at dist - 1 (null at the start), i.e. a BFS tree per start. Each
-    round: frontier ⋈ edges, min-parent aggregate, anti-join the visited
-    set, union. Driver loop = diameter iterations only.
+    round (`bfs_layers`): frontier ⋈ edges, min-parent aggregate, anti-join
+    the visited set, union. Driver loop = diameter iterations only.
 
     `max_hops=None` runs until the frontier is empty. `target` stops the
     loop after the round that first reaches that node id (its arrival
@@ -317,42 +323,19 @@ def bfs(
     (e.g. neighbors.at_hop's per-type direction prefixes, a residual
     graph, a shortest-path tight subgraph).
     """
-    from memgraph_spark.session import checkpoint_with_metrics
     # shared persisted adjacency; every BFS round re-joins it
     edges = edges_df if edges_df is not None else graph.adjacency(etype, direction)
-    # the frontier row count (and target arrival) ride each checkpoint job
-    probe = {"n": F.count(F.lit(1))}
-    if target is not None:
-        probe["hit"] = F.count(F.when(F.col("id") == target, 1))
-    frontier, m = checkpoint_with_metrics(sources.select(
+    init = sources.select(
         F.col(source_col).alias("start"),
         F.col(source_col).alias("id"),
         F.lit(0).alias("dist"),
         F.lit(None).cast("long").alias("par"),
-    ), **probe)
-    # visited = union of per-round frontiers, each already materialized by
-    # its own localCheckpoint — no O(rounds^2) re-checkpointing of the union
-    visited = frontier
-    f_rows = v_rows = m["n"]
-    d = 0
-    while not m.get("hit") and (max_hops is None or d < max_hops):
-        d += 1
-        f = _maybe_broadcast(frontier, f_rows)
-        nxt, m = checkpoint_with_metrics(
-            f.join(edges, f["id"] == edges["src"], "inner")
-            .groupBy("start", F.col("dst").alias("id"))
-            .agg(F.min("src").alias("par"))
-            .join(_maybe_broadcast(visited, v_rows), ["start", "id"], "left_anti")
-            .select("start", "id", F.lit(d).alias("dist"), "par"),
-            **probe,
-        )
-        f_rows = m["n"]
-        if f_rows == 0:
-            break
-        v_rows += f_rows
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+    )
+    if target is None:
+        return bfs_layers(edges, init, F.min("src"), max_hops)
+    return bfs_layers(edges, init, F.min("src"), max_hops,
+                      lambda t: t[-1]["hit"],
+                      hit=F.count(F.when(F.col("id") == target, 1)))
 
 
 def bfs_path(reach: DataFrame, target: int) -> list[int] | None:

@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memgraph_spark.operators.expand import bfs, bfs_path, weighted_shortest_path
+from memgraph_spark.operators.expand import (
+    bfs, bfs_layers, bfs_path, weighted_shortest_path)
 from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
 
 
@@ -143,28 +144,10 @@ def bfs_path_counts(graph, sources: DataFrame, etype: str | None = None,
                     source_col: str = "id") -> DataFrame:
     """ExpandAllShortestPaths parity for hop-weighted graphs: (start, id,
     dist, n_paths) where n_paths counts the distinct minimal-hop paths.
-    Layered DP: counts at depth d = sum of counts of depth-(d-1) in-neighbors
-    — one join + one groupBy per layer, no path materialization."""
-    edges = graph.adjacency(etype, direction)
-    layer = sources.select(
+    Layered DP on `bfs`'s layers: counts at depth d = sum of counts of
+    depth-(d-1) in-neighbors — one join + one groupBy per layer, no path
+    materialization."""
+    return bfs_layers(graph.adjacency(etype, direction), sources.select(
         F.col(source_col).alias("start"), F.col(source_col).alias("id"),
         F.lit(0).alias("dist"), F.lit(1).cast("long").alias("n_paths"),
-    ).localCheckpoint(eager=True)
-    visited = layer
-    for d in range(1, max_hops + 1):
-        # layer row count rides the checkpoint job (observe)
-        nxt, m = checkpoint_with_metrics(
-            layer.join(edges, layer["id"] == edges["src"], "inner")
-            .groupBy("start", F.col("dst").alias("id"))
-            .agg(F.sum("n_paths").alias("n_paths"))
-            .join(visited.select("start", "id").withColumn("__seen", F.lit(1)),
-                  ["start", "id"], "left_anti")
-            .withColumn("dist", F.lit(d))
-            .select("start", "id", "dist", "n_paths"),
-            n=F.count(F.lit(1)),
-        )
-        if m["n"] == 0:
-            break
-        visited = visited.unionByName(nxt)
-        layer = nxt
-    return visited
+    ), F.sum("n_paths"), max_hops)

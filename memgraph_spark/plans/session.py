@@ -1217,16 +1217,14 @@ class QueryCompiler(WriteMixin, TraversalMixin):
             tmp = self._anon_sym("n")
             self.df = expand_variable(
                 self.df, self.g, etype, from_sym, tmp, lower, upper,
-                rel.direction, depth_col=depth_col, hops=self.hops,
-                path_prefix=path_prefix)
+                rel.direction, depth_col=depth_col, path_prefix=path_prefix)
             self.df = self.df.filter(
                 F.col(f"{tmp}_id") == F.col(f"{to_sym}_id")).drop(f"{tmp}_id")
             self._bind_node(np, to_sym)
         else:
             self.df = expand_variable(
                 self.df, self.g, etype, from_sym, to_sym, lower, upper,
-                rel.direction, depth_col=depth_col, hops=self.hops,
-                path_prefix=path_prefix)
+                rel.direction, depth_col=depth_col, path_prefix=path_prefix)
             self.symbols[to_sym] = "node"
             self._attach_node(to_sym, np)
         return F.col(depth_col)

@@ -7,8 +7,8 @@ ast.hpp:1807) with per-expansion lambdas (EdgeAtom::Lambda, ast.hpp:1796);
 cursors ExpandVariable (operator.cpp:2199), BFS (:2726), Dijkstra (:3000),
 all-shortest (:3309).
 
-Spark re-expression: one shared iterative frontier loop — each round is one
-distributed join against the oriented edge table; lambdas compile to Column
+Spark re-expression: one round function on `session.frontier` — each round is
+one distributed join against the oriented edge table; lambdas compile to Column
 predicates evaluated on the joined step rows (edge props + target-node props
 + accumulated-path detail arrays are all columns of the step frame, so the
 filter stays JVM-side). Mode-specific pruning between rounds:
@@ -19,13 +19,17 @@ filter stays JVM-side). Mode-specific pruning between rounds:
 - `*allShortest`: keep every path that ties the minimum cost
 
 The driver loop only bounds rounds (graph diameter / upper bound); no row
-ever passes through the driver. localCheckpoint() truncates lineage per
-round so round N's plan doesn't embed rounds 1..N-1. At 100 TB the frontier
-and the per-round shuffles are the scaling unit — AQE handles supernode
-skew; the visited/best tables stay hash-partitioned by (row, node).
+ever passes through the driver. `frontier` checkpoints every round, with its
+row count observed on the same job, so round N's plan doesn't embed rounds
+1..N-1; the bfs visited set and the weighted modes' best cost per (row,
+node) are lazy unions / aggregates over the kept rounds. At 100 TB the
+frontier and the per-round shuffles are the scaling unit — AQE handles
+supernode skew.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,12 +37,7 @@ from pyspark.sql.window import Window
 
 from memgraph_spark.plans import cypher_ast as A
 from memgraph_spark.plans.exprs import CompileError, Env, compile_expr
-from memgraph_spark.session import checkpoint_with_metrics, free_checkpoint
-
-MAX_ROUNDS = 1024  # runaway backstop when no upper bound given — NOT a
-                   # semantic cap: every mode breaks when a round adds no
-                   # rows (fixpoint) and plain mode is edge-uniqueness-
-                   # bounded, so real graphs terminate far earlier
+from memgraph_spark.session import MAX_ROUNDS, frontier, union_rounds
 
 
 def _lambda_refs(lam, idx: int) -> bool:
@@ -55,6 +54,15 @@ def _lambda_refs(lam, idx: int) -> bool:
 # instead (approximate retrieval order, exact budget) — SCALE.md "hops limit"
 HOPS_SIM_MAX_EDGES = 50_000
 HOPS_SIM_MAX_STARTS = 5_000
+
+
+def _best(rounds: list[DataFrame]) -> DataFrame:
+    """(__rid, __node, __best): the least accumulated cost per (row, node)
+    over weighted traversal rounds."""
+    return (reduce(DataFrame.unionByName,
+                   [r.select("__rid", "__node", "__cost") for r in rounds])
+            .groupBy("__rid", "__node")
+            .agg(F.min("__cost").alias("__best")))
 
 
 class TraversalMixin:
@@ -94,6 +102,7 @@ class TraversalMixin:
             else:
                 weight = body
         need_detail = rel.var is not None or need_p
+        weighted = mode in ("wshortest", "allshortest")
         base_cols = list(self.df.columns)
 
         # oriented edge-step table: __from/__to + {ep}_eid/_type/_src/_dst/
@@ -153,7 +162,7 @@ class TraversalMixin:
                         f"`{c[len(ep) + 1:]}`:"
                         + E.schema[c].dataType.simpleString()
                         for c in e_fields) + ">>")))
-        if mode in ("wshortest", "allshortest"):
+        if weighted:
             # seed weight: the weight lambda evaluated at the source with a
             # null edge (CalculateNextWeight, operator.cpp:2983/:3147) — a
             # null seed means "no accumulation yet"
@@ -178,29 +187,10 @@ class TraversalMixin:
             else:
                 init = init.withColumn("__cost",
                                        F.lit(None).cast("double"))
-        init = init.localCheckpoint(eager=True)
 
-        results: list[DataFrame] = []
-        if mode is None and lower == 0:
-            results.append(init)
-        visited = (init.select("__rid", "__node").localCheckpoint(eager=True)
-                   if mode == "bfs" else None)
-        # weighted modes: start nodes are zero-cost arrivals — never improved
-        # on (non-negative weights), so they are a static anti-join set; the
-        # best-cost table is created lazily so the accumulated weight keeps
-        # the weight expression's own type (int weights stay ints)
-        seeds = (init.select("__rid", "__node").localCheckpoint(eager=True)
-                 if mode in ("wshortest", "allshortest") else None)
-        best = None
-        arrived: list[DataFrame] = []   # allshortest: every candidate path
-
-        frontier = init
-        f_rows = frontier.count()
-        for depth in range(1, upper + 1):
-            if f_rows == 0:
-                break
-            step = (frontier.join(E, frontier["__node"] == E["__from"],
-                                  "inner")
+        def advance(rounds, trace) -> DataFrame:
+            cur = rounds[-1]
+            step = (cur.join(E, cur["__node"] == E["__from"], "inner")
                     .filter(~F.array_contains(F.col("__eids"),
                                               F.col(f"{ep}_eid"))))
             if nd is not None:
@@ -222,7 +212,7 @@ class TraversalMixin:
                     .withColumn(f"{pp}_rels", F.array_append("__pe", edet))
                     .withColumn(f"{pp}_length",
                                 (F.col("__depth") + 1).cast("long")))
-            if mode in ("wshortest", "allshortest"):
+            if weighted:
                 wcol = (compile_expr(weight, Env(step, env_syms, self.params))
                         if weight is not None else F.lit(1.0))
                 from memgraph_spark.functions.variant import (
@@ -267,7 +257,7 @@ class TraversalMixin:
                       F.array_append("__nids", F.col("__to")).alias("__nids"),
                       F.array_append("__dirs", F.col("__fwd"))
                       .alias("__dirs")])
-            if mode in ("wshortest", "allshortest"):
+            if weighted:
                 nxt.append(F.col("__newcost").alias("__cost"))
             if need_detail:
                 nxt.append(F.array_append("__pn", F.col("__ndet"))
@@ -277,67 +267,52 @@ class TraversalMixin:
 
             if mode == "bfs":
                 # one deterministic shortest path per (row, node); skip nodes
-                # already reached at a smaller depth
-                step = step.join(visited, ["__rid", "__node"], "left_anti")
+                # already reached at a smaller depth (the lazy union of the
+                # checkpointed rounds is the visited set)
+                seen = reduce(DataFrame.unionByName,
+                              [r.select("__rid", "__node") for r in rounds])
+                step = step.join(seen, ["__rid", "__node"], "left_anti")
                 w = Window.partitionBy("__rid", "__node").orderBy("__eids")
                 step = (step.withColumn("__rn", F.row_number().over(w))
                         .filter(F.col("__rn") == 1).drop("__rn"))
-            elif mode == "wshortest":
-                step = step.join(seeds, ["__rid", "__node"], "left_anti")
-                if best is not None:
-                    bj = best.withColumnRenamed("__best", "__b")
+            elif weighted:
+                # start nodes are zero-cost arrivals, never improved on with
+                # non-negative weights; then the best cost per pair so far
+                step = step.join(rounds[0].select("__rid", "__node"),
+                                 ["__rid", "__node"], "left_anti")
+                if len(rounds) > 1:
+                    bj = _best(rounds[1:]).withColumnRenamed("__best", "__b")
+                    better = (F.col("__cost") < F.col("__b")
+                              if mode == "wshortest"
+                              else F.col("__cost") <= F.col("__b"))
                     step = (step.join(bj, ["__rid", "__node"], "left")
-                            .filter(F.col("__b").isNull()
-                                    | (F.col("__cost") < F.col("__b")))
+                            .filter(F.col("__b").isNull() | better)
                             .drop("__b"))
-                w = Window.partitionBy("__rid", "__node").orderBy(
-                    "__cost", "__eids")
-                step = (step.withColumn("__rn", F.row_number().over(w))
-                        .filter(F.col("__rn") == 1).drop("__rn"))
-            elif mode == "allshortest":
-                step = step.join(seeds, ["__rid", "__node"], "left_anti")
-                if best is not None:
-                    bj = best.withColumnRenamed("__best", "__b")
-                    step = (step.join(bj, ["__rid", "__node"], "left")
-                            .filter(F.col("__b").isNull()
-                                    | (F.col("__cost") <= F.col("__b")))
-                            .drop("__b"))
+                if mode == "wshortest":
+                    w = Window.partitionBy("__rid", "__node").orderBy(
+                        "__cost", "__eids")
+                    step = (step.withColumn("__rn", F.row_number().over(w))
+                            .filter(F.col("__rn") == 1).drop("__rn"))
+            return step
 
-            # row count rides the checkpoint job (observe)
-            step, _m = checkpoint_with_metrics(step, n=F.count(F.lit(1)))
-            f_rows = _m["n"]
-            if f_rows == 0:
-                frontier = step
-                break
-            if mode is None or mode == "bfs":
-                if mode == "bfs":
-                    # lazy union of the per-round checkpointed steps — no
-                    # O(V) re-materialization of the visited set per round
-                    visited = visited.unionByName(
-                        step.select("__rid", "__node"))
-                if depth >= lower:
-                    results.append(step)
-            else:
-                upd = step.select("__rid", "__node",
-                                  F.col("__cost").alias("__best"))
-                new_best = ((upd if best is None else best.unionByName(upd))
-                            .groupBy("__rid", "__node")
-                            .agg(F.min("__best").alias("__best"))
-                            .localCheckpoint(eager=True))
-                if best is not None:
-                    free_checkpoint(best)
-                best = new_best
-                (results if mode == "wshortest" else arrived).append(step)
-            frontier = step
-            # USING HOPS LIMIT quota (src/query/hops_limit.hpp); plain/bfs
-            # modes truncate by enumeration order after the loop instead
-            if hops is not None and mode not in (None, "bfs"):
-                hops["used"] += f_rows
-                if hops["used"] >= hops["limit"]:
-                    hops["reached"] = True
-                    break
+        def spent(trace) -> bool:
+            # USING HOPS LIMIT quota (src/query/hops_limit.hpp): every row a
+            # weighted round adds is charged; plain/bfs modes truncate by
+            # enumeration order after the loop instead
+            return len(trace) > 1 and hops["used"] + sum(
+                m["n"] for m in trace[1:]) >= hops["limit"]
 
-        out = self._traversal_results(mode, results, arrived, best, init)
+        quota = hops is not None and weighted
+        rounds, trace = frontier(init, advance, spent if quota else None,
+                                 upper)
+        init = rounds[0]
+        if quota:
+            hops["reached"] = hops.get("reached") or spent(trace)
+            hops["used"] += sum(m["n"] for m in trace[1:])
+        # rounds[d] holds depth d: only plain mode yields the zero-length
+        # path, and the weighted modes keep every depth
+        first = 1 if weighted else lower if mode is None else max(lower, 1)
+        out = self._traversal_results(mode, rounds[first:], init)
         if hops is not None and mode in (None, "bfs"):
             out = self._hops_partial_filter(out, E, ep, mode, rel, np, to_sym,
                                             lower, upper, hops, init)
@@ -617,25 +592,13 @@ class TraversalMixin:
 
     # -- result assembly -----------------------------------------------------
 
-    def _traversal_results(self, mode, results, arrived, best,
-                           init) -> DataFrame:
-        pieces = arrived if mode == "allshortest" else results
-        if not pieces or (mode in ("wshortest", "allshortest")
-                          and best is None):
+    def _traversal_results(self, mode, pieces, init) -> DataFrame:
+        if not pieces:
             return init.limit(0)
-        out = pieces[0]
-        for r in pieces[1:]:
-            out = out.unionByName(r)
-        # the union's partition count is additive over rounds (rounds × P);
-        # rebound it so downstream joins don't fan out one task per round
-        # (at depth 10 that's 10× the tasks for the same rows)
-        p = int(out.sparkSession.conf.get("spark.sql.shuffle.partitions",
-                                          "32"))
-        if len(pieces) > 1 and out.rdd.getNumPartitions() > p:
-            out = out.coalesce(p)
+        out = union_rounds(pieces)
         if mode in ("wshortest", "allshortest"):
             # keep only paths achieving the final minimum per (row, node)
-            bj = best.withColumnRenamed("__best", "__b")
+            bj = _best(pieces).withColumnRenamed("__best", "__b")
             out = (out.join(bj, ["__rid", "__node"], "inner")
                    .filter(F.col("__cost") <= F.col("__b")).drop("__b"))
             if mode == "wshortest":

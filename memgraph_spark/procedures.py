@@ -15,6 +15,7 @@ register() is the mgp.add_read_proc equivalent for user modules.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from memgraph_spark.algos import (
     weakly_connected_components,
 )
 from memgraph_spark.llm.textstats import language_id, quality_score, token_stats
-from memgraph_spark.session import empty_frame
+from memgraph_spark.session import empty_frame, frontier
 
 PROCEDURES: dict[str, Callable[..., DataFrame]] = {}
 
@@ -321,31 +322,38 @@ def _all_sp_lengths(g, weights=None):
                     F.col("dist").cast("double").alias("length"))
 
 
-def _simple_paths(g, v, to, cutoff: int = -1):
+def _simple_paths(g, v, to, cutoff=-1, max_length=None):
     """igraphalg.get_all_simple_paths(v, to, cutoff) YIELD path
-    (igraphalg.py:55). Frontier rows carry their node-id path; the simple-
-    path constraint is an array_contains filter — no driver recursion."""
-    hops = 10 if int(cutoff) < 0 else int(cutoff)
-    adj = g.adjacency(None, "out")
-    frontier = g.spark.createDataFrame([([int(v)],)], "path array<long>") \
-        .localCheckpoint(eager=True)
-    found = []
-    for _ in range(hops):
-        if frontier.isEmpty():
-            break
-        step = (frontier
-                .join(adj, F.element_at(F.col("path"), -1) == adj["src"])
+    (igraphalg.py:55), also algo.all_simple_paths(start, end,
+    relationship_types, max_length): a list third argument restricts the
+    out-adjacency to those types (empty = every type). Frontier rows carry
+    their node-id path; the simple-path constraint is an array_contains
+    filter — no driver recursion. A path stops at `to`."""
+    types = None
+    if isinstance(cutoff, (list, tuple)):
+        types, cutoff = cutoff, -1 if max_length is None else max_length
+    adj = (reduce(DataFrame.unionAll, [g.adjacency(t, "out") for t in types])
+           .dropDuplicates() if types else g.adjacency(None, "out"))
+    end = F.element_at(F.col("path"), -1) == int(to)
+
+    def extend(rounds, trace):
+        # a round past the first also holds the paths that reached `to`;
+        # they are results, not frontier
+        cur = rounds[-1] if len(rounds) == 1 else rounds[-1].filter(~end)
+        return (cur.join(adj, F.element_at(F.col("path"), -1) == adj["src"])
                 .filter(~F.array_contains("path", F.col("dst")))
-                .select(F.concat("path", F.array("dst")).alias("path"))
-                .localCheckpoint(eager=True))
-        found.append(step.filter(F.element_at(F.col("path"), -1) == int(to)))
-        frontier = step.filter(F.element_at(F.col("path"), -1) != int(to))
-    if not found:
+                .select(F.concat("path", F.array("dst")).alias("path")))
+
+    # a round whose every path ends at `to` has nothing left to extend; at
+    # the start that means v == to, where no simple path returns to v
+    rounds, _ = frontier(
+        g.spark.createDataFrame([([int(v)],)], "path array<long>"), extend,
+        lambda t: t[-1]["n"] == t[-1]["done"],
+        10 if int(cutoff) < 0 else int(cutoff),
+        done=F.count(F.when(end, 1)))
+    if len(rounds) == 1:
         return empty_frame(g.spark, "path array<long>")
-    out = found[0]
-    for df in found[1:]:
-        out = out.unionByName(df)
-    return out
+    return reduce(DataFrame.unionByName, rounds[1:]).filter(end)
 
 
 def _bridges(g):
@@ -1265,10 +1273,8 @@ def _refactor_rename_type(g, old_type: str, new_type: str):
     if old_type not in g.edges:
         return g.spark.createDataFrame([(0,)], "relationships_changed long")
     df = g.edges.pop(old_type)
+    g.forget(old_type)
     g.set_edge_version(new_type, df)
-    for key, cached in list(g._adj_cache.items()):
-        cached.unpersist()
-        del g._adj_cache[key]
     return g.spark.createDataFrame([(df.count(),)],
                                    "relationships_changed long")
 

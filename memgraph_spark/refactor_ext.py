@@ -20,17 +20,6 @@ from memgraph_spark.session import empty_frame
 _INTERNAL = {"id", "src", "dst", "eid", "labels", "type"}
 
 
-def _invalidate(g):
-    for cache in (g._adj_cache, g._eid_cache):
-        for key, cached in list(cache.items()):
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
-            del cache[key]
-    g._count_cache.clear()
-
-
 def _ensure_eids(g):
     """Guarantee every edge table carries a stable eid column."""
     for etype, df in list(g.edges.items()):
@@ -105,7 +94,6 @@ def _append_edges(g, etype, triples):
         new_df = g.edges[etype].unionByName(new_df,
                                             allowMissingColumns=True)
     g.set_edge_version(etype, new_df)
-    _invalidate(g)
     return eids
 
 
@@ -116,7 +104,6 @@ def _delete_edges(g, eids):
     _ensure_eids(g)
     for etype, df in list(g.edges.items()):
         g.set_edge_version(etype, df.filter(~F.col("eid").isin(eids)))
-    _invalidate(g)
 
 
 def _delete_nodes(g, nids, detach=True):
@@ -129,7 +116,7 @@ def _delete_nodes(g, nids, detach=True):
         for etype, df in list(g.edges.items()):
             g.set_edge_version(etype, df.filter(
                 ~F.col("src").isin(nids) & ~F.col("dst").isin(nids)))
-    _invalidate(g)
+    g.forget()
 
 
 def _props_of(row):
@@ -156,7 +143,6 @@ def _retarget(g, eid, *, new_src=None, new_dst=None, swap=False):
             upd = df.withColumn("dst", F.when(hit, F.lit(int(new_dst)))
                                 .otherwise(F.col("dst")))
         g.set_edge_version(etype, upd)
-        _invalidate(g)
         return True
     return False
 
@@ -505,7 +491,7 @@ def _refactor_merge_nodes(g, nodes, config=None):
     new_df = g.spark.createDataFrame([{"id": target, **merged}])
     g.set_node_version(t_label, old.unionByName(new_df,
                                                 allowMissingColumns=True))
-    _invalidate(g)
+    g.forget()
     return g.spark.createDataFrame([(target,)], "node long")
 
 

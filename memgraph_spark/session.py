@@ -170,6 +170,49 @@ def supersteps(init, step, halt, max_rounds, **metrics):
     return x, trace
 
 
+# runaway backstop for frontier loops whose pattern gives no bound (`*`):
+# not a semantic cap — every such loop stops at the first round without
+# rows, and edge uniqueness bounds a walk by |E|
+MAX_ROUNDS = 10_000
+
+
+def frontier(init, step, halt=None, max_rounds=None, **metrics):
+    """Drive an accumulating frontier loop; returns (rounds, trace).
+
+    `init` and every `step(rounds, trace)` are checkpointed with the row
+    count `n` and `metrics` observed on the checkpoint job; rounds[i] is
+    the i-th checkpoint (rounds[0] from `init`) and trace[i] its metric
+    dict. Rounds run until one has no rows (it is freed and not kept),
+    `halt(trace)` holds, or `max_rounds` steps have run (None = unbounded).
+    Every kept round stays alive: the caller owns them, and
+    `free_checkpoint` on their union frees every branch."""
+    metrics = {"n": F.count(F.lit(1)), **metrics}
+    x, m = checkpoint_with_metrics(init, **metrics)
+    rounds, trace = [x], [m]
+    while (m["n"] and (max_rounds is None or len(rounds) <= max_rounds)
+           and not (halt and halt(trace))):
+        x, m = checkpoint_with_metrics(step(rounds, trace), **metrics)
+        if not m["n"]:
+            free_checkpoint(x)
+            break
+        rounds.append(x)
+        trace.append(m)
+    return rounds, trace
+
+
+def union_rounds(rounds: list) -> DataFrame:
+    """unionByName of a frontier's rounds with the partition count
+    rebounded: a union's partitions add up over rounds (rounds × P), and
+    downstream joins would fan out one task per partition."""
+    out = rounds[0]
+    for r in rounds[1:]:
+        out = out.unionByName(r)
+    p = int(out.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    if len(rounds) > 1 and out.rdd.getNumPartitions() > p:
+        out = out.coalesce(p)
+    return out
+
+
 def persist_if_needed(df):
     """Persist `df` unless an equivalent plan is already cached.
 

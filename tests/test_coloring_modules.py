@@ -139,6 +139,19 @@ def test_refactor_renames(spark):
     assert "title" in g.nodes["Zone"].columns
 
 
+def test_rename_type_drops_the_old_types_traversal_caches(spark):
+    gs = GraphSession(load_tpch_graph(spark, SF_SMOKE))
+    hop = "MATCH (a)-[:IN_REGION]->(b) RETURN count(*) AS n"
+    var = "MATCH (a)-[:IN_REGION*1..2]->(b) RETURN count(*) AS n"
+    assert gs.execute(var).collect()[0].n == 25  # fills the eid cache
+    gs.execute("CALL refactor.rename_type('IN_REGION', 'IN_ZONE') "
+               "YIELD relationships_changed RETURN *").collect()
+    assert gs.execute(hop).collect()[0].n == 0
+    assert gs.execute(var).collect()[0].n == 0
+    assert gs.execute(var.replace("IN_REGION", "IN_ZONE")).collect()[0].n \
+        == 25
+
+
 def test_import_json_roundtrip(spark):
     g = load_tpch_graph(spark, SF_SMOKE)
     gs = GraphSession(g)

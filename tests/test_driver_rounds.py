@@ -1,8 +1,10 @@
 """Driver-bound rounds: `weighted_shortest_path` runs one superstep per
 relaxation round (one broadcast, one groupBy over candidates and state, one
-checkpoint job), and sessions from `get_spark` skip pyspark's per-call
-Python call-site capture. Job counts are read from job groups through
-`statusTracker` (`conftest.settle_listeners`)."""
+checkpoint job), the accumulating loops on `session.frontier` stay under
+the job counts of their hand-rolled predecessors, and sessions from
+`get_spark` skip pyspark's per-call Python call-site capture. Job counts
+are read from job groups through `statusTracker`
+(`conftest.settle_listeners`)."""
 
 from __future__ import annotations
 
@@ -10,13 +12,15 @@ import networkx as nx
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
 
 import memgraph_spark.session as S
-from memgraph_spark.catalog import PropertyGraph
+from memgraph_spark.catalog import PropertyGraph, load_tpch_graph
 from memgraph_spark.operators.expand import weighted_shortest_path
 from memgraph_spark.operators.kshortest import shortest_path_with_nodes
+from memgraph_spark.plans import GraphSession
 from memgraph_spark.procedures import PROCEDURES, register, unregister
-from tests.conftest import settle_listeners
+from tests.conftest import SF_SMOKE, count_jobs, settle_listeners
 
 # 1 -> 2 -> 3 -> 4 with a dearer shortcut 1 -> 3: round 1 reaches 2 and 3
 # (via the shortcut), round 2 improves 3, round 3 reaches 4, round 4 finds
@@ -166,3 +170,47 @@ def test_unresolved_column_is_a_bolt_failure(spark):
     finally:
         srv.stop()
         unregister("test.unresolved")
+
+
+def test_frontier_keeps_every_round_until_one_is_empty(spark):
+    def shrink(rounds, trace):
+        return rounds[-1].filter("id > 0").selectExpr("id - 1 AS id")
+
+    rounds, trace = S.frontier(spark.range(3), shrink)
+    # the fourth round is empty: freed and not kept
+    assert [sorted(r.id for r in x.collect()) for x in rounds] == \
+        [[0, 1, 2], [0, 1], [0]]
+    assert [m["n"] for m in trace] == [3, 2, 1]
+    assert len(S.frontier(spark.range(3), shrink, max_rounds=1)[0]) == 2
+    rounds, trace = S.frontier(spark.range(3), shrink,
+                               lambda t: t[-1]["low"] == 0,
+                               low=F.min("id"))
+    assert len(rounds) == 1 and trace == [{"n": 3, "low": 0}]
+
+
+# Spark jobs of one warm run on sf0.001 from the customer with the smallest
+# id; the ceilings are the counts the hand-rolled loops ran
+FRONTIER_CEILINGS = [
+    ("MATCH (c)-[*1..3]->(x) WHERE id(c) = $id RETURN count(*)", 9),
+    ("MATCH (c)-[*bfs ..3]->(x) WHERE id(c) = $id RETURN count(*)", 22),
+    ("CALL path.expand($id, [], [], 1, 4) YIELD result RETURN count(*)", 15),
+    ("CALL igraphalg.get_all_simple_paths($id, $id, 4) YIELD path "
+     "RETURN count(*)", 17),
+]
+
+
+@pytest.fixture(scope="module")
+def tpch(spark):
+    gs = GraphSession(load_tpch_graph(spark, SF_SMOKE))
+    cid = gs.execute("MATCH (c:Customer) RETURN id(c) AS i ORDER BY i "
+                     "LIMIT 1").collect()[0].i
+    return gs, cid
+
+
+@pytest.mark.parametrize("query,ceiling", FRONTIER_CEILINGS)
+def test_frontier_loops_stay_under_their_job_ceilings(spark, tpch, query,
+                                                      ceiling):
+    gs, cid = tpch
+    gs.execute(query, {"id": cid}).collect()  # warm the persisted edges
+    jobs = count_jobs(spark, lambda: gs.execute(query, {"id": cid}).collect())
+    assert jobs <= ceiling, (query, jobs)

@@ -117,3 +117,22 @@ def test_algo_module(spark):
     rows = gs.execute("CALL algo.all_simple_paths(1, 4, 5) YIELD path "
                       "RETURN path ORDER BY size(path)").collect()
     assert [r.path for r in rows] == [[1, 3, 4], [1, 2, 3, 4]]
+
+
+def test_algo_all_simple_paths_relationship_types(spark):
+    g = _graph(spark, [(1, 2), (2, 3), (1, 3)])
+    g.set_edge_version("KNOWS", spark.createDataFrame(
+        [(1, 4), (4, 2)], "src long, dst long"))
+    gs = GraphSession(g)
+
+    def paths(args):
+        return sorted(r.path for r in gs.execute(
+            f"CALL algo.all_simple_paths({args}) YIELD path "
+            "RETURN path").collect())
+
+    # (start, end, relationship_types, max_length)
+    assert paths("1, 2, ['KNOWS'], 3") == [[1, 4, 2]]
+    assert paths("1, 2, ['KNOWS'], 1") == []
+    assert paths("1, 3, ['E', 'KNOWS'], 3") == [[1, 2, 3], [1, 3],
+                                               [1, 4, 2, 3]]
+    assert paths("1, 3, [], 3") == paths("1, 3, ['E', 'KNOWS'], 3")

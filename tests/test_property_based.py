@@ -19,9 +19,10 @@ from memgraph_spark.algos import (
     topological_layers,
     weakly_connected_components,
 )
-from memgraph_spark.catalog import load_tpch_graph
+from memgraph_spark.catalog import PropertyGraph, load_tpch_graph
 from memgraph_spark.operators.expand import bfs, shortest_path, weighted_shortest_path
-from memgraph_spark.operators.kshortest import shortest_path_with_nodes
+from memgraph_spark.operators.kshortest import bfs_path_counts, shortest_path_with_nodes
+from memgraph_spark.plans import GraphSession
 from tests.conftest import SF_SMOKE
 
 SETTINGS = dict(max_examples=5, deadline=None,
@@ -361,3 +362,124 @@ def test_color_graph_is_proper(spark, edges):
     assert set(colors.values()) == set(range(len(set(colors.values()))))
     # a self-loop is no conflict: only distinct endpoints must differ
     assert all(colors[a] != colors[b] for a, b in edges if a != b)
+
+
+# the accumulating frontier loops (session.frontier): small directed
+# multigraphs over nodes 1..6 (odd ids :A, even ids :B) with cycles,
+# self-loops and parallel edges; the edge id is the list position
+frontier_edge_lists = st.lists(
+    st.tuples(st.integers(1, 6), st.integers(1, 6)), max_size=9)
+LOOPS = [(1, 2), (1, 2), (2, 3), (3, 1), (3, 3), (3, 4), (4, 1)]
+
+
+def _fgraph(spark, edges):
+    return PropertyGraph(spark, nodes={
+        "A": spark.createDataFrame([(1,), (3,), (5,)], "id long"),
+        "B": spark.createDataFrame([(2,), (4,), (6,)], "id long"),
+    }, edges={"E": spark.createDataFrame(
+        [(a, b, i) for i, (a, b) in enumerate(edges)],
+        "src long, dst long, eid long")})
+
+
+def _py_walks(edges, start, lo, hi, ok=lambda v: True):
+    """Every edge-unique out-walk from `start` with lo..hi edges whose
+    nodes after the start all pass `ok`, as (node ids, edge ids)."""
+    found = []
+
+    def rec(v, nodes, eids):
+        if len(eids) >= lo:
+            found.append((tuple(nodes), tuple(eids)))
+        if len(eids) == hi:
+            return
+        for i, (a, b) in enumerate(edges):
+            if a == v and i not in eids and ok(b):
+                rec(b, nodes + [b], eids + [i])
+
+    rec(start, [start], [])
+    return found
+
+
+@given(edges=frontier_edge_lists, start=st.integers(1, 6),
+       lo=st.integers(0, 2), extra=st.integers(0, 2))
+@example(edges=LOOPS, start=1, lo=0, extra=2)
+@example(edges=[], start=1, lo=0, extra=2)
+@settings(**SETTINGS)
+def test_var_length_counts_match_walks(spark, edges, start, lo, extra):
+    hi = max(lo, 1) + extra
+    gs = GraphSession(_fgraph(spark, edges))
+    want = Counter(len(e) for _, e in _py_walks(edges, start, lo, hi))
+    # the lean route (expand_variable) and the traversal route, which a
+    # relationship variable forces
+    for q in (f"MATCH p = (a)-[*{lo}..{hi}]->(b) WHERE id(a) = $s "
+              "RETURN length(p) AS d, count(*) AS n",
+              f"MATCH (a)-[r*{lo}..{hi}]->(b) WHERE id(a) = $s "
+              "RETURN size(r) AS d, count(*) AS n"):
+        got = {r.d: r.n for r in gs.execute(q, {"s": start}).collect()}
+        assert got == dict(want), q
+
+
+@given(edges=frontier_edge_lists, start=st.integers(1, 6),
+       lo=st.integers(0, 2), extra=st.integers(0, 2))
+@example(edges=LOOPS, start=1, lo=0, extra=2)
+@example(edges=[], start=2, lo=0, extra=1)
+@settings(**SETTINGS)
+def test_path_expand_matches_walks(spark, edges, start, lo, extra):
+    hi = max(lo, 1) + extra
+    gs = GraphSession(_fgraph(spark, edges))
+    # paths continue only through :A nodes (odd ids); the start is exempt
+    rows = gs.execute(f"CALL path.expand($s, ['E>'], ['-B'], {lo}, {hi}) "
+                      "YIELD result RETURN result", {"s": start}).collect()
+    got = Counter((tuple(r.result.nodes), tuple(r.result.rels))
+                  for r in rows)
+    assert got == Counter(_py_walks(edges, start, lo, hi, lambda v: v % 2))
+
+
+def _py_simple_paths(edges, v, to, cutoff):
+    out = {a: {b for x, b in edges if x == a} for a, _ in edges}
+    found = []
+
+    def rec(path):
+        if path[-1] == to and len(path) > 1:
+            found.append(path)
+            return
+        if len(path) > cutoff:
+            return
+        for w in sorted(out.get(path[-1], ())):
+            if w not in path:
+                rec(path + [w])
+
+    rec([v])
+    return found
+
+
+@given(edges=frontier_edge_lists, v=st.integers(1, 6), to=st.integers(1, 6),
+       cutoff=st.integers(1, 4))
+@example(edges=LOOPS, v=1, to=4, cutoff=4)
+@example(edges=LOOPS, v=1, to=1, cutoff=4)
+@settings(**SETTINGS)
+def test_all_simple_paths_match_enumeration(spark, edges, v, to, cutoff):
+    gs = GraphSession(_fgraph(spark, edges))
+    rows = gs.execute("CALL igraphalg.get_all_simple_paths($v, $to, $c) "
+                      "YIELD path RETURN path",
+                      {"v": v, "to": to, "c": cutoff}).collect()
+    assert sorted(r.path for r in rows) == \
+        sorted(_py_simple_paths(edges, v, to, cutoff))
+
+
+@given(edges=frontier_edge_lists, starts=st.sets(st.integers(1, 6),
+                                                 min_size=1, max_size=2))
+@example(edges=LOOPS, starts={1, 3})
+@example(edges=[], starts={1})
+@settings(**SETTINGS)
+def test_bfs_path_counts_match_networkx(spark, edges, starts):
+    g = _fgraph(spark, edges)
+    srcs = spark.createDataFrame([(s,) for s in sorted(starts)], "id long")
+    got = {(r.start, r.id): (r.dist, r.n_paths)
+           for r in bfs_path_counts(g, srcs, etype="E").collect()}
+    G = nx.DiGraph(edges)
+    G.add_nodes_from(starts)
+    want = {}
+    for s in starts:
+        for t, d in nx.single_source_shortest_path_length(G, s).items():
+            want[(s, t)] = (d, len(list(nx.all_shortest_paths(G, s, t))))
+    assert got == want
